@@ -10,6 +10,7 @@ coalescing, which is enabled here).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -52,3 +53,17 @@ def get_spark(app_name: str = "otit_swt_spark", cpus: int | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def job_description(spark: SparkSession, name: str):
+    """Name the Spark jobs started inside the block (the AppStatusStore
+    and the UI show ``name`` instead of the disabled call site), then
+    restore the previous description. Job groups are left untouched."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)

@@ -31,6 +31,7 @@ from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
+from otit_swt_spark.session import job_description
 from otit_swt_spark.sparql import algebra as A
 from otit_swt_spark.sparql.expressions import (INTEGRAL, NUMERIC, Typed,
                                                _as_bool, compile_expr,
@@ -432,7 +433,7 @@ class Compiler:
     #: SERVICE_BOUND_JOIN_MAX): above this many distinct external ids the
     #: IN-list is omitted from the remote query — an unconstrained fetch
     #: plus the Spark-side join stays correct, and the driver collect
-    #: stays bounded
+    #: stays bounded. Also the most static-side rows compile_bgp inlines.
     TS_ID_PUSHDOWN_MAX = 1000
 
     def _extract_ts_bound_hints(self, expr: A.Expr) -> dict:
@@ -502,8 +503,7 @@ class Compiler:
                 hi = ehi if hi is None else min(hi, ehi)
         return lo, hi
 
-    def _ts_relation_for_join(self, sm: "SolutionMapping",
-                              tj: dict) -> tuple[DataFrame, str]:
+    def _ts_relation_for_join(self, tj: dict) -> tuple[DataFrame, str]:
         """The (id, timestamp, value) relation for ONE ts join, with the
         composed restriction — bounded external-id IN-list from the static
         side, timestamp bounds from enclosing FILTERs, literal value/time
@@ -517,13 +517,6 @@ class Compiler:
 
         if not self.ts_tables:
             raise ValueError("query touches time-series data but no TimeSeriesTable registered")
-        if "probed_ids" not in tj and "probe_overflow" not in tj \
-                and not any(
-                    getattr(t, "supports_pushdown", False)
-                    for t in self.ts_tables):
-            # no pre-probe ran (caller outside compile_bgp) and nothing
-            # to push remotely: the plain union is already optimal
-            return self.ts_relation()
 
         ts_lower = ts_upper = value_eq = None
         t_term, v_term = tj.get("t"), tj.get("v")
@@ -543,20 +536,10 @@ class Compiler:
             value_eq = _pushdown_value_literal(v_term)
 
         # the reference's bound join: distinct external ids from the static
-        # side, rendered into the remote SQL — bounded by the cap.
-        # compile_bgp pre-probes all chains in one job (_probe_chain_ids);
-        # the per-chain probe below only remains for callers outside it.
-        ids = None
-        if "probed_ids" in tj:
-            ids = tj["probed_ids"]
-        else:
-            eid = tj.get("eid")
-            if eid and eid in sm.df.columns:
-                cap = self.TS_ID_PUSHDOWN_MAX
-                rows = (sm.df.select(eid).where(F.col(eid).isNotNull())
-                        .distinct().limit(cap + 1).collect())
-                if len(rows) <= cap:
-                    ids = sorted({r[0] for r in rows})
+        # side, rendered into the remote SQL. compile_bgp reads them from
+        # the inlined static rows, or from a per-chain bounded probe when
+        # those overflow the cap; None when the chain's own set overflows.
+        ids = tj.get("probed_ids")
 
         # grouped pushdown (reference GroupedTimeSeriesQuery,
         # preparing/graph_patterns/group_pattern.rs:18-105): when the
@@ -1499,62 +1482,65 @@ class Compiler:
                 return SolutionMapping(self.spark.range(1).select(), {})
             sm = SolutionMapping(self.spark.range(1).select(), {})
 
+        chains = [tj for tj in ts_joins if "rebind" not in tj]
+        rows = None
+        if chains:
+            sm, rows = self._inline_static_side(sm, [tj["eid"] for tj in chains])
         spec = (self._group_pushdown_stack[-1]
                 if self._group_pushdown_stack else None)
         if (spec is not None and spec.get("sync") and not spec["fired"]
                 and ts_joins):
-            synced = self._apply_sync_grouped_joins(sm, ts_joins, spec)
+            synced = self._apply_sync_grouped_joins(sm, ts_joins, spec, rows)
             if synced is not None:
                 return synced
-        self._probe_chain_ids(sm, ts_joins)
+        for i, tj in enumerate(chains):
+            if rows is not None:
+                tj["probed_ids"] = sorted(
+                    {r[i] for r in rows if r[i] is not None})
+            else:
+                tj["probed_ids"] = self._probe_chain_ids(sm, tj["eid"])
         for tj in ts_joins:
             sm = self._apply_ts_join(sm, tj)
         return sm
 
-    def _probe_chain_ids(self, sm: SolutionMapping,
-                         ts_joins: list[dict]) -> None:
-        """ONE bounded driver probe for the external-id sets of ALL the
-        BGP's ts chains, taken from the static side BEFORE any chain is
-        joined (every chain's eid column is bound by the BGP itself, so
-        the pre-chain frame carries them all). Replaces the per-chain
-        probe inside _ts_relation_for_join — one job instead of N, and
-        the probed subtree is the cheap KG-only plan, not the partially
-        chain-joined one. The per-chain sets feed (a) the remote IN-list
-        pushdown exactly as before and (b) a NEW Spark-side semi-filter
-        on non-pushdown tables (guide §3.2): the id restriction comes
-        from a join, so Catalyst cannot derive it itself — filtering the
-        chain relation before its exchange cuts the shuffled rows to the
-        chain's matching series, and against a parquet-backed table the
-        IN-list lands in PushedFilters at the scan. Sets are supersets
-        of the per-call sets (later chains only restrict), and every
-        constraint is re-applied by the join, so results are unchanged."""
-        eligible = [tj for tj in ts_joins
-                    if "rebind" not in tj and tj.get("eid")
-                    and tj["eid"] in sm.df.columns]
-        if not eligible:
-            return
+    def _inline_static_side(self, sm: SolutionMapping, eids: list[str]
+                            ) -> tuple[SolutionMapping, list | None]:
+        """Evaluate the BGP's static side ONCE, before any ts chain is
+        joined (reference static_sparql.rs:46-99: the static solutions
+        are one DataFrame that supplies both the time-series id lists and
+        the combiner's left input). At most TS_ID_PUSHDOWN_MAX rows come
+        back as a LocalRelation built JVM-side (exact column types, no
+        Python round trip), so execution never re-runs the KG join, and
+        the chains' external ids are read from the same rows: returns the
+        inlined mapping and one ``eids`` tuple per row. Above the cap the
+        mapping is returned unchanged with rows None, and compile_bgp
+        falls back to per-chain id probes."""
         cap = self.TS_ID_PUSHDOWN_MAX
-        eids = [tj["eid"] for tj in eligible]
-        rows = (sm.df.select(*eids).distinct().limit(cap + 1).collect())
-        if len(rows) > cap:
-            # Overflow of the TUPLE-distinct says nothing about the
-            # per-chain sets (the tuple cardinality is a cross-product
-            # and counts null-bearing rows) — leave probed_ids UNSET so
-            # _ts_relation_for_join's bounded per-chain probe still
-            # runs, instead of disabling pushdown for every chain
-            # (r13-advice fix). probe_overflow keeps that path's early
-            # plain-union return from swallowing the per-chain probe +
-            # Spark-side bounds restriction on non-pushdown registries.
-            for tj in eligible:
-                tj["probe_overflow"] = True
-            return
-        for tj in eligible:
-            tj["probed_ids"] = sorted(
-                {r[tj["eid"]] for r in rows if r[tj["eid"]] is not None})
+        with job_description(self.spark, "otit:static-side"):
+            jrows = sm.df.limit(cap + 1)._jdf.collectAsList()
+        if jrows.size() > cap:
+            return sm, None
+        local = DataFrame(self.spark._jsparkSession.createDataFrame(
+            jrows, sm.df._jdf.schema()), self.spark)
+        # a projection of a LocalRelation is collected without a Spark job
+        rows = [tuple(r) for r in local.select(*eids).collect()]
+        return replace(sm, df=local), rows
+
+    def _probe_chain_ids(self, sm: SolutionMapping, eid: str) -> list | None:
+        """One chain's distinct external ids from the static side when its
+        rows overflow the cap: a bounded probe whose answer still fits
+        when the rows do not (many static rows per series, or several
+        chains whose row count is their ids' cross product). None above
+        the cap, and the chain's fetch then runs without an IN-list."""
+        cap = self.TS_ID_PUSHDOWN_MAX
+        with job_description(self.spark, "otit:chain-ids"):
+            ids = (sm.df.select(eid).where(F.col(eid).isNotNull())
+                   .distinct().limit(cap + 1).collect())
+        return sorted(r[0] for r in ids) if len(ids) <= cap else None
 
     def _apply_sync_grouped_joins(self, sm: SolutionMapping,
-                                  ts_joins: list[dict],
-                                  spec: dict) -> SolutionMapping | None:
+                                  ts_joins: list[dict], spec: dict,
+                                  rows: list | None) -> SolutionMapping | None:
         """Combined fetch for a SYNCHRONIZED grouped pushdown: the N
         chains sharing one timestamp variable become ONE remote query —
         the store inner-joins the base relation against itself on the
@@ -1592,15 +1578,19 @@ class Compiler:
 
         ordered = list(ts_joins)
         eids = [tj["eid"] for tj in ordered]
-        cap = self.TS_ID_PUSHDOWN_MAX
-        cond = F.lit(True)
-        for e in eids:
-            cond = cond & F.col(e).isNotNull()
-        rows = (sm.df.select(*eids).where(cond)
-                .distinct().limit(cap + 1).collect())
-        if len(rows) > cap:
-            return None
-        id_tuples = sorted({tuple(r) for r in rows})
+        if rows is None:
+            # the static rows overflowed: probe the distinct id tuples
+            cap = self.TS_ID_PUSHDOWN_MAX
+            cond = F.lit(True)
+            for e in eids:
+                cond = cond & F.col(e).isNotNull()
+            with job_description(self.spark, "otit:chain-ids"):
+                rows = (sm.df.select(*eids).where(cond)
+                        .distinct().limit(cap + 1).collect())
+            if len(rows) > cap:
+                return None
+        id_tuples = sorted({tuple(r) for r in rows
+                            if all(x is not None for x in r)})
 
         # value-typed partials demand an exactly re-aggregatable value
         # type (same gate as the single-chain path)
@@ -1796,7 +1786,7 @@ class Compiler:
         spec = (self._group_pushdown_stack[-1]
                 if self._group_pushdown_stack else None)
         pre_fired = spec["fired"] if spec is not None else True
-        ts_df, value_hint = self._ts_relation_for_join(sm, tj)
+        ts_df, value_hint = self._ts_relation_for_join(tj)
         fired_now = spec is not None and spec["fired"] and not pre_fired
         eid = tj["eid"]
         cols = [F.col("id").alias(eid)]

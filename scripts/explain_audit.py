@@ -10,10 +10,11 @@ things that must stay healthy for the 100 TB posture (SURVEY §4).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from otit_swt_spark.session import get_spark  # noqa: E402

@@ -7,9 +7,11 @@ a user of the reference (or of a training-data pipeline) can run here.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
@@ -48,7 +50,7 @@ def main() -> None:
                  f"the rest are rows-only by nature (iterative or "
                  f"heuristic algorithms with invariant pytests instead).")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/docs/OPERATORS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "OPERATORS.md"), "w") as f:
         f.write(out)
     print(f"wrote docs/OPERATORS.md: {len(qs)} entries, {n_sql} SQL oracles")
 

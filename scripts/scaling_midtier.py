@@ -58,6 +58,12 @@ _PREFIXES = ["qqq ", "www ", "kkk ", "vvv ", "jjj ", "fff ", "hhh "]
 
 
 def _er_scaled(amp: int):
+    # one distinct prefix per replica: a repeated prefix would put two
+    # replicas' names at distance 0 and merge their clusters
+    assert amp - 1 <= len(_PREFIXES), (
+        f"amplification {amp} needs {amp - 1} name prefixes, "
+        f"have {len(_PREFIXES)}")
+
     def fn(spark, sf_dir):
         from otit_swt_spark.pipelines.fuzzy import er_golden_records
 
@@ -66,7 +72,7 @@ def _er_scaled(amp: int):
         for i in range(1, amp):
             rep = rep.unionByName(part.select(
                 (F.col("p_partkey") + F.lit(i * SHIFT)).alias("p_partkey"),
-                F.concat(F.lit(_PREFIXES[(i - 1) % len(_PREFIXES)]),
+                F.concat(F.lit(_PREFIXES[i - 1]),
                          F.col("p_name")).alias("p_name"),
                 *[c for c in part.columns
                   if c not in ("p_partkey", "p_name")]))
@@ -76,15 +82,20 @@ def _er_scaled(amp: int):
 
 
 def _dbscan_scaled(amp: int):
+    n_rows: list[int] = []
+
     def fn(spark, sf_dir):
         from otit_swt_spark.pipelines.spatial import (dbscan_clusters,
                                                       hash_coords)
 
-        bound = 2000 * amp
-        c = hash_coords(
-            entry_mod._t(spark, BASE, "customer")
-            .where(F.col("c_custkey") <= bound).select("c_custkey"),
-            "c_custkey", scale=1000.0 * math.sqrt(bound / 2000.0))
+        cust = (entry_mod._t(spark, BASE, "customer")
+                .where(F.col("c_custkey") <= 2000 * amp).select("c_custkey"))
+        if not n_rows:
+            # widen by the rows the bound actually keeps (the table caps
+            # it); counted once, at _time's untimed warm-up call
+            n_rows.append(cust.count())
+        c = hash_coords(cust, "c_custkey",
+                        scale=1000.0 * math.sqrt(n_rows[0] / 2000.0))
         return dbscan_clusters(c, "c_custkey", eps=25.0, min_pts=4)
 
     return fn

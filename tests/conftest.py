@@ -85,3 +85,65 @@ def rows(df, *cols):
     """Collect to a sorted list of tuples for order-insensitive comparison."""
     out = [tuple(r[c] for c in (cols or df.columns)) for r in df.collect()]
     return sorted(out, key=lambda t: tuple(str(x) for x in t))
+
+
+@pytest.fixture()
+def flight_pushdown_server():
+    """In-process Flight SQL server that EXECUTES the received query with
+    DuckDB and serves the result across two endpoints — so a pushdown
+    test can assert both the remote query text and the actual number of
+    rows that crossed the wire. Table: ts1/ts2/ts3 x 8 timestamps."""
+    flight = pytest.importorskip("pyarrow.flight")
+    import threading
+
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("""
+        CREATE TABLE ts AS
+        SELECT 'ts' || s.i AS id,
+               TIMESTAMP '2022-06-01 08:46:52' + INTERVAL (t.j) SECOND
+                   AS timestamp,
+               CAST(s.i * 100 + t.j AS DOUBLE) AS value
+        FROM (SELECT unnest(range(1, 4)) AS i) s,
+             (SELECT unnest(range(0, 8)) AS j) t
+    """)
+
+    class Server(flight.FlightServerBase):
+        def __init__(self):
+            super().__init__("grpc://127.0.0.1:0")
+            self.queries = []
+            self.rows_served = 0
+            self._results = {}
+            self._lock = threading.Lock()
+            self._n = 0
+
+        def get_flight_info(self, context, descriptor):
+            q = descriptor.command.decode()
+            with self._lock:
+                self.queries.append(q)
+                table = con.execute(q).arrow()
+                self._n += 1
+                n = self._n
+            loc = flight.Location.for_grpc_tcp("127.0.0.1", self.port)
+            half = table.num_rows // 2
+            self._results[f"q{n}-0"] = table.slice(0, half)
+            self._results[f"q{n}-1"] = table.slice(half)
+            endpoints = [
+                flight.FlightEndpoint(f"q{n}-0".encode(), [loc]),
+                flight.FlightEndpoint(f"q{n}-1".encode(), [loc]),
+            ]
+            return flight.FlightInfo(table.schema, descriptor, endpoints,
+                                     table.num_rows, -1)
+
+        def do_get(self, context, ticket):
+            t = self._results[ticket.ticket.decode()]
+            with self._lock:
+                self.rows_served += t.num_rows
+            return flight.RecordBatchStream(t)
+
+    server = Server()
+    t = threading.Thread(target=server.serve, daemon=True)
+    t.start()
+    yield server
+    server.shutdown()

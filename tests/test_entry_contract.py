@@ -14,6 +14,7 @@
    an entry, this test fails until you re-run the generator.
 """
 
+import os
 import re
 
 import pyspark.sql.types as T
@@ -21,6 +22,7 @@ import pyspark.sql.types as T
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 COMPLEX = (T.ArrayType, T.MapType, T.StructType)
 
@@ -42,7 +44,7 @@ def test_all_entry_schemas_scalar(spark):
 def test_operators_md_matches_registry():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    with open("/root/repo/docs/OPERATORS.md") as f:
+    with open(os.path.join(ROOT, "docs", "OPERATORS.md")) as f:
         text = f.read()
     doc_entries = set(re.findall(r"^\| `([a-z0-9_]+)` \|", text, re.M))
     missing = sorted(set(qs) - doc_entries)
@@ -77,7 +79,7 @@ def test_bench_names_exist_in_registry():
     import __spark_entry__ as entry_mod
 
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py")
+        "bench", os.path.join(ROOT, "bench.py"))
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
     keys = set(entry_mod._QUERIES)
@@ -95,7 +97,7 @@ def test_plan_audit_covers_registry():
     protection OPERATORS.md already has."""
     import glob
 
-    audits = sorted(glob.glob("/root/repo/docs/PLAN_AUDIT_r*.md"),
+    audits = sorted(glob.glob(os.path.join(ROOT, "docs", "PLAN_AUDIT_r*.md")),
                     key=lambda p: int(re.search(r"_r(\d+)", p).group(1)))
     assert audits, "no committed PLAN_AUDIT_r*.md"
     with open(audits[-1]) as f:

@@ -15,12 +15,14 @@ SELECT.  The full sweep (scripts/check_oracle.py) additionally
 cross-checks dtype families against the live Spark schema.
 """
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from check_oracle import TABLES, duck_family, duck_result_types  # noqa: E402

@@ -4,6 +4,8 @@ rewritten SPARQL string, assert the physical/optimized plan has the shape
 the operator mapping promises (semi/anti joins, pruned scans, partition
 filters on the predicate-partitioned triple store)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -464,3 +466,147 @@ def test_bgp_reorder_shapes_join_tree(spark):
     plan = optimized(df)
     assert plan.index("urn:tiny") < plan.index("urn:big")
     assert df.count() == 160            # 2 z * 4 mid-y each * 20 big-x each
+
+
+# -- hybrid static side: evaluated once, inlined as the plan's relation -----
+
+HYBRID_BGP = """
+        ?w types:hasSensor ?s .
+        ?s otit_swt:hasTimeseries ?ts .
+        ?ts otit_swt:hasExternalId ?ts_id .
+        ?ts otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v ."""
+
+
+def static_side_inlined(df) -> bool:
+    """The static side is the compile-time collect's rows: a LocalRelation
+    carrying the BGP's variables, and no scan of the graph DataFrame
+    (whose leaf exposes the o_iri column) anywhere in the plan."""
+    plan = optimized(df)
+    return (re.search(r"LocalRelation \[[^\]]*\bts_id#", plan) is not None
+            and "o_iri#" not in plan)
+
+
+def test_hybrid_static_side_inlined_in_memory(spark, engine, monkeypatch):
+    from otit_swt_spark.sparql.compiler import Compiler
+    from tests.conftest import rows
+
+    q = PREFIXES + "SELECT ?w ?ts_id ?t ?v WHERE {" + HYBRID_BGP + """
+        FILTER(?v > 100) }"""
+
+    def run():
+        eng = Engine(spark, engine.graph)
+        return eng.add_timeseries_table(engine.ts_tables[0]).query(q)
+
+    df = run()
+    assert static_side_inlined(df)
+    got = rows(df)
+    assert len(got) == 11
+    # rows overflow the cap: no inlining, per-chain probes, same answer
+    monkeypatch.setattr(Compiler, "TS_ID_PUSHDOWN_MAX", 0)
+    over = run()
+    assert not static_side_inlined(over)
+    assert rows(over) == got
+
+
+def test_hybrid_static_side_inlined_flight_grouped(
+        spark, flight_pushdown_server, monkeypatch):
+    from otit_swt_spark.sources.flight import flight_timeseries
+    from otit_swt_spark.sparql.compiler import Compiler
+    from tests.conftest import TESTDATA_SPARQL, rows
+
+    srv = flight_pushdown_server
+    q = PREFIXES + "SELECT ?w ?ts_id (COUNT(?v) AS ?n) (AVG(?v) AS ?mean)" \
+        " WHERE {" + HYBRID_BGP + "} GROUP BY ?w ?ts_id"
+
+    def run():
+        ts = flight_timeseries(spark, f"grpc://127.0.0.1:{srv.port}",
+                               "SELECT id, timestamp, value FROM ts")
+        graph = GraphStore.from_sparql_insert(spark, TESTDATA_SPARQL)
+        return Engine(spark, graph).add_timeseries_table(ts).query(q)
+
+    df = run()
+    assert static_side_inlined(df)
+    got = rows(df)
+    # the grouped pushdown fired, restricted to the inlined rows' ids
+    assert any("__gp_cnt" in x and "\"id\" IN ('ts1', 'ts2')" in x
+               for x in srv.queries), srv.queries
+    assert got == [("http://example.org/case#myWidget1", "ts1", 8, 103.5),
+                   ("http://example.org/case#myWidget2", "ts2", 8, 203.5)]
+    monkeypatch.setattr(Compiler, "TS_ID_PUSHDOWN_MAX", 0)
+    over = run()
+    assert not static_side_inlined(over)
+    assert rows(over) == got
+
+
+def test_inlined_static_side_keeps_native_input_types(
+        spark, engine, monkeypatch):
+    """The BGP's input comes from an earlier group and carries native
+    timestamp, double and decimal columns; the inlined rows keep them
+    exactly, so the fit and overflow paths return identical rows."""
+    from datetime import datetime
+    from decimal import Decimal
+
+    from otit_swt_spark.sparql.compiler import Compiler
+    from tests.conftest import rows
+
+    q = PREFIXES + """
+    SELECT ?w ?ts_id ?last ?mean ?total ?v WHERE {
+        { SELECT ?w (MAX(?t0) AS ?last) (AVG(?v0) AS ?mean)
+                 (SUM(xsd:decimal(?v0)) AS ?total) WHERE {
+            ?w types:hasSensor ?s0 .
+            ?s0 otit_swt:hasTimeseries ?ts0 .
+            ?ts0 otit_swt:hasDataPoint ?dp0 .
+            ?dp0 otit_swt:hasTimestamp ?t0 .
+            ?dp0 otit_swt:hasValue ?v0 .
+          } GROUP BY ?w }
+        {""" + HYBRID_BGP + """ }
+        FILTER(?t = ?last) }"""
+
+    def run():
+        eng = Engine(spark, engine.graph)
+        return eng.add_timeseries_table(engine.ts_tables[0]).query(q)
+
+    df = run()
+    assert static_side_inlined(df)
+    assert [f.dataType.simpleString() for f in df.schema.fields[2:5]] == [
+        "timestamp", "double", "decimal(35,6)"]
+    got = rows(df)
+    last = datetime(2022, 6, 1, 8, 46, 59)
+    assert got == [
+        ("http://example.org/case#myWidget1", "ts1", last, 153.25,
+         Decimal("1226.000000"), 105),
+        ("http://example.org/case#myWidget2", "ts2", last, 154.75,
+         Decimal("1238.000000"), 206)]
+    monkeypatch.setattr(Compiler, "TS_ID_PUSHDOWN_MAX", 0)
+    assert rows(run()) == got
+
+
+def test_inlined_static_side_follows_graph_update(spark):
+    """The inlined rows live in a cached plan; Engine.update() must drop
+    that plan, so a series linked by the update shows up in the rerun."""
+    import pandas as pd
+
+    from otit_swt_spark.timeseries import in_memory_timeseries
+    from tests.conftest import TESTDATA_SPARQL
+
+    stamps = pd.date_range("2022-06-01 08:46:52", periods=3, freq="s")
+    ts = in_memory_timeseries(spark, {
+        k: pd.DataFrame({"timestamp": stamps, "value": [1.0, 2.0, 3.0]})
+        for k in ("ts1", "ts2", "ts3")})
+    eng = Engine(spark, GraphStore.from_sparql_insert(spark, TESTDATA_SPARQL))
+    eng.add_timeseries_table(ts)
+    q = PREFIXES + "SELECT ?ts_id (COUNT(?v) AS ?n) WHERE {" + HYBRID_BGP + \
+        "} GROUP BY ?ts_id"
+    assert sorted(map(tuple, eng.query(q).collect())) == [
+        ("ts1", 3), ("ts2", 3)]
+    eng.update(PREFIXES + """
+    PREFIX case: <http://example.org/case#>
+    INSERT DATA {
+        case:myWidget2 types:hasSensor case:mySensor3 .
+        case:mySensor3 otit_swt:hasTimeseries case:myTimeseries3 .
+        case:myTimeseries3 otit_swt:hasExternalId "ts3" .
+    }""")
+    assert sorted(map(tuple, eng.query(q).collect())) == [
+        ("ts1", 3), ("ts2", 3), ("ts3", 3)]

@@ -251,68 +251,6 @@ def test_render_restricted_sql_differential_fuzz():
         assert got == want, (trial, sql)
 
 
-@pytest.fixture()
-def flight_pushdown_server():
-    """In-process Flight SQL server that EXECUTES the received query with
-    DuckDB and serves the result across two endpoints — so a pushdown
-    test can assert both the remote query text and the actual number of
-    rows that crossed the wire. Table: ts1/ts2/ts3 x 8 timestamps."""
-    flight = pytest.importorskip("pyarrow.flight")
-    import threading
-
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("""
-        CREATE TABLE ts AS
-        SELECT 'ts' || s.i AS id,
-               TIMESTAMP '2022-06-01 08:46:52' + INTERVAL (t.j) SECOND
-                   AS timestamp,
-               CAST(s.i * 100 + t.j AS DOUBLE) AS value
-        FROM (SELECT unnest(range(1, 4)) AS i) s,
-             (SELECT unnest(range(0, 8)) AS j) t
-    """)
-
-    class Server(flight.FlightServerBase):
-        def __init__(self):
-            super().__init__("grpc://127.0.0.1:0")
-            self.queries = []
-            self.rows_served = 0
-            self._results = {}
-            self._lock = threading.Lock()
-            self._n = 0
-
-        def get_flight_info(self, context, descriptor):
-            q = descriptor.command.decode()
-            with self._lock:
-                self.queries.append(q)
-                table = con.execute(q).arrow()
-                self._n += 1
-                n = self._n
-            loc = flight.Location.for_grpc_tcp("127.0.0.1", self.port)
-            half = table.num_rows // 2
-            self._results[f"q{n}-0"] = table.slice(0, half)
-            self._results[f"q{n}-1"] = table.slice(half)
-            endpoints = [
-                flight.FlightEndpoint(f"q{n}-0".encode(), [loc]),
-                flight.FlightEndpoint(f"q{n}-1".encode(), [loc]),
-            ]
-            return flight.FlightInfo(table.schema, descriptor, endpoints,
-                                     table.num_rows, -1)
-
-        def do_get(self, context, ticket):
-            t = self._results[ticket.ticket.decode()]
-            with self._lock:
-                self.rows_served += t.num_rows
-            return flight.RecordBatchStream(t)
-
-    server = Server()
-    t = threading.Thread(target=server.serve, daemon=True)
-    t.start()
-    yield server
-    server.shutdown()
-
-
 def test_flight_tsq_grouped_pushdown_shrinks_fetch_to_groups(
         spark, flight_pushdown_server):
     """Reference parity for the GROUP BY pushdown (preparing/
@@ -2298,13 +2236,13 @@ def test_wap_compact_small_files(spark, tmp_path):
 
 def test_flight_pushdown_tuple_overflow_keeps_per_chain_probe(
         spark, flight_pushdown_server, monkeypatch):
-    """r14 fix of the r13-advice gap: when the ONE combined pre-probe of
-    all chains' eid columns overflows the cap (tuple-distinct is a
-    cross-product — here 2x2=4 > cap 3), the per-chain fallback probe in
-    _ts_relation_for_join must still run (each chain's own set, 2 ids,
-    fits). Before the fix probed_ids=None disabled it and both fetches
-    went unconstrained (24 rows each); now both remote queries carry the
-    id IN-list and only the two graph-known series cross the wire."""
+    """When the static side's rows overflow the cap (two independent
+    chains make a cross product — here 2x2=4 rows > cap 3), the rows are
+    not inlined and compile_bgp probes each chain's own distinct ids
+    instead (2 ids each, which fit). Both remote queries therefore still
+    carry the id IN-list and only the two graph-known series cross the
+    wire; without the per-chain probe both fetches would be
+    unconstrained (24 rows each)."""
     from otit_swt_spark.sources.flight import flight_timeseries
     from otit_swt_spark.sparql.compiler import Compiler
 
