@@ -48,10 +48,6 @@ class Engine:
         #: output variables (reference behavior); False = coerce to the first
         #: observed datatype, nulling lexical forms that do not parse
         self.strict_types = strict_types
-        #: datatype-probe results per query text — the probe is a Spark job
-        #: (engine._finalize) and identical queries infer identical dtypes.
-        #: Only consulted for variables the compile-time catalog cannot type.
-        self._dt_cache: dict[str, dict[str, str | None]] = {}
         #: prepared-plan cache: query text -> finalized lazy DataFrame. Plan
         #: *construction* is driver-side work (parse + algebra + hundreds of
         #: DataFrame calls); like any database's prepared-statement cache, a
@@ -62,13 +58,11 @@ class Engine:
 
     def set_graph(self, graph: GraphStore | DataFrame) -> "Engine":
         self.graph = GraphStore(self.spark, graph) if isinstance(graph, DataFrame) else graph
-        self._dt_cache.clear()  # probes are graph-dependent
         self._plan_cache.clear()
         return self
 
     def add_timeseries_table(self, table: TimeSeriesTable) -> "Engine":
         self.ts_tables.append(table)
-        self._dt_cache.clear()  # probes may involve ts-derived columns
         self._plan_cache.clear()
         return self
 
@@ -79,7 +73,6 @@ class Engine:
         if isinstance(graph, DataFrame):
             graph = GraphStore(self.spark, graph)
         self.services[endpoint_iri] = graph
-        self._dt_cache.clear()
         self._plan_cache.clear()
         return self
 
@@ -91,7 +84,6 @@ class Engine:
         if isinstance(graph, DataFrame):
             graph = GraphStore(self.spark, graph)
         self.named_graphs[graph_iri] = graph
-        self._dt_cache.clear()
         self._plan_cache.clear()
         return self
 
@@ -160,7 +152,7 @@ class Engine:
                 "INSERT/DELETE forms")
         else:
             sm = compiler.compile_query(query)
-            out = self._finalize(sm, query.variables, cache_key=sparql)
+            out = self._finalize(sm, query.variables)
         self._plan_cache[sparql] = out
         return out
 
@@ -263,7 +255,6 @@ class Engine:
         self.graph.df = df
         self.graph._pred_dt = None  # datatype catalog derives from the data
         self._plan_cache.clear()
-        self._dt_cache.clear()
         return self
 
     def query(self, sparql: str) -> DataFrame:
@@ -493,8 +484,8 @@ class Engine:
             nodes = iri_df if nodes is None else nodes.unionByName(iri_df).distinct()
         return self.graph.df.join(F.broadcast(nodes), "s", "left_semi")
 
-    def _finalize(self, sm: SolutionMapping, variables: list[str],
-                  cache_key: str | None = None) -> DataFrame:
+    def _finalize(self, sm: SolutionMapping,
+                  variables: list[str]) -> DataFrame:
         """Type the output like the reference's dtype-inference over SPARQL
         JSON solutions (hybrid/src/sparql_result_to_polars.rs:119-160).
 
@@ -516,9 +507,7 @@ class Engine:
             v: sm.vars[v].xsd for v in term_vars
             if sm.vars[v].xsd is not None and not sm.vars[v].mixed}
         probe_vars = [v for v in term_vars if v not in dt_of]
-        if probe_vars and cache_key is not None and cache_key in self._dt_cache:
-            dt_of.update(self._dt_cache[cache_key])
-        elif probe_vars:
+        if probe_vars:
             # probe only a prefix — datatype columns are constant per variable
             # in practice, and this avoids executing the full plan twice
             probe = (
@@ -527,10 +516,7 @@ class Engine:
                 .agg(*[F.first(F.col(v), ignorenulls=True).alias(v) for v in probe_vars])
                 .first()
             )
-            probed = probe.asDict() if probe is not None else {}
-            if cache_key is not None:
-                self._dt_cache[cache_key] = probed
-            dt_of.update(probed)
+            dt_of.update(probe.asDict() if probe is not None else {})
         cols = []
         for v in variables:
             m = sm.vars.get(v)

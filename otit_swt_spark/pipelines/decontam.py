@@ -23,30 +23,12 @@ operator; this is part of the additive LLM-training-data suite alongside
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # Normalization contract is SHARED with textstats (repetition stats) and
 # the DuckDB oracles: regexp_extract_all(lower(text), '[a-z0-9]+'). One
 # definition — drift between modules would silently change what a token is.
 from otit_swt_spark.pipelines.textstats import _word_tokens as _tokens  # noqa: E402
-
-
-def ngram_hashes(text: Column, n: int) -> Column:
-    """Array of md5 hashes of all n-token shingles of ``text`` (empty when
-    the document has fewer than ``n`` tokens). ``slice`` is 1-based; the
-    explicit ``when`` guard matters because ``sequence(1, k)`` with k <= 0
-    would generate a DESCENDING sequence, not an empty one.
-
-    NOTE: expression-valued — fine for one-off use, but Spark interprets
-    higher-order-function lambdas per element, so the token expression is
-    re-evaluated per shingle. Hot paths should use :func:`with_ngram_hashes`,
-    which stages the token array as a bound column first."""
-    toks = _tokens(text)
-    n_starts = F.size(toks) - F.lit(n - 1)
-    idx = F.when(n_starts >= 1, F.sequence(F.lit(1), n_starts)) \
-           .otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, n))))
 
 
 def with_ngram_hashes(df: DataFrame, n: int, text_col: str = "text",

@@ -283,21 +283,6 @@ def extract_audio_features(media: DataFrame, fake: bool = True) -> DataFrame:
     return media.mapInPandas(kernel, AUDIO_FEATURES_SCHEMA)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payloads through the pandas kernel and tags
-    target dimensions in metadata (real kernel would re-encode bytes)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["meta"] = [
-                {**(m or {}), "resize": f"{width}x{height}"} for m in pdf["meta"]
-            ]
-            yield pdf
-
-    return media.mapInPandas(kernel, MEDIA_SCHEMA)
-
-
 def frame_sample_stub(media: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame sampling plumbing: emits one row per sampled frame index.
     Uses built-in explode on a computed index array (no Python in the hot

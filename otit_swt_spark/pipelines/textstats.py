@@ -89,18 +89,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(norm)
 
 
-def rolling_hash(text: Column, window: int = 8) -> Column:
-    """Cheap shift-rolling content hash over character codes — a locality
-    fingerprint usable for chunk-level dedup."""
-    codes = F.transform(F.split(text, ""), lambda c: F.ascii(c).cast("long"))
-    # mask to 56 bits so acc*31 + x never overflows a long
-    mask = F.lit((1 << 56) - 1)
-    return F.aggregate(
-        codes, F.lit(0).cast("long"),
-        lambda acc, x: (acc * F.lit(31) + x).bitwiseAND(mask),
-    )
-
-
 def _word_tokens(text: Column) -> Column:
     return F.regexp_extract_all(F.lower(text), F.lit(r"[a-z0-9]+"), F.lit(0))
 

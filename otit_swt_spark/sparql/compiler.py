@@ -45,7 +45,9 @@ from otit_swt_spark.terms import (
     Literal,
     NEST_AGGREGATION,
     Variable,
+    XSD,
     XSD_BOOLEAN,
+    XSD_DATE,
     XSD_DATETIME,
     XSD_STRING,
     spark_type_for_xsd,
@@ -54,20 +56,32 @@ from otit_swt_spark.terms import (
 
 RID = "__rid"
 
+_XSD_INTEGRAL = frozenset(XSD + n for n in (
+    "integer", "long", "int", "short", "byte", "nonNegativeInteger",
+    "unsignedInt", "unsignedLong"))
+
+
+def _partial_agg_type(xsd: str | None) -> str | None:
+    """The type remote SUM/MIN/MAX partials of a value column re-aggregate
+    exactly in: "long" for the XSD integral types, "double" for
+    double/float, None otherwise (strings sort by store collation,
+    decimals carry engine-specific precision rules)."""
+    if xsd in _XSD_INTEGRAL:
+        return "long"
+    if xsd in (XSD + "double", XSD + "float"):
+        return "double"
+    return None
+
 
 def _pushdown_value_literal(lit):
     """A chain hasValue literal as a plain Python value safe to render
     into a remote SQL equality — numeric / boolean / plain-string only;
     anything else returns None (no value pushdown, Spark-side filter
     still applies)."""
-    from otit_swt_spark.terms import XSD, XSD_BOOLEAN as XB, XSD_STRING as XS
-
     dt = lit.datatype
-    if dt == XB:
+    if dt == XSD_BOOLEAN:
         return lit.lexical in ("true", "1")
-    if dt in (XSD + "integer", XSD + "long", XSD + "int",
-              XSD + "short", XSD + "byte", XSD + "nonNegativeInteger",
-              XSD + "unsignedInt", XSD + "unsignedLong"):
+    if dt in _XSD_INTEGRAL:
         try:
             return int(lit.lexical)
         except ValueError:
@@ -83,9 +97,55 @@ def _pushdown_value_literal(lit):
         # and binds as a column name) — leave them to the Spark-side
         # filter, where NaN = NaN even matches rows
         return v if math.isfinite(v) else None
-    if dt in (XS, None):
+    if dt in (XSD_STRING, None):
         return lit.lexical
     return None
+
+
+def _conjuncts(e: A.Expr):
+    """The top-level conjuncts of a FILTER expression."""
+    if isinstance(e, A.EAnd):
+        yield from _conjuncts(e.left)
+        yield from _conjuncts(e.right)
+    else:
+        yield e
+
+
+def _utc_naive(lexical: str):
+    """An xsd:dateTime / xsd:date lexical form as a naive UTC datetime —
+    the convention of the engine's session, the date-partition columns
+    and the remote TIMESTAMP literals — or None when it does not parse."""
+    import datetime as _dt
+
+    try:
+        dtv = _dt.datetime.fromisoformat(lexical.replace("Z", "+00:00"))
+    except ValueError:
+        return None
+    if dtv.tzinfo is not None:
+        dtv = dtv.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return dtv
+
+
+_FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}
+
+
+def _datetime_bound(c: A.Expr) -> tuple | None:
+    """``(var, op, utc_datetime, datatype)`` for a conjunct comparing a
+    variable with an xsd:dateTime or xsd:date literal, rewritten as
+    ``?var op literal``; None for anything else or an unparseable
+    literal. The single reader of FILTER timestamp bounds: each caller
+    applies its own policy (relaxed remote hints, exact grouped bounds,
+    date-partition pruning)."""
+    if not isinstance(c, A.ECmp):
+        return None
+    op, var, lit = c.op, c.left, c.right
+    if isinstance(lit, A.EVar) and isinstance(var, A.ELiteral):
+        op, var, lit = _FLIP.get(op, op), lit, var
+    if not (isinstance(var, A.EVar) and isinstance(lit, A.ELiteral)
+            and lit.value.datatype in (XSD_DATETIME, XSD_DATE)):
+        return None
+    dtv = _utc_naive(lit.value.lexical)
+    return None if dtv is None else (var.name, op, dtv, lit.value.datatype)
 
 
 _TIME_UNITS = ("year", "month", "day", "hour", "minute", "second")
@@ -98,8 +158,8 @@ def _ts_literal_eq(col: "Column", col_hint: str | None, term) -> "Column":
     SPARQL `=` between literals of incomparable datatypes is a type
     error, which as a PATTERN restriction means 'matches nothing' — it
     must not become an ANSI cast error at constant folding (a string
-    hasValue literal against a double value column crashed the whole
-    plan with CAST_INVALID_INPUT; round-13 fix)."""
+    hasValue literal against a double value column would crash the
+    whole plan with CAST_INVALID_INPUT)."""
     t = literal_typed(term)
     if (col_hint is None or t.hint == col_hint
             or (t.hint in _COMPARABLE_NUM and col_hint in _COMPARABLE_NUM)):
@@ -445,39 +505,14 @@ class Compiler:
         literals widen to the day's [00:00, 24:00) superset."""
         import datetime as _dt
 
-        from otit_swt_spark.terms import XSD_DATE, XSD_DATETIME
-
-        def conjuncts(e):
-            if isinstance(e, A.EAnd):
-                yield from conjuncts(e.left)
-                yield from conjuncts(e.right)
-            else:
-                yield e
-
         hints: dict[str, tuple] = {}
-        for c in conjuncts(expr):
-            if not isinstance(c, A.ECmp):
+        for c in _conjuncts(expr):
+            b = _datetime_bound(c)
+            if b is None:
                 continue
-            op = c.op
-            if isinstance(c.left, A.EVar) and isinstance(c.right, A.ELiteral):
-                var, lit = c.left.name, c.right.value
-            elif isinstance(c.right, A.EVar) and isinstance(c.left, A.ELiteral):
-                var, lit = c.right.name, c.left.value
-                op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
-            else:
-                continue
-            if lit.datatype not in (XSD_DATETIME, XSD_DATE):
-                continue
-            try:
-                dtv = _dt.datetime.fromisoformat(
-                    lit.lexical.replace("Z", "+00:00"))
-            except ValueError:
-                continue
-            if dtv.tzinfo is not None:
-                dtv = dtv.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            lo_v, hi_v = dtv, dtv
-            if lit.datatype == XSD_DATE:
-                hi_v = dtv + _dt.timedelta(days=1)
+            var, op, lo_v, datatype = b
+            hi_v = lo_v + _dt.timedelta(days=1) \
+                if datatype == XSD_DATE else lo_v
             lo, hi = hints.get(var, (None, None))
             if op in (">", ">=", "="):
                 lo = lo_v if lo is None else max(lo, lo_v)
@@ -513,8 +548,6 @@ class Compiler:
         re-applied Spark-side afterwards, so the pushdown is a pure
         fetch-volume optimization. Tables without pushdown support load
         exactly as before; with none registered this is ts_relation()."""
-        import datetime as _dt
-
         if not self.ts_tables:
             raise ValueError("query touches time-series data but no TimeSeriesTable registered")
 
@@ -523,15 +556,7 @@ class Compiler:
         if isinstance(t_term, Variable):
             ts_lower, ts_upper = self._lookup_ts_bounds(t_term.name)
         elif isinstance(t_term, Literal):
-            try:
-                dtv = _dt.datetime.fromisoformat(
-                    t_term.lexical.replace("Z", "+00:00"))
-                if dtv.tzinfo is not None:
-                    dtv = dtv.astimezone(
-                        _dt.timezone.utc).replace(tzinfo=None)
-                ts_lower = ts_upper = dtv
-            except ValueError:
-                pass
+            ts_lower = ts_upper = _utc_naive(t_term.lexical)
         if isinstance(v_term, Literal):
             value_eq = _pushdown_value_literal(v_term)
 
@@ -576,7 +601,6 @@ class Compiler:
                     # return empty. Push string equality only when this
                     # table's value type is known to be string; otherwise
                     # leave it to the Spark-side filter.
-                    from otit_swt_spark.terms import XSD_STRING
                     try:
                         if t.value_xsd(self.spark) != XSD_STRING:
                             v_eq = None
@@ -639,8 +663,6 @@ class Compiler:
         Returns the mutable spec consumed by _ts_relation_for_join (which
         still decides per-backend and may decline), or None — in which
         case the compiled plan is identical to the non-pushdown one."""
-        import datetime as _dt
-
         if not any(getattr(t, "supports_pushdown", False)
                    for t in self.ts_tables):
             return None
@@ -769,38 +791,18 @@ class Compiler:
                     ts_hi = (val, strict)
 
         def parse_bound(c) -> bool:
-            if not isinstance(c, A.ECmp):
+            b = _datetime_bound(c)
+            if b is None:
                 return False
-            op, lhs, rhs = c.op, c.left, c.right
-            if isinstance(rhs, A.EVar) and isinstance(lhs, A.ELiteral):
-                lhs, rhs = rhs, lhs
-                op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
-            if not (isinstance(lhs, A.EVar) and lhs.name == tname
-                    and isinstance(rhs, A.ELiteral)):
+            var, op, dtv, datatype = b
+            if var != tname or datatype != XSD_DATETIME \
+                    or op not in ("<", "<=", ">", ">=", "="):
                 return False
-            lit = rhs.value
-            if lit.datatype != XSD_DATETIME or op not in (
-                    "<", "<=", ">", ">=", "="):
-                return False
-            try:
-                dtv = _dt.datetime.fromisoformat(
-                    lit.lexical.replace("Z", "+00:00"))
-            except ValueError:
-                return False
-            if dtv.tzinfo is not None:
-                dtv = dtv.astimezone(_dt.timezone.utc).replace(tzinfo=None)
             if op in (">", ">=", "="):
                 tighten(True, dtv, op == ">")
             if op in ("<", "<=", "="):
                 tighten(False, dtv, op == "<")
             return True
-
-        def conjuncts(e):
-            if isinstance(e, A.EAnd):
-                yield from conjuncts(e.left)
-                yield from conjuncts(e.right)
-            else:
-                yield e
 
         for fexpr in filters:
             if _contains_exists(fexpr):
@@ -811,7 +813,7 @@ class Compiler:
                 return None
             if tname not in used:
                 continue
-            for c in conjuncts(sub):
+            for c in _conjuncts(sub):
                 if tname not in A.expr_variables(c):
                     continue
                 if parse_bound(c):
@@ -885,21 +887,12 @@ class Compiler:
         value_aggs = bool({"sum", "min", "max"} & spec["needs"])
         hint = "double"
         if value_aggs:
-            hint_map = {}
-            from otit_swt_spark.terms import XSD
-            for n in ("integer", "long", "int", "short", "byte",
-                      "nonNegativeInteger", "unsignedInt", "unsignedLong"):
-                hint_map[XSD + n] = "long"
-            hint_map[XSD + "double"] = "double"
-            hint_map[XSD + "float"] = "double"
-
             hints = []
             for t in self.ts_tables:
                 try:
-                    x = t.value_xsd(self.spark)
+                    h = _partial_agg_type(t.value_xsd(self.spark))
                 except Exception:
                     return None
-                h = hint_map.get(x)
                 if h is None:
                     return None
                 hints.append(h)
@@ -1599,13 +1592,8 @@ class Compiler:
                       for tj in ordered]
         hint = "double"
         if any(value_aggs):
-            from otit_swt_spark.terms import XSD
-            hint_map = {XSD + "double": "double", XSD + "float": "double"}
-            for n in ("integer", "long", "int", "short", "byte",
-                      "nonNegativeInteger", "unsignedInt", "unsignedLong"):
-                hint_map[XSD + n] = "long"
             try:
-                hint = hint_map.get(table.value_xsd(self.spark))
+                hint = _partial_agg_type(table.value_xsd(self.spark))
             except Exception:
                 return None
             if hint is None:
@@ -2109,8 +2097,6 @@ class Compiler:
         semantically redundant with the timestamp filter, so always sound."""
         import datetime as _dt
 
-        from otit_swt_spark.terms import XSD_DATE, XSD_DATETIME
-
         tvar_parts: dict[str, dict] = {}
         for info in sm.ts_chains.values():
             t, parts = info.get("t"), info.get("parts")
@@ -2118,13 +2104,6 @@ class Compiler:
                 tvar_parts[t] = parts
         if not tvar_parts:
             return []
-
-        def conjuncts(e):
-            if isinstance(e, A.EAnd):
-                yield from conjuncts(e.left)
-                yield from conjuncts(e.right)
-            else:
-                yield e
 
         def bound(parts, d: _dt.date, lower: bool) -> Column:
             y = F.col(parts["year"])
@@ -2139,32 +2118,16 @@ class Compiler:
             return y.isNull() | (y < d.year) | ((y == d.year) & mon_ok)
 
         preds: list[Column] = []
-        for c in conjuncts(expr):
-            if not isinstance(c, A.ECmp):
+        for c in _conjuncts(expr):
+            b = _datetime_bound(c)
+            if b is None or b[0] not in tvar_parts:
                 continue
-            op = c.op
-            if isinstance(c.left, A.EVar) and isinstance(c.right, A.ELiteral):
-                var, lit = c.left.name, c.right.value
-            elif isinstance(c.right, A.EVar) and isinstance(c.left, A.ELiteral):
-                var, lit = c.right.name, c.left.value
-                op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
-            else:
-                continue
-            parts = tvar_parts.get(var)
-            if parts is None or lit.datatype not in (XSD_DATETIME, XSD_DATE):
-                continue
-            try:
-                dtv = _dt.datetime.fromisoformat(
-                    lit.lexical.replace("Z", "+00:00"))
-            except ValueError:
-                continue
-            if dtv.tzinfo is not None:
-                # Partition columns are derived from UTC timestamps: an
-                # offset literal must be normalized to UTC before its date
-                # is used, or the bound could prune a day that still holds
-                # matching rows (e.g. +02:00 times crossing midnight).
-                dtv = dtv.astimezone(_dt.timezone.utc)
-            d = dtv.date()
+            # Partition columns are derived from UTC timestamps: the
+            # bound's date is taken after UTC normalization, or an offset
+            # literal could prune a day that still holds matching rows
+            # (e.g. +02:00 times crossing midnight).
+            var, op, dtv, _ = b
+            parts, d = tvar_parts[var], dtv.date()
             if op in (">", ">=", "="):
                 preds.append(bound(parts, d, lower=True))
             if op in ("<", "<=", "="):

@@ -188,6 +188,12 @@ def test_render_restricted_sql_text_and_duckdb_executes(spark):
     assert "\"timestamp\" >= TIMESTAMP '2022-06-01 08:46:56'" in sql
     assert "\"timestamp\" <= TIMESTAMP '2022-06-01 08:46:58'" in sql
     assert "\"value\" = 10.0" in sql
+    assert sql == (
+        "SELECT * FROM (SELECT id, timestamp, value FROM ts) ts_pushdown "
+        "WHERE \"id\" IN ('a1', 'b''2') "
+        "AND \"timestamp\" >= TIMESTAMP '2022-06-01 08:46:56' "
+        "AND \"timestamp\" <= TIMESTAMP '2022-06-01 08:46:58' "
+        "AND \"value\" = 10.0")
 
     con = duckdb.connect()
     con.execute("CREATE TABLE ts AS SELECT * FROM (VALUES "
@@ -819,6 +825,23 @@ def test_render_sync_grouped_sql_text():
     assert 'CAST(NULL AS DOUBLE) AS "__gp_sum_2"' in sql
     assert 'GROUP BY c0."id", c1."id", FLOOR(EXTRACT(EPOCH FROM c0."ts") ' \
         '/ 600)' in sql
+    assert sql == (
+        'SELECT c0."id" AS "id_1", c1."id" AS "id_2", '
+        'MIN(c0."ts") AS "ts", CAST(COUNT(*) AS BIGINT) AS "__gp_cnt", '
+        'CAST(COUNT(c0."value") AS BIGINT) AS "__gp_n_1", '
+        'CAST(SUM(c0."value") AS DOUBLE) AS "__gp_sum_1", '
+        'CAST(MIN(c0."value") AS DOUBLE) AS "__gp_min_1", '
+        'CAST(MAX(c0."value") AS DOUBLE) AS "__gp_max_1", '
+        'CAST(COUNT(c1."value") AS BIGINT) AS "__gp_n_2", '
+        'CAST(NULL AS DOUBLE) AS "__gp_sum_2", '
+        'CAST(NULL AS DOUBLE) AS "__gp_min_2", '
+        'CAST(NULL AS DOUBLE) AS "__gp_max_2" '
+        'FROM (SELECT * FROM ts) c0 '
+        'JOIN (SELECT * FROM ts) c1 ON c1."ts" = c0."ts" '
+        "WHERE (c0.\"id\", c1.\"id\") IN (('a', 'b'), ('c', 'd')) "
+        "AND c0.\"ts\" >= TIMESTAMP '2022-01-01 00:00:00' "
+        "AND c0.\"ts\" < TIMESTAMP '2022-01-02 00:00:00' "
+        'GROUP BY c0."id", c1."id", FLOOR(EXTRACT(EPOCH FROM c0."ts") / 600)')
     import pytest as _pytest
     with _pytest.raises(ValueError):
         render_sync_grouped_sql(
@@ -879,6 +902,17 @@ def test_render_grouped_sql_text():
     for alias in ("__gp_cnt", "__gp_n", "__gp_sum", "__gp_min", "__gp_max"):
         assert f'"{alias}"' in sql
     assert 'MIN("timestamp") AS "timestamp"' in sql
+    assert sql == (
+        'SELECT "id", MIN("timestamp") AS "timestamp", '
+        'CAST(COUNT(*) AS BIGINT) AS "__gp_cnt", '
+        'CAST(COUNT("value") AS BIGINT) AS "__gp_n", '
+        'CAST(SUM("value") AS DOUBLE) AS "__gp_sum", '
+        'CAST(MIN("value") AS DOUBLE) AS "__gp_min", '
+        'CAST(MAX("value") AS DOUBLE) AS "__gp_max" '
+        "FROM (SELECT * FROM ts) ts_pushdown WHERE \"id\" IN ('a', 'b') "
+        "AND \"timestamp\" >= TIMESTAMP '2022-06-01 08:00:00' "
+        "AND \"timestamp\" < TIMESTAMP '2022-06-01 09:00:00' "
+        'GROUP BY "id", FLOOR(EXTRACT(EPOCH FROM "timestamp") / 600)')
 
     sql2 = render_grouped_sql(
         "SELECT * FROM ts", identifier_column="id",
@@ -891,6 +925,118 @@ def test_render_grouped_sql_text():
         timestamp_column="ts", granule=("all",), agg_cast="BIGINT")
     assert sql3.rstrip().endswith('GROUP BY "id"')
     assert "CAST(SUM(\"value\") AS BIGINT)" in sql3
+
+
+def test_render_grouped_probe_sql_text():
+    """Grouped-probe render contract: the point and group counts over
+    the same restriction (exact strictness) and grouping keys the
+    grouped query renders."""
+    import datetime as dt
+
+    from otit_swt_spark.sources.flight import render_grouped_probe_sql
+
+    sql = render_grouped_probe_sql(
+        "SELECT * FROM ts",
+        identifier_column="id", timestamp_column="timestamp",
+        granule=("trunc", "minute"),
+        ids=["b", "a"],
+        ts_lower=(dt.datetime(2022, 6, 1, 8, 0, 0), True),
+        ts_upper=(dt.datetime(2022, 6, 1, 9, 0, 0), False))
+    assert sql == (
+        'SELECT CAST(COALESCE(SUM("__pp_cnt"), 0) AS BIGINT) AS "__pts", '
+        'CAST(COUNT(*) AS BIGINT) AS "__bkts" FROM ('
+        'SELECT COUNT(*) AS "__pp_cnt" FROM (SELECT * FROM ts) ts_pushdown '
+        "WHERE \"id\" IN ('a', 'b') "
+        "AND \"timestamp\" > TIMESTAMP '2022-06-01 08:00:00' "
+        "AND \"timestamp\" <= TIMESTAMP '2022-06-01 09:00:00' "
+        "GROUP BY \"id\", DATE_TRUNC('minute', \"timestamp\")) ts_probe")
+
+
+def _flight_vs_in_memory(spark, srv, query):
+    """Run ``query`` over the Flight fixture and over an in-memory twin
+    built from the fixture's rows; returns (flight rows, twin rows,
+    remote SQL of the Flight query)."""
+    from otit_swt_spark.sources.flight import flight_sql_read, flight_timeseries
+    from otit_swt_spark.timeseries import in_memory_timeseries
+
+    location = f"grpc://127.0.0.1:{srv.port}"
+    graph = GraphStore.from_sparql_insert(spark, TESTDATA_SPARQL)
+    eng = Engine(spark, graph).add_timeseries_table(flight_timeseries(
+        spark, location, "SELECT id, timestamp, value FROM ts"))
+    got = rows(eng.query(query))
+    remote = srv.queries[-1]
+    pdf = flight_sql_read(spark, location, "SELECT id, timestamp, value FROM ts",
+                          distributed=False).toPandas()
+    twin = in_memory_timeseries(spark, {
+        i: g[["timestamp", "value"]].reset_index(drop=True)
+        for i, g in pdf.groupby("id")})
+    want = rows(Engine(spark, graph).add_timeseries_table(twin).query(query))
+    return got, want, remote
+
+
+def test_flight_point_fetch_renders_offset_bound_in_utc(
+        spark, flight_pushdown_server):
+    """A FILTER bound with a +02:00 offset reaches the remote WHERE
+    normalized to naive UTC (the store's TIMESTAMP convention), and the
+    answer equals the in-memory engine's."""
+    got, want, remote = _flight_vs_in_memory(
+        spark, flight_pushdown_server, """
+    PREFIX otit_swt: <https://github.com/magbak/otit_swt#>
+    PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+    SELECT ?ts_id ?t ?v WHERE {
+        ?ts otit_swt:hasExternalId ?ts_id .
+        ?ts otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v .
+        FILTER(?t >= "2022-06-01T10:46:58+02:00"^^xsd:dateTime)
+    }""")
+    assert "GROUP BY" not in remote
+    assert "\"timestamp\" >= TIMESTAMP '2022-06-01 08:46:58'" in remote
+    assert len(got) == 4 and got == want
+
+
+def test_flight_point_fetch_date_upper_bound_widens_to_next_midnight(
+        spark, flight_pushdown_server):
+    """An xsd:date upper bound relaxes to the next midnight in the
+    remote WHERE (an implied-by superset of the day); the answer equals
+    the in-memory engine's."""
+    got, want, remote = _flight_vs_in_memory(
+        spark, flight_pushdown_server, """
+    PREFIX otit_swt: <https://github.com/magbak/otit_swt#>
+    PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+    SELECT ?ts_id ?t ?v WHERE {
+        ?ts otit_swt:hasExternalId ?ts_id .
+        ?ts otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v .
+        FILTER(?t >= "2022-06-01T08:46:58"^^xsd:dateTime
+               && ?t < "2022-06-02"^^xsd:date)
+    }""")
+    assert "GROUP BY" not in remote
+    assert "\"timestamp\" <= TIMESTAMP '2022-06-03 00:00:00'" in remote
+    assert len(got) == 4 and got == want
+
+
+def test_flight_grouped_pushdown_strict_offset_bound_exact_utc(
+        spark, flight_pushdown_server):
+    """The grouped pushdown renders a strict offset bound EXACTLY, as
+    its UTC instant (a relaxed bound would fold the boundary point into
+    the partials); the answer equals the in-memory engine's."""
+    got, want, remote = _flight_vs_in_memory(
+        spark, flight_pushdown_server, """
+    PREFIX otit_swt: <https://github.com/magbak/otit_swt#>
+    PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+    SELECT ?ts_id (SUM(?v) AS ?total) (COUNT(?v) AS ?n) WHERE {
+        ?ts otit_swt:hasExternalId ?ts_id .
+        ?ts otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v .
+        FILTER(?t > "2022-06-01T10:46:55+02:00"^^xsd:dateTime)
+    } GROUP BY ?ts_id""")
+    assert 'GROUP BY "id"' in remote
+    assert "\"timestamp\" > TIMESTAMP '2022-06-01 08:46:55'" in remote
+    assert got == want == [("ts1", 104.0 + 105 + 106 + 107, 4),
+                           ("ts2", 204.0 + 205 + 206 + 207, 4)]
 
 
 def test_flight_pushdown_exists_barrier(spark, flight_pushdown_server):

@@ -202,35 +202,55 @@ def test_mixed_datatype_coerces_when_not_strict(spark):
 
 
 def test_catalog_types_output_without_probe(engine):
-    """The predicate datatype catalog supplies output types at compile time;
-    the per-query probe job (and thus its cache) is never used."""
+    """The predicate datatype catalog supplies output types at compile
+    time: once the catalog is warm, building a catalog-typed query's plan
+    runs no Spark job (no ``__dt`` probe)."""
     q = PFX + """
     SELECT ?ts ?dt WHERE { ?s otit_swt:hasTimeseries ?ts .
                            ?ts otit_swt:hasDatatype ?dt }"""
-    engine._dt_cache.clear()
-    df = engine.query(q)
+    sc = engine.spark.sparkContext
+    engine.graph.predicate_datatypes()
+    engine._plan_cache.pop(q, None)
+    group = "test-catalog-typed-plan-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = engine.query(q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert df.count() == 2
-    assert engine._dt_cache == {}  # statically typed -> no probe recorded
 
 
-def test_dt_cache_cleared_on_graph_or_ts_change(spark):
-    """Probe results are graph-dependent: swapping the graph (or adding a ts
-    table) must invalidate them, or a repeated query text reuses datatype
-    probes from the old graph and finalize casts to stale types."""
+def test_plan_cache_cleared_on_every_mutation(spark):
+    """Prepared plans are graph- and registry-dependent: every mutation
+    (graph swap, ts table, SERVICE endpoint, named graph, SPARQL Update)
+    must drop them, or a repeated query text reuses a plan built against
+    the old state."""
     from otit_swt_spark.engine import Engine
     from otit_swt_spark.graph import GraphStore
     from otit_swt_spark.timeseries import in_memory_timeseries
     import pandas as pd
 
-    eng = Engine(spark, GraphStore(spark))
-    eng._dt_cache["k"] = {"v": None}
-    eng.set_graph(GraphStore(spark))
-    assert eng._dt_cache == {}
-    eng._dt_cache["k"] = {"v": None}
     pdf = pd.DataFrame({"timestamp": pd.to_datetime(["2022-01-01"]),
                         "value": [1.0]})
-    eng.add_timeseries_table(in_memory_timeseries(spark, {"t": pdf}))
-    assert eng._dt_cache == {}
+    eng = Engine(spark, GraphStore(spark))
+    mutations = {
+        "set_graph": lambda: eng.set_graph(GraphStore(spark)),
+        "add_timeseries_table": lambda: eng.add_timeseries_table(
+            in_memory_timeseries(spark, {"t": pdf})),
+        "register_service": lambda: eng.register_service(
+            "http://ex/svc", GraphStore(spark)),
+        "register_named_graph": lambda: eng.register_named_graph(
+            "http://ex/g", GraphStore(spark)),
+        "update": lambda: eng.update(
+            'INSERT DATA { <http://ex/a> <http://ex/p> "x" }'),
+    }
+    q = "SELECT ?s WHERE { ?s <http://ex/p> ?o }"
+    for name, mutate in mutations.items():
+        eng.query(q)
+        assert q in eng._plan_cache, name
+        mutate()
+        assert eng._plan_cache == {}, name
 
 
 def test_regex_flags(engine):
