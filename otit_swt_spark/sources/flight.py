@@ -20,6 +20,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from otit_swt_spark.terms import XSD_STRING
 from otit_swt_spark.timeseries import TimeSeriesTable
 
 
@@ -445,6 +446,20 @@ class FlightTimeSeriesTable(TimeSeriesTable):
                               ids: list[str] | None = None,
                               ts_lower=None, ts_upper=None,
                               value_eq=None) -> DataFrame:
+        """The restriction rendered into the store's own SQL
+        (render_restricted_sql); unrestricted, the base query's fetch."""
+        if isinstance(value_eq, str):
+            # A string equality renders as value = 'lit'; against a
+            # numeric remote value column that HARD-ERRORS on
+            # PostgreSQL-dialect stores (invalid input syntax) where the
+            # Spark-side null-safe comparison would just return empty.
+            # Push string equality only when the value type is known to
+            # be string; otherwise leave it to the Spark-side filter.
+            try:
+                if self.value_xsd(spark) != XSD_STRING:
+                    value_eq = None
+            except Exception:
+                value_eq = None
         sql = render_restricted_sql(
             self.base_query,
             identifier_column=self.identifier_column,
@@ -524,7 +539,7 @@ class FlightTimeSeriesTable(TimeSeriesTable):
         per ((id_1..id_n), granule) crosses the wire instead of N point
         streams. Returns the (id_1..id_n, representative timestamp,
         __gp_cnt, per-chain partials) frame the compiler's
-        _apply_sync_grouped_joins consumes."""
+        _grouped_pushdown consumes."""
         cast = _SQL_AGG_TYPE.get(agg_type)
         if cast is None:
             return None

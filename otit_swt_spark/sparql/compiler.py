@@ -26,6 +26,7 @@ Semantics notes:
 
 from __future__ import annotations
 
+import functools
 import itertools
 from dataclasses import dataclass, field, replace
 
@@ -146,6 +147,27 @@ def _datetime_bound(c: A.Expr) -> tuple | None:
         return None
     dtv = _utc_naive(lit.value.lexical)
     return None if dtv is None else (var.name, op, dtv, lit.value.datatype)
+
+
+_CHAIN_KEYS = {HAS_DATA_POINT: "ts_var", HAS_TIMESTAMP: "t", HAS_VALUE: "v"}
+
+
+def _classify_chains(patterns) -> tuple[dict[str, dict[str, list]], list]:
+    """Split triple patterns into time-series chains and the rest. A
+    chain is keyed by its data point variable and lists, in written
+    order, the subjects of its hasDataPoint patterns (``"ts_var"``) and
+    the objects of its hasTimestamp (``"t"``) and hasValue (``"v"``)
+    patterns; a key is absent when the chain has no such pattern."""
+    chains: dict[str, dict[str, list]] = {}
+    rest = []
+    for tp in patterns:
+        key = _CHAIN_KEYS.get(tp.p.value) if isinstance(tp.p, IRI) else None
+        dp, term = (tp.o, tp.s) if key == "ts_var" else (tp.s, tp.o)
+        if key is None or not isinstance(dp, Variable):
+            rest.append(tp)
+            continue
+        chains.setdefault(dp.name, {}).setdefault(key, []).append(term)
+    return chains, rest
 
 
 _TIME_UNITS = ("year", "month", "day", "hour", "minute", "second")
@@ -415,8 +437,6 @@ class Compiler:
         self.graph_df = graph_df
         self.ts_tables = ts_tables or []
         self._counter = itertools.count()
-        self._ts_df: DataFrame | None = None
-        self._ts_hint: str | None = None
         #: stack of FILTER-derived timestamp-bound hints (var -> (lower,
         #: upper) datetimes) consulted when a pushdown-capable TS backend
         #: is registered; ``None`` entries are scope BARRIERS (MINUS right
@@ -425,7 +445,7 @@ class Compiler:
         self._ts_bound_hints: list[dict | None] = []
         #: active grouped-pushdown specs (innermost last) — published by
         #: compile_group when its static analysis proves the GROUP BY can
-        #: aggregate remotely, consumed by _ts_relation_for_join
+        #: aggregate remotely, fired by compile_bgp (_grouped_pushdown)
         self._group_pushdown_stack: list[dict] = []
         #: endpoint IRI -> GraphStore for SERVICE patterns (in-process
         #: federation; reference rewrites SERVICE to its static side,
@@ -457,17 +477,6 @@ class Compiler:
 
     def fresh(self, hint: str) -> str:
         return f"__{hint}_{next(self._counter)}"
-
-    def ts_relation(self) -> tuple[DataFrame, str]:
-        """The tall (id, timestamp, value) relation = union of registered
-        tables. One logical time-series store, like the reference's single
-        TimeSeriesQueryable backend."""
-        if self._ts_df is None:
-            if not self.ts_tables:
-                raise ValueError("query touches time-series data but no TimeSeriesTable registered")
-            self._ts_df, self._ts_hint = self._harmonize_ts_union(
-                [t.normalized(self.spark) for t in self.ts_tables])
-        return self._ts_df, self._ts_hint
 
     @staticmethod
     def _harmonize_ts_union(dfs: list[DataFrame]) -> tuple[DataFrame, str]:
@@ -539,94 +548,38 @@ class Compiler:
         return lo, hi
 
     def _ts_relation_for_join(self, tj: dict) -> tuple[DataFrame, str]:
-        """The (id, timestamp, value) relation for ONE ts join, with the
-        composed restriction — bounded external-id IN-list from the static
-        side, timestamp bounds from enclosing FILTERs, literal value/time
-        equality from the chain itself — pushed into backends that can
-        execute it remotely (reference timeseries_sql_rewrite.rs:115-205 /
-        arrow_flight_sql_database.rs:121-230 parity). Every constraint is
-        re-applied Spark-side afterwards, so the pushdown is a pure
-        fetch-volume optimization. Tables without pushdown support load
-        exactly as before; with none registered this is ts_relation()."""
+        """The (id, timestamp, value) point relation for ONE ts join: the
+        union of every registered table (one logical store, like the
+        reference's single TimeSeriesQueryable backend), each applying
+        the composed restriction itself — bounded external-id IN-list
+        from the static side, timestamp bounds from enclosing FILTERs,
+        literal value/time equality from the chain (reference
+        timeseries_sql_rewrite.rs:115-205 / arrow_flight_sql_database.rs
+        :121-230 parity). Every constraint is re-applied Spark-side
+        afterwards, so the restriction only has to be implied by the
+        query; a table with nothing to restrict loads unchanged."""
         if not self.ts_tables:
             raise ValueError("query touches time-series data but no TimeSeriesTable registered")
 
+        # a chain's first timestamp term and first value literal restrict
+        # it; further terms only narrow the rows, Spark-side
         ts_lower = ts_upper = value_eq = None
-        t_term, v_term = tj.get("t"), tj.get("v")
+        t_term = tj["t"][0] if tj["t"] else None
+        v_lit = next((x for x in tj["v"] if isinstance(x, Literal)), None)
         if isinstance(t_term, Variable):
             ts_lower, ts_upper = self._lookup_ts_bounds(t_term.name)
         elif isinstance(t_term, Literal):
             ts_lower = ts_upper = _utc_naive(t_term.lexical)
-        if isinstance(v_term, Literal):
-            value_eq = _pushdown_value_literal(v_term)
+        if v_lit is not None:
+            value_eq = _pushdown_value_literal(v_lit)
 
         # the reference's bound join: distinct external ids from the static
-        # side, rendered into the remote SQL. compile_bgp reads them from
-        # the inlined static rows, or from a per-chain bounded probe when
-        # those overflow the cap; None when the chain's own set overflows.
-        ids = tj.get("probed_ids")
-
-        # grouped pushdown (reference GroupedTimeSeriesQuery,
-        # preparing/graph_patterns/group_pattern.rs:18-105): when the
-        # enclosing GROUP BY proved eligible, the store aggregates
-        # partials per (id, granule) remotely — rows-served ~ groups
-        spec = (self._group_pushdown_stack[-1]
-                if self._group_pushdown_stack else None)
-        if spec is not None and not spec["fired"] \
-                and not spec.get("sync") \
-                and isinstance(tj.get("t"), Variable) \
-                and tj["t"].name == spec["t"]:
-            v_ok = ((spec["v"] is None and tj.get("v") is None)
-                    or (spec["v"] is not None
-                        and isinstance(tj.get("v"), Variable)
-                        and tj["v"].name == spec["v"]))
-            if v_ok:
-                grouped = self._grouped_ts_relation(spec, ids)
-                if grouped is not None:
-                    spec["fired"] = True
-                    return grouped
-
-        if ids is None and ts_lower is None and ts_upper is None \
-                and value_eq is None:
-            return self.ts_relation()
-        dfs = []
-        for t in self.ts_tables:
-            if getattr(t, "supports_pushdown", False):
-                v_eq = value_eq
-                if isinstance(v_eq, str) and not isinstance(v_eq, bool):
-                    # A string equality renders as value = 'lit'; against
-                    # a numeric remote value column that HARD-ERRORS on
-                    # PostgreSQL-dialect stores (invalid input syntax)
-                    # where the Spark-side null-safe comparison would just
-                    # return empty. Push string equality only when this
-                    # table's value type is known to be string; otherwise
-                    # leave it to the Spark-side filter.
-                    try:
-                        if t.value_xsd(self.spark) != XSD_STRING:
-                            v_eq = None
-                    except Exception:
-                        v_eq = None
-                dfs.append(t.restricted_normalized(
-                    self.spark, ids=ids, ts_lower=ts_lower,
-                    ts_upper=ts_upper, value_eq=v_eq))
-            else:
-                # Spark-native table: apply the SAME restriction as a
-                # plain filter over the normalized relation. The id set
-                # comes from a join, so Catalyst cannot derive it — the
-                # explicit IN-list prunes the chain before its exchange
-                # and reaches PushedFilters on a parquet-backed scan;
-                # the timestamp bounds push down the ordinary way. Both
-                # are supersets of the join's own constraints, which are
-                # still applied, so results are unchanged (guide §3.2).
-                df = t.normalized(self.spark)
-                if ids is not None:
-                    df = df.where(F.col("id").isin(ids))
-                if ts_lower is not None:
-                    df = df.where(F.col("timestamp") >= F.lit(ts_lower))
-                if ts_upper is not None:
-                    df = df.where(F.col("timestamp") <= F.lit(ts_upper))
-                dfs.append(df)
-        return self._harmonize_ts_union(dfs)
+        # side (compile_bgp); None when the chain's own set overflows
+        return self._harmonize_ts_union([
+            t.restricted_normalized(self.spark, ids=tj["probed_ids"],
+                                    ts_lower=ts_lower, ts_upper=ts_upper,
+                                    value_eq=value_eq)
+            for t in self.ts_tables])
 
     def _analyze_group_pushdown(self, p: A.Group,
                                 input: SolutionMapping | None) -> dict | None:
@@ -648,8 +601,12 @@ class Compiler:
         Conditions (each one guarantees partial rows behave exactly like
         point rows under the rest of the plan):
         - inner tree contains only BGP/Filter/Extend/Join nodes;
-        - exactly one hasDataPoint chain, timestamp+value both variables,
-          none of dp/t/v reused anywhere else or pre-bound by ``input``;
+        - one hasDataPoint chain, or several synchronized on ONE shared
+          timestamp variable (the reference's InnerSynchronized shape,
+          preparing/synchronization.rs:5-55); per chain exactly one
+          hasDataPoint and hasTimestamp and at most one hasValue, terms
+          all variables, none of dp/t/v reused anywhere else or
+          pre-bound by ``input``;
         - every BIND is EXISTS-free and value-free, and any reference to
           the timestamp goes through granule-respecting accessors
           (_collect_time_accessors);
@@ -660,11 +617,12 @@ class Compiler:
         - every aggregate is non-DISTINCT COUNT(*) or
           COUNT/SUM/AVG/MIN/MAX over the bare value variable.
 
-        Returns the mutable spec consumed by _ts_relation_for_join (which
-        still decides per-backend and may decline), or None — in which
-        case the compiled plan is identical to the non-pushdown one."""
-        if not any(getattr(t, "supports_pushdown", False)
-                   for t in self.ts_tables):
+        Returns the mutable spec ``{t, granule, ts_lower, ts_upper,
+        cnt_col, chains: {dp: {v, needs, cols}}, fired}`` that compile_bgp
+        fires through _grouped_pushdown (which still decides per backend
+        and may decline), or None — in which case the compiled plan is
+        identical to the non-pushdown one."""
+        if not any(t.supports_pushdown for t in self.ts_tables):
             return None
 
         triples: list[A.TriplePattern] = []
@@ -688,27 +646,13 @@ class Compiler:
         if not walk(p.inner):
             return None
 
-        chains: dict[str, dict[str, list]] = {}
-        rest: list[A.TriplePattern] = []
-        for tp in triples:
-            pv = tp.p.value if isinstance(tp.p, IRI) else None
-            if pv == HAS_DATA_POINT and isinstance(tp.o, Variable):
-                chains.setdefault(tp.o.name, {}).setdefault(
-                    "ts_var", []).append(tp.s)
-            elif pv == HAS_TIMESTAMP and isinstance(tp.s, Variable):
-                chains.setdefault(tp.s.name, {}).setdefault(
-                    "t", []).append(tp.o)
-            elif pv == HAS_VALUE and isinstance(tp.s, Variable):
-                chains.setdefault(tp.s.name, {}).setdefault(
-                    "v", []).append(tp.o)
-            else:
-                rest.append(tp)
+        chains, rest = _classify_chains(triples)
         if not chains:
             return None
-        # per-chain validation (shared by the single- and multi-chain
-        # forms): exactly one ts_var/t each, at most one v, all terms
-        # variables; a value-less chain (hasDataPoint+hasTimestamp
-        # only) is still groupable for COUNT(*)-shaped queries
+        # per-chain validation: exactly one ts_var/t each, at most one v,
+        # all terms variables; a value-less chain (hasDataPoint +
+        # hasTimestamp only) is still groupable for COUNT(*)-shaped
+        # queries
         chain_list: list[tuple[str, str, str | None]] = []  # (dp, t, v)
         for dp, info in chains.items():
             if any(len(v) != 1 for v in info.values()) or not (
@@ -723,16 +667,10 @@ class Compiler:
             chain_list.append((dp, t_term.name,
                                v_term.name if v_term is not None else None))
 
-        sync = len(chain_list) > 1
-        if sync:
-            # multi-chain: groupable only as a SYNCHRONIZED join — every
-            # chain must share ONE timestamp variable (the reference's
-            # InnerSynchronized shape, preparing/synchronization.rs:5-55,
-            # grouped remotely per timeseries_sql_rewrite.rs:356-428 +
-            # 470-560)
-            tnames = {t for _, t, _ in chain_list}
-            if len(tnames) != 1:
-                return None
+        # several chains are groupable only as a SYNCHRONIZED join on
+        # one timestamp variable
+        if len({t for _, t, _ in chain_list}) != 1:
+            return None
         tname = chain_list[0][1]
         vnames = [v for _, _, v in chain_list if v is not None]
         dps = [dp for dp, _, _ in chain_list]
@@ -828,12 +766,10 @@ class Compiler:
         agg_needs = {"COUNT": {"n"}, "SUM": {"sum"}, "AVG": {"sum", "n"},
                      "MIN": {"min"}, "MAX": {"max"}}
         chain_needs: dict[str, set] = {v: set() for v in vnames}
-        count_star = False
         for a in p.aggregates:
             if a.distinct:
                 return None
             if a.name == "COUNT" and a.expr is None:
-                count_star = True
                 continue
             if a.name in agg_needs and isinstance(a.expr, A.EVar) \
                     and a.expr.name in chain_needs:
@@ -841,93 +777,19 @@ class Compiler:
                 continue
             return None
 
-        granule = _resolve_granule(acc)
-        if not sync:
-            dp, _, vname = chain_list[0]
-            needs = set(chain_needs.get(vname, set()))
-            if count_star:
-                needs.add("cnt")
-            return {
-                "t": tname, "v": vname, "dp": dp,
-                "granule": granule,
-                "ts_lower": ts_lo, "ts_upper": ts_hi,
-                "needs": needs,
-                "cols": {k: self.fresh(f"gp_{k}")
-                         for k in ("cnt", "n", "sum", "min", "max")},
-                "fired": False,
-            }
         return {
-            "sync": True, "t": tname,
-            "granule": granule,
+            "t": tname,
+            "granule": _resolve_granule(acc),
             "ts_lower": ts_lo, "ts_upper": ts_hi,
             "cnt_col": self.fresh("gp_cnt"),
             "chains": {dp: {
                 "v": v,
-                "needs": set(chain_needs.get(v, set())) if v else set(),
+                "needs": set(chain_needs.get(v, ())),
                 "cols": {k: self.fresh(f"gp_{k}")
                          for k in ("n", "sum", "min", "max")},
             } for dp, _, v in chain_list},
             "fired": False,
         }
-
-    def _grouped_ts_relation(self, spec: dict, ids) -> tuple | None:
-        """The (id, representative timestamp, NULL value, partials)
-        relation for a grouped pushdown. Capable backends execute
-        COUNT/SUM/MIN/MAX per (id, granule) REMOTELY; non-capable tables
-        contribute one partial row per point (cnt=1, sum=min=max=value),
-        so the union re-aggregates uniformly and exactly. Returns None —
-        and the caller falls back to the point fetch — when any table's
-        value type is outside the exact-re-aggregation set (strings sort
-        by store collation, decimals carry engine-specific precision
-        rules) or no backend actually produced a grouped frame."""
-        # value-typed partials (SUM/MIN/MAX) demand an exactly
-        # re-aggregatable value type; a count-only spec (COUNT(*) /
-        # COUNT(?v), incl. value-less chains) needs no such gate —
-        # counting works for any remote value type
-        value_aggs = bool({"sum", "min", "max"} & spec["needs"])
-        hint = "double"
-        if value_aggs:
-            hints = []
-            for t in self.ts_tables:
-                try:
-                    h = _partial_agg_type(t.value_xsd(self.spark))
-                except Exception:
-                    return None
-                if h is None:
-                    return None
-                hints.append(h)
-            hint = "long" if all(h == "long" for h in hints) else "double"
-
-        any_grouped = False
-        dfs = []
-        for t in self.ts_tables:
-            g = None
-            if getattr(t, "supports_pushdown", False):
-                g = t.grouped_restricted_normalized(
-                    self.spark, granule=spec["granule"], ids=ids,
-                    ts_lower=spec["ts_lower"], ts_upper=spec["ts_upper"],
-                    agg_type=hint, value_aggs=value_aggs)
-            if g is not None:
-                any_grouped = True
-                dfs.append(g)
-            else:
-                raw = F.col("value")
-                v = raw.cast(hint) if value_aggs else F.lit(None).cast(hint)
-                dfs.append(t.normalized(self.spark).select(
-                    "id", "timestamp", v.alias("value"),
-                    F.col("__part_year"), F.col("__part_month"),
-                    F.col("__part_day"),
-                    F.lit(1).cast("long").alias("__gp_cnt"),
-                    F.when(raw.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-                    .cast("long").alias("__gp_n"),
-                    v.alias("__gp_sum"), v.alias("__gp_min"),
-                    v.alias("__gp_max")))
-        if not any_grouped:
-            return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out, hint
 
     def _partial_reagg(self, a: A.EAggregate, sm: SolutionMapping,
                        spec: dict) -> tuple[Column, VarMeta]:
@@ -935,17 +797,11 @@ class Compiler:
         grouped pushdown. _analyze_group_pushdown guarantees only these
         shapes reach here; metas mirror _compile_aggregate's exactly so
         downstream projection/typing can't tell the paths apart."""
-        if spec.get("sync"):
-            if a.expr is None:  # COUNT(*)
-                return F.sum(F.col(spec["cnt_col"])).cast("long"), \
-                    VarMeta("native", "long")
-            c = next(ch["cols"] for ch in spec["chains"].values()
-                     if ch["v"] == a.expr.name)
-        else:
-            if a.expr is None:  # COUNT(*)
-                return F.sum(F.col(spec["cols"]["cnt"])).cast("long"), \
-                    VarMeta("native", "long")
-            c = spec["cols"]
+        if a.expr is None:  # COUNT(*)
+            return F.sum(F.col(spec["cnt_col"])).cast("long"), \
+                VarMeta("native", "long")
+        c = next(ch["cols"] for ch in spec["chains"].values()
+                 if ch["v"] == a.expr.name)
         val_hint = sm.vars[c["sum"]].hint
         if a.name == "COUNT":
             return F.sum(F.col(c["n"])).cast("long"), VarMeta("native", "long")
@@ -1481,17 +1337,15 @@ class Compiler:
             sm, rows = self._inline_static_side(sm, [tj["eid"] for tj in chains])
         spec = (self._group_pushdown_stack[-1]
                 if self._group_pushdown_stack else None)
-        if (spec is not None and spec.get("sync") and not spec["fired"]
-                and ts_joins):
-            synced = self._apply_sync_grouped_joins(sm, ts_joins, spec, rows)
-            if synced is not None:
-                return synced
+        if spec is not None and not spec["fired"] and ts_joins:
+            grouped = self._grouped_pushdown(sm, ts_joins, spec, rows)
+            if grouped is not None:
+                return grouped
         for i, tj in enumerate(chains):
-            if rows is not None:
-                tj["probed_ids"] = sorted(
-                    {r[i] for r in rows if r[i] is not None})
-            else:
-                tj["probed_ids"] = self._probe_chain_ids(sm, tj["eid"])
+            if "probed_ids" not in tj:  # a declined pushdown read them
+                tj["probed_ids"] = self._static_ids(
+                    sm, [tj["eid"]],
+                    None if rows is None else [r[i:i + 1] for r in rows])
         for tj in ts_joins:
             sm = self._apply_ts_join(sm, tj)
         return sm
@@ -1507,7 +1361,7 @@ class Compiler:
         the chains' external ids are read from the same rows: returns the
         inlined mapping and one ``eids`` tuple per row. Above the cap the
         mapping is returned unchanged with rows None, and compile_bgp
-        falls back to per-chain id probes."""
+        falls back to id probes (_static_ids)."""
         cap = self.TS_ID_PUSHDOWN_MAX
         with job_description(self.spark, "otit:static-side"):
             jrows = sm.df.limit(cap + 1)._jdf.collectAsList()
@@ -1519,132 +1373,136 @@ class Compiler:
         rows = [tuple(r) for r in local.select(*eids).collect()]
         return replace(sm, df=local), rows
 
-    def _probe_chain_ids(self, sm: SolutionMapping, eid: str) -> list | None:
-        """One chain's distinct external ids from the static side when its
-        rows overflow the cap: a bounded probe whose answer still fits
-        when the rows do not (many static rows per series, or several
-        chains whose row count is their ids' cross product). None above
-        the cap, and the chain's fetch then runs without an IN-list."""
-        cap = self.TS_ID_PUSHDOWN_MAX
-        with job_description(self.spark, "otit:chain-ids"):
-            ids = (sm.df.select(eid).where(F.col(eid).isNotNull())
-                   .distinct().limit(cap + 1).collect())
-        return sorted(r[0] for r in ids) if len(ids) <= cap else None
-
-    def _apply_sync_grouped_joins(self, sm: SolutionMapping,
-                                  ts_joins: list[dict], spec: dict,
-                                  rows: list | None) -> SolutionMapping | None:
-        """Combined fetch for a SYNCHRONIZED grouped pushdown: the N
-        chains sharing one timestamp variable become ONE remote query —
-        the store inner-joins the base relation against itself on the
-        timestamp, restricted to the (id_1..id_n) tuples the static side
-        actually binds, and aggregates per-chain partials per (tuple,
-        granule) — reference timeseries_sql_rewrite.rs:356-428
-        (inner_join_selects) composed with :470-560
-        (create_grouped_query). Fires only for the single-remote-store
-        registry (an N-way remote join across DIFFERENT stores has no
-        single executor); any mismatch returns None and the per-chain
-        restricted point fetch runs instead — which is always correct,
-        just fetches points rather than buckets."""
-        if len(self.ts_tables) != 1:
-            return None
-        table = self.ts_tables[0]
-        if not getattr(table, "supports_pushdown", False):
-            return None
-        chain_specs = spec["chains"]
-        if {tj.get("dp") for tj in ts_joins} != set(chain_specs):
-            return None
-        for tj in ts_joins:
-            if "rebind" in tj or not isinstance(tj.get("t"), Variable) \
-                    or tj["t"].name != spec["t"]:
-                return None
-            ch = chain_specs[tj["dp"]]
-            v_term = tj.get("v")
-            if ch["v"] is None:
-                if v_term is not None:
-                    return None
-            elif not (isinstance(v_term, Variable)
-                      and v_term.name == ch["v"]):
-                return None
-            if tj.get("eid") not in sm.df.columns:
-                return None
-
-        ordered = list(ts_joins)
-        eids = [tj["eid"] for tj in ordered]
+    def _static_ids(self, sm: SolutionMapping, eids: list[str],
+                    rows: list | None) -> list | None:
+        """The sorted distinct external ids the static side binds for the
+        chains whose id columns are ``eids`` — bare ids for one chain,
+        ``(id_1..id_n)`` tuples for several; a row with a NULL id binds
+        no series. Read from the inlined ``rows`` (one tuple over
+        ``eids`` each) or, when those overflowed the cap, from a bounded
+        probe whose answer still fits when the rows do not (many static
+        rows per series, or several chains whose row count is their ids'
+        cross product). None when the probe overflows the cap too: one
+        chain's fetch then runs without an IN-list, several chains' remote
+        join declines."""
         if rows is None:
-            # the static rows overflowed: probe the distinct id tuples
             cap = self.TS_ID_PUSHDOWN_MAX
-            cond = F.lit(True)
-            for e in eids:
-                cond = cond & F.col(e).isNotNull()
             with job_description(self.spark, "otit:chain-ids"):
-                rows = (sm.df.select(*eids).where(cond)
-                        .distinct().limit(cap + 1).collect())
+                rows = (sm.df.select(*eids).dropna().distinct()
+                        .limit(cap + 1).collect())
             if len(rows) > cap:
                 return None
-        id_tuples = sorted({tuple(r) for r in rows
-                            if all(x is not None for x in r)})
+        ids = {tuple(r) for r in rows if None not in r}
+        return sorted(r[0] for r in ids) if len(eids) == 1 else sorted(ids)
 
-        # value-typed partials demand an exactly re-aggregatable value
-        # type (same gate as the single-chain path)
-        value_aggs = [bool({"sum", "min", "max"}
-                           & chain_specs[tj["dp"]]["needs"])
-                      for tj in ordered]
+    def _grouped_pushdown(self, sm: SolutionMapping, ts_joins: list[dict],
+                          spec: dict, rows: list | None
+                          ) -> SolutionMapping | None:
+        """Fire the enclosing GROUP BY's pushdown spec for this BGP's
+        chains: the reference's grouped query over one basic time-series
+        query or over a synchronized inner join of several
+        (timeseries_sql_rewrite.rs:356-428 composed with :470-560). The
+        fetch returns one row per (id tuple, granule) with COUNT(*), each
+        chain's COUNT/SUM/MIN/MAX partials and the group's MIN(timestamp)
+        as a representative instant; compile_group re-aggregates the
+        partials (_partial_reagg). Returns None, and the chains take the
+        point fetch (always correct, just fetching points rather than
+        buckets), unless this BGP's chains are exactly the spec's, every
+        value type re-aggregates exactly where value partials are needed,
+        and no table declines the fetch."""
+        chains = spec["chains"]
+        if {tj["dp"] for tj in ts_joins} != set(chains):
+            return None
+        for tj in ts_joins:
+            v = chains[tj["dp"]]["v"]
+            if "rebind" in tj or tj["t"] != [Variable(spec["t"])] \
+                    or tj["v"] != ([Variable(v)] if v else []):
+                return None
+        # an N-way remote join across DIFFERENT stores has no single
+        # executor
+        multi = len(ts_joins) > 1
+        if multi and len(self.ts_tables) != 1:
+            return None
+
+        # value-typed partials (SUM/MIN/MAX) demand an exactly
+        # re-aggregatable value type; a count-only chain (COUNT(*) /
+        # COUNT(?v), incl. value-less chains) needs no such gate —
+        # counting works for any remote value type
+        value_aggs = [bool({"sum", "min", "max"} & chains[tj["dp"]]["needs"])
+                      for tj in ts_joins]
         hint = "double"
         if any(value_aggs):
             try:
-                hint = _partial_agg_type(table.value_xsd(self.spark))
+                hints = [_partial_agg_type(t.value_xsd(self.spark))
+                         for t in self.ts_tables]
             except Exception:
                 return None
-            if hint is None:
+            if None in hints:
                 return None
+            hint = "long" if all(h == "long" for h in hints) else "double"
 
-        fn = getattr(table, "sync_grouped_restricted_normalized", None)
-        if fn is None:
-            return None
-        df = fn(self.spark, n_chains=len(ordered),
-                value_aggs=value_aggs, granule=spec["granule"],
-                id_tuples=id_tuples, ts_lower=spec["ts_lower"],
-                ts_upper=spec["ts_upper"], agg_type=hint)
-        if df is None:
-            return None
+        eids = [tj["eid"] for tj in ts_joins]
+        ids = self._static_ids(sm, eids, rows)
+        restriction = {"granule": spec["granule"], "agg_type": hint,
+                       "ts_lower": spec["ts_lower"],
+                       "ts_upper": spec["ts_upper"]}
+        if multi:
+            # one store inner-joins its relation against itself on the
+            # timestamp, pinned to the id tuples the static side binds
+            if ids is None:
+                return None
+            df = self.ts_tables[0].sync_grouped_restricted_normalized(
+                self.spark, n_chains=len(eids), value_aggs=value_aggs,
+                id_tuples=ids, **restriction)
+            if df is None:
+                return None
+        else:
+            # the chain's point fetch reuses the ids if a table declines
+            ts_joins[0]["probed_ids"] = ids
+            # a union over every table: capable stores aggregate remotely,
+            # the others give one partial row per point, and the union
+            # re-aggregates uniformly and exactly
+            parts = []
+            for t in self.ts_tables:
+                part = t.grouped_restricted_normalized(
+                    self.spark, ids=ids, value_aggs=value_aggs[0],
+                    **restriction)
+                if part is None:
+                    return None
+                parts.append(part)
+            df = functools.reduce(DataFrame.unionByName, parts)
 
-        cols = []
-        vars2: dict[str, VarMeta] = {}
-        for i, tj in enumerate(ordered):
-            cols.append(F.col(f"id_{i + 1}").alias(tj["eid"]))
+        def col(name: str, i: int) -> Column:
+            # the one-chain frame leaves its columns unnumbered
+            return F.col(f"{name}_{i + 1}" if multi else name)
+
+        cols = [F.col("timestamp").alias(spec["t"]),
+                F.col("__gp_cnt").alias(spec["cnt_col"])]
+        vars2 = {spec["t"]: VarMeta("native", "timestamp"),
+                 spec["cnt_col"]: VarMeta("native", "long")}
+        infos: dict[str, dict] = {}
+        for i, tj in enumerate(ts_joins):
+            ch = chains[tj["dp"]]
+            cols.append(col("id", i).alias(tj["eid"]))
             vars2[tj["eid"]] = VarMeta("native", "string")
-        cols.append(F.col("timestamp").alias(spec["t"]))
-        vars2[spec["t"]] = VarMeta("native", "timestamp")
-        cols.append(F.col("__gp_cnt").alias(spec["cnt_col"]))
-        vars2[spec["cnt_col"]] = VarMeta("native", "long")
-        for i, tj in enumerate(ordered):
-            ch = chain_specs[tj["dp"]]
+            info = infos[tj["dp"]] = {"t": spec["t"]}
             if ch["v"] is not None:
                 # proven unread outside the rewritten aggregates
                 cols.append(F.lit(None).cast(hint).alias(ch["v"]))
                 vars2[ch["v"]] = VarMeta("native", hint)
+                info["v"] = ch["v"]
+            # fresh names: they ride through joins/filters untouched
+            # until compile_group's re-aggregation consumes them
             for key in ("n", "sum", "min", "max"):
                 name = ch["cols"][key]
-                cols.append(F.col(f"__gp_{key}_{i + 1}").alias(name))
-                vars2[name] = VarMeta(
-                    "native", "long" if key == "n" else hint)
-        tsm = SolutionMapping(df.select(*cols), vars2)
-        out = self.join_solutions(sm, tsm)
-        out_vars = dict(out.vars)
-        odf = out.df
-        for e in eids:
-            out_vars.pop(e, None)
-            odf = odf.drop(e)
-        out = replace(out, df=odf, vars=out_vars)
-        for tj in ordered:
-            ch = chain_specs[tj["dp"]]
-            info = {"t": spec["t"]}
-            if ch["v"] is not None:
-                info["v"] = ch["v"]
-            out.ts_chains[tj["dp"]] = info
+                cols.append(col(f"__gp_{key}", i).alias(name))
+                vars2[name] = VarMeta("native",
+                                      "long" if key == "n" else hint)
+        if not multi:  # only the one-chain union has partition columns
+            self._carry_date_parts(cols, info)
         spec["fired"] = True
-        return out
+        return self._join_ts(sm, SolutionMapping(df.select(*cols), vars2),
+                             eids, infos)
 
     def _order_patterns(self, patterns: list[A.TriplePattern]
                         ) -> list[A.TriplePattern]:
@@ -1711,25 +1569,16 @@ class Compiler:
         """Detect hasDataPoint/hasTimestamp/hasValue chains and replace them
         with time-series joins (the Spark form of the reference's
         BasicTimeSeriesQuery wiring, hybrid/src/rewriting/graph_patterns/
-        bgp_pattern.rs:157-260)."""
-        def pred(tp):
-            return tp.p.value if isinstance(tp.p, IRI) else None
-
-        chains: dict[str, dict] = {}
-        rest: list[A.TriplePattern] = []
-        for tp in patterns:
-            pv = pred(tp)
-            if pv == HAS_DATA_POINT and isinstance(tp.o, Variable):
-                chains.setdefault(tp.o.name, {})["ts_var"] = tp.s
-            elif pv == HAS_TIMESTAMP and isinstance(tp.s, Variable):
-                chains.setdefault(tp.s.name, {})["t"] = tp.o
-            elif pv == HAS_VALUE and isinstance(tp.s, Variable):
-                chains.setdefault(tp.s.name, {})["v"] = tp.o
-            else:
-                rest.append(tp)
-
+        bgp_pattern.rs:157-260). A join carries its chain's distinct
+        timestamp and value terms as ``"t"``/``"v"`` lists: every variable
+        binds the chain's column and every literal filters it. Every
+        hasDataPoint subject of a chain gets the same ``hasExternalId
+        ?eid`` pattern, so a data point shared by several series nodes
+        joins them on one external id."""
+        chains, rest = _classify_chains(patterns)
         ts_joins = []
         for dp, info in chains.items():
+            terms = {k: list(dict.fromkeys(info.get(k, ()))) for k in ("t", "v")}
             if "ts_var" not in info:
                 pre = (input.ts_chains.get(dp) if input is not None else None)
                 if pre is None:
@@ -1738,86 +1587,77 @@ class Compiler:
                         "and no prior binding")
                 # re-matching an already-bound data point: values/timestamps
                 # are functionally determined -> bind or no-op
-                ts_joins.append({"dp": dp, "rebind": pre,
-                                 "t": info.get("t"), "v": info.get("v")})
+                ts_joins.append({"dp": dp, "rebind": pre, **terms})
                 continue
             eid = Variable(self.fresh("eid"))
-            rest.append(A.TriplePattern(info["ts_var"], IRI(HAS_EXTERNAL_ID), eid))
-            ts_joins.append({"dp": dp, "eid": eid.name,
-                             "t": info.get("t"), "v": info.get("v")})
+            for ts_var in dict.fromkeys(info["ts_var"]):
+                rest.append(A.TriplePattern(ts_var, IRI(HAS_EXTERNAL_ID), eid))
+            ts_joins.append({"dp": dp, "eid": eid.name, **terms})
         return ts_joins, rest
 
     def _apply_ts_join(self, sm: SolutionMapping, tj: dict) -> SolutionMapping:
         if "rebind" in tj:
             pre = tj["rebind"]
             for key in ("t", "v"):
-                term = tj.get(key)
-                if term is None:
-                    continue
-                if not isinstance(term, Variable):
-                    src = pre.get(key)
-                    hint = sm.vars[src].hint if src in sm.vars else None
-                    sm = replace(sm, df=sm.df.filter(
-                        _ts_literal_eq(F.col(src), hint, term)))
-                    continue
                 src = pre.get(key)
-                if src is None:
-                    raise ValueError(f"cannot rebind ?{term.name}: prior chain lacks {key}")
-                if term.name == src:
-                    continue
-                m = sm.vars[src]
-                vars2 = dict(sm.vars)
-                vars2[term.name] = m
-                sm = replace(sm, df=sm.df.withColumn(term.name, F.col(src)), vars=vars2)
+                for term in tj[key]:
+                    if not isinstance(term, Variable):
+                        hint = sm.vars[src].hint if src in sm.vars else None
+                        sm = replace(sm, df=sm.df.filter(
+                            _ts_literal_eq(F.col(src), hint, term)))
+                        continue
+                    if src is None:
+                        raise ValueError(f"cannot rebind ?{term.name}: prior chain lacks {key}")
+                    if term.name == src:
+                        continue
+                    m = sm.vars[src]
+                    vars2 = dict(sm.vars)
+                    vars2[term.name] = m
+                    sm = replace(sm, df=sm.df.withColumn(term.name, F.col(src)), vars=vars2)
             return sm
 
-        spec = (self._group_pushdown_stack[-1]
-                if self._group_pushdown_stack else None)
-        pre_fired = spec["fired"] if spec is not None else True
         ts_df, value_hint = self._ts_relation_for_join(tj)
-        fired_now = spec is not None and spec["fired"] and not pre_fired
         eid = tj["eid"]
         cols = [F.col("id").alias(eid)]
         vars2: dict[str, VarMeta] = {eid: VarMeta("native", "string")}
         chain_info: dict = {}
-        if fired_now:
-            # carry the remote partial-aggregate columns as native vars
-            # (fresh names — they ride through joins/filters untouched
-            # until compile_group's re-aggregation consumes them)
-            for key in ("cnt", "n", "sum", "min", "max"):
-                name = spec["cols"][key]
-                cols.append(F.col(f"__gp_{key}").alias(name))
-                vars2[name] = VarMeta(
-                    "native", "long" if key in ("cnt", "n") else value_hint)
         for key, hint, src in (("t", "timestamp", "timestamp"), ("v", value_hint, "value")):
-            term = tj.get(key)
-            if term is None:
-                continue
-            if isinstance(term, Variable):
-                cols.append(F.col(src).alias(term.name))
-                vars2[term.name] = VarMeta("native", hint)
-                chain_info[key] = term.name
-            else:
-                ts_df = ts_df.filter(_ts_literal_eq(F.col(src), hint, term))
-        # Date-partitioned tables: carry the hidden partition columns so
-        # apply_filter can derive partition predicates from timestamp
-        # filters (reference partitioning_support.rs parity — partition
-        # pruning is THE scan lever on a date-laid-out 100 TB store)
-        if "t" in chain_info and any(
-                t.has_date_partitions() for t in self.ts_tables):
-            parts: dict[str, str] = {}
-            for part in ("year", "month", "day"):
-                name = self.fresh(f"part_{part}")
-                cols.append(F.col(f"__part_{part}").alias(name))
-                parts[part] = name
-            chain_info["parts"] = parts
-        tsm = SolutionMapping(ts_df.select(*cols), vars2)
+            for term in tj[key]:
+                if isinstance(term, Variable):
+                    cols.append(F.col(src).alias(term.name))
+                    vars2[term.name] = VarMeta("native", hint)
+                    chain_info.setdefault(key, term.name)
+                else:
+                    ts_df = ts_df.filter(_ts_literal_eq(F.col(src), hint, term))
+        if "t" in chain_info:
+            self._carry_date_parts(cols, chain_info)
+        return self._join_ts(sm, SolutionMapping(ts_df.select(*cols), vars2),
+                             [eid], {tj["dp"]: chain_info})
+
+    def _carry_date_parts(self, cols: list[Column], info: dict) -> None:
+        """Date-partitioned tables: carry the hidden partition columns so
+        apply_filter can derive partition predicates from timestamp
+        filters (reference partitioning_support.rs parity — partition
+        pruning is THE scan lever on a date-laid-out 100 TB store)."""
+        if not any(t.has_date_partitions() for t in self.ts_tables):
+            return
+        parts: dict[str, str] = {}
+        for part in ("year", "month", "day"):
+            name = self.fresh(f"part_{part}")
+            cols.append(F.col(f"__part_{part}").alias(name))
+            parts[part] = name
+        info["parts"] = parts
+
+    def _join_ts(self, sm: SolutionMapping, tsm: SolutionMapping,
+                 eids: list[str], infos: dict[str, dict]) -> SolutionMapping:
+        """Join fetched time-series rows onto the static side on the
+        synthetic external-id vars, project those away, and record each
+        chain's columns in ts_chains (read by later rebinds, OPTIONAL fast
+        paths and partition pruning)."""
         out = self.join_solutions(sm, tsm)
-        # project the synthetic external-id var away
-        out_vars = dict(out.vars)
-        del out_vars[eid]
-        out = replace(out, df=out.df.drop(eid), vars=out_vars)
-        out.ts_chains[tj["dp"]] = chain_info
+        out = replace(out, df=out.df.drop(*eids),
+                      vars={k: m for k, m in out.vars.items() if k not in eids})
+        out.ts_chains.update(infos)
         return out
 
     # -- triple patterns ------------------------------------------------------

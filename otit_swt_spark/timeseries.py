@@ -8,28 +8,48 @@ hybrid/src/timeseries_database/simple_in_memory_timeseries.rs:17-19.
 
 Spark-first: the table is one tall DataFrame ``(id, timestamp, value, ...)``
 — ideally date-partitioned parquet so Catalyst prunes partitions from
-timestamp predicates. The reference's whole SQL-translation layer
-(timeseries_sql_rewrite.rs) disappears: predicates/aggregations "push down"
-by simply being part of the one Spark plan.
+timestamp predicates. Every table applies a query's restriction itself:
+the compiler hands each registered table the same external-id list and
+timestamp bounds (``restricted_normalized``) and, under a pushed-down
+GROUP BY, asks for grouped partials (``grouped_restricted_normalized``,
+``sync_grouped_restricted_normalized``). The base class does this with
+Spark filters over its own relation, so for parquet and in-memory tables
+the reference's SQL-translation layer (timeseries_sql_rewrite.rs)
+disappears into the one Spark plan; a remote store (sources/flight.py)
+overrides the methods to render the same restriction into its own SQL.
 """
 
 from __future__ import annotations
+
+import datetime as _dt
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from otit_swt_spark.terms import XSD_DOUBLE, xsd_for_spark_type
 
 
+def _utc_lit(dtv: _dt.datetime):
+    """A timestamp literal for a naive-UTC (or tz-aware) datetime. A
+    naive datetime literal would be read in the Python process's local
+    time zone; an aware one denotes its instant wherever the driver
+    runs."""
+    if dtv.tzinfo is None:
+        dtv = dtv.replace(tzinfo=_dt.timezone.utc)
+    return F.lit(dtv)
+
+
 class TimeSeriesTable:
     """Declares where time-series rows live and which columns carry the
-    identifier / timestamp / value."""
+    identifier / timestamp / value, and restricts them per query: the
+    base class with Spark filters, a remote store by overriding the
+    ``*restricted_normalized`` methods."""
 
-    #: True when the backing store can execute a RESTRICTED remote query
-    #: (id IN-list + timestamp bounds rendered into the store's own SQL,
-    #: the reference's timeseries_sql_rewrite.rs:115-205 behavior). The
-    #: compiler consults this before collecting the bounded id list; for
-    #: Spark-native tables (parquet / in-memory) it stays False — Catalyst
-    #: pushdown already covers them and no driver-side collect is spent.
+    #: True when the table can compute grouped partials REMOTELY
+    #: (grouped_restricted_normalized aggregating per (id, granule) in
+    #: the backing store — the reference's GroupedTimeSeriesQuery,
+    #: timeseries_sql_rewrite.rs:470-560). The compiler only analyses a
+    #: GROUP BY for pushdown when some registered table can; every table
+    #: applies the point restriction regardless.
     supports_pushdown = False
 
     def __init__(
@@ -93,13 +113,26 @@ class TimeSeriesTable:
                               ids: list[str] | None = None,
                               ts_lower=None, ts_upper=None,
                               value_eq=None) -> DataFrame:
-        """Normalized relation with the given restriction pushed into the
-        BACKING STORE where the backend supports it (``supports_pushdown``).
-        The base implementation ignores the restriction — the compiler
-        re-applies every constraint Spark-side regardless, so pushdown is
-        purely a fetch-volume optimization and this fallback is always
-        sound."""
-        return self.normalized(spark)
+        """The normalized relation restricted to the external ``ids`` and
+        the INCLUSIVE timestamp window ``[ts_lower, ts_upper]`` (naive-UTC
+        datetimes; None leaves that side open, and with nothing to
+        restrict this is ``normalized``). The restriction only has to be
+        implied by the query — the compiler re-applies every constraint
+        Spark-side — so ``value_eq``, a chain's literal value, is left to
+        that re-check here; remote stores may render it.
+
+        The id set comes from a join, so Catalyst cannot derive it: the
+        explicit IN-list prunes the chain before its exchange and reaches
+        PushedFilters on a parquet-backed scan, and the timestamp bounds
+        push down the ordinary way."""
+        df = self.normalized(spark)
+        if ids is not None:
+            df = df.where(F.col("id").isin(ids))
+        if ts_lower is not None:
+            df = df.where(F.col("timestamp") >= _utc_lit(ts_lower))
+        if ts_upper is not None:
+            df = df.where(F.col("timestamp") <= _utc_lit(ts_upper))
+        return df
 
     def grouped_restricted_normalized(self, spark: SparkSession, *,
                                       granule: tuple,
@@ -107,16 +140,34 @@ class TimeSeriesTable:
                                       ts_lower=None, ts_upper=None,
                                       agg_type: str = "double",
                                       value_aggs: bool = True):
-        """Remote GROUPED fetch: one row per (id, granule) carrying
-        COUNT/SUM/MIN/MAX partials and the group's MIN(timestamp) as a
-        representative instant, instead of one row per point (the
-        reference's GroupedTimeSeriesQuery, timeseries_sql_rewrite.rs
-        :470-560). ``granule`` is ``("all",)``, ``("bucket", K)`` or
-        ``("trunc", unit)``; ``ts_lower``/``ts_upper`` are EXACT
-        ``(value, strict)`` bounds. Backends that can't aggregate
-        remotely return None and the compiler degrades to per-point
-        partials — correctness never depends on this method."""
-        return None
+        """Grouped partials for a pushed-down GROUP BY (the reference's
+        GroupedTimeSeriesQuery, timeseries_sql_rewrite.rs:470-560):
+        ``(id, timestamp, value, __part_*, __gp_cnt, __gp_n, __gp_sum,
+        __gp_min, __gp_max)`` rows whose COUNT(*) / COUNT / SUM / MIN /
+        MAX the compiler re-aggregates. ``granule`` is ``("all",)``,
+        ``("bucket", K)`` or ``("trunc", unit)``; ``ts_lower`` /
+        ``ts_upper`` are EXACT ``(value, strict)`` bounds. ``value_aggs``
+        false (a count-only query) types the value partials NULL.
+
+        The base class gives one partial row per point of its restricted
+        relation (cnt=1, sum=min=max=value) — a point is the finest
+        granule, and the rows keep their own timestamps, so the relaxed
+        inclusive bounds and the query's re-applied FILTER stay exact.
+        Remote stores override this to aggregate per (id, granule), and
+        return None to decline; the compiler then fetches points."""
+        df = self.restricted_normalized(
+            spark, ids=ids,
+            ts_lower=None if ts_lower is None else ts_lower[0],
+            ts_upper=None if ts_upper is None else ts_upper[0])
+        raw = F.col("value")
+        v = raw.cast(agg_type) if value_aggs else F.lit(None).cast(agg_type)
+        return df.select(
+            "id", "timestamp", v.alias("value"),
+            "__part_year", "__part_month", "__part_day",
+            F.lit(1).cast("long").alias("__gp_cnt"),
+            F.when(raw.isNotNull(), F.lit(1)).otherwise(F.lit(0))
+            .cast("long").alias("__gp_n"),
+            v.alias("__gp_sum"), v.alias("__gp_min"), v.alias("__gp_max"))
 
     def sync_grouped_restricted_normalized(self, spark: SparkSession, *,
                                            n_chains: int,
@@ -128,9 +179,9 @@ class TimeSeriesTable:
         """Remote SYNCHRONIZED grouped fetch for N chains sharing one
         timestamp variable (reference timeseries_sql_rewrite.rs:356-428
         inner joins + :470-560 grouping): one row per ((id_1..id_n),
-        granule) carrying joined COUNT(*) and per-chain partials.
-        Backends that can't execute the remote join return None and the
-        compiler falls back to per-chain restricted point fetches."""
+        granule) carrying joined COUNT(*) and per-chain partials. The
+        base class has no store to run the join in and returns None; the
+        compiler then falls back to per-chain restricted point fetches."""
         return None
 
     def value_xsd(self, spark: SparkSession) -> str:

@@ -188,6 +188,43 @@ def test_optional_filter_on_left_variable(spark):
                    ("http://example.org/case#myWidget2", None)}
 
 
+def test_hybrid_restriction_reaches_parquet_scan(spark, tmp_path):
+    """A parquet-backed TimeSeriesTable restricts itself: the static
+    side's external ids reach the scan as an IN filter and the FILTER's
+    strict bounds as inclusive ones, next to the FILTER's own strict
+    comparisons. The series the graph does not know (ts3) is pruned at
+    the scan."""
+    import pandas as pd
+
+    from otit_swt_spark.timeseries import TimeSeriesTable
+    from tests.conftest import TESTDATA_SPARQL, rows
+
+    stamps = pd.date_range("2022-06-01 08:46:52", periods=8, freq="s")
+    pdf = pd.concat([pd.DataFrame({"id": k, "timestamp": stamps,
+                                   "value": [float(i) for i in range(8)]})
+                     for k in ("ts1", "ts2", "ts3")])
+    path = str(tmp_path / "ts_flat")
+    spark.createDataFrame(pdf).write.parquet(path)
+    eng = Engine(spark, GraphStore.from_sparql_insert(spark, TESTDATA_SPARQL))
+    eng.add_timeseries_table(TimeSeriesTable(path=path))
+    df = eng.query(PREFIXES + "SELECT ?ts_id ?v WHERE {" + HYBRID_BGP + """
+        FILTER(?t > "2022-06-01T08:46:54"^^xsd:dateTime
+               && ?t < "2022-06-01T08:46:57"^^xsd:dateTime) }""")
+    # the default metadata length (100) truncates the scan's filter list
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    try:
+        plan = physical(df)
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    scan = next(line for line in plan.splitlines() if "In(id, " in line)
+    pushed = scan[scan.index("PushedFilters: ["):]
+    assert "In(id, [ts1,ts2])" in pushed
+    assert "GreaterThanOrEqual(timestamp,2022-06-01 08:46:54.0)" in pushed
+    assert "LessThanOrEqual(timestamp,2022-06-01 08:46:57.0)" in pushed
+    assert rows(df) == [("ts1", 3.0), ("ts1", 4.0),
+                        ("ts2", 3.0), ("ts2", 4.0)]
+
+
 def test_sparql_timestamp_filter_prunes_date_partitions(spark, tmp_path):
     """A SPARQL FILTER on the data-point timestamp over a year/month/day-
     partitioned TS table derives hidden partition predicates

@@ -453,3 +453,104 @@ def test_coalesce(engine):
         (S2, ts(59), 206, None, 206),
     ]
     assert rows(df) == sorted(want, key=lambda t: tuple(str(x) for x in t))
+
+
+# -- repeated chain patterns on one data point --------------------------------
+
+CHAIN_HEAD = """
+        ?s otit_swt:hasTimeseries ?ts .
+        ?ts otit_swt:hasDataPoint ?dp ."""
+
+
+def test_repeated_value_pattern_binds_every_variable(engine):
+    """Two hasValue patterns on one data point bind both variables to
+    the point's value, and a hasValue literal next to a variable filters
+    the same value; no pattern is dropped."""
+    got = rows(engine.query(PREFIXES + "SELECT ?s ?t ?v1 ?v2 WHERE {"
+                            + CHAIN_HEAD + """
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v1 .
+        ?dp otit_swt:hasValue ?v2 .
+    }"""))
+    assert len(got) == 16
+    assert all(v1 is not None and v1 == v2 for _, _, v1, v2 in got)
+    got = rows(engine.query(PREFIXES + "SELECT ?s ?t ?v WHERE {"
+                            + CHAIN_HEAD + """
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v .
+        ?dp otit_swt:hasValue 105 .
+    }"""))
+    assert got == [(S1, ts(59), 105)]
+
+
+def test_repeated_timestamp_pattern_binds_every_variable(engine):
+    got = rows(engine.query(PREFIXES + "SELECT ?s ?t1 ?t2 ?v WHERE {"
+                            + CHAIN_HEAD + """
+        ?dp otit_swt:hasTimestamp ?t1 .
+        ?dp otit_swt:hasTimestamp ?t2 .
+        ?dp otit_swt:hasValue ?v .
+    }"""))
+    assert len(got) == 16
+    assert all(t1 is not None and t1 == t2 for _, t1, t2, _ in got)
+
+
+def test_repeated_data_point_pattern_joins_on_one_series(engine):
+    """A data point reached from two series variables belongs to both:
+    ?a and ?b bind the one series node, exactly the single-pattern
+    answer."""
+    single = rows(engine.query(PREFIXES + """
+    SELECT ?a ?v WHERE {
+        ?a otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasValue ?v .
+    }"""))
+    got = rows(engine.query(PREFIXES + """
+    SELECT ?a ?b ?v WHERE {
+        ?a otit_swt:hasDataPoint ?dp .
+        ?b otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasValue ?v .
+    }"""))
+    assert len(single) == 16
+    assert all(a == b for a, b, _ in got)
+    assert [(a, v) for a, _, v in got] == single
+
+
+# -- the Spark-side time-series restriction -----------------------------------
+
+@pytest.fixture
+def local_tz(monkeypatch):
+    """Sets the Python process's local time zone; restores it after."""
+    import time
+
+    def set_tz(name):
+        monkeypatch.setenv("TZ", name)
+        time.tzset()
+
+    yield set_tz
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_timestamp_restriction_ignores_driver_time_zone(spark, engine,
+                                                        local_tz):
+    """The restriction's timestamp bounds are UTC instants: the driver
+    process's local time zone does not move them (the session time zone
+    is UTC, the data and the FILTER's literals are UTC)."""
+    from otit_swt_spark.engine import Engine
+
+    q = PREFIXES + "SELECT ?ts ?v WHERE {" + CHAIN_HEAD + """
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v .
+        FILTER(?t >= "2022-06-01T08:46:55Z"^^xsd:dateTime
+               && ?t <= "2022-06-01T08:46:57Z"^^xsd:dateTime)
+    }"""
+
+    def run():
+        eng = Engine(spark, engine.graph)
+        return rows(eng.add_timeseries_table(engine.ts_tables[0]).query(q))
+
+    local_tz("UTC")
+    want = run()
+    assert sorted(v for _, v in want) == [102, 201, 202, 203, 301, 303]
+    for zone in ("Asia/Tokyo", "America/New_York"):
+        local_tz(zone)
+        assert run() == want, zone
