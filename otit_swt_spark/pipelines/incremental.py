@@ -88,25 +88,21 @@ def incremental_agg_upsert(spark: SparkSession, path: str, delta: DataFrame,
             writer = writer.partitionBy(partition_col)
         writer.parquet(path)
         return
-    stored = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".__incr_tmp__"
-    if partition_col is None:
-        combined = combine_partials(stored, d, keys)
-        combined.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-        fsutil.delete(spark, tmp)
-        return
     from otit_swt_spark.pipelines.merge import (partition_predicate,
-                                                 stage_dynamic_overwrite)
+                                                 stage_dynamic_overwrite,
+                                                 stage_overwrite)
 
+    stored = spark.read.parquet(path)
+    if partition_col is None:
+        stage_overwrite(spark, path, combine_partials(stored, d, keys))
+        return
     parts = [r[0] for r in d.select(partition_col).distinct().collect()]
     # null-safe: isin([None, ...]) never matches the stored NULL
     # partition, which silently replaced its aggregate state
     touched = stored.filter(partition_predicate(F.col(partition_col),
                                                 parts))
     combined = combine_partials(touched, d, keys)
-    stage_dynamic_overwrite(spark, path, combined, partition_col, parts,
-                            tmp_suffix=".__incr_tmp__")
+    stage_dynamic_overwrite(spark, path, combined, partition_col, parts)
 
 
 def read_agg(spark: SparkSession, path: str, sum_cols: list[str]) -> DataFrame:

@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from otit_swt_spark import fsutil
 
+#: sibling dir a table rewrite is staged in (deleted once the rewrite lands)
+_STAGE_SUFFIX = ".__stage_tmp__"
+
 
 def partition_predicate(col, values):
     """Null-safe membership test for partition pruning: ``isin`` with a
@@ -60,9 +63,21 @@ def spark_partition_dirname(value) -> str:
     return "".join(out)
 
 
+def stage_overwrite(spark: SparkSession, path: str, frame: DataFrame) -> None:
+    """Replace the whole table at ``path`` with ``frame``, which may read
+    ``path`` itself: stage ``frame`` to a sibling tmp dir (Spark refuses
+    to overwrite a location it is reading), copy the staged rows over
+    ``path``, then delete the tmp dir. The staged rows stay on the
+    filesystem, so a lost executor re-reads them instead of recomputing
+    a merge whose input the overwrite already replaced."""
+    tmp = path.rstrip("/") + _STAGE_SUFFIX
+    frame.write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+    fsutil.delete(spark, tmp)
+
+
 def stage_dynamic_overwrite(spark: SparkSession, path: str, frame: DataFrame,
-                            partition_col: str, touched_parts: list,
-                            tmp_suffix: str = ".__stage_tmp__") -> None:
+                            partition_col: str, touched_parts: list) -> None:
     """Shared copy-on-write tail for partition-scoped dataset mutation:
     stage ``frame`` to a sibling tmp dir (Spark refuses to overwrite a
     location it is reading), dynamic-partition-overwrite the staged rows
@@ -72,7 +87,7 @@ def stage_dynamic_overwrite(spark: SparkSession, path: str, frame: DataFrame,
     STRINGS — the staged read re-infers the partition column's type
     (date-like strings come back as dates), and a raw set test would
     mark every just-written partition as emptied and delete it."""
-    tmp = path.rstrip("/") + tmp_suffix
+    tmp = path.rstrip("/") + _STAGE_SUFFIX
     frame.write.mode("overwrite").parquet(tmp)
     staged = spark.read.parquet(tmp)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -144,17 +159,13 @@ def merge_upsert(spark: SparkSession, path: str, changes: DataFrame,
     in the old partition and the insert in the new one; a bare insert with
     a new partition value leaves the old row in place."""
     target = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".__merge_tmp__"
     if partition_col is not None:
         parts = [r[0] for r in changes.select(partition_col).distinct().collect()]
         target = target.filter(partition_predicate(F.col(partition_col),
                                                    parts))
         merged = apply_changes(target, changes, key, deleted_col,
                                identity_cols=[partition_col, key])
-        stage_dynamic_overwrite(spark, path, merged, partition_col, parts,
-                                tmp_suffix=".__merge_tmp__")
+        stage_dynamic_overwrite(spark, path, merged, partition_col, parts)
         return
-    merged = apply_changes(target, changes, key, deleted_col)
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-    fsutil.delete(spark, tmp)
+    stage_overwrite(spark, path,
+                    apply_changes(target, changes, key, deleted_col))

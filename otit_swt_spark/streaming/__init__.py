@@ -27,19 +27,26 @@ from otit_swt_spark.streaming.ingest import (
     holt_stream,
     read_timeseries_stream,
     registered_table,
+    reliability_bins_from_partials,
     session_downsample,
     session_gaps,
     sliding_downsample,
+    stream_bloom_seen,
     stream_count_min,
     stream_growth,
     stream_hll,
     stream_incremental_agg,
     stream_interval_join,
     stream_markov,
+    stream_psi,
+    stream_quantile_sketch,
+    stream_reliability_bins,
     stream_scd2,
+    stream_seasonal_score,
     stream_theta,
     stream_wap_merge,
     stream_weighted_reservoir,
+    stream_windowed_quantile_sketch,
     to_timeseries_sink,
     windowed_downsample,
 )
@@ -55,9 +62,11 @@ __all__ = [
     "holt_stream",
     "read_timeseries_stream",
     "registered_table",
+    "reliability_bins_from_partials",
     "session_downsample",
     "session_gaps",
     "sliding_downsample",
+    "stream_bloom_seen",
     "stream_count_min",
     "stream_exact_dedup",
     "stream_growth",
@@ -66,10 +75,15 @@ __all__ = [
     "stream_interval_join",
     "stream_markov",
     "stream_near_dup_flags",
+    "stream_psi",
+    "stream_quantile_sketch",
+    "stream_reliability_bins",
     "stream_scd2",
+    "stream_seasonal_score",
     "stream_theta",
     "stream_wap_merge",
     "stream_weighted_reservoir",
+    "stream_windowed_quantile_sketch",
     "to_timeseries_sink",
     "windowed_downsample",
 ]

@@ -10,12 +10,41 @@ Scale design:
 - gap detection keeps one tiny state row per sensor id
   (applyInPandasWithState), the Spark-native form of a custom stateful
   operator.
+
+Sink contract. Every ``stream_*`` function that maintains a table at
+``path`` returns a started ``availableNow`` ``foreachBatch`` query built by
+one skeleton (``_start_fold``): empty micro-batches are skipped, and a
+table that the batch both reads and rewrites is replaced through a staged
+copy (``pipelines.merge.stage_overwrite``). ``foreachBatch`` delivers each
+batch AT LEAST once — a restart, or a fresh checkpoint over the same
+source, replays batches — so every sink is one of two kinds:
+
+- idempotent: re-applying a batch leaves the table unchanged. These are
+  the semilattice sketch merges (``stream_hll``, ``stream_bloom_seen``,
+  ``stream_theta``, ``stream_weighted_reservoir``,
+  ``stream_quantile_sketch``, ``stream_windowed_quantile_sketch``), the
+  keyed upsert ``stream_wap_merge``, and the log-structured sinks
+  (``stream_scd2``, ``stream_markov``, ``stream_growth``), whose duplicate
+  log rows collapse before the touched keys are re-derived.
+- guarded: ``stream_incremental_agg`` (and ``stream_reliability_bins`` on
+  top of it) and ``stream_count_min`` add counts, so the last applied
+  batch id is kept in ``<path>.__last_batch__`` and a batch id at or below
+  it is skipped. The marker is written after the fold and the two are not
+  atomic: a crash between them applies that one batch twice on replay.
+  Closing that window needs a table format that commits data and batch id
+  together (Delta/Iceberg).
+
+Batch ids only mean something within one checkpoint, so the checkpoint
+directory lives and dies with its table: move or delete them together.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from otit_swt_spark import fsutil
+from otit_swt_spark.pipelines.merge import stage_overwrite
 
 TS_SCHEMA = T.StructType([
     T.StructField("id", T.StringType()),
@@ -283,6 +312,59 @@ def ewma_stream(df: DataFrame, alpha: float = 0.2,
     )
 
 
+def _start_fold(df: DataFrame, path: str, checkpoint: str, fold,
+                guarded: bool = False):
+    """Start ``df`` as a table sink (module docstring): ``fold(spark,
+    batch)`` runs on every non-empty micro-batch, and a frame it returns
+    replaces the table at ``path``. ``guarded`` skips batch ids at or
+    below the one recorded in ``<path>.__last_batch__`` and records each
+    batch id once its fold is done."""
+    marker = path.rstrip("/") + ".__last_batch__"
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        if guarded and fsutil.exists(spark, marker):
+            try:
+                if batch_id <= int(fsutil.read_text(spark, marker).strip()):
+                    return  # replayed batch: already applied
+            except ValueError:
+                pass  # unreadable marker: apply (at-least-once fallback)
+        if not batch_df.isEmpty():
+            out = fold(spark, batch_df)
+            if out is not None:
+                stage_overwrite(spark, path, out)
+        if guarded:
+            fsutil.write_text(spark, marker, str(batch_id))
+
+    return (df.writeStream.foreachBatch(run)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start())
+
+
+def _stored(spark: SparkSession, path: str, like: DataFrame) -> DataFrame:
+    """The table at ``path``, or an empty frame shaped like ``like``
+    before the sink's first write."""
+    if fsutil.exists(spark, path):
+        return spark.read.parquet(path)
+    return like.limit(0)
+
+
+def _rederive_touched(spark: SparkSession, path: str, batch: DataFrame,
+                      key: str, derive) -> DataFrame:
+    """Log-structured fold: append ``batch`` to the log beside the table
+    (``<path>__log``), re-derive the rows of the keys it touches with
+    ``derive`` over those keys' DISTINCT log rows, and carry every other
+    stored key over unchanged. Returns the new table."""
+    log_path = path.rstrip("/") + "__log"
+    batch.write.mode("append").parquet(log_path)
+    touched = batch.select(key).distinct()
+    out = derive(spark.read.parquet(log_path)
+                 .join(touched, key, "left_semi").distinct())
+    return (_stored(spark, path, out).join(touched, key, "left_anti")
+            .unionByName(out))
+
+
 def stream_incremental_agg(df: DataFrame, path: str, keys: list,
                            sum_cols: list, checkpoint: str,
                            partition_col: str | None = None,
@@ -293,41 +375,19 @@ def stream_incremental_agg(df: DataFrame, path: str, keys: list,
     ``pipelines.incremental.incremental_agg_upsert`` inside
     ``foreachBatch`` — the streaming materialized-view pattern. Each
     batch reads/rewrites only the partitions it touches, so the sink
-    cost tracks the batch's key spread, not the table size. Returns the
-    started StreamingQuery (caller owns awaitTermination/stop).
-
-    foreachBatch delivers batches AT LEAST once on restart and the fold
-    is not idempotent, so a last-applied batch id is persisted beside the
-    table and replayed batches are skipped. The double-count window
-    narrows to a crash BETWEEN the fold and the sidecar write; strict
-    exactly-once needs a transactional table format (Delta/Iceberg) that
-    commits data and batch id atomically — keep the checkpoint directory
-    with the table either way (same lifecycle)."""
-    from otit_swt_spark import fsutil
+    cost tracks the batch's key spread, not the table size. Guarded:
+    folding a batch's partials twice double-counts it. Returns the
+    started StreamingQuery (caller owns awaitTermination/stop)."""
     from otit_swt_spark.pipelines.incremental import incremental_agg_upsert
 
-    marker = path.rstrip("/") + ".__last_batch__"
+    kwargs = {} if dec is None else {"dec": dec}
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if fsutil.exists(spark, marker):
-            try:
-                if batch_id <= int(fsutil.read_text(spark, marker).strip()):
-                    return  # replayed batch: already folded
-            except ValueError:
-                pass  # unreadable marker: fold (at-least-once fallback)
-        if not batch_df.isEmpty():
-            kwargs = {} if dec is None else {"dec": dec}
-            incremental_agg_upsert(spark, path, batch_df,
-                                   keys, sum_cols,
-                                   partition_col=partition_col,
-                                   weight_col=weight_col, **kwargs)
-        fsutil.write_text(spark, marker, str(batch_id))
+    def fold(spark, batch):
+        incremental_agg_upsert(spark, path, batch, keys, sum_cols,
+                               partition_col=partition_col,
+                               weight_col=weight_col, **kwargs)
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold, guarded=True)
 
 
 def stream_reliability_bins(df: DataFrame, path: str, checkpoint: str,
@@ -338,7 +398,7 @@ def stream_reliability_bins(df: DataFrame, path: str, checkpoint: str,
     ``pipelines.analytics.reliability_bins``: derive the score's bin
     MAP-SIDE on the stream, then fold per-bin (count, DECIMAL score-sum,
     label-sum) partials through the incremental-agg MV machinery
-    (replay-guarded foreachBatch). The stored state is ~``bins`` tiny
+    (guarded, see the module docstring). The stored state is ~``bins`` tiny
     rows however long the stream runs; read the live reliability
     diagram back with :func:`reliability_bins_from_partials`, which
     reproduces the batch operator's values exactly (same DECIMAL sums,
@@ -415,32 +475,24 @@ def stream_wap_merge(df: DataFrame, root: str, key: str, checkpoint: str,
     half-applied batch, and time travel works per batch). Returns the
     started StreamingQuery.
 
-    Replay safety comes for free here — unlike the incremental-agg fold, a
-    keyed upsert is IDEMPOTENT (re-merging the same change batch yields a
-    byte-equal next version), so at-least-once foreachBatch delivery needs
-    no batch-id sidecar. A concurrent writer losing the manifest race gets
-    ``ConcurrentWriteError``; the batch retries against the new current
-    version up to ``max_retries`` times (its own staged files were already
-    cleaned by the loser path)."""
+    Idempotent: re-merging the same keyed change batch yields a
+    byte-equal next version. A concurrent writer losing the manifest
+    race gets ``ConcurrentWriteError``; the batch retries against the
+    new current version up to ``max_retries`` times (its own staged
+    files were already cleaned by the loser path)."""
     from otit_swt_spark.pipelines import wap
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def fold(spark, batch):
         for attempt in range(max_retries + 1):
             try:
-                wap.merge_upsert(spark, root, batch_df, key=key,
+                wap.merge_upsert(spark, root, batch, key=key,
                                  deleted_col=deleted_col)
                 return
             except wap.ConcurrentWriteError:
                 if attempt == max_retries:
                     raise
 
-    return (df.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, root, checkpoint, fold)
 
 
 def stream_count_min(df: DataFrame, key_col: str, path: str,
@@ -452,80 +504,35 @@ def stream_count_min(df: DataFrame, key_col: str, path: str,
     the sink rewrite is always <= depth·width rows no matter the stream
     volume or key cardinality (the entire point of sketching a stream).
     Estimates over the stored table come from
-    ``pipelines.analytics.cms_estimate`` unchanged.
-
-    Same at-least-once discipline as :func:`stream_incremental_agg`: a
-    last-applied batch id sidecar skips replayed batches (cell addition
-    is not idempotent). The sidecar is written AFTER the sketch rewrite
-    and the two are not atomic, so a crash landing between them
-    double-adds that one batch on replay — the same bounded window
-    documented on the incremental-agg sink; closing it needs a table
-    format that commits data + batch id in one transaction (Delta/
-    Iceberg), or the idempotent-by-construction HLL sink below, which
-    needs no guard at all. Returns the started StreamingQuery."""
-    from otit_swt_spark import fsutil
+    ``pipelines.analytics.cms_estimate`` unchanged. Guarded: cell
+    addition counts a replayed batch twice (the HLL sink below is
+    idempotent by construction instead). Returns the started
+    StreamingQuery."""
     from otit_swt_spark.pipelines.analytics import count_min_sketch
 
-    marker = path.rstrip("/") + ".__last_batch__"
+    def fold(spark, batch):
+        delta = count_min_sketch(batch, key_col, width, depth)
+        return (_stored(spark, path, delta).unionByName(delta)
+                .groupBy("row", "col").agg(F.sum("cnt").alias("cnt")))
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if fsutil.exists(spark, marker):
-            try:
-                if batch_id <= int(fsutil.read_text(spark, marker).strip()):
-                    return
-            except ValueError:
-                pass
-        if not batch_df.isEmpty():
-            delta = count_min_sketch(batch_df, key_col, width, depth)
-            if fsutil.exists(spark, path):
-                merged = (spark.read.parquet(path).unionByName(delta)
-                          .groupBy("row", "col")
-                          .agg(F.sum("cnt").alias("cnt")))
-            else:
-                merged = delta
-            # the sketch is tiny (<= depth*width rows): materialize before
-            # the overwrite so the read above never races its own rewrite
-            out = merged.localCheckpoint(eager=True)
-            out.write.mode("overwrite").parquet(path)
-        fsutil.write_text(spark, marker, str(batch_id))
-
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold, guarded=True)
 
 
 def stream_hll(df: DataFrame, key_col: str, path: str, checkpoint: str):
     """Maintain a HyperLogLog register table from a stream: per
     micro-batch, sketch the batch (``pipelines.analytics.hll_sketch``)
-    and merge into the stored registers by per-bucket max — register
-    merge is idempotent AND commutative, so unlike the CMS/incremental
-    sinks this needs NO batch-id replay guard: at-least-once redelivery
-    re-maxes the same registers harmlessly. Sink state is <= 1024 rows
-    forever; read the estimate with ``hll_estimate`` on the stored
-    table."""
-    from otit_swt_spark import fsutil
+    and merge into the stored registers by per-bucket max. Idempotent:
+    a redelivered batch re-maxes the same registers. Sink state is
+    <= 1024 rows forever; read the estimate with ``hll_estimate`` on the
+    stored table."""
     from otit_swt_spark.pipelines.analytics import hll_sketch
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        delta = hll_sketch(batch_df, key_col)
-        if fsutil.exists(spark, path):
-            merged = (spark.read.parquet(path).unionByName(delta)
-                      .groupBy("bucket").agg(F.max("max_rho")
-                                             .alias("max_rho")))
-        else:
-            merged = delta
-        out = merged.localCheckpoint(eager=True)
-        out.write.mode("overwrite").parquet(path)
+    def fold(spark, batch):
+        delta = hll_sketch(batch, key_col)
+        return (_stored(spark, path, delta).unionByName(delta)
+                .groupBy("bucket").agg(F.max("max_rho").alias("max_rho")))
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold)
 
 
 def stream_bloom_seen(df: DataFrame, key_col: str, path: str,
@@ -539,36 +546,19 @@ def stream_bloom_seen(df: DataFrame, key_col: str, path: str,
     scan; this sink's work per batch is bounded by batch size +
     ``n_bits``).
 
-    Bit union is idempotent AND commutative, so like :func:`stream_hll`
-    (and unlike the CMS/incremental-agg sinks) this needs NO batch-id
-    replay guard: at-least-once redelivery re-sets the same bits
-    harmlessly. Sink state is <= ``n_bits`` rows forever regardless of
-    how many keys were ever seen. Probe the stored frame with
+    Idempotent: a redelivered batch re-sets the same bits. Sink state is
+    <= ``n_bits`` rows forever regardless of how many keys were ever
+    seen. Probe the stored frame with
     ``pipelines.analytics.bloom_probe`` (batch) or
     ``streaming.crawl.stream_frontier_unseen`` (stream-static,
     stateless). Returns the started StreamingQuery."""
-    from otit_swt_spark import fsutil
     from otit_swt_spark.pipelines.analytics import bloom_build
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        delta = bloom_build(batch_df, key_col, n_bits, k)
-        if fsutil.exists(spark, path):
-            merged = (spark.read.parquet(path).unionByName(delta)
-                      .distinct())
-        else:
-            merged = delta
-        # the frame is tiny (<= n_bits rows): materialize before the
-        # overwrite so the read above never races its own rewrite
-        out = merged.localCheckpoint(eager=True)
-        out.write.mode("overwrite").parquet(path)
+    def fold(spark, batch):
+        delta = bloom_build(batch, key_col, n_bits, k)
+        return _stored(spark, path, delta).unionByName(delta).distinct()
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold)
 
 
 def stream_scd2(df: DataFrame, path: str, checkpoint: str,
@@ -585,46 +575,26 @@ def stream_scd2(df: DataFrame, path: str, checkpoint: str,
     (same attr before and after the gap), information the collapsed
     intervals no longer hold.
 
-    Replay-safe without a batch-id guard: a redelivered batch appends
-    duplicate log rows, and exact-duplicate change rows are collapsed
-    away by the interval derivation (unchanged attr against its own
-    copy) — the fold is idempotent like the HLL register sink, unlike
-    the CMS/incremental folds. At cluster scale, partition both log and
-    table by a stable key hash so a batch reads/rewrites only touched
-    partitions (the pipelines.merge machinery); the log is the
+    Idempotent: a redelivered batch's duplicate log rows collapse before
+    the re-derive (and an exact duplicate change row is no version change
+    in the interval derivation anyway). At cluster scale, partition both
+    log and table by a stable key hash so a batch reads/rewrites only
+    touched partitions (the pipelines.merge machinery); the log is the
     event-sourcing system of record, the table a derived view. Returns
     the started StreamingQuery."""
-    from otit_swt_spark import fsutil
     from otit_swt_spark.pipelines.incremental import scd2_intervals
 
-    log_path = path.rstrip("/") + "__log"
+    def intervals(mine):
+        return (scd2_intervals(mine, key_col, ts_col, attr_cols,
+                               order_cols=[order_col])
+                .select(key_col, *attr_cols,
+                        "valid_from", "valid_to", "is_current"))
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select(key_col, ts_col, order_col, *attr_cols)
-        batch.write.mode("append").parquet(log_path)
-        touched = batch.select(key_col).distinct()
-        mine = (spark.read.parquet(log_path)
-                .join(touched, key_col, "left_semi"))
-        out = scd2_intervals(mine, key_col, ts_col, attr_cols,
-                             order_cols=[order_col]) \
-            .select(key_col, *attr_cols,
-                    "valid_from", "valid_to", "is_current")
-        if fsutil.exists(spark, path):
-            keep = spark.read.parquet(path) \
-                .join(touched, key_col, "left_anti")
-            out = keep.unionByName(out)
-        # materialize before the overwrite so the stored-table read above
-        # never races its own rewrite
-        out.localCheckpoint(eager=True) \
-            .write.mode("overwrite").parquet(path)
+    def fold(spark, batch):
+        batch = batch.select(key_col, ts_col, order_col, *attr_cols)
+        return _rederive_touched(spark, path, batch, key_col, intervals)
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold)
 
 
 _HOLT_OUT = T.StructType([
@@ -717,38 +687,27 @@ def stream_theta(df: DataFrame, key_col: str, group_col: str, path: str,
     micro-batch hashes its distinct ``(group, key)`` pairs (60-bit md5,
     same as ``pipelines.analytics.theta_sketch``) and merges into the
     stored minimum-hash frame, keeping the ``k`` smallest per group.
-    Min-k union is idempotent AND commutative — like the HLL register
-    sink, at-least-once redelivery re-unions the same hashes harmlessly,
-    so NO batch-id replay guard is needed. Sink state is <= k rows per
-    group forever; finalize estimates (or pairwise audience overlaps)
-    with ``pipelines.analytics.theta_finalize`` on the stored frame."""
+    Idempotent: min-k union re-unions a redelivered batch's hashes
+    harmlessly. Sink state is <= k rows per group forever; finalize
+    estimates (or pairwise audience overlaps) with
+    ``pipelines.analytics.theta_finalize`` on the stored frame."""
     from pyspark.sql import Window as W
 
-    from otit_swt_spark import fsutil
     from otit_swt_spark.pipelines.dedup import _md5_60
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        delta = (batch_df.select(F.col(group_col),
-                                 F.col(key_col).cast("string")
-                                 .alias("__k")).distinct()
-                 .select(group_col, _md5_60(F.col("__k")).alias("__h")))
-        if fsutil.exists(spark, path):
-            delta = spark.read.parquet(path).unionByName(delta)
-        w = W.partitionBy(group_col).orderBy("__h")
-        merged = (delta.distinct()
-                  .withColumn("__rn", F.row_number().over(w))
-                  .where(F.col("__rn") <= k)
-                  .select(group_col, "__h"))
-        out = merged.localCheckpoint(eager=True)
-        out.write.mode("overwrite").parquet(path)
+    w = W.partitionBy(group_col).orderBy("__h")
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    def fold(spark, batch):
+        delta = (batch.select(F.col(group_col),
+                              F.col(key_col).cast("string")
+                              .alias("__k")).distinct()
+                 .select(group_col, _md5_60(F.col("__k")).alias("__h")))
+        return (_stored(spark, path, delta).unionByName(delta).distinct()
+                .withColumn("__rn", F.row_number().over(w))
+                .where(F.col("__rn") <= k)
+                .select(group_col, "__h"))
+
+    return _start_fold(df, path, checkpoint, fold)
 
 
 def stream_markov(df: DataFrame, key_col: str, ts_col: str,
@@ -765,45 +724,27 @@ def stream_markov(df: DataFrame, key_col: str, ts_col: str,
     inside the sequence and splits the transition it interrupted,
     which a stored-counts fold could never undo.
 
-    Replay-safe without a batch-id guard: a redelivered batch appends
-    duplicate log rows; exact duplicates collapse in the distinct()
-    before pairing, so the fold is idempotent. Read the model with
-    ``finalize_markov`` (global counts + Laplace smoothing)."""
+    Idempotent: a redelivered batch's duplicate log rows collapse before
+    pairing. Read the model with ``finalize_markov`` (global counts +
+    Laplace smoothing)."""
     from pyspark.sql import Window as W
 
-    from otit_swt_spark import fsutil
+    w = W.partitionBy(key_col).orderBy(ts_col, order_col)
 
-    log_path = path.rstrip("/") + "__log"
+    def transitions(mine):
+        return (mine.withColumn("__to", F.lead(state_col).over(w))
+                .where(F.col("__to").isNotNull())
+                .groupBy(key_col,
+                         F.col(state_col).alias("from_state"),
+                         F.col("__to").alias("to_state"))
+                .agg(F.count(F.lit(1)).alias("n")))
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        batch = (batch_df.select(key_col, ts_col, order_col, state_col)
+    def fold(spark, batch):
+        batch = (batch.select(key_col, ts_col, order_col, state_col)
                  .where(F.col(state_col).isNotNull()))  # NULL != a state
-        batch.write.mode("append").parquet(log_path)
-        touched = batch.select(key_col).distinct()
-        mine = (spark.read.parquet(log_path)
-                .join(touched, key_col, "left_semi").distinct())
-        w = W.partitionBy(key_col).orderBy(ts_col, order_col)
-        contrib = (mine
-                   .withColumn("__to", F.lead(state_col).over(w))
-                   .where(F.col("__to").isNotNull())
-                   .groupBy(key_col,
-                            F.col(state_col).alias("from_state"),
-                            F.col("__to").alias("to_state"))
-                   .agg(F.count(F.lit(1)).alias("n")))
-        if fsutil.exists(spark, path):
-            keep = spark.read.parquet(path) \
-                .join(touched, key_col, "left_anti")
-            contrib = keep.unionByName(contrib)
-        contrib.localCheckpoint(eager=True) \
-            .write.mode("overwrite").parquet(path)
+        return _rederive_touched(spark, path, batch, key_col, transitions)
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold)
 
 
 def finalize_markov(contrib: DataFrame, laplace: float = 1.0,
@@ -842,47 +783,36 @@ def stream_weighted_reservoir(df: DataFrame, key_col: str,
     stored reservoir and keeping the k largest keys yields exactly the
     sample the batch algorithm (``pipelines.sampling
     .es_weighted_sample``) would draw over everything seen so far.
-    Idempotent and commutative like the theta/HLL sinks: redelivered
-    rows rescore to the same key, so no batch-id guard. State is <= k
+    Idempotent: redelivered rows rescore to the same key. State is <= k
     rows forever."""
     from pyspark.sql import Window as W
 
-    from otit_swt_spark import fsutil
     from otit_swt_spark.pipelines.dedup import seeded_uniform
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        u = seeded_uniform(F.concat(F.lit(seed + ":"),
-                                    F.col(key_col).cast("string")))
-        w = F.col(weight_col).cast("double")
-        delta = (batch_df.where(w > 0)
+    u = seeded_uniform(F.concat(F.lit(seed + ":"),
+                                F.col(key_col).cast("string")))
+    w = F.col(weight_col).cast("double")
+    win = W.partitionBy().orderBy(F.col("__raw").desc(), F.col(key_col))
+
+    def fold(spark, batch):
+        delta = (batch.where(w > 0)
                  .select(F.col(key_col), w.alias("weight"),
                          (F.log(u) / w).alias("__raw")))
-        if fsutil.exists(spark, path):
-            delta = spark.read.parquet(path).unionByName(delta)
         # one row per KEY: a key whose weight changes across batches
         # re-scores, and ln(u)/w is monotone in w for fixed u, so
         # keeping max(__raw) == sampling each key at its MAXIMUM
         # observed weight (stated contract; without this, two weights
         # of one key could both land in the top-k and the "sample of
         # k" would hold k-1 distinct keys)
-        win = W.partitionBy().orderBy(F.col("__raw").desc(),
-                                      F.col(key_col))
-        merged = (delta.groupBy(key_col)
-                  .agg(F.max("weight").alias("weight"),
-                       F.max("__raw").alias("__raw"))
-                  .withColumn("__rn", F.row_number().over(win))
-                  .where(F.col("__rn") <= k)
-                  .select(key_col, "weight", "__raw"))
-        merged.localCheckpoint(eager=True) \
-            .write.mode("overwrite").parquet(path)
+        return (_stored(spark, path, delta).unionByName(delta)
+                .groupBy(key_col)
+                .agg(F.max("weight").alias("weight"),
+                     F.max("__raw").alias("__raw"))
+                .withColumn("__rn", F.row_number().over(win))
+                .where(F.col("__rn") <= k)
+                .select(key_col, "weight", "__raw"))
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold)
 
 
 def stream_growth(df: DataFrame, key_col: str, ts_col: str, path: str,
@@ -895,39 +825,20 @@ def stream_growth(df: DataFrame, key_col: str, ts_col: str, path: str,
     table rewritten with untouched keys carried over. Late days are
     exact: a late activity day can flip a stored churn into a
     retention (it fills the gap that made the next day look
-    resurrected), which per-day counters could never undo. Idempotent
-    on replay (duplicate log rows collapse in the distinct). Read the
-    per-day ledger with ``pipelines.analytics.growth_ledger`` over the
-    stored flags."""
-    from otit_swt_spark import fsutil
+    resurrected), which per-day counters could never undo. Idempotent:
+    a redelivered batch's duplicate (key, day) log rows collapse before
+    the re-derive. Read the per-day ledger with
+    ``pipelines.analytics.growth_ledger`` over the stored flags."""
     from otit_swt_spark.pipelines.analytics import activity_flags
 
-    log_path = path.rstrip("/") + "__log"
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        batch = (batch_df.select(
+    def fold(spark, batch):
+        batch = (batch.select(
             F.col(key_col).alias("k"),
             F.to_date(F.col(ts_col).cast("timestamp")).alias("day"))
             .distinct())
-        batch.write.mode("append").parquet(log_path)
-        touched = batch.select("k").distinct()
-        mine = (spark.read.parquet(log_path)
-                .join(touched, "k", "left_semi").distinct())
-        flags = activity_flags(mine)
-        if fsutil.exists(spark, path):
-            keep = spark.read.parquet(path) \
-                .join(touched, "k", "left_anti")
-            flags = keep.unionByName(flags)
-        flags.localCheckpoint(eager=True) \
-            .write.mode("overwrite").parquet(path)
+        return _rederive_touched(spark, path, batch, "k", activity_flags)
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold)
 
 
 def stream_psi(df: DataFrame, ref_shares: list[float], lo: float,
@@ -985,27 +896,21 @@ def stream_quantile_sketch(df: DataFrame, value_col: str, id_col: str,
     ranking as ``pipelines.analytics.quantile_sketch``) and merges into
     the stored frame, keeping the ``k`` smallest hashes per group — the
     live "what is this feed's p95 value" monitor whose state is <= k
-    rows per group FOREVER, with no per-window exact sort. Bottom-k
-    union is idempotent and commutative (duplicate (group, hash) rows
-    collapse to min(v) in the merge), so at-least-once redelivery
-    re-unions the same sampled rows harmlessly — no batch-id replay
-    guard needed, same argument as the theta/HLL sinks. Finalize with
+    rows per group FOREVER, with no per-window exact sort. Idempotent:
+    duplicate (group, hash) rows collapse to min(v) in the merge, so a
+    redelivered batch re-unions the same sampled rows. Finalize with
     ``pipelines.analytics.quantile_estimate`` on the stored frame; the
     stored sketch is BIT-IDENTICAL to the batch sketch over the union
     of all delivered rows (exact merge semilattice), which is what the
     cross-batch parity test asserts."""
     from pyspark.sql import Window as W
 
-    from otit_swt_spark import fsutil
     from otit_swt_spark.pipelines.analytics import quantile_sketch_merge
     from otit_swt_spark.pipelines.dedup import _md5_60
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        delta = (batch_df.where(F.col(value_col).isNotNull()
-                                & F.col(id_col).isNotNull())
+    def fold(spark, batch):
+        delta = (batch.where(F.col(value_col).isNotNull()
+                             & F.col(id_col).isNotNull())
                  .select(F.col(group_col),
                          F.col(value_col).cast("double").alias("v"),
                          _md5_60(F.concat(
@@ -1020,17 +925,10 @@ def stream_quantile_sketch(df: DataFrame, value_col: str, id_col: str,
         wl = W.partitionBy(group_col).orderBy("__h")
         delta = (delta.withColumn("__rn", F.row_number().over(wl))
                  .where(F.col("__rn") <= k).drop("__rn"))
-        stored = (spark.read.parquet(path).select(group_col, "__h", "v")
-                  if fsutil.exists(spark, path)
-                  else delta.limit(0))
-        merged = quantile_sketch_merge(stored, delta, group_col, k=k)
-        merged.localCheckpoint(eager=True) \
-            .write.mode("overwrite").parquet(path)
+        return quantile_sketch_merge(_stored(spark, path, delta), delta,
+                                     group_col, k=k)
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold)
 
 
 def stream_seasonal_score(df: DataFrame, profile: DataFrame,
@@ -1096,16 +994,12 @@ def stream_windowed_quantile_sketch(df: DataFrame, value_col: str,
     (group, window_start) via the stored ``window_start`` column."""
     from pyspark.sql import Window as W
 
-    from otit_swt_spark import fsutil
     from otit_swt_spark.pipelines.analytics import quantile_sketch_merge
     from otit_swt_spark.pipelines.dedup import _md5_60
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        delta = (batch_df.where(F.col(value_col).isNotNull()
-                                & F.col(id_col).isNotNull())
+    def fold(spark, batch):
+        delta = (batch.where(F.col(value_col).isNotNull()
+                             & F.col(id_col).isNotNull())
                  .select(F.col(group_col),
                          F.window(F.col(ts_col), window)["start"]
                          .alias("window_start"),
@@ -1120,19 +1014,11 @@ def stream_windowed_quantile_sketch(df: DataFrame, value_col: str,
         wl = W.partitionBy(group_col, "window_start").orderBy("__h")
         delta = (delta.withColumn("__rn", F.row_number().over(wl))
                  .where(F.col("__rn") <= k).drop("__rn"))
-        stored = (spark.read.parquet(path)
-                  .select(group_col, "window_start", "__h", "v")
-                  if fsutil.exists(spark, path) else delta.limit(0))
-        merged = quantile_sketch_merge(stored, delta,
+        merged = quantile_sketch_merge(_stored(spark, path, delta), delta,
                                        [group_col, "window_start"], k=k)
         # retention: keep each group's retain_windows most recent windows
         wr = W.partitionBy(group_col).orderBy(F.col("window_start").desc())
-        merged = (merged.withColumn("__wrk", F.dense_rank().over(wr))
-                  .where(F.col("__wrk") <= retain_windows).drop("__wrk"))
-        merged.localCheckpoint(eager=True) \
-            .write.mode("overwrite").parquet(path)
+        return (merged.withColumn("__wrk", F.dense_rank().over(wr))
+                .where(F.col("__wrk") <= retain_windows).drop("__wrk"))
 
-    return (df.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(df, path, checkpoint, fold)

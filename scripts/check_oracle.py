@@ -110,20 +110,24 @@ def dtype_drift(spark_schema, duck_types: dict[str, str]) -> list[str]:
 
 def run_sweep(spark, sf_dir: str = "/root/testdata/sf0.01",
               only: list[str] | None = None) -> list[tuple[str, str]]:
-    """Run every queries() entry on Spark and its oracle_sql() twin on
-    DuckDB, returning (name, reason) failures — importable so the pytest
-    suite runs the full sweep by default (driver subsetting can't hide
-    drift)."""
+    """Run every queries() entry (or only the ``only`` names) on Spark
+    and its oracle_sql() twin on DuckDB, returning (name, reason)
+    failures; a name in ``only`` that is not a queries() entry is a
+    failure. Importable so the pytest suite runs the full sweep by
+    default (driver subsetting can't hide drift)."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    names = [n for n in qs if not only or n in only]
+    unknown = [n for n in only or () if n not in qs]
+    failures = [(n, "not a queries() entry") for n in unknown]
+    for n in unknown:
+        print(f"FAIL  {n}: not a queries() entry")
+    for name in names:
+        fn = qs[name]
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
@@ -166,7 +170,8 @@ def run_sweep(spark, sf_dir: str = "/root/testdata/sf0.01",
             print(f"FAIL  {name}: values differ e.g. {diff}")
         else:
             print(f"PASS  {name} ({len(sr)} rows, {time.time()-t0:.1f}s)")
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} ok; {len(failures)} failures")
+    checked = len(names) + len(unknown)
+    print(f"\n{checked - len(failures)}/{checked} ok; {len(failures)} failures")
     for n, msg in failures:
         print(f"  - {n}: {msg}")
     return failures

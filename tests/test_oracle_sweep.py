@@ -18,3 +18,14 @@ def test_full_oracle_sweep_sf001(spark):
 
     failures = run_sweep(spark, "/root/testdata/sf0.01")
     assert failures == []
+
+
+def test_sweep_subset_counts_only_checked_names(spark, capsys):
+    """A NAME subset reports over the names it ran, and a name that is
+    not a queries() entry fails instead of passing unchecked."""
+    from check_oracle import run_sweep
+
+    failures = run_sweep(spark,
+                         only=["tpch_q12_shipmode", "no_such_entry"])
+    assert failures == [("no_such_entry", "not a queries() entry")]
+    assert "1/2 ok; 1 failures" in capsys.readouterr().out

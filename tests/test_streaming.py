@@ -481,7 +481,9 @@ def test_stream_wap_merge_versions_per_batch(spark, tmp_path):
 def test_stream_count_min_matches_batch_sketch(spark, tmp_path):
     """Streaming CMS folded over two micro-batches must equal the batch
     sketch of the full corpus cell-for-cell (mergeability through
-    foreachBatch), and estimates over the stored table never undercount."""
+    foreachBatch), estimates over the stored table never undercount, and
+    a full replay from a fresh checkpoint is skipped by the batch-id
+    guard (cell addition would double every cell)."""
     from otit_swt_spark.pipelines.analytics import cms_estimate, count_min_sketch
     from otit_swt_spark.streaming.ingest import stream_count_min
 
@@ -510,6 +512,15 @@ def test_stream_count_min_matches_batch_sketch(spark, tmp_path):
     true = {r["k"]: r["n"] for r in
             full.groupBy("k").agg(F.count("*").alias("n")).collect()}
     assert all(est[k] >= true[k] for k in true)
+
+    # full replay from a fresh checkpoint: guarded, table unchanged
+    stream2 = (spark.readStream.schema("k string")
+               .option("maxFilesPerTrigger", "1").parquet(src))
+    stream_count_min(stream2, "k", sk, str(tmp_path / "ck2"),
+                     width=64, depth=3).awaitTermination(120)
+    again = {(r["row"], r["col"]): r["cnt"] for r in
+             spark.read.parquet(sk).collect()}
+    assert again == want
 
 
 def test_stream_hll_matches_batch_sketch(spark, tmp_path):
@@ -541,6 +552,13 @@ def test_stream_hll_matches_batch_sketch(spark, tmp_path):
     assert got == want
     est = hll_estimate(spark.read.parquet(sk)).first()["estimate"]
     assert abs(est - 1200) / 1200 < 0.1
+
+    # full replay from a fresh checkpoint: max-merge is idempotent
+    stream2 = (spark.readStream.schema("u string")
+               .option("maxFilesPerTrigger", "1").parquet(src))
+    stream_hll(stream2, "u", sk, str(tmp_path / "ck2")).awaitTermination(120)
+    assert {(r["bucket"], r["max_rho"]) for r in
+            spark.read.parquet(sk).collect()} == want
 
 
 def test_stream_scd2_matches_batch_twin_and_handles_late_data(spark, tmp_path):
@@ -793,17 +811,22 @@ def test_stream_growth_matches_batch_and_late_day_flip(spark, tmp_path):
         spark.createDataFrame(rows, schema).coalesce(1) \
             .write.mode("append" if i else "overwrite").parquet(src)
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    q = stream_growth(
-        stream.select("user_id", F.to_timestamp("s").alias("ts")),
-        "user_id", "ts", tbl, str(tmp_path / "ck"))
-    q.awaitTermination(120)
+    def run(ck):
+        stream = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", "1").parquet(src))
+        q = stream_growth(
+            stream.select("user_id", F.to_timestamp("s").alias("ts")),
+            "user_id", "ts", tbl, ck)
+        q.awaitTermination(120)
 
-    got = {str(r["day"]): tuple(r[c] for c in
-                                ("n_active", "n_new", "n_retained",
-                                 "n_resurrected", "n_churned"))
-           for r in growth_ledger(spark.read.parquet(tbl)).collect()}
+    def ledger():
+        return {str(r["day"]): tuple(r[c] for c in
+                                     ("n_active", "n_new", "n_retained",
+                                      "n_resurrected", "n_churned"))
+                for r in growth_ledger(spark.read.parquet(tbl)).collect()}
+
+    run(str(tmp_path / "ck"))
+    got = ledger()
     full = spark.createDataFrame(b1 + b2 + b3, schema) \
         .select("user_id", F.to_timestamp("s").alias("ts"))
     want = {str(r["day"]): tuple(r[c] for c in
@@ -815,6 +838,11 @@ def test_stream_growth_matches_batch_and_late_day_flip(spark, tmp_path):
     assert want["2024-01-03"][3] == 0 and want["2024-01-03"][2] == 1
     # 01-02 after the late fill: u1 retained (1 active), u2 churned
     assert got["2024-01-02"] == (1, 0, 1, 0, 1)
+    # full replay from a fresh checkpoint: idempotent, flags unchanged
+    stored = sorted(map(str, spark.read.parquet(tbl).collect()))
+    run(str(tmp_path / "ck2"))
+    assert sorted(map(str, spark.read.parquet(tbl).collect())) == stored
+    assert ledger() == want
 
 
 def test_session_gaps_survives_arrow_chunking(spark, tmp_path):
@@ -1081,13 +1109,17 @@ def test_stream_windowed_quantile_sketch_retention(spark, tmp_path):
         .write.mode("append").parquet(src)
 
     sk_path = str(tmp_path / "wq_sk")
-    stream = (spark.readStream
-              .schema("g string, rid long, ts timestamp, v double")
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    q = stream_windowed_quantile_sketch(
-        stream, "v", "rid", "g", "ts", sk_path, str(tmp_path / "wq_ck"),
-        k=64, window="5 minutes", retain_windows=2)
-    q.awaitTermination(120)
+
+    def run(ck):
+        stream = (spark.readStream
+                  .schema("g string, rid long, ts timestamp, v double")
+                  .option("maxFilesPerTrigger", "1").parquet(src))
+        q = stream_windowed_quantile_sketch(
+            stream, "v", "rid", "g", "ts", sk_path, ck,
+            k=64, window="5 minutes", retain_windows=2)
+        q.awaitTermination(120)
+
+    run(str(tmp_path / "wq_ck"))
 
     stored = spark.read.parquet(sk_path)
     starts = {r["window_start"] for r in
@@ -1107,6 +1139,12 @@ def test_stream_windowed_quantile_sketch_retention(spark, tmp_path):
                stored.where(F.col("window_start")
                             == pd.Timestamp(wstart)).collect()}
         assert got == want and len(got) == 64, wstart
+
+    # full replay from a fresh checkpoint: the pruned window comes back
+    # with the replayed rows and is pruned again; the store is unchanged
+    before = rows(stored)
+    run(str(tmp_path / "wq_ck2"))
+    assert rows(spark.read.parquet(sk_path)) == before
 
 
 def test_stream_crawl_chain_parity(spark, tmp_path):
