@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from otit_swt_spark.graph import GraphStore
+from otit_swt_spark.graph import GraphStore, merge_catalogs
 from otit_swt_spark.sparql.compiler import Compiler, SolutionMapping
 from otit_swt_spark.sparql.parser import parse_query
 from otit_swt_spark.terms import XSD_STRING, spark_type_for_xsd
@@ -118,7 +118,7 @@ class Engine:
             if len(parts) == 1:
                 pred_dt = self.named_graphs[query.dataset_default[0].value].predicate_datatypes
             else:
-                merged = self._merge_catalogs(
+                merged = merge_catalogs(
                     [self.named_graphs[iri.value].predicate_datatypes()
                      for iri in query.dataset_default])
                 pred_dt = lambda m=merged: m  # noqa: E731
@@ -155,38 +155,6 @@ class Engine:
             out = self._finalize(sm, query.variables)
         self._plan_cache[sparql] = out
         return out
-
-    @staticmethod
-    def _merge_catalogs(catalogs: list[dict]) -> dict:
-        """Merge per-graph predicate->datatype catalogs for a multi-graph
-        FROM: exact agreement keeps the type; a string/IRI-only mix stays a
-        plain string column; any other disagreement is a mixed predicate
-        (the same judgement GraphStore.predicate_datatypes makes within one
-        graph)."""
-        merged: dict[str, dict] = {}
-        for cat in catalogs:
-            for p, info in cat.items():
-                cur = merged.get(p)
-                if cur is None:
-                    merged[p] = dict(info)
-                    continue
-                # compare the TYPE judgement only — catalog entries also
-                # carry the selectivity count "n", and comparing full
-                # dicts misflagged identically-typed predicates from two
-                # graphs as mixed whenever their counts differed
-                n = cur.get("n", 0) + info.get("n", 0)
-                if (cur.get("dt"), cur.get("mixed")) == \
-                        (info.get("dt"), info.get("mixed")):
-                    merged[p] = {**cur, "n": n}
-                    continue
-                dts = {cur.get("dt"), info.get("dt")}
-                if (not cur["mixed"] and not info["mixed"]
-                        and dts <= {None, XSD_STRING}):
-                    merged[p] = {"dt": XSD_STRING if XSD_STRING in dts else None,
-                                 "mixed": False, "n": n}
-                else:
-                    merged[p] = {"dt": None, "mixed": True, "n": n}
-        return merged
 
     def ask(self, sparql: str) -> bool:
         """Execute an ASK query and return the boolean."""
@@ -253,7 +221,9 @@ class Engine:
             fresh = nullsafe_anti(insert_df.dropDuplicates(cols), df)
             df = df.unionByName(fresh)
         self.graph.df = df
-        self.graph._pred_dt = None  # datatype catalog derives from the data
+        # a delete cannot be merged out of the datatype catalog (unlike
+        # add_triples_df's merge): it is recomputed on the next read
+        self.graph._pred_dt = None
         self._plan_cache.clear()
         return self
 

@@ -50,6 +50,75 @@ def _term_to_row(s: Term, p: Term, o: Term) -> tuple:
     return (s_str, p_str, o.value if isinstance(o, IRI) else str(o), None, None, None)
 
 
+def catalog_of(df: DataFrame) -> dict[str, dict]:
+    """Per-predicate object-datatype catalog of a triples frame:
+    ``{predicate: {"dt": datatype-iri-or-None, "mixed": bool, "n": int}}``.
+
+    ``dt`` is the single literal datatype when every literal object of the
+    predicate agrees, None when the predicate has no literal objects (IRI
+    and blank-node objects only) or is mixed; ``mixed`` marks predicates
+    whose objects mix literal datatypes, or mix IRIs with non-string
+    literals — the cases where one output column cannot be typed soundly
+    (the reference raises InconsistentDatatype for these,
+    hybrid/src/engine.rs:137-198). A literal without a datatype counts as
+    xsd:string (RDF 1.1 simple literal). ``n`` is the predicate's triple
+    count, free in the same aggregate; it drives selectivity-ordered BGP
+    joins (compiler). One map-side-combinable aggregate."""
+    lit_dt = F.when(F.col("o_lex").isNotNull(),
+                    F.coalesce(F.col("o_dt"), F.lit(XSD_STRING)))
+    rows = (
+        df.groupBy("p")
+        .agg(
+            F.count_distinct(lit_dt).alias("n_dt"),
+            F.max(lit_dt).alias("dt"),
+            F.count("o_iri").alias("n_iri"),
+            F.count("o_lex").alias("n_lex"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    )
+    out = {}
+    for r in rows:
+        mixed = r["n_dt"] > 1 or (r["n_iri"] > 0 and r["n_lex"] > 0
+                                  and r["dt"] != XSD_STRING)
+        out[r["p"]] = {"dt": None if mixed else r["dt"], "mixed": mixed,
+                       "n": r["n"]}
+    return out
+
+
+def merge_catalogs(catalogs: list[dict]) -> dict:
+    """Merge predicate catalogs (``catalog_of``) of several triple frames
+    into the catalog of their union: exact agreement keeps the type; a
+    string/IRI-only mix stays a plain string column; any other
+    disagreement is a mixed predicate (the judgement catalog_of makes
+    within one frame, so the merge equals a recompute over the union).
+    Counts add; catalogs persisted without counts merge as count 0."""
+    merged: dict[str, dict] = {}
+    for cat in catalogs:
+        for p, info in cat.items():
+            cur = merged.get(p)
+            if cur is None:
+                merged[p] = dict(info)
+                continue
+            # compare the TYPE judgement only — entries also carry the
+            # selectivity count "n", and comparing full dicts misflagged
+            # identically-typed predicates as mixed whenever their counts
+            # differed
+            n = cur.get("n", 0) + info.get("n", 0)
+            if (cur.get("dt"), cur.get("mixed")) == \
+                    (info.get("dt"), info.get("mixed")):
+                merged[p] = {**cur, "n": n}
+                continue
+            dts = {cur.get("dt"), info.get("dt")}
+            if (not cur["mixed"] and not info["mixed"]
+                    and dts <= {None, XSD_STRING}):
+                merged[p] = {"dt": XSD_STRING if XSD_STRING in dts else None,
+                             "mixed": False, "n": n}
+            else:
+                merged[p] = {"dt": None, "mixed": True, "n": n}
+    return merged
+
+
 class GraphStore:
     """A knowledge graph held as a Spark DataFrame of triples.
 
@@ -64,46 +133,14 @@ class GraphStore:
         self._pred_dt: dict[str, dict] | None = None
 
     def predicate_datatypes(self) -> dict[str, dict]:
-        """Per-predicate object-datatype catalog:
-        ``{predicate: {"dt": datatype-iri-or-None, "mixed": bool}}``.
-
-        ``dt`` is the single literal datatype when every literal object of the
-        predicate agrees (None for IRI-only predicates); ``mixed`` marks
-        predicates whose objects mix literal datatypes, or mix IRIs with
-        non-string literals — the cases where one output column cannot be
-        typed soundly (the reference raises InconsistentDatatype for these,
-        hybrid/src/engine.rs:137-198).
-
-        One map-side-combinable aggregate over the graph, computed lazily and
-        cached per store: the compiler uses it to type object variables at
-        compile time, which removes the Engine's per-query datatype probe job
-        and makes mixed-datatype detection exact instead of probe-window-
-        limited. Invalidated by add_triples_df."""
+        """Per-predicate object-datatype catalog (see ``catalog_of``),
+        computed lazily and cached per store: the compiler uses it to type
+        object variables at compile time, which removes the Engine's
+        per-query datatype probe job and makes mixed-datatype detection
+        exact instead of probe-window-limited. add_triples_df merges the
+        added frame's catalog into a cached one."""
         if self._pred_dt is None:
-            rows = (
-                self.df.groupBy("p")
-                .agg(
-                    F.count_distinct("o_dt").alias("n_dt"),
-                    F.max("o_dt").alias("dt"),
-                    F.count("o_iri").alias("n_iri"),
-                    F.count("o_lex").alias("n_lex"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .collect()
-            )
-            self._pred_dt = {
-                r["p"]: {
-                    "dt": r["dt"] if r["n_dt"] == 1 else None,
-                    "mixed": r["n_dt"] > 1
-                    or (r["n_iri"] > 0 and r["n_lex"] > 0
-                        and (r["dt"] or XSD_STRING) != XSD_STRING),
-                    # per-predicate triple count: free in this aggregate,
-                    # drives selectivity-ordered BGP joins (compiler). Old
-                    # persisted catalogs may lack it — consumers default it.
-                    "n": r["n"],
-                }
-                for r in rows
-            }
+            self._pred_dt = catalog_of(self.df)
         return self._pred_dt
 
     def predicate_count(self, predicate: str) -> int | None:
@@ -211,8 +248,12 @@ class GraphStore:
     # -- mutation ----------------------------------------------------------
 
     def add_triples_df(self, df: DataFrame) -> "GraphStore":
-        self.df = self.df.unionByName(df.select(*[f.name for f in TRIPLES_SCHEMA]))
-        self._pred_dt = None  # datatype catalog is derived from df
+        df = df.select(*[f.name for f in TRIPLES_SCHEMA])
+        self.df = self.df.unionByName(df)
+        if self._pred_dt is not None:
+            # the catalog is a per-predicate summary that merges exactly:
+            # aggregate the added triples only, not the whole graph again
+            self._pred_dt = merge_catalogs([self._pred_dt, catalog_of(df)])
         return self
 
     # -- sinks -------------------------------------------------------------

@@ -319,6 +319,27 @@ def _pattern_free_expr_vars(p: A.GraphPattern) -> set[str]:
     return free - A.pattern_variables(p)
 
 
+#: builtins that return NULL (a SPARQL error) on a NULL argument
+_NULL_STRICT_FUNCS = {"STR", "UCASE", "LCASE", "STRLEN"}
+
+
+def _null_strict(e: A.Expr) -> bool:
+    """True when ``e`` is NULL wherever one of its variables is unbound:
+    variables, constants, arithmetic and a few string builtins over them.
+    A comparison of two such operands is then never true on a row that
+    leaves one of its variables unbound (EXISTS, BOUND, COALESCE and IF
+    are not among them)."""
+    if isinstance(e, (A.EVar, A.ELiteral, A.EIri)):
+        return True
+    if isinstance(e, A.EArith):
+        return _null_strict(e.left) and _null_strict(e.right)
+    if isinstance(e, A.ENeg):
+        return _null_strict(e.inner)
+    if isinstance(e, A.EFunc):
+        return e.name in _NULL_STRICT_FUNCS and all(map(_null_strict, e.args))
+    return False
+
+
 def _contains_exists(e: A.Expr) -> bool:
     if isinstance(e, A.EExists):
         return True
@@ -358,7 +379,10 @@ def _with_deterministic_rid(df: DataFrame) -> DataFrame:
 
 @dataclass(frozen=True)
 class VarMeta:
-    kind: str  # 'term' (canonical string + optional __dt/__lang cols) | 'native'
+    #: 'term' (canonical string; a literal-capable binding also carries
+    #: __dt/__lang companions, an IRI/blank-node-only one does not) |
+    #: 'native'
+    kind: str
     hint: str | None = None  # spark-ish type hint for native columns
     xsd: str | None = None  # statically-known datatype IRI, if any
     #: the variable is statically known to mix incompatible datatypes
@@ -372,7 +396,11 @@ class SolutionMapping:
 
     Mirrors the reference's Polars frame + column conventions
     (hybrid/src/combiner.rs), with datatype fidelity carried in ``<v>__dt``
-    companion columns instead of struct-typed cells."""
+    / ``<v>__lang`` companion columns instead of struct-typed cells. Only
+    literal-capable term bindings carry companions (``dt_vars`` /
+    ``lang_vars``): subject and predicate variables, and object variables
+    whose predicate the catalog proves IRI/blank-node-only, are one plain
+    value column, so joins between them key on the value alone."""
 
     df: DataFrame
     vars: dict[str, VarMeta]
@@ -437,12 +465,15 @@ class Compiler:
         self.graph_df = graph_df
         self.ts_tables = ts_tables or []
         self._counter = itertools.count()
-        #: stack of FILTER-derived timestamp-bound hints (var -> (lower,
-        #: upper) datetimes) consulted when a pushdown-capable TS backend
-        #: is registered; ``None`` entries are scope BARRIERS (MINUS right
-        #: sides, EXISTS inners, subselects) past which outer hints must
-        #: not leak — see _ts_relation_for_join
-        self._ts_bound_hints: list[dict | None] = []
+        #: stack of the hints each enclosing FILTER (or OPTIONAL
+        #: condition) publishes to the patterns inside it: ``(bounds,
+        #: conjuncts)`` — timestamp bounds (var -> (lower, upper)
+        #: datetimes) for the chains' remote fetch (_ts_relation_for_join)
+        #: and comparison conjuncts for a BGP's static side
+        #: (_restrict_static_side); ``None`` entries are scope BARRIERS
+        #: (MINUS right sides, EXISTS inners, subselects) past which outer
+        #: hints must not leak
+        self._filter_scopes: list[tuple[dict, list] | None] = []
         #: active grouped-pushdown specs (innermost last) — published by
         #: compile_group when its static analysis proves the GROUP BY can
         #: aggregate remotely, fired by compile_bgp (_grouped_pushdown)
@@ -458,20 +489,24 @@ class Compiler:
         #: variables statically (no per-query dtype probe job in Engine)
         self._pred_datatypes = pred_datatypes
 
-    def _object_meta(self, pred_iri: str) -> VarMeta:
-        """Static VarMeta for an object variable bound through a constant
-        predicate, using the graph's predicate→datatype catalog when
-        available. Unknown catalog (no provider) → xsd None → Engine falls
-        back to its datatype probe."""
-        if self._pred_datatypes is None:
+    def _object_meta(self, pred) -> VarMeta | None:
+        """Static VarMeta for an object variable, using the graph's
+        predicate→datatype catalog when the predicate is a constant and a
+        catalog is available. Unknown catalog (no provider, variable
+        predicate) → xsd None → Engine falls back to its datatype probe.
+        None when the catalog proves the predicate's objects are IRIs or
+        blank nodes only (``dt`` None, not mixed): the variable then binds
+        like a subject variable, one value column without companions."""
+        if self._pred_datatypes is None or not isinstance(pred, IRI):
             return VarMeta("term")
-        info = self._pred_datatypes().get(pred_iri)
+        info = self._pred_datatypes().get(pred.value)
         if info is None:  # predicate absent from graph: column will be empty
             return VarMeta("term", xsd=XSD_STRING)
         if info["mixed"]:
             return VarMeta("term", mixed=True)
-        # dt None = IRI-only objects; they render as strings, no cast needed
-        return VarMeta("term", xsd=info["dt"] or XSD_STRING)
+        if info["dt"] is None:
+            return None
+        return VarMeta("term", xsd=info["dt"])
 
     # ------------------------------------------------------------------ util
 
@@ -505,17 +540,29 @@ class Compiler:
     #: stays bounded. Also the most static-side rows compile_bgp inlines.
     TS_ID_PUSHDOWN_MAX = 1000
 
-    def _extract_ts_bound_hints(self, expr: A.Expr) -> dict:
-        """(var -> (lower, upper)) timestamp bounds from the top-level
-        conjunction of a FILTER — the piece of the filter a pushdown-capable
-        TS backend (sources/flight.py) can execute remotely. Strict bounds
-        are relaxed to inclusive (the remote WHERE only needs to be IMPLIED
-        by the filter, which re-applies exactly afterwards); xsd:date
-        literals widen to the day's [00:00, 24:00) superset."""
+    def _filter_hints(self, expr: A.Expr | None) -> tuple[dict, list]:
+        """The ``(bounds, conjuncts)`` entry a FILTER publishes on
+        _filter_scopes. ``bounds``: (var -> (lower, upper)) timestamp
+        bounds from the top-level conjunction — the piece of the filter a
+        pushdown-capable TS backend (sources/flight.py) can execute
+        remotely. Strict bounds are relaxed to inclusive (the remote WHERE
+        only needs to be IMPLIED by the filter, which re-applies exactly
+        afterwards); xsd:date literals widen to the day's [00:00, 24:00)
+        superset. ``conjuncts``: the comparisons that are false or an
+        error whenever one of their variables is unbound
+        (_null_strict)."""
         import datetime as _dt
 
+        if expr is None:
+            return {}, []
         hints: dict[str, tuple] = {}
+        conjuncts = []
         for c in _conjuncts(expr):
+            if (isinstance(c, A.ECmp) and _null_strict(c.left)
+                    and _null_strict(c.right)) or (
+                    isinstance(c, A.EIn) and _null_strict(c.expr)
+                    and all(_null_strict(o) for o in c.options)):
+                conjuncts.append(c)
             b = _datetime_bound(c)
             if b is None:
                 continue
@@ -528,16 +575,16 @@ class Compiler:
             if op in ("<", "<=", "="):
                 hi = hi_v if hi is None else min(hi, hi_v)
             hints[var] = (lo, hi)
-        return hints
+        return hints, conjuncts
 
     def _lookup_ts_bounds(self, var: str) -> tuple:
         """Intersect the bounds every enclosing FILTER scope has published
         for ``var``, stopping at the first scope barrier (None)."""
         lo = hi = None
-        for entry in reversed(self._ts_bound_hints):
+        for entry in reversed(self._filter_scopes):
             if entry is None:
                 break
-            b = entry.get(var)
+            b = entry[0].get(var)
             if b is None:
                 continue
             elo, ehi = b
@@ -841,11 +888,14 @@ class Compiler:
         # __dt/__lang companion on either side (or the sides disagree on
         # a statically-known datatype), joining on the canonical string
         # alone would conflate distinct RDF terms with one lexical form
-        # ("1"^^xsd:integer vs "1"^^xsd:string, "x"@en vs "x"@fr). Those
-        # vars join on value + effective datatype + effective language
-        # instead. Residual (documented) canonicalization trade: a plain
-        # literal and an IRI with the same lexical and NO companions on
-        # either side still conflate.
+        # ("1"^^xsd:integer vs "1"^^xsd:string, "x"@en vs "x"@fr, <x> vs
+        # "x"). Those vars join on value + effective datatype + effective
+        # language instead; a side without companions contributes its
+        # static datatype (none for subjects and IRI-only objects). Two
+        # sides without companions join on the plain value. Residual
+        # (documented) canonicalization trade: a property-path object
+        # carries no companions, so a literal it binds still conflates
+        # with an IRI of the same lexical form.
         ident = [v for v in shared
                  if left.vars[v].kind == "term"
                  and right.vars[v].kind == "term"
@@ -874,10 +924,14 @@ class Compiler:
             rdf = rdf.drop(v)
             keys[keys.index(v)] = f"__tk_{v}"
         # drop right-side aux duplicates for shared term vars (values agree on
-        # matched rows), and resolve any other duplicate non-var columns
+        # matched rows) and right-side aux of vars the left binds without
+        # companions (a matched right row is then an IRI: null aux), and
+        # resolve any other duplicate non-var columns
         for v in shared:
+            plain = (left.vars[v].kind == "term" and left.vars[v].xsd is None
+                     and not left.aux_cols(v))
             for aux in right.aux_cols(v):
-                if aux in ldf.columns:
+                if plain or aux in ldf.columns:
                     rdf = rdf.drop(aux)
         dup_extra = [c for c in rdf.columns
                      if c in ldf.columns and c not in keys]
@@ -978,16 +1032,17 @@ class Compiler:
             return self.compile_pattern(p.right, left)
         if isinstance(p, A.Filter):
             # Publish this FILTER's timestamp bounds to TS-chain lowering
-            # inside `inner`: a pushdown-capable backend renders them into
-            # its remote query. Sound because the filter re-applies every
-            # constraint afterwards — rows the remote store withholds are
-            # exactly rows the filter would drop (or, through OPTIONAL,
-            # rows whose t-var arrives unbound and fails the comparison).
-            self._ts_bound_hints.append(self._extract_ts_bound_hints(p.expr))
+            # inside `inner` (a pushdown-capable backend renders them into
+            # its remote query) and its comparisons to the static sides of
+            # the BGPs inside it. Sound because the filter re-applies every
+            # constraint afterwards — rows withheld early are exactly rows
+            # the filter would drop (or, through OPTIONAL, rows whose
+            # variable arrives unbound and fails the comparison).
+            self._filter_scopes.append(self._filter_hints(p.expr))
             try:
                 sm = self.compile_pattern(p.inner, input)
             finally:
-                self._ts_bound_hints.pop()
+                self._filter_scopes.pop()
             return self.apply_filter(sm, p.expr)
         if isinstance(p, A.Extend):
             sm = self.compile_pattern(p.inner, input)
@@ -1030,11 +1085,11 @@ class Compiler:
             # barrier: a subselect's variables are a fresh scope — an outer
             # FILTER's bound on ?t must not restrict an inner chain whose
             # t-var merely shares the name
-            self._ts_bound_hints.append(None)
+            self._filter_scopes.append(None)
             try:
                 sm = self.compile_pattern(p.inner, None)
             finally:
-                self._ts_bound_hints.pop()
+                self._filter_scopes.pop()
             sm = self.apply_project(sm, p.variables)
             return self.join_solutions(input, sm) if input is not None else sm
         if isinstance(p, A.Distinct):
@@ -1334,6 +1389,7 @@ class Compiler:
         chains = [tj for tj in ts_joins if "rebind" not in tj]
         rows = None
         if chains:
+            sm = self._restrict_static_side(sm, bgp, ts_joins)
             sm, rows = self._inline_static_side(sm, [tj["eid"] for tj in chains])
         spec = (self._group_pushdown_stack[-1]
                 if self._group_pushdown_stack else None)
@@ -1344,14 +1400,37 @@ class Compiler:
         for i, tj in enumerate(chains):
             if "probed_ids" not in tj:  # a declined pushdown read them
                 tj["probed_ids"] = self._static_ids(
-                    sm, [tj["eid"]],
-                    None if rows is None else [r[i:i + 1] for r in rows])
+                    sm, [tj["eid"]], [r[i:i + 1] for r in rows])
         for tj in ts_joins:
             sm = self._apply_ts_join(sm, tj)
         return sm
 
+    def _restrict_static_side(self, sm: SolutionMapping, bgp: A.BGP,
+                              ts_joins: list[dict]) -> SolutionMapping:
+        """Apply the enclosing FILTERs' comparisons whose variables the
+        BGP's static patterns all bind to the static side before its one
+        collect, as the reference keeps them in its static SPARQL query
+        (static_sparql.rs): the rows, and the ids the chains send to the
+        store, are then only those the filter can keep. Each FILTER still
+        re-applies afterwards; a published comparison is never true with
+        an unbound variable (_filter_hints), so a row removed here is one
+        the FILTER drops, through an OPTIONAL too."""
+        chain_vars = {x.name for tj in ts_joins for x in tj["t"] + tj["v"]
+                      if isinstance(x, Variable)}
+        static = (A.pattern_variables(bgp) - chain_vars
+                  - {tj["dp"] for tj in ts_joins})
+        conds = []
+        for entry in reversed(self._filter_scopes):
+            if entry is None:
+                break
+            conds += [c for c in entry[1] if A.expr_variables(c) <= static]
+        if not conds:
+            return sm
+        cond = compile_expr(functools.reduce(A.EAnd, conds), sm)
+        return replace(sm, df=sm.df.filter(_as_bool(cond)))
+
     def _inline_static_side(self, sm: SolutionMapping, eids: list[str]
-                            ) -> tuple[SolutionMapping, list | None]:
+                            ) -> tuple[SolutionMapping, list]:
         """Evaluate the BGP's static side ONCE, before any ts chain is
         joined (reference static_sparql.rs:46-99: the static solutions
         are one DataFrame that supplies both the time-series id lists and
@@ -1360,39 +1439,40 @@ class Compiler:
         Python round trip), so execution never re-runs the KG join, and
         the chains' external ids are read from the same rows: returns the
         inlined mapping and one ``eids`` tuple per row. Above the cap the
-        mapping is returned unchanged with rows None, and compile_bgp
-        falls back to id probes (_static_ids)."""
+        mapping is returned unchanged with the first cap + 1 rows' tuples,
+        from which _static_ids reads what it can."""
         cap = self.TS_ID_PUSHDOWN_MAX
         with job_description(self.spark, "otit:static-side"):
             jrows = sm.df.limit(cap + 1)._jdf.collectAsList()
-        if jrows.size() > cap:
-            return sm, None
         local = DataFrame(self.spark._jsparkSession.createDataFrame(
             jrows, sm.df._jdf.schema()), self.spark)
         # a projection of a LocalRelation is collected without a Spark job
         rows = [tuple(r) for r in local.select(*eids).collect()]
-        return replace(sm, df=local), rows
+        return (sm if len(rows) > cap else replace(sm, df=local)), rows
 
     def _static_ids(self, sm: SolutionMapping, eids: list[str],
-                    rows: list | None) -> list | None:
+                    rows: list) -> list | None:
         """The sorted distinct external ids the static side binds for the
         chains whose id columns are ``eids`` — bare ids for one chain,
         ``(id_1..id_n)`` tuples for several; a row with a NULL id binds
         no series. Read from the inlined ``rows`` (one tuple over
-        ``eids`` each) or, when those overflowed the cap, from a bounded
-        probe whose answer still fits when the rows do not (many static
-        rows per series, or several chains whose row count is their ids'
-        cross product). None when the probe overflows the cap too: one
-        chain's fetch then runs without an IN-list, several chains' remote
-        join declines."""
-        if rows is None:
-            cap = self.TS_ID_PUSHDOWN_MAX
-            with job_description(self.spark, "otit:chain-ids"):
-                rows = (sm.df.select(*eids).dropna().distinct()
-                        .limit(cap + 1).collect())
-            if len(rows) > cap:
-                return None
+        ``eids`` each). When those overflowed the cap (cap + 1 rows, a
+        prefix of the static side) and already hold more than cap
+        distinct ids, the full set does too; otherwise a bounded probe
+        reads the set, which can still fit (many static rows per series,
+        or several chains whose row count is their ids' cross product).
+        None when the ids overflow the cap: one chain's fetch then runs
+        without an IN-list, several chains' remote join declines."""
+        cap = self.TS_ID_PUSHDOWN_MAX
         ids = {tuple(r) for r in rows if None not in r}
+        if len(rows) > cap:
+            if len(ids) > cap:
+                return None
+            with job_description(self.spark, "otit:chain-ids"):
+                ids = {tuple(r) for r in sm.df.select(*eids).dropna()
+                       .distinct().limit(cap + 1).collect()}
+            if len(ids) > cap:
+                return None
         return sorted(r[0] for r in ids) if len(eids) == 1 else sorted(ids)
 
     def _grouped_pushdown(self, sm: SolutionMapping, ts_joins: list[dict],
@@ -1697,12 +1777,15 @@ class Compiler:
                 df = df.filter(F.coalesce(F.col("o_iri"), F.col("o_lex")) == F.col("s"))
             else:
                 cols.append(F.coalesce(F.col("o_iri"), F.col("o_lex")).alias(name))
-                cols.append(F.col("o_dt").alias(f"{name}__dt"))
-                cols.append(F.col("o_lang").alias(f"{name}__lang"))
-                vars2[name] = (self._object_meta(pred.value)
-                               if isinstance(pred, IRI) else VarMeta("term"))
-                dt_vars.add(name)
-                lang_vars.add(name)
+                meta = self._object_meta(pred)
+                if meta is None:
+                    vars2[name] = VarMeta("term")
+                else:
+                    cols.append(F.col("o_dt").alias(f"{name}__dt"))
+                    cols.append(F.col("o_lang").alias(f"{name}__lang"))
+                    vars2[name] = meta
+                    dt_vars.add(name)
+                    lang_vars.add(name)
         elif isinstance(tp.o, Literal):
             # RDF term-identity matching: lexical form + datatype + language
             # all must agree. A plain "foo" (xsd:string, no tag) does NOT
@@ -1867,11 +1950,11 @@ class Compiler:
         for node in exists_nodes:
             # same barrier as the EExists fast path: membership tests must
             # see the UNRESTRICTED chain
-            self._ts_bound_hints.append(None)
+            self._filter_scopes.append(None)
             try:
                 inner = self.compile_pattern(node.pattern, None)
             finally:
-                self._ts_bound_hints.pop()
+                self._filter_scopes.pop()
             shared = [v for v in inner.vars if v in sm.vars and not v.startswith("__")]
             if not shared:
                 nonempty = not inner.df.isEmpty()
@@ -1901,11 +1984,11 @@ class Compiler:
         if isinstance(expr, A.EExists):
             # barrier: restricting a chain inside [NOT] EXISTS by an outer
             # bound would change membership, not just fetch volume
-            self._ts_bound_hints.append(None)
+            self._filter_scopes.append(None)
             try:
                 inner = self.compile_pattern(expr.pattern, None)
             finally:
-                self._ts_bound_hints.pop()
+                self._filter_scopes.pop()
             shared = [v for v in inner.vars
                       if v in sm.vars and not v.startswith("__")]
             if shared:
@@ -2035,15 +2118,13 @@ class Compiler:
             # Filter(F,Ω2) for the matched branch; rows it excludes only
             # ever null-pad) — so its timestamp bounds may restrict a
             # pushdown-capable chain fetch inside the right side
-            self._ts_bound_hints.append(
-                self._extract_ts_bound_hints(p.expr)
-                if p.expr is not None else {})
+            self._filter_scopes.append(self._filter_hints(p.expr))
             try:
                 right = self.compile_pattern(p.right, None)
             except ValueError:
                 right = None  # right side needs left-bound context
             finally:
-                self._ts_bound_hints.pop()
+                self._filter_scopes.pop()
             if right is not None:
                 if p.expr is None:
                     return self.join_solutions(left, right, how="left")
@@ -2059,13 +2140,11 @@ class Compiler:
         # form applies expr as a filter over the matched branch, so an
         # expr-implied restriction on the right-side chain fetch only
         # removes rows that filter would drop
-        self._ts_bound_hints.append(
-            self._extract_ts_bound_hints(p.expr)
-            if p.expr is not None else {})
+        self._filter_scopes.append(self._filter_hints(p.expr))
         try:
             right = self.compile_pattern(p.right, left2)
         finally:
-            self._ts_bound_hints.pop()
+            self._filter_scopes.pop()
         if p.expr is not None:
             right = self.apply_filter(right, p.expr)
         matched = right
@@ -2193,7 +2272,7 @@ class Compiler:
         # not restrict a chain fetched INSIDE the removal set — dropping
         # out-of-bound right rows would stop them subtracting left rows,
         # changing the MINUS result.
-        self._ts_bound_hints.append(None)
+        self._filter_scopes.append(None)
         try:
             right = self.compile_pattern(p.right, None)
         except ValueError:
@@ -2207,7 +2286,7 @@ class Compiler:
                                "left_anti").drop(RID)
             return replace(left, df=df)
         finally:
-            self._ts_bound_hints.pop()
+            self._filter_scopes.pop()
         shared = [v for v in right.vars
                   if v in left.vars and not v.startswith("__")]
         if not shared:

@@ -94,3 +94,40 @@ def test_materialized_persists_datatype_catalog(spark, engine, tmp_path):
     assert g3._pred_dt is not None
     assert g3._pred_dt == json.load(open(cat_file))
     assert g2.predicate_datatypes() == g3.predicate_datatypes()
+
+
+def test_add_triples_merges_catalog_like_a_recompute(spark):
+    """add_triples_df merges the added frame's catalog into the cached
+    one; over randomized IRI, blank-node, typed, simple, untyped and
+    language-tagged objects the merge equals a recompute over the union."""
+    import random
+
+    from otit_swt_spark.graph import TRIPLES_SCHEMA, catalog_of
+    from otit_swt_spark.terms import RDF_LANGSTRING, XSD_STRING
+
+    XSD = "http://www.w3.org/2001/XMLSchema#"
+    objects = [
+        ("urn:o1", None, None, None), ("_:b1", None, None, None),
+        (None, "a", XSD_STRING, None), (None, "7", XSD + "integer", None),
+        (None, "2.5", XSD + "double", None), (None, "u", None, None),
+        (None, "x", XSD_STRING, "en"), (None, "y", RDF_LANGSTRING, "de"),
+    ]
+    rng = random.Random(7)
+    for trial in range(6):
+        preds = [f"urn:p{i}" for i in range(6)]
+        batches = []
+        for _ in range(3):
+            batch = []
+            for i in range(rng.randrange(1, 12)):
+                # each predicate draws from its own small object pool, so
+                # IRI-only, single-type and mixed predicates all occur
+                p = rng.choice(preds)
+                pool = objects[:2] if p == "urn:p0" else rng.sample(
+                    objects, rng.randrange(1, 3))
+                batch.append((f"urn:s{i}", p, *rng.choice(pool)))
+            batches.append(spark.createDataFrame(batch, TRIPLES_SCHEMA))
+        g = GraphStore(spark, batches[0])
+        g.predicate_datatypes()
+        for b in batches[1:]:
+            g.add_triples_df(b)
+        assert g._pred_dt == catalog_of(g.df), trial

@@ -647,3 +647,35 @@ def test_inlined_static_side_follows_graph_update(spark):
     }""")
     assert sorted(map(tuple, eng.query(q).collect())) == [
         ("ts1", 3), ("ts2", 3), ("ts3", 3)]
+
+
+def test_windpower_static_side_joins_aspect_chain_on_plain_iris(
+        spark, monkeypatch):
+    """The wind-power aspect chain's object variables are objects of
+    IRI-only predicates: its self-joins key on the plain IRI column, with
+    no term-identity concat key and no __dt/__lang companions, while the
+    literal-valued labels keep theirs. The FILTER's label comparisons
+    restrict the static side before it is collected, so only turbine A1's
+    generator reaches the time-series fetch."""
+    from otit_swt_spark.sparql.compiler import Compiler
+    from otit_swt_spark.windpower import build_engine, query_10min_avg
+
+    seen = []
+    inline = Compiler._inline_static_side
+
+    def spy(self, sm, eids):
+        seen.append(sm)
+        return inline(self, sm, eids)
+
+    monkeypatch.setattr(Compiler, "_inline_static_side", spy)
+    eng = build_engine(spark, points=12, n_turbines=2)
+    df = eng.query(query_10min_avg())
+    (sm,) = seen
+    plan = sm.df._jdf.queryExecution().analyzed().toString()
+    assert "__tk_" not in plan
+    for v in ("wtur_asp", "gensys_asp", "generator_asp", "ts"):
+        assert v in sm.df.columns
+        assert not {f"{v}__dt", f"{v}__lang"} & set(sm.df.columns)
+    assert {"site_label__dt", "wtur_label__dt"} <= set(sm.df.columns)
+    assert [r["wtur_label"] for r in sm.df.collect()] == ["A1"]
+    assert {r["wtur_label"] for r in df.collect()} == {"A1"}

@@ -430,6 +430,44 @@ def test_flight_pushdown_optional_condition(spark, flight_pushdown_server):
     assert srv.rows_served == 4
 
 
+def test_flight_pushdown_static_filter_narrows_id_list(
+        spark, flight_pushdown_server):
+    """A FILTER comparison over variables only the static side binds (a
+    label) restricts the static side before its one collect, as the
+    reference keeps it in the static query: the remote IN-list names only
+    the labelled widget's series, not every series the graph knows."""
+    from otit_swt_spark.sources.flight import flight_timeseries
+
+    srv = flight_pushdown_server
+    ts = flight_timeseries(spark, f"grpc://127.0.0.1:{srv.port}",
+                           "SELECT id, timestamp, value FROM ts")
+    graph = GraphStore.from_sparql_insert(spark, TESTDATA_SPARQL)
+    graph.add_triples_df(GraphStore.from_sparql_insert(spark, """
+        PREFIX case: <http://example.org/case#>
+        PREFIX rdfs: <http://www.w3.org/2000/01/rdf-schema#>
+        INSERT DATA {
+            case:myWidget1 rdfs:label "Widget 1" .
+            case:myWidget2 rdfs:label "Widget 2" .
+        }""").df)
+    eng = Engine(spark, graph).add_timeseries_table(ts)
+    df = eng.query("""
+    PREFIX otit_swt: <https://github.com/magbak/otit_swt#>
+    PREFIX types: <http://example.org/types#>
+    PREFIX rdfs: <http://www.w3.org/2000/01/rdf-schema#>
+    SELECT ?label ?v WHERE {
+        ?w rdfs:label ?label .
+        ?w types:hasSensor ?s .
+        ?s otit_swt:hasTimeseries ?ts .
+        ?ts otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasValue ?v .
+        FILTER(?label = "Widget 2")
+    }""")
+    assert rows(df) == [("Widget 2", float(200 + j)) for j in range(8)]
+    assert len(srv.queries) == 1
+    assert "\"id\" IN ('ts2')" in srv.queries[-1]
+    assert srv.rows_served == 8
+
+
 def test_flight_pushdown_synchronized_join(spark, flight_pushdown_server):
     """The synchronized-join shape (reference timeseries_sql_rewrite.rs
     sync joins 356-428): two datapoint chains on one series sharing ?t.
@@ -2382,13 +2420,13 @@ def test_wap_compact_small_files(spark, tmp_path):
 
 def test_flight_pushdown_tuple_overflow_keeps_per_chain_probe(
         spark, flight_pushdown_server, monkeypatch):
-    """When the static side's rows overflow the cap (two independent
-    chains make a cross product — here 2x2=4 rows > cap 3), the rows are
-    not inlined and compile_bgp probes each chain's own distinct ids
-    instead (2 ids each, which fit). Both remote queries therefore still
-    carry the id IN-list and only the two graph-known series cross the
-    wire; without the per-chain probe both fetches would be
-    unconstrained (24 rows each)."""
+    """Two independent chains make a cross product of static rows (2x2=4
+    > cap 3). The FILTER's static-only conjunct ``?id1 < ?id2`` restricts
+    that cross product to its one (ts1, ts2) row before the collect, so
+    the rows are inlined and each chain's IN-list names exactly its one
+    series; without any restriction both fetches would be unconstrained
+    (24 rows each). The unfiltered cross product's overflow is
+    test_flight_pushdown_row_overflow_probes_per_chain_ids."""
     from otit_swt_spark.sources.flight import flight_timeseries
     from otit_swt_spark.sparql.compiler import Compiler
 
@@ -2412,8 +2450,44 @@ def test_flight_pushdown_tuple_overflow_keeps_per_chain_probe(
         FILTER(?t1 = ?t2 && ?id1 < ?id2)
     }""")
     assert df.count() == 8  # ts1-ts2 pairs at the 8 shared timestamps
-    # EVERY remote fetch carries the per-chain IN-list — before the fix
-    # the two chain queries were the bare base query (no restriction)
+    # EVERY remote fetch carries its chain's IN-list
+    assert len(srv.queries) == 2, srv.queries
+    assert sorted(q[q.index("IN ("):] for q in srv.queries) == [
+        "IN ('ts1')", "IN ('ts2')"], srv.queries
+
+
+def test_flight_pushdown_row_overflow_probes_per_chain_ids(
+        spark, flight_pushdown_server, monkeypatch):
+    """When the static side's rows overflow the cap (two independent
+    chains make a cross product — here 2x2=4 rows > cap 3), the rows are
+    not inlined; they hold only 2 distinct ids per chain, so compile_bgp
+    probes each chain's own distinct ids (2 each, which fit). Both remote
+    queries therefore still carry the id IN-list and only the two
+    graph-known series cross the wire; without the per-chain probe both
+    fetches would be unconstrained (24 rows each)."""
+    from otit_swt_spark.sources.flight import flight_timeseries
+    from otit_swt_spark.sparql.compiler import Compiler
+
+    monkeypatch.setattr(Compiler, "TS_ID_PUSHDOWN_MAX", 3)
+    srv = flight_pushdown_server
+    ts = flight_timeseries(spark, f"grpc://127.0.0.1:{srv.port}",
+                           "SELECT id, timestamp, value FROM ts")
+    graph = GraphStore.from_sparql_insert(spark, TESTDATA_SPARQL)
+    eng = Engine(spark, graph).add_timeseries_table(ts)
+    df = eng.query("""
+    PREFIX otit_swt: <https://github.com/magbak/otit_swt#>
+    SELECT ?id1 ?id2 ?t1 ?v1 ?v2 WHERE {
+        ?a otit_swt:hasExternalId ?id1 .
+        ?a otit_swt:hasDataPoint ?dp1 .
+        ?dp1 otit_swt:hasValue ?v1 .
+        ?dp1 otit_swt:hasTimestamp ?t1 .
+        ?b otit_swt:hasExternalId ?id2 .
+        ?b otit_swt:hasDataPoint ?dp2 .
+        ?dp2 otit_swt:hasValue ?v2 .
+        ?dp2 otit_swt:hasTimestamp ?t2 .
+        FILTER(?t1 = ?t2)
+    }""")
+    assert df.count() == 32  # 4 id pairs at the 8 shared timestamps
     assert len(srv.queries) == 2, srv.queries
     for q in srv.queries:
         assert "\"id\" IN ('ts1', 'ts2')" in q, q

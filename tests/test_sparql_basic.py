@@ -221,6 +221,35 @@ def test_catalog_types_output_without_probe(engine):
     assert df.count() == 2
 
 
+def test_id_overflow_reads_ids_from_the_overflowed_rows(engine, monkeypatch):
+    """When the static side overflows the id cap with one distinct id per
+    row, those rows already prove the id set overflows too: plan build
+    runs the static-side collect only, and no second bounded distinct
+    probe (``otit:chain-ids``) that could only overflow again."""
+    from otit_swt_spark.sparql.compiler import Compiler
+
+    monkeypatch.setattr(Compiler, "TS_ID_PUSHDOWN_MAX", 1)
+    q = PFX + """
+    SELECT ?ts_id ?v WHERE { ?ts otit_swt:hasExternalId ?ts_id .
+                             ?ts otit_swt:hasDataPoint ?dp .
+                             ?dp otit_swt:hasValue ?v }"""
+    sc = engine.spark.sparkContext
+    engine.graph.predicate_datatypes()
+    engine._plan_cache.pop(q, None)
+    group = "test-id-overflow-plan-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = engine.query(q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    store = sc._jsc.sc().statusStore()
+    names = {store.job(int(j)).description().get()
+             for j in sc.statusTracker().getJobIdsForGroup(group)}
+    assert names == {"otit:static-side"}
+    engine._plan_cache.pop(q, None)
+    assert df.count() == 16
+
+
 def test_plan_cache_cleared_on_every_mutation(spark):
     """Prepared plans are graph- and registry-dependent: every mutation
     (graph swap, ts table, SERVICE endpoint, named graph, SPARQL Update)

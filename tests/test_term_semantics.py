@@ -99,3 +99,98 @@ def test_construct_drops_native_literal_subject(spark):
     out = e.query(
         "CONSTRUCT { ?v <urn:tag> <urn:o> } WHERE { ?s <urn:val> ?v }")
     assert out.count() == 0                    # 3.14-style subjects dropped
+
+
+# -- object variables of IRI-only predicates ---------------------------------
+
+IRI_ONLY_GRAPH = """
+    INSERT DATA {
+        <urn:a> <urn:link> <urn:x> .
+        <urn:a> <urn:link> _:n1 .
+        <urn:c> <urn:ref> <urn:x> .
+        <urn:b> <urn:name> "urn:x" .
+        <urn:x> <urn:lbl> "ex"@en .
+    }"""
+
+
+@pytest.fixture(scope="module")
+def iri_eng(spark):
+    return Engine(spark, GraphStore.from_sparql_insert(spark, IRI_ONLY_GRAPH))
+
+
+def test_iri_only_object_binds_one_plain_column(iri_eng):
+    """The catalog proves <urn:link> has IRI/blank-node objects only, so
+    ?x binds like a subject variable: one value column, no companions."""
+    from otit_swt_spark.sparql.compiler import Compiler
+    from otit_swt_spark.sparql.parser import parse_query
+
+    comp = Compiler(iri_eng.spark, iri_eng.graph.df,
+                    pred_datatypes=iri_eng.graph.predicate_datatypes)
+    sm = comp.compile_query(parse_query(
+        "SELECT * WHERE { ?a <urn:link> ?x . ?b <urn:name> ?n }"))
+    assert not {"x__dt", "x__lang"} & set(sm.df.columns)
+    assert "x" not in sm.dt_vars | sm.lang_vars and sm.vars["x"].xsd is None
+    # a literal-valued predicate keeps its companions
+    assert {"n__dt", "n__lang"} <= set(sm.df.columns)
+
+
+def test_catalogless_compiler_keeps_object_companions(iri_eng):
+    """Without a catalog nothing proves an object IRI-only: companions
+    stay."""
+    from otit_swt_spark.sparql.compiler import Compiler
+    from otit_swt_spark.sparql.parser import parse_query
+
+    comp = Compiler(iri_eng.spark, iri_eng.graph.df, pred_datatypes=None)
+    sm = comp.compile_query(parse_query(
+        "SELECT * WHERE { ?a <urn:link> ?x }"))
+    assert {"x__dt", "x__lang"} <= set(sm.df.columns)
+    assert "x" in sm.dt_vars and "x" in sm.lang_vars
+
+
+def test_iri_only_object_join_keeps_term_identity(iri_eng):
+    """An IRI-only object joins an IRI (object or subject) on the plain
+    value, and never a literal of the same lexical form."""
+    def q(body):
+        return sorted(tuple(r) for r in iri_eng.query(
+            f"SELECT ?a ?x WHERE {{ {body} }}").collect())
+
+    assert q("?a <urn:link> ?x . ?b <urn:name> ?x") == []
+    assert q("?b <urn:name> ?x . ?a <urn:link> ?x") == []
+    assert q("?a <urn:link> ?x . VALUES ?x { <urn:x> }") == [("urn:a", "urn:x")]
+    assert q("?a <urn:link> ?x . ?c <urn:ref> ?x") == [("urn:a", "urn:x")]
+    assert q("?a <urn:link> ?x . ?x <urn:lbl> ?l") == [("urn:a", "urn:x")]
+    assert q("?a <urn:link> ?x . OPTIONAL { ?b <urn:name> ?x }") == [
+        ("urn:a", "_:n1"), ("urn:a", "urn:x")]
+
+
+@pytest.mark.parametrize("text", [
+    """SELECT ?x (isIRI(?x) AS ?i) (isLiteral(?x) AS ?l) (isBlank(?x) AS ?b)
+              (DATATYPE(?x) AS ?d) (LANG(?x) AS ?g) (STR(?x) AS ?s)
+       WHERE { ?a <urn:link> ?x }""",
+    "SELECT ?x WHERE { ?a <urn:link> ?x . ?c <urn:ref> ?x }",
+    "SELECT DISTINCT ?x WHERE { { ?a <urn:link> ?x } UNION { ?b <urn:name> ?x } }",
+    "SELECT (MIN(?x) AS ?m) (SAMPLE(?x) AS ?s) WHERE { ?a <urn:link> ?x }",
+    "CONSTRUCT { ?x <urn:from> ?a . ?a <urn:to> ?x } WHERE { ?a <urn:link> ?x }",
+])
+def test_iri_only_object_answers_match_companion_binding(iri_eng, text):
+    """Term tests, accessors, joins, UNION, aggregates, CONSTRUCT and the
+    output schema over an IRI-only object give exactly what the
+    companion-carrying binding (no catalog) gives."""
+    from otit_swt_spark.sparql import algebra as A
+    from otit_swt_spark.sparql.compiler import Compiler
+    from otit_swt_spark.sparql.parser import parse_query
+
+    def run(pred_datatypes):
+        comp = Compiler(iri_eng.spark, iri_eng.graph.df,
+                        pred_datatypes=pred_datatypes)
+        q = parse_query(text)
+        sm = comp.compile_pattern(q.pattern, None)
+        if isinstance(q, A.ConstructQuery):
+            return iri_eng._construct(sm, q.template)
+        return iri_eng._finalize(sm, q.variables)
+
+    plain, companion = run(iri_eng.graph.predicate_datatypes), run(None)
+    assert plain.schema == companion.schema
+    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
+    assert sorted(plain.collect(), key=key) == sorted(companion.collect(),
+                                                      key=key)
