@@ -5,23 +5,41 @@ Reference parity: hybrid/src/timeseries_database/arrow_flight_sql_database.rs
 FlightDescriptor, calls get_flight_info, then do_get(ticket) per endpoint and
 stacks the record batches into one DataFrame on a single node.
 
-Spark-first restructuring: only ``get_flight_info`` runs on the driver. The
-returned endpoints (ticket + locations) are parallelized into a DataFrame and
-each EXECUTOR opens its own FlightClient and streams its ticket's batches via
-``mapInPandas`` — a Flight server that shards a big result across N endpoints
-scales the fetch across the cluster instead of bottlenecking the driver.
-A driver-side fallback (``distributed=False``) collects batches in-process
-for small results / servers that hand out a single endpoint.
+Here ``get_flight_info`` runs on the driver, and the row count it returns
+(``FlightInfo.total_records``) picks one of two read paths:
+
+- a known count of at most ``INLINE_MAX_ROWS``: the driver calls do_get on
+  every endpoint (one thread per endpoint), concatenates the Arrow tables
+  and inlines them as a ``LocalRelation`` — the reference's client-side
+  stacking, with no Spark job, shuffle or Python worker;
+- an unknown count (-1) or a larger one: the endpoints (ticket +
+  locations) are parallelized into a DataFrame and each EXECUTOR opens its
+  own FlightClient and streams its ticket's batches via ``mapInPandas``, so
+  a store that shards a big result across N endpoints scales the fetch
+  across the cluster and the driver holds none of it.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from otit_swt_spark.terms import XSD_STRING
 from otit_swt_spark.timeseries import TimeSeriesTable
+
+#: Largest result (by ``FlightInfo.total_records``) fetched on the driver
+#: and inlined as a LocalRelation; it bounds the driver memory one read
+#: takes. Larger or unknown counts stream through the executors. Near the
+#: measured crossover: a read plus a full-scan aggregate of a 3-column
+#: result on Spark local[2] (4-core x86) was faster inline up to 125k
+#: rows, tied at 150k, and slower from 200k rows.
+INLINE_MAX_ROWS = 125_000
+
+#: Most endpoints the driver fetches at once: the store picks the
+#: endpoint count, so it must not pick the driver's thread count.
+_FETCH_THREADS_MAX = 16
 
 
 def _require_flight():
@@ -44,6 +62,53 @@ def _call_options(flight, username: str | None, password: str | None,
     return flight.FlightCallOptions(headers=[pair])
 
 
+def _flight_info(location: str, sql: str, username: str | None,
+                 password: str | None):
+    """The ``FlightInfo`` for ``sql``: one authenticated driver-side
+    get_flight_info round trip; no record batches move."""
+    flight = _require_flight()
+    with flight.FlightClient(location) as client:
+        opts = _call_options(flight, username, password, client)
+        descriptor = flight.FlightDescriptor.for_command(sql.encode("utf-8"))
+        return client.get_flight_info(descriptor, opts)
+
+
+def _endpoints(info, location: str) -> list[tuple[bytes, list[str]]]:
+    """``(ticket, location URIs)`` per endpoint; an endpoint that names no
+    location is served where the FlightInfo came from."""
+    return [
+        (ep.ticket.ticket,
+         [loc.uri.decode() if isinstance(loc.uri, bytes) else str(loc.uri)
+          for loc in ep.locations] or [location])
+        for ep in info.endpoints
+    ]
+
+
+def _fetch_on_driver(info, location: str, username: str | None,
+                     password: str | None):
+    """Every endpoint's record batches as one Arrow table, fetched on the
+    driver by one authenticated client per endpoint, the endpoints in
+    parallel threads (``info.schema``'s empty table when there are none)."""
+    import pyarrow as pa
+
+    flight = _require_flight()
+
+    def get(endpoint):
+        ticket, locations = endpoint
+        with flight.FlightClient(locations[0]) as client:
+            opts = _call_options(flight, username, password, client)
+            return client.do_get(flight.Ticket(ticket), opts).read_all()
+
+    endpoints = _endpoints(info, location)
+    if len(endpoints) <= 1:
+        tables = [get(ep) for ep in endpoints]
+    else:
+        with ThreadPoolExecutor(
+                min(len(endpoints), _FETCH_THREADS_MAX)) as pool:
+            tables = list(pool.map(get, endpoints))
+    return pa.concat_tables(tables) if tables else info.schema.empty_table()
+
+
 def flight_sql_read(
     spark: SparkSession,
     location: str,
@@ -51,7 +116,6 @@ def flight_sql_read(
     *,
     username: str | None = None,
     password: str | None = None,
-    distributed: bool = True,
 ) -> DataFrame:
     """Execute ``query`` against an Arrow Flight SQL endpoint and return the
     result as a Spark DataFrame.
@@ -59,39 +123,23 @@ def flight_sql_read(
     ``location`` is a Flight URI (``grpc://host:port``). The SQL text is
     sent as a CMD FlightDescriptor exactly like the reference (it notes the
     same workaround: Dremio-style servers accept the raw query bytes where
-    the spec says CommandStatementQuery). Endpoint fan-out is executed on
-    the cluster when ``distributed`` (default)."""
-    flight = _require_flight()
+    the spec says CommandStatementQuery). A result the store counts at no
+    more than ``INLINE_MAX_ROWS`` rows is fetched on the driver and
+    inlined; any other is fetched by the executors, one task per
+    endpoint."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    client = flight.FlightClient(location)
-    opts = _call_options(flight, username, password, client)
-    descriptor = flight.FlightDescriptor.for_command(query.encode("utf-8"))
-    info = client.get_flight_info(descriptor, opts)
+    info = _flight_info(location, query, username, password)
     spark_schema = from_arrow_schema(info.schema)
-
-    endpoints = [
-        (ep.ticket.ticket,
-         [loc.uri.decode() if isinstance(loc.uri, bytes) else str(loc.uri)
-          for loc in ep.locations] or [location])
-        for ep in info.endpoints
-    ]
-
-    if not distributed:
-        import pyarrow as pa
-
-        tables = []
-        for ticket_bytes, locs in endpoints:
-            c = flight.FlightClient(locs[0])
-            o = _call_options(flight, username, password, c)
-            tables.append(c.do_get(flight.Ticket(ticket_bytes), o).read_all())
-        merged = pa.concat_tables(tables) if tables else info.schema.empty_table()
-        return spark.createDataFrame(merged.to_pandas(), schema=spark_schema)
+    if 0 <= info.total_records <= INLINE_MAX_ROWS:
+        return spark.createDataFrame(
+            _fetch_on_driver(info, location, username, password),
+            schema=spark_schema)
 
     # distributed fetch: one row per endpoint, executors stream their ticket
+    endpoints = _endpoints(info, location)
     ep_df = spark.createDataFrame(
-        [(t, locs) for t, locs in endpoints],
-        "ticket binary, locations array<string>",
+        endpoints, "ticket binary, locations array<string>",
     ).repartition(max(len(endpoints), 1))
     creds = (username, password)
 
@@ -362,14 +410,16 @@ class FlightTimeSeriesTable(TimeSeriesTable):
     IN-list, timestamp bounds, value equality) into the remote query
     BEFORE anything is pulled — the reference's ArrowFlightSQLDatabase
     (arrow_flight_sql_database.rs:121-230) + timeseries_sql_rewrite.rs
-    pushdown, restructured so the restricted result still streams to
-    EXECUTORS per endpoint rather than through the driver."""
+    pushdown. Every read goes through :func:`flight_sql_read`, so a
+    restricted answer the store counts within ``INLINE_MAX_ROWS`` is
+    inlined from the driver, and a larger or uncounted one streams to the
+    executors per endpoint."""
 
     supports_pushdown = True
 
     def __init__(self, location: str, query: str, *,
                  username: str | None = None, password: str | None = None,
-                 distributed: bool = True, **ts_kwargs):
+                 **ts_kwargs):
         super().__init__(path=f"flight://{location}", **ts_kwargs)
         # NOTE: deliberately no SparkSession anywhere on this object —
         # it is driver-side state, every method takes the session
@@ -379,7 +429,6 @@ class FlightTimeSeriesTable(TimeSeriesTable):
         self.base_query = query
         self._username = username
         self._password = password
-        self._distributed = distributed
         self._value_xsd_cache: str | None = None
 
     # Grouped pushdown fires only when it actually shrinks the fetch:
@@ -392,31 +441,16 @@ class FlightTimeSeriesTable(TimeSeriesTable):
     def _read(self, spark: SparkSession, sql: str) -> DataFrame:
         return flight_sql_read(spark, self.location, sql,
                                username=self._username,
-                               password=self._password,
-                               distributed=self._distributed)
-
-    def _flight_info(self, sql: str):
-        """``(client, call options, FlightInfo)`` for ``sql`` — one
-        driver-side get_flight_info round-trip; no record batches move."""
-        flight = _require_flight()
-        client = flight.FlightClient(self.location)
-        opts = _call_options(flight, self._username, self._password, client)
-        descriptor = flight.FlightDescriptor.for_command(sql.encode("utf-8"))
-        return client, opts, client.get_flight_info(descriptor, opts)
+                               password=self._password)
 
     def _probe_one_row(self, sql: str):
-        """Driver-side one-row fetch (no Spark job): get_flight_info +
-        do_get on the first endpoint — the probe result is a single row
-        of two BIGINTs, never worth a distributed read."""
-        client, opts, info = self._flight_info(sql)
-        rows = []
-        for ep in info.endpoints:
-            t = client.do_get(ep.ticket, opts).read_all()
-            if t.num_rows:
-                rows.append(t)
-        if not rows:
-            return None
-        return rows[0].to_pylist()[0]
+        """Driver-side one-row fetch (no Spark job) through the driver
+        fetch of :func:`flight_sql_read`'s inline path — the probe result
+        is a single row of two BIGINTs, never worth a distributed read."""
+        creds = (self._username, self._password)
+        table = _fetch_on_driver(_flight_info(self.location, sql, *creds),
+                                 self.location, *creds)
+        return table.to_pylist()[0] if table.num_rows else None
 
     def load(self, spark: SparkSession) -> DataFrame:
         if self._df is None:
@@ -437,7 +471,8 @@ class FlightTimeSeriesTable(TimeSeriesTable):
 
             from otit_swt_spark.terms import xsd_for_spark_type
 
-            _, _, info = self._flight_info(self.base_query)
+            info = _flight_info(self.location, self.base_query,
+                                self._username, self._password)
             self._value_xsd_cache = xsd_for_spark_type(
                 from_arrow_schema(info.schema)[self.value_column].dataType)
         return self._value_xsd_cache
@@ -576,7 +611,6 @@ def flight_timeseries(
     value_datatype: str | None = None,
     username: str | None = None,
     password: str | None = None,
-    distributed: bool = True,
 ) -> TimeSeriesTable:
     """Register a Flight SQL result set as a TimeSeriesTable (the
     reference's ArrowFlightSQLDatabase role in its TimeSeriesQueryable
@@ -586,7 +620,7 @@ def flight_timeseries(
     only the touched slice."""
     return FlightTimeSeriesTable(
         location, query,
-        username=username, password=password, distributed=distributed,
+        username=username, password=password,
         identifier_column=identifier_column,
         timestamp_column=timestamp_column,
         value_column=value_column,

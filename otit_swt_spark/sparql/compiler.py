@@ -448,6 +448,40 @@ def _cast_var_to_native(sm: SolutionMapping, name: str, hint: str) -> SolutionMa
                    dt_vars=sm.dt_vars - {name}, lang_vars=sm.lang_vars - {name})
 
 
+def _identity_vars(left: SolutionMapping, right: SolutionMapping,
+                   shared: list[str]) -> list[str]:
+    """Shared term variables that must join on term identity (value +
+    effective datatype + effective language), not the plain value: a
+    __dt/__lang companion on either side, or sides that disagree on a
+    statically-known datatype. Two sides without companions and with one
+    static datatype join on the plain value."""
+    return [v for v in shared
+            if left.vars[v].kind == "term" and right.vars[v].kind == "term"
+            and (v in left.dt_vars or v in right.dt_vars
+                 or v in left.lang_vars or v in right.lang_vars
+                 or left.vars[v].xsd != right.vars[v].xsd)]
+
+
+def _effective_dt(sm: SolutionMapping, v: str) -> Column:
+    """A term variable's datatype: its companion, else its static one
+    (none for subjects and IRI-only objects)."""
+    return (F.col(f"{v}__dt") if v in sm.dt_vars
+            else F.lit(sm.vars[v].xsd).cast("string"))
+
+
+def _effective_lang(sm: SolutionMapping, v: str) -> Column:
+    return (F.col(f"{v}__lang") if v in sm.lang_vars
+            else F.lit(None).cast("string"))
+
+
+def _term_key(sm: SolutionMapping, v: str) -> Column:
+    """The term-identity key of ``v``: value, datatype and language."""
+    sep = F.lit("\x01")
+    return F.concat(F.col(v).cast("string"), sep,
+                    F.coalesce(_effective_dt(sm, v), F.lit("")), sep,
+                    F.coalesce(_effective_lang(sm, v), F.lit("")))
+
+
 def _spark_type(hint: str) -> str:
     return {
         "long": "long", "int": "int", "double": "double", "float": "float",
@@ -868,9 +902,21 @@ class Compiler:
 
     def _coerce_join_keys(self, left: SolutionMapping, right: SolutionMapping,
                           shared: list[str]) -> tuple[SolutionMapping, SolutionMapping]:
+        """Give each shared variable one representation on both sides. A
+        native string meeting a term is an xsd:string literal: it becomes
+        a term of that static datatype, so the term side keeps its
+        companions and joins on term identity (never an IRI or a tagged
+        literal of the same lexical form). Other native values meeting a
+        term cast the term side to the native type."""
         for v in shared:
             lm, rm = left.vars[v], right.vars[v]
-            if lm.kind == "native" and rm.kind == "term":
+            if lm.kind != rm.kind and "string" in (lm.hint, rm.hint):
+                string_term = VarMeta("term", xsd=XSD_STRING)
+                if lm.kind == "native":
+                    left = replace(left, vars={**left.vars, v: string_term})
+                else:
+                    right = replace(right, vars={**right.vars, v: string_term})
+            elif lm.kind == "native" and rm.kind == "term":
                 right = _cast_var_to_native(right, v, lm.hint or "string")
             elif lm.kind == "term" and rm.kind == "native":
                 left = _cast_var_to_native(left, v, rm.hint or "string")
@@ -884,41 +930,21 @@ class Compiler:
                        how: str = "inner") -> SolutionMapping:
         shared = [v for v in left.vars if v in right.vars]
         left, right = self._coerce_join_keys(left, right, shared)
-        # TERM-identity join keys: where a shared term var carries a
-        # __dt/__lang companion on either side (or the sides disagree on
-        # a statically-known datatype), joining on the canonical string
-        # alone would conflate distinct RDF terms with one lexical form
-        # ("1"^^xsd:integer vs "1"^^xsd:string, "x"@en vs "x"@fr, <x> vs
-        # "x"). Those vars join on value + effective datatype + effective
-        # language instead; a side without companions contributes its
-        # static datatype (none for subjects and IRI-only objects). Two
-        # sides without companions join on the plain value. Residual
-        # (documented) canonicalization trade: a property-path object
-        # carries no companions, so a literal it binds still conflates
-        # with an IRI of the same lexical form.
-        ident = [v for v in shared
-                 if left.vars[v].kind == "term"
-                 and right.vars[v].kind == "term"
-                 and (v in left.dt_vars or v in right.dt_vars
-                      or v in left.lang_vars or v in right.lang_vars
-                      or left.vars[v].xsd != right.vars[v].xsd)]
-        sep = "\x01"
-
-        def _tkey(sm_, v):
-            dt = (F.col(f"{v}__dt") if v in sm_.dt_vars
-                  else F.lit(sm_.vars[v].xsd))
-            lg = (F.col(f"{v}__lang") if v in sm_.lang_vars
-                  else F.lit(None).cast("string"))
-            return F.concat(F.col(v).cast("string"), F.lit(sep),
-                            F.coalesce(dt, F.lit("")), F.lit(sep),
-                            F.coalesce(lg, F.lit("")))
+        # TERM-identity join keys (_identity_vars): joining on the
+        # canonical string alone would conflate distinct RDF terms with
+        # one lexical form ("1"^^xsd:integer vs "1"^^xsd:string, "x"@en vs
+        # "x"@fr, <x> vs "x"). Residual (documented) canonicalization
+        # trade: a property-path object carries no companions, so a
+        # literal it binds still conflates with an IRI of the same
+        # lexical form.
+        ident = _identity_vars(left, right, shared)
 
         ldf = left.df
         rdf = right.df
         keys = list(shared)
         for v in ident:
-            ldf = ldf.withColumn(f"__tk_{v}", _tkey(left, v))
-            rdf = rdf.withColumn(f"__tk_{v}", _tkey(right, v))
+            ldf = ldf.withColumn(f"__tk_{v}", _term_key(left, v))
+            rdf = rdf.withColumn(f"__tk_{v}", _term_key(right, v))
             # right's value column is a function of the key — drop it so
             # the named join doesn't duplicate it (left's copy survives)
             rdf = rdf.drop(v)
@@ -986,23 +1012,41 @@ class Compiler:
         vsm = replace(vsm, df=vsm.df.select(
             "*", *[F.col(v).isNull().alias(f"__u_{v}") for v in shared]))
         left, vsm = self._coerce_join_keys(left, vsm, shared)
-        rdf = vsm.df
+        ident = _identity_vars(left, vsm, shared)
+        ldf = left.df.select("*", *[_term_key(left, v).alias(f"__lk_{v}")
+                                    for v in ident])
+        rdf = vsm.df.select("*", *[_term_key(vsm, v).alias(f"__vk_{v}")
+                                   for v in ident])
         for v in shared:
             rdf = rdf.withColumnRenamed(v, f"__v_{v}")
         cond = F.lit(True)
         for v in shared:
-            cond = cond & (F.col(f"__u_{v}") | F.col(v).isNull()
-                           | (F.col(f"__v_{v}") == F.col(v)))
-        df = left.df.join(F.broadcast(rdf), cond, "inner")
+            eq = (F.col(f"__vk_{v}") == F.col(f"__lk_{v}") if v in ident
+                  else F.col(f"__v_{v}") == F.col(v))
+            cond = cond & (F.col(f"__u_{v}") | F.col(v).isNull() | eq)
+        df = ldf.join(F.broadcast(rdf), cond, "inner")
+        vars2 = dict(left.vars)
+        dt_vars, lang_vars = set(left.dt_vars), set(left.lang_vars)
+        for v in ident:
+            # a left-unbound row takes the VALUES term, datatype included
+            unbound = F.col(v).isNull()
+            df = df.withColumns({
+                f"{v}__dt": F.when(unbound, _effective_dt(vsm, v))
+                             .otherwise(_effective_dt(left, v)),
+                f"{v}__lang": F.when(unbound, _effective_lang(vsm, v))
+                               .otherwise(_effective_lang(left, v))})
+            dt_vars.add(v)
+            lang_vars.add(v)
+            if left.vars[v].xsd != vsm.vars[v].xsd:
+                vars2[v] = replace(left.vars[v], xsd=None)
         for v in shared:
             df = df.withColumn(v, F.coalesce(F.col(v), F.col(f"__v_{v}"))) \
-                   .drop(f"__v_{v}", f"__u_{v}")
-        vars2 = dict(left.vars)
+                   .drop(f"__v_{v}", f"__u_{v}", f"__vk_{v}", f"__lk_{v}")
         for v, m in vsm.vars.items():
             if v not in vars2:
                 vars2[v] = m
-        return SolutionMapping(df, vars2, set(left.dt_vars),
-                               set(left.lang_vars), dict(left.ts_chains))
+        return SolutionMapping(df, vars2, dt_vars, lang_vars,
+                               dict(left.ts_chains))
 
     def harmonize_for_union(self, l: SolutionMapping, r: SolutionMapping
                             ) -> tuple[SolutionMapping, SolutionMapping]:
@@ -1734,6 +1778,11 @@ class Compiler:
         synthetic external-id vars, project those away, and record each
         chain's columns in ts_chains (read by later rebinds, OPTIONAL fast
         paths and partition pruning)."""
+        # an external id matches by its lexical form, whatever term the
+        # graph stores it as
+        for eid in eids:
+            if sm.vars[eid].kind == "term":
+                sm = _cast_var_to_native(sm, eid, "string")
         out = self.join_solutions(sm, tsm)
         out = replace(out, df=out.df.drop(*eids),
                       vars={k: m for k, m in out.vars.items() if k not in eids})

@@ -87,8 +87,10 @@ def test_multiple_timeseries_tables_union(spark, tmp_path):
 @pytest.fixture(scope="module")
 def flight_server():
     """In-process Arrow Flight SQL-style server: answers any CMD descriptor
-    with a fixed time-series table SHARDED ACROSS TWO ENDPOINTS, so the
-    distributed ticket fan-out is exercised, plus do_get per ticket."""
+    with a fixed time-series table SHARDED ACROSS TWO ENDPOINTS, plus
+    do_get per ticket. A command named in ``tables`` is answered with that
+    table instead. ``total_records`` overrides the row count the
+    FlightInfo reports (None: the true count; -1: unknown)."""
     flight = pytest.importorskip("pyarrow.flight")
     import pyarrow as pa
     import threading
@@ -104,19 +106,184 @@ def flight_server():
         def __init__(self):
             super().__init__("grpc://127.0.0.1:0")
             self.queries = []
+            self.tables = {}
+            self.total_records = None
+
+        def _table(self, command):
+            return self.tables.get(command, table)
 
         def get_flight_info(self, context, descriptor):
-            self.queries.append(descriptor.command.decode())
+            command = descriptor.command.decode()
+            self.queries.append(command)
+            t = self._table(command)
             loc = flight.Location.for_grpc_tcp("127.0.0.1", self.port)
             endpoints = [
-                flight.FlightEndpoint(b"shard-0", [loc]),
-                flight.FlightEndpoint(b"shard-1", [loc]),
+                flight.FlightEndpoint(f"{k}:{command}".encode(), [loc])
+                for k in (0, 1)
             ]
-            return flight.FlightInfo(table.schema, descriptor, endpoints,
-                                     table.num_rows, -1)
+            count = (t.num_rows if self.total_records is None
+                     else self.total_records)
+            return flight.FlightInfo(t.schema, descriptor, endpoints,
+                                     count, -1)
 
         def do_get(self, context, ticket):
-            shard = int(ticket.ticket.decode().split("-")[1])
+            shard, command = ticket.ticket.decode().split(":", 1)
+            t = self._table(command)
+            half = t.num_rows // 2
+            return flight.RecordBatchStream(
+                t.slice(0, half) if shard == "0" else t.slice(half))
+
+    server = Server()
+    t = threading.Thread(target=server.serve, daemon=True)
+    t.start()
+    yield server
+    server.shutdown()
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_flight_sql_distributed_read(spark, flight_server, monkeypatch):
+    """A store that does not count its result (total_records -1) is read
+    by the executors: one mapInPandas task per endpoint ticket."""
+    from otit_swt_spark.sources.flight import flight_sql_read
+
+    monkeypatch.setattr(flight_server, "total_records", -1)
+    df = flight_sql_read(spark, f"grpc://127.0.0.1:{flight_server.port}",
+                         "SELECT id, timestamp, value FROM ts")
+    assert "MapInPandas" in _executed_plan(df)
+    got = sorted((r["id"], r["value"]) for r in df.collect())
+    assert got == [("ts1", 1.0), ("ts1", 2.0), ("ts2", 10.0), ("ts2", 20.0)]
+    assert flight_server.queries[-1] == "SELECT id, timestamp, value FROM ts"
+    assert dict(df.dtypes)["timestamp"].startswith("timestamp")
+
+
+def test_flight_sql_driver_side_read(spark, flight_server):
+    """A counted result within INLINE_MAX_ROWS is fetched on the driver
+    and inlined: the plan is a LocalTableScan, no mapInPandas."""
+    from otit_swt_spark.sources.flight import flight_sql_read
+
+    df = flight_sql_read(spark, f"grpc://127.0.0.1:{flight_server.port}",
+                         "SELECT 1")
+    plan = _executed_plan(df)
+    assert "LocalTableScan" in plan and "MapInPandas" not in plan
+    assert df.count() == 4
+
+
+def test_flight_sql_read_above_cap_is_distributed(spark, flight_server,
+                                                  monkeypatch):
+    """A counted result above INLINE_MAX_ROWS keeps the executor read."""
+    from otit_swt_spark.sources import flight as flight_src
+
+    monkeypatch.setattr(flight_src, "INLINE_MAX_ROWS", 3)
+    df = flight_src.flight_sql_read(
+        spark, f"grpc://127.0.0.1:{flight_server.port}", "SELECT 1")
+    assert "MapInPandas" in _executed_plan(df)
+    assert df.count() == 4
+
+
+@pytest.mark.parametrize("command", ["EMPTY", "SHARDED", "TIMES"])
+def test_flight_sql_inline_and_distributed_reads_agree(
+        spark, flight_server, monkeypatch, command):
+    """Both read paths give the same schema and rows: for a 0-row result,
+    a result sharded over two endpoints, and naive plus UTC timestamp[us]
+    columns read while the driver process runs under TZ=Asia/Tokyo. The
+    timestamps are the store's instants on both paths."""
+    import time
+
+    import pyarrow as pa
+
+    from otit_swt_spark.sources.flight import flight_sql_read
+
+    micros = [0, 1_000_000, 1_654_073_212_000_000, -86_400_000_000]
+    times = pa.table({
+        "naive": pa.array(micros, type=pa.timestamp("us")),
+        "utc": pa.array(micros, type=pa.timestamp("us", tz="UTC")),
+    })
+    sharded = pa.table({"id": ["a", "b", "c"], "n": [1, 2, 3]})
+    monkeypatch.setitem(flight_server.tables, "EMPTY", sharded.slice(0, 0))
+    monkeypatch.setitem(flight_server.tables, "SHARDED", sharded)
+    monkeypatch.setitem(flight_server.tables, "TIMES", times)
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        location = f"grpc://127.0.0.1:{flight_server.port}"
+        inline = flight_sql_read(spark, location, command)
+        monkeypatch.setattr(flight_server, "total_records", -1)
+        distributed = flight_sql_read(spark, location, command)
+        assert "LocalTableScan" in _executed_plan(inline)
+        assert "MapInPandas" in _executed_plan(distributed)
+        assert inline.schema == distributed.schema
+        if command == "TIMES":
+            inline, distributed = (
+                df.select(*(F.unix_micros(c).alias(c) for c in df.columns))
+                for df in (inline, distributed))
+        got = sorted(tuple(r) for r in inline.collect())
+        assert got == sorted(tuple(r) for r in distributed.collect())
+        want = {"EMPTY": [], "SHARDED": [("a", 1), ("b", 2), ("c", 3)],
+                "TIMES": sorted((m, m) for m in micros)}[command]
+        assert got == want
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+@pytest.fixture(scope="module")
+def flight_auth_server():
+    """A Flight server that requires the basic-token handshake: the
+    Handshake must carry ``Basic alice:s3cret`` and is answered with a
+    bearer token, and every other call must carry that token. Answers any
+    command with one 4-row table over two endpoints; ``total_records``
+    overrides the reported count as in ``flight_server``."""
+    flight = pytest.importorskip("pyarrow.flight")
+    import base64
+    import threading
+
+    import pyarrow as pa
+
+    table = pa.table({"id": ["a", "b", "c", "d"], "n": [1, 2, 3, 4]})
+    token = "token-1"
+
+    class Bearer(flight.ServerMiddleware):
+        def sending_headers(self):
+            return {"authorization": f"Bearer {token}"}
+
+    class HeaderAuth(flight.ServerMiddlewareFactory):
+        def start_call(self, info, headers):
+            kind, _, cred = next(
+                iter(headers.get("authorization", [])), "").partition(" ")
+            if kind == "Basic" and base64.b64decode(cred) == b"alice:s3cret":
+                return Bearer()
+            if kind == "Bearer" and cred == token:
+                return None
+            raise flight.FlightUnauthenticatedError("bad credentials")
+
+    class NoOpHandshake(flight.ServerAuthHandler):
+        def authenticate(self, outgoing, incoming):
+            pass
+
+        def is_valid(self, token):
+            return ""
+
+    class Server(flight.FlightServerBase):
+        def __init__(self):
+            super().__init__("grpc://127.0.0.1:0",
+                             auth_handler=NoOpHandshake(),
+                             middleware={"auth": HeaderAuth()})
+            self.total_records = None
+
+        def get_flight_info(self, context, descriptor):
+            loc = flight.Location.for_grpc_tcp("127.0.0.1", self.port)
+            endpoints = [flight.FlightEndpoint(str(k).encode(), [loc])
+                         for k in (0, 1)]
+            count = (table.num_rows if self.total_records is None
+                     else self.total_records)
+            return flight.FlightInfo(table.schema, descriptor, endpoints,
+                                     count, -1)
+
+        def do_get(self, context, ticket):
+            shard = int(ticket.ticket.decode())
             return flight.RecordBatchStream(table.slice(shard * 2, 2))
 
     server = Server()
@@ -126,23 +293,34 @@ def flight_server():
     server.shutdown()
 
 
-def test_flight_sql_distributed_read(spark, flight_server):
-    from otit_swt_spark.sources.flight import flight_sql_read
+@pytest.mark.parametrize("total_records,plan", [(None, "LocalTableScan"),
+                                                (-1, "MapInPandas")])
+def test_flight_sql_read_basic_auth(spark, flight_auth_server, monkeypatch,
+                                    total_records, plan):
+    """Both read paths authenticate: the info call and every endpoint's
+    do_get (driver threads inline, executor tasks distributed) carry the
+    bearer token of a basic-token handshake; without credentials, or with
+    a wrong password, the read fails."""
+    flight = pytest.importorskip("pyarrow.flight")
 
-    df = flight_sql_read(spark, f"grpc://127.0.0.1:{flight_server.port}",
-                         "SELECT id, timestamp, value FROM ts")
-    got = sorted((r["id"], r["value"]) for r in df.collect())
-    assert got == [("ts1", 1.0), ("ts1", 2.0), ("ts2", 10.0), ("ts2", 20.0)]
-    assert flight_server.queries[-1] == "SELECT id, timestamp, value FROM ts"
-    assert dict(df.dtypes)["timestamp"].startswith("timestamp")
+    from otit_swt_spark.sources.flight import flight_sql_read, flight_timeseries
 
-
-def test_flight_sql_driver_side_read(spark, flight_server):
-    from otit_swt_spark.sources.flight import flight_sql_read
-
-    df = flight_sql_read(spark, f"grpc://127.0.0.1:{flight_server.port}",
-                         "SELECT 1", distributed=False)
-    assert df.count() == 4
+    srv = flight_auth_server
+    monkeypatch.setattr(srv, "total_records", total_records)
+    location = f"grpc://127.0.0.1:{srv.port}"
+    df = flight_sql_read(spark, location, "SELECT 1",
+                         username="alice", password="s3cret")
+    assert plan in _executed_plan(df)
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("a", 1), ("b", 2), ("c", 3), ("d", 4)]
+    for creds in ({}, {"username": "alice", "password": "wrong"}):
+        with pytest.raises(flight.FlightUnauthenticatedError):
+            flight_sql_read(spark, location, "SELECT 1", **creds)
+    # the lazy table's driver-side calls authenticate too
+    ts = flight_timeseries(spark, location, "SELECT 1", value_column="n",
+                           username="alice", password="s3cret")
+    assert ts.value_xsd(spark).endswith("#long")
+    assert ts._probe_one_row("SELECT 1") == {"id": "a", "n": 1}
 
 
 def test_flight_timeseries_feeds_engine(spark, flight_server):
@@ -497,14 +675,13 @@ def test_flight_pushdown_synchronized_join(spark, flight_pushdown_server):
     # seconds 57,58,59 on ts1+ts2; the self-sync yields v1 == v2
     got = df.collect()
     assert len(got) == 6 and all(r["v1"] == r["v2"] for r in got)
-    # EVERY remote query this plan issued carried the full restriction
-    # (the self-join may re-scan a source stage, so rows_served counts a
-    # re-fetch of the same 6-row slice — what matters is that nothing
-    # unrestricted ever crossed the wire: each fetch is 6 rows, not 24)
+    # EVERY remote query this plan issued carried the full restriction,
+    # and each bounded answer is fetched once, at plan build, and inlined:
+    # executing the self-join re-reads nothing from the store
     assert len(srv.queries) == 2 and all(
         "IN ('ts1', 'ts2')" in q and ">= TIMESTAMP" in q
         for q in srv.queries)
-    assert srv.rows_served % 6 == 0 and srv.rows_served < 24
+    assert srv.rows_served == 12
 
 
 def test_flight_pushdown_string_value_not_rendered_on_numeric_column(
@@ -1003,8 +1180,8 @@ def _flight_vs_in_memory(spark, srv, query):
         spark, location, "SELECT id, timestamp, value FROM ts"))
     got = rows(eng.query(query))
     remote = srv.queries[-1]
-    pdf = flight_sql_read(spark, location, "SELECT id, timestamp, value FROM ts",
-                          distributed=False).toPandas()
+    pdf = flight_sql_read(spark, location,
+                          "SELECT id, timestamp, value FROM ts").toPandas()
     twin = in_memory_timeseries(spark, {
         i: g[["timestamp", "value"]].reset_index(drop=True)
         for i, g in pdf.groupby("id")})
@@ -1742,8 +1919,7 @@ def test_engine_flight_registration(spark, flight_server):
     from otit_swt_spark.engine import Engine
 
     eng = Engine(spark).set_arrow_flight_sql(
-        f"grpc://127.0.0.1:{flight_server.port}", "SELECT * FROM ts",
-        distributed=False)
+        f"grpc://127.0.0.1:{flight_server.port}", "SELECT * FROM ts")
     assert len(eng.ts_tables) == 1
     tbl = eng.ts_tables[0]
     # lazy (pushdown-capable) registration: nothing fetched until load

@@ -163,6 +163,40 @@ def test_iri_only_object_join_keeps_term_identity(iri_eng):
         ("urn:a", "_:n1"), ("urn:a", "urn:x")]
 
 
+@pytest.fixture(scope="module")
+def lexical_twins_eng(spark):
+    """The IRI <urn:x> and literals of the lexical form "urn:x"."""
+    return Engine(spark, GraphStore.from_sparql_insert(spark, """
+        INSERT DATA {
+            <urn:a> <urn:link> <urn:x> .
+            <urn:b> <urn:name> "urn:x" .
+            <urn:c> <urn:name> "urn:x"@en .
+            <urn:d> <urn:mix> <urn:x> .
+            <urn:e> <urn:mix> "urn:x" .
+        }"""))
+
+
+@pytest.mark.parametrize("body,want", [
+    ('?a <urn:link> ?x . VALUES ?x { "urn:x" }', []),
+    ('VALUES ?x { "urn:x" } ?a <urn:link> ?x', []),
+    ('?a <urn:name> ?x . VALUES ?x { "urn:x" }', [("urn:b", False)]),
+    ('?a <urn:mix> ?x . VALUES ?x { "urn:x" }', [("urn:e", False)]),
+    ('VALUES ?x { "urn:x" } ?a <urn:mix> ?x', [("urn:e", False)]),
+    ('?a <urn:mix> ?x . VALUES ?x { "urn:x" UNDEF }',
+     [("urn:d", True), ("urn:e", False), ("urn:e", False)]),
+    ('?a <urn:link> ?x . VALUES (?x ?y) { ("urn:x" UNDEF) }', []),
+])
+def test_values_plain_literal_joins_only_string_literals(
+        lexical_twins_eng, body, want):
+    """A VALUES plain literal is an xsd:string literal: it never joins an
+    IRI (an IRI-only object, or an IRI among mixed objects) or a
+    language-tagged literal of the same lexical form, in either join
+    order and on the UNDEF path."""
+    got = lexical_twins_eng.query(f"SELECT ?a ?x (isIRI(?x) AS ?i) WHERE {{ {body} }}")
+    assert sorted((r["a"], r["i"]) for r in got.collect()) == want
+    assert all(r["x"] == "urn:x" for r in got.collect())
+
+
 @pytest.mark.parametrize("text", [
     """SELECT ?x (isIRI(?x) AS ?i) (isLiteral(?x) AS ?l) (isBlank(?x) AS ?b)
               (DATATYPE(?x) AS ?d) (LANG(?x) AS ?g) (STR(?x) AS ?s)
