@@ -11,6 +11,8 @@ output types. Catalyst performs the optimizations the reference hand-rolls
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from otit_swt_spark.graph import GraphStore, merge_catalogs
@@ -18,6 +20,15 @@ from otit_swt_spark.sparql.compiler import Compiler, SolutionMapping
 from otit_swt_spark.sparql.parser import parse_query
 from otit_swt_spark.terms import XSD_STRING, spark_type_for_xsd
 from otit_swt_spark.timeseries import TimeSeriesTable
+
+
+#: Most compiled plans an Engine keeps, least recently used out first. A
+#: plan holds the rows of every Flight result it inlined (at most
+#: ``sources.flight.INLINE_MAX_ROWS`` per read), so the bound caps what
+#: the cache keeps on the driver. With one 20,000-row 3-column read per
+#: plan (Spark local[2]), 240 distinct query texts held the driver JVM's
+#: heap at 100-113 MB; unbounded it grew about 2 MB per plan, to 561 MB.
+PLAN_CACHE_MAX = 16
 
 
 class InconsistentDatatype(Exception):
@@ -52,9 +63,11 @@ class Engine:
         #: *construction* is driver-side work (parse + algebra + hundreds of
         #: DataFrame calls); like any database's prepared-statement cache, a
         #: repeated query reuses the compiled plan and only re-executes it.
-        #: Results are NOT cached — the DataFrame is lazy. Invalidated
-        #: whenever the graph, TS tables, or services change.
-        self._plan_cache: dict[str, DataFrame] = {}
+        #: Results are NOT cached — the DataFrame is lazy, but a bounded
+        #: Flight read is inlined into it. Holds at most PLAN_CACHE_MAX
+        #: plans; invalidated whenever the graph, TS tables, or services
+        #: change.
+        self._plan_cache: OrderedDict[str, DataFrame] = OrderedDict()
 
     def set_graph(self, graph: GraphStore | DataFrame) -> "Engine":
         self.graph = GraphStore(self.spark, graph) if isinstance(graph, DataFrame) else graph
@@ -94,6 +107,7 @@ class Engine:
         caller collects (the reference collects internally at engine.rs:127)."""
         cached = self._plan_cache.get(sparql)
         if cached is not None:
+            self._plan_cache.move_to_end(sparql)
             return cached
         from otit_swt_spark.sparql import algebra as A
 
@@ -154,6 +168,8 @@ class Engine:
             sm = compiler.compile_query(query)
             out = self._finalize(sm, query.variables)
         self._plan_cache[sparql] = out
+        if len(self._plan_cache) > PLAN_CACHE_MAX:
+            self._plan_cache.popitem(last=False)
         return out
 
     def ask(self, sparql: str) -> bool:

@@ -100,12 +100,9 @@ def _fetch_on_driver(info, location: str, username: str | None,
             return client.do_get(flight.Ticket(ticket), opts).read_all()
 
     endpoints = _endpoints(info, location)
-    if len(endpoints) <= 1:
-        tables = [get(ep) for ep in endpoints]
-    else:
-        with ThreadPoolExecutor(
-                min(len(endpoints), _FETCH_THREADS_MAX)) as pool:
-            tables = list(pool.map(get, endpoints))
+    with ThreadPoolExecutor(
+            max(1, min(len(endpoints), _FETCH_THREADS_MAX))) as pool:
+        tables = list(pool.map(get, endpoints))
     return pa.concat_tables(tables) if tables else info.schema.empty_table()
 
 

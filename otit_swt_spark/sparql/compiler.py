@@ -902,21 +902,9 @@ class Compiler:
 
     def _coerce_join_keys(self, left: SolutionMapping, right: SolutionMapping,
                           shared: list[str]) -> tuple[SolutionMapping, SolutionMapping]:
-        """Give each shared variable one representation on both sides. A
-        native string meeting a term is an xsd:string literal: it becomes
-        a term of that static datatype, so the term side keeps its
-        companions and joins on term identity (never an IRI or a tagged
-        literal of the same lexical form). Other native values meeting a
-        term cast the term side to the native type."""
         for v in shared:
             lm, rm = left.vars[v], right.vars[v]
-            if lm.kind != rm.kind and "string" in (lm.hint, rm.hint):
-                string_term = VarMeta("term", xsd=XSD_STRING)
-                if lm.kind == "native":
-                    left = replace(left, vars={**left.vars, v: string_term})
-                else:
-                    right = replace(right, vars={**right.vars, v: string_term})
-            elif lm.kind == "native" and rm.kind == "term":
+            if lm.kind == "native" and rm.kind == "term":
                 right = _cast_var_to_native(right, v, lm.hint or "string")
             elif lm.kind == "term" and rm.kind == "native":
                 left = _cast_var_to_native(left, v, rm.hint or "string")
@@ -1015,10 +1003,17 @@ class Compiler:
         ident = _identity_vars(left, vsm, shared)
         ldf = left.df.select("*", *[_term_key(left, v).alias(f"__lk_{v}")
                                     for v in ident])
-        rdf = vsm.df.select("*", *[_term_key(vsm, v).alias(f"__vk_{v}")
-                                   for v in ident])
-        for v in shared:
-            rdf = rdf.withColumnRenamed(v, f"__v_{v}")
+        # the VALUES side's shared bindings move under __v* names: the
+        # value, its term key and its companions (only term-identity vars
+        # carry companions after coercion)
+        moved = set(shared) | {a for v in shared for a in vsm.aux_cols(v)}
+        rdf = vsm.df.select(
+            *[c for c in vsm.df.columns if c not in moved],
+            *[F.col(v).alias(f"__v_{v}") for v in shared],
+            *[c for v in ident for c in (
+                _term_key(vsm, v).alias(f"__vk_{v}"),
+                _effective_dt(vsm, v).alias(f"__vdt_{v}"),
+                _effective_lang(vsm, v).alias(f"__vlang_{v}"))])
         cond = F.lit(True)
         for v in shared:
             eq = (F.col(f"__vk_{v}") == F.col(f"__lk_{v}") if v in ident
@@ -1026,14 +1021,15 @@ class Compiler:
             cond = cond & (F.col(f"__u_{v}") | F.col(v).isNull() | eq)
         df = ldf.join(F.broadcast(rdf), cond, "inner")
         vars2 = dict(left.vars)
-        dt_vars, lang_vars = set(left.dt_vars), set(left.lang_vars)
+        dt_vars = left.dt_vars | (vsm.dt_vars - set(shared))
+        lang_vars = left.lang_vars | (vsm.lang_vars - set(shared))
         for v in ident:
             # a left-unbound row takes the VALUES term, datatype included
             unbound = F.col(v).isNull()
             df = df.withColumns({
-                f"{v}__dt": F.when(unbound, _effective_dt(vsm, v))
+                f"{v}__dt": F.when(unbound, F.col(f"__vdt_{v}"))
                              .otherwise(_effective_dt(left, v)),
-                f"{v}__lang": F.when(unbound, _effective_lang(vsm, v))
+                f"{v}__lang": F.when(unbound, F.col(f"__vlang_{v}"))
                                .otherwise(_effective_lang(left, v))})
             dt_vars.add(v)
             lang_vars.add(v)
@@ -1041,7 +1037,8 @@ class Compiler:
                 vars2[v] = replace(left.vars[v], xsd=None)
         for v in shared:
             df = df.withColumn(v, F.coalesce(F.col(v), F.col(f"__v_{v}"))) \
-                   .drop(f"__v_{v}", f"__u_{v}", f"__vk_{v}", f"__lk_{v}")
+                   .drop(*[f"{pre}_{v}" for pre in (
+                       "__v", "__u", "__vk", "__lk", "__vdt", "__vlang")])
         for v, m in vsm.vars.items():
             if v not in vars2:
                 vars2[v] = m
@@ -1778,11 +1775,6 @@ class Compiler:
         synthetic external-id vars, project those away, and record each
         chain's columns in ts_chains (read by later rebinds, OPTIONAL fast
         paths and partition pruning)."""
-        # an external id matches by its lexical form, whatever term the
-        # graph stores it as
-        for eid in eids:
-            if sm.vars[eid].kind == "term":
-                sm = _cast_var_to_native(sm, eid, "string")
         out = self.join_solutions(sm, tsm)
         out = replace(out, df=out.df.drop(*eids),
                       vars={k: m for k, m in out.vars.items() if k not in eids})
@@ -2276,7 +2268,11 @@ class Compiler:
         right-only variables to the right columns."""
         shared = [v for v in left.vars if v in right.vars]
         left, right = self._coerce_join_keys(left, right, shared)
-        rdf = right.df
+        ident = _identity_vars(left, right, shared)
+        ldf = left.df.select("*", *[_term_key(left, v).alias(f"__lk_{v}")
+                                    for v in ident])
+        rdf = right.df.select("*", *[_term_key(right, v).alias(f"__rk_{v}")
+                                     for v in ident])
         # rename right shared-var columns out of the way; drop aux/extra dups
         for v in shared:
             rdf = rdf.withColumnRenamed(v, f"__rj_{v}")
@@ -2295,9 +2291,12 @@ class Compiler:
         )
         cond = _as_bool(compile_expr(expr, merged))   # SPARQL EBV
         for v in shared:
-            cond = (F.col(v) == F.col(f"__rj_{v}")) & cond
-        df = left.df.join(rdf, cond, "left")
-        df = df.drop(*[f"__rj_{v}" for v in shared])
+            eq = (F.col(f"__lk_{v}") == F.col(f"__rk_{v}") if v in ident
+                  else F.col(v) == F.col(f"__rj_{v}"))
+            cond = eq & cond
+        df = ldf.join(rdf, cond, "left")
+        df = df.drop(*[f"__rj_{v}" for v in shared],
+                     *[f"__{k}k_{v}" for v in ident for k in "lr"])
         vars2 = dict(right.vars)
         vars2.update(left.vars)
         dt = set(left.dt_vars) | {v for v in right.dt_vars if f"{v}__dt" in df.columns}
@@ -2375,45 +2374,72 @@ class Compiler:
     # -- values -------------------------------------------------------------------
 
     def compile_values(self, p: A.Values) -> SolutionMapping:
-        from pyspark.sql import types as T
-
-        n = len(p.variables)
-        col_kind: list[VarMeta] = []
-        for i in range(n):
-            sample = next((row[i] for row in p.rows if row[i] is not None), None)
-            if isinstance(sample, Literal):
-                t = literal_typed(sample)
-                col_kind.append(VarMeta("native", t.hint))
-            else:
-                col_kind.append(VarMeta("term"))
-        fields = []
-        for v, m in zip(p.variables, col_kind):
-            fields.append(T.StructField(v, spark_type_for_xsd(
-                {"long": "http://www.w3.org/2001/XMLSchema#long",
-                 "double": "http://www.w3.org/2001/XMLSchema#double",
-                 "bool": XSD_BOOLEAN,
-                 "timestamp": XSD_DATETIME}.get(m.hint, XSD_STRING)), True))
+        """An inline VALUES relation. A column whose cells are all literals
+        of one numeric, boolean or temporal datatype is one native column.
+        Any other column (strings, tagged or custom-typed literals, IRIs,
+        a mix) holds each cell's own RDF term, like a graph object: the
+        value, plus ``__dt``/``__lang`` companions when a literal is among
+        the cells. Joins then compare term identity, so "x" never matches
+        <x> or "x"@en."""
+        fields: list[T.StructField] = []
+        metas: dict[str, VarMeta] = {}
+        companions: set[str] = set()
+        for i, v in enumerate(p.variables):
+            cells = [row[i] for row in p.rows if row[i] is not None]
+            lits = [t for t in cells if isinstance(t, Literal)]
+            lit_dts = {t.datatype or XSD_STRING for t in lits}
+            hint = (literal_typed(lits[0]).hint
+                    if len(lit_dts) == 1 and len(lits) == len(cells)
+                    else "string")
+            if hint != "string":
+                metas[v] = VarMeta("native", hint)
+                fields.append(T.StructField(v, spark_type_for_xsd(
+                    {"long": "http://www.w3.org/2001/XMLSchema#long",
+                     "double": "http://www.w3.org/2001/XMLSchema#double",
+                     "bool": XSD_BOOLEAN,
+                     "timestamp": XSD_DATETIME}.get(hint, XSD_STRING)), True))
+                continue
+            # one static datatype when the literals agree and no IRI sits
+            # beside a non-string literal (the graph catalog's rule)
+            xsd = (next(iter(lit_dts)) if len(lit_dts) == 1
+                   and (len(lits) == len(cells) or lit_dts == {XSD_STRING})
+                   else None)
+            metas[v] = VarMeta("term", xsd=xsd)
+            fields.append(T.StructField(v, T.StringType(), True))
+            if lits:
+                companions.add(v)
+                fields += [T.StructField(f"{v}__dt", T.StringType(), True),
+                           T.StructField(f"{v}__lang", T.StringType(), True)]
         rows = []
         for row in p.rows:
             out = []
-            for i, term in enumerate(row):
-                if term is None:
-                    out.append(None)
-                elif isinstance(term, Literal):
-                    h = col_kind[i].hint
-                    if h == "long":
+            for v, term in zip(p.variables, row):
+                m = metas[v]
+                if m.kind == "native":
+                    if term is None:
+                        out.append(None)
+                    elif m.hint == "long":
                         out.append(int(term.lexical))
-                    elif h == "double":
+                    elif m.hint == "double":
                         out.append(float(term.lexical))
-                    elif h == "bool":
+                    elif m.hint == "bool":
                         out.append(term.lexical == "true")
                     else:
                         out.append(term.lexical)
+                    continue
+                if term is None:
+                    value, dt, lang = None, None, None
+                elif isinstance(term, Literal):
+                    value, dt, lang = (term.lexical,
+                                       term.datatype or XSD_STRING,
+                                       term.language)
                 else:
-                    out.append(term.value if isinstance(term, IRI) else str(term))
+                    value = term.value if isinstance(term, IRI) else str(term)
+                    dt, lang = None, None
+                out += [value, dt, lang] if v in companions else [value]
             rows.append(tuple(out))
         df = self.spark.createDataFrame(rows, T.StructType(fields))
-        return SolutionMapping(df, dict(zip(p.variables, col_kind)))
+        return SolutionMapping(df, metas, set(companions), set(companions))
 
     # -- group / aggregates ----------------------------------------------------
 

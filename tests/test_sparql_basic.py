@@ -282,6 +282,23 @@ def test_plan_cache_cleared_on_every_mutation(spark):
         assert eng._plan_cache == {}, name
 
 
+def test_plan_cache_keeps_most_recent_plans(spark, monkeypatch):
+    """The plan cache holds at most PLAN_CACHE_MAX plans and evicts the
+    least recently used one; a cache hit counts as a use."""
+    from otit_swt_spark import engine as engine_mod
+    from otit_swt_spark.graph import GraphStore
+
+    monkeypatch.setattr(engine_mod, "PLAN_CACHE_MAX", 2)
+    eng = engine_mod.Engine(spark, GraphStore(spark))
+    a, b, c = (f"SELECT ?s WHERE {{ ?s <http://ex/{p}> ?o }}"
+               for p in "abc")
+    plan_a = eng.query(a)
+    eng.query(b)
+    assert eng.query(a) is plan_a
+    eng.query(c)
+    assert list(eng._plan_cache) == [a, c]
+
+
 def test_regex_flags(engine):
     df = engine.query(PFX + """
     SELECT ?id WHERE { ?ts otit_swt:hasExternalId ?id

@@ -8,6 +8,7 @@ other's forms."""
 import pytest
 
 from otit_swt_spark import Engine, GraphStore
+from otit_swt_spark.terms import XSD_STRING
 
 
 @pytest.fixture(scope="module")
@@ -173,6 +174,7 @@ def lexical_twins_eng(spark):
             <urn:c> <urn:name> "urn:x"@en .
             <urn:d> <urn:mix> <urn:x> .
             <urn:e> <urn:mix> "urn:x" .
+            <urn:f> <urn:typed> "urn:x"^^<urn:dt> .
         }"""))
 
 
@@ -185,16 +187,56 @@ def lexical_twins_eng(spark):
     ('?a <urn:mix> ?x . VALUES ?x { "urn:x" UNDEF }',
      [("urn:d", True), ("urn:e", False), ("urn:e", False)]),
     ('?a <urn:link> ?x . VALUES (?x ?y) { ("urn:x" UNDEF) }', []),
+    ('?a <urn:name> ?x . VALUES ?x { "urn:x"@en }', [("urn:c", False)]),
+    ('VALUES ?x { "urn:x"@en } ?a <urn:name> ?x', [("urn:c", False)]),
+    ('?a <urn:name> ?x . VALUES ?x { "urn:x"@en UNDEF }',
+     [("urn:b", False), ("urn:c", False), ("urn:c", False)]),
+    ('?a <urn:typed> ?x . VALUES ?x { "urn:x"^^<urn:dt> }', [("urn:f", False)]),
+    ('?a <urn:typed> ?x . VALUES ?x { "urn:x" }', []),
+    ('?a <urn:name> ?x . VALUES ?x { "urn:x"^^<urn:dt> }', []),
+    ('?a <urn:link> ?x . VALUES ?x { "y" <urn:x> }', [("urn:a", True)]),
+    ('?a <urn:mix> ?x . VALUES ?x { "urn:x" <urn:x> }',
+     [("urn:d", True), ("urn:e", False)]),
+    ('VALUES ?x { <urn:x> "urn:x" } ?a <urn:mix> ?x',
+     [("urn:d", True), ("urn:e", False)]),
 ])
 def test_values_plain_literal_joins_only_string_literals(
         lexical_twins_eng, body, want):
-    """A VALUES plain literal is an xsd:string literal: it never joins an
-    IRI (an IRI-only object, or an IRI among mixed objects) or a
-    language-tagged literal of the same lexical form, in either join
-    order and on the UNDEF path."""
+    """A VALUES cell is its own RDF term: a plain literal is an
+    xsd:string literal that never joins an IRI (an IRI-only object, or an
+    IRI among mixed objects) or a language-tagged literal of the same
+    lexical form; a tagged or custom-typed cell joins only its own term;
+    an IRI cell beside literals still joins its IRI. Either join order
+    and the UNDEF path agree."""
     got = lexical_twins_eng.query(f"SELECT ?a ?x (isIRI(?x) AS ?i) WHERE {{ {body} }}")
     assert sorted((r["a"], r["i"]) for r in got.collect()) == want
     assert all(r["x"] == "urn:x" for r in got.collect())
+
+
+@pytest.mark.parametrize("body,want", [
+    ('VALUES ?x { "zzz" } OPTIONAL { ?a <urn:name> ?x }',
+     (None, True, False)),
+    ('VALUES ?x { "zzz" } OPTIONAL { ?a <urn:name> ?x FILTER(BOUND(?a)) }',
+     (None, True, False)),
+    ('VALUES ?x { "urn:x" } OPTIONAL { ?a <urn:link> ?x FILTER(BOUND(?a)) }',
+     (None, True, False)),
+    ('VALUES ?x { <urn:x> } OPTIONAL { ?a <urn:link> ?x FILTER(BOUND(?a)) }',
+     ("urn:a", False, True)),
+    ('?a <urn:link> ?x OPTIONAL { ?b <urn:name> ?x FILTER(BOUND(?b)) }',
+     ("urn:a", False, True)),
+])
+def test_optional_keeps_values_term(lexical_twins_eng, body, want):
+    """A VALUES literal left unmatched by an OPTIONAL (with or without a
+    FILTER) is still an xsd:string literal, and an OPTIONAL with a
+    FILTER joins on term identity: the literal "urn:x" never binds the
+    IRI <urn:x>, in either direction."""
+    got = lexical_twins_eng.query(f"""
+        SELECT ?a (isLiteral(?x) AS ?l) (isIRI(?x) AS ?i) (DATATYPE(?x) AS ?d)
+        WHERE {{ {body} }}""").collect()
+    [(a, lit, iri, dt)] = [tuple(r) for r in got]
+    assert (a, lit, iri) == want
+    if lit:
+        assert dt == XSD_STRING
 
 
 @pytest.mark.parametrize("text", [
