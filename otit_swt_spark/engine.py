@@ -114,6 +114,7 @@ class Engine:
         query = parse_query(sparql)
         graph_df = self.graph.df
         pred_dt = self.graph.predicate_datatypes
+        vp = self.graph.vp
         named = self.named_graphs
         if getattr(query, "dataset_default", None):
             # FROM <iri>...: this query's default graph is the merge of the
@@ -129,9 +130,12 @@ class Engine:
             graph_df = parts[0]
             for p in parts[1:]:
                 graph_df = graph_df.unionByName(p)
-            if len(parts) == 1:
-                pred_dt = self.named_graphs[query.dataset_default[0].value].predicate_datatypes
+            if len(parts) == 1:  # ``store`` is that one graph
+                pred_dt, vp = store.predicate_datatypes, store.vp
             else:
+                # the union has no per-predicate relations of its own: its
+                # patterns filter the union
+                vp = None
                 merged = merge_catalogs(
                     [self.named_graphs[iri.value].predicate_datatypes()
                      for iri in query.dataset_default])
@@ -149,7 +153,7 @@ class Engine:
                             pred_datatypes=pred_dt,
                             services=self.services,
                             named_graphs=named,
-                            http_post=self.http_post)
+                            http_post=self.http_post, vp=vp)
         if isinstance(query, A.AskQuery):
             sm = compiler.compile_pattern(query.pattern, None)
             out = (sm.df.limit(1)
@@ -211,7 +215,8 @@ class Engine:
                                 pred_datatypes=self.graph.predicate_datatypes,
                                 services=self.services,
                                 named_graphs=self.named_graphs,
-                                http_post=self.http_post)
+                                http_post=self.http_post,
+                                vp=self.graph.vp)
             sm = compiler.compile_pattern(q.pattern, None)
             delete_df = self._construct(sm, q.delete) if q.delete else None
             insert_df = self._construct(sm, q.insert) if q.insert else None

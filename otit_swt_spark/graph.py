@@ -20,6 +20,7 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from otit_swt_spark.session import job_description
 from otit_swt_spark.terms import (
     XSD_STRING,
     BlankNode,
@@ -38,6 +39,11 @@ TRIPLES_SCHEMA = T.StructType(
         T.StructField("o_lang", T.StringType(), True),
     ]
 )
+
+#: Most triples a predicate may hold and still get its own relation built
+#: on the driver (GraphStore.vp): below it a BGP join reads a LocalRelation
+#: instead of scanning the whole graph for one predicate.
+VP_INLINE_MAX_ROWS = 10_000
 
 
 def _term_to_row(s: Term, p: Term, o: Term) -> tuple:
@@ -122,15 +128,29 @@ def merge_catalogs(catalogs: list[dict]) -> dict:
 class GraphStore:
     """A knowledge graph held as a Spark DataFrame of triples.
 
-    For 100 TB posture the triples DataFrame can be a partitioned parquet
-    table (partition by predicate is the classic vertical-partitioning
-    layout); BGP self-joins then get predicate partition pruning for free.
+    A triple pattern with a constant predicate reads that predicate's own
+    relation (:meth:`vp`, S2RDF's vertical partitioning): a predicate of at
+    most ``VP_INLINE_MAX_ROWS`` triples is collected once into a driver-side
+    LocalRelation, so BGP joins over small predicates never rescan the
+    graph; a larger one is a ``p`` filter over the triples DataFrame,
+    which on a predicate-partitioned parquet table (:meth:`materialized`)
+    is a pruned scan of its one partition.
     """
 
     def __init__(self, spark: SparkSession, df: DataFrame | None = None):
         self.spark = spark
         self.df = df if df is not None else spark.createDataFrame([], TRIPLES_SCHEMA)
         self._pred_dt: dict[str, dict] | None = None
+
+    @property
+    def df(self) -> DataFrame:
+        return self._df
+
+    @df.setter
+    def df(self, df: DataFrame) -> None:
+        # every per-predicate relation was read from the old frame
+        self._df = df
+        self._vp: dict[str, DataFrame] = {}
 
     def predicate_datatypes(self) -> dict[str, dict]:
         """Per-predicate object-datatype catalog (see ``catalog_of``),
@@ -148,6 +168,31 @@ class GraphStore:
         catalog predates counts or the predicate is absent)."""
         info = self.predicate_datatypes().get(predicate)
         return None if info is None else info.get("n")
+
+    def vp(self, predicate: str) -> DataFrame:
+        """The triples of one predicate, memoized per store. A predicate the
+        catalog counts at most ``VP_INLINE_MAX_ROWS`` times is collected
+        once, JVM-side (exact column types, no Python round trip), into its
+        own LocalRelation (job ``otit:vp``); any other predicate is a ``p``
+        filter over :attr:`df`. Built on the first compile that reads the
+        predicate, not in the catalog pass: a parquet store's catalog comes
+        from its sidecar with no job, and an eager build would add one to
+        set-up."""
+        rel = self._vp.get(predicate)
+        if rel is not None:
+            return rel
+        rel = self._df.filter(F.col("p") == predicate)
+        cap = VP_INLINE_MAX_ROWS
+        n = self.predicate_count(predicate)
+        if n is not None and n <= cap:
+            with job_description(self.spark, "otit:vp"):
+                # the limit guards a count gone stale under a replaced df
+                jrows = rel.limit(cap + 1)._jdf.collectAsList()
+            if jrows.size() <= cap:
+                rel = DataFrame(self.spark._jsparkSession.createDataFrame(
+                    jrows, rel._jdf.schema()), self.spark)
+        self._vp[predicate] = rel
+        return rel
 
     # -- constructors ------------------------------------------------------
 
@@ -249,11 +294,15 @@ class GraphStore:
 
     def add_triples_df(self, df: DataFrame) -> "GraphStore":
         df = df.select(*[f.name for f in TRIPLES_SCHEMA])
+        kept = self._vp
         self.df = self.df.unionByName(df)
         if self._pred_dt is not None:
             # the catalog is a per-predicate summary that merges exactly:
             # aggregate the added triples only, not the whole graph again
-            self._pred_dt = merge_catalogs([self._pred_dt, catalog_of(df)])
+            added = catalog_of(df)
+            self._pred_dt = merge_catalogs([self._pred_dt, added])
+            # only the added triples' predicates changed
+            self._vp = {p: rel for p, rel in kept.items() if p not in added}
         return self
 
     # -- sinks -------------------------------------------------------------

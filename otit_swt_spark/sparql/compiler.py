@@ -26,8 +26,10 @@ Semantics notes:
 
 from __future__ import annotations
 
+import datetime as _dt
 import functools
 import itertools
+from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
@@ -116,8 +118,6 @@ def _utc_naive(lexical: str):
     """An xsd:dateTime / xsd:date lexical form as a naive UTC datetime —
     the convention of the engine's session, the date-partition columns
     and the remote TIMESTAMP literals — or None when it does not parse."""
-    import datetime as _dt
-
     try:
         dtv = _dt.datetime.fromisoformat(lexical.replace("Z", "+00:00"))
     except ValueError:
@@ -482,6 +482,23 @@ def _term_key(sm: SolutionMapping, v: str) -> Column:
                     F.coalesce(_effective_lang(sm, v), F.lit("")))
 
 
+def _match_keys(left: SolutionMapping, right: SolutionMapping,
+                shared: list[str]) -> tuple[DataFrame, DataFrame, list[str]]:
+    """Key columns for a membership test (MINUS, [NOT] EXISTS) of ``left``
+    rows against ``right`` on ``shared``: the term-identity key for the
+    variables _identity_vars names, the plain value otherwise. Returns
+    ``left.df`` with the added keys, ``right``'s keys alone, and the key
+    names; a null value gives a null key, which matches nothing."""
+    ident = _identity_vars(left, right, shared)
+    keys = [f"__mk_{v}" if v in ident else v for v in shared]
+    ldf = left.df.select("*", *[_term_key(left, v).alias(k)
+                                for v, k in zip(shared, keys) if v in ident])
+    rdf = right.df.select(*[(_term_key(right, v) if v in ident
+                             else F.col(v)).alias(k)
+                            for v, k in zip(shared, keys)])
+    return ldf, rdf, keys
+
+
 def _spark_type(hint: str) -> str:
     return {
         "long": "long", "int": "int", "double": "double", "float": "float",
@@ -493,10 +510,13 @@ def _spark_type(hint: str) -> str:
 class Compiler:
     def __init__(self, spark: SparkSession, graph_df: DataFrame, ts_tables: list | None = None,
                  pred_datatypes=None, services: dict | None = None,
-                 named_graphs: dict | None = None, http_post=None):
+                 named_graphs: dict | None = None, http_post=None, vp=None):
         self.http_post = http_post
         self.spark = spark
         self.graph_df = graph_df
+        #: optional callable returning one constant predicate's triples
+        #: (GraphStore.vp); None filters graph_df instead
+        self._vp = vp
         self.ts_tables = ts_tables or []
         self._counter = itertools.count()
         #: stack of the hints each enclosing FILTER (or OPTIONAL
@@ -585,8 +605,6 @@ class Compiler:
         superset. ``conjuncts``: the comparisons that are false or an
         error whenever one of their variables is unbound
         (_null_strict)."""
-        import datetime as _dt
-
         if expr is None:
             return {}, []
         hints: dict[str, tuple] = {}
@@ -1176,13 +1194,8 @@ class Compiler:
         the graph name per branch — one Catalyst plan, per-graph scans
         pruned like any other union branch."""
         def against(store) -> SolutionMapping:
-            saved = (self.graph_df, self._pred_datatypes)
-            self.graph_df = store.df
-            self._pred_datatypes = store.predicate_datatypes
-            try:
+            with self._store(store):
                 return self.compile_pattern(p.inner, None)
-            finally:
-                self.graph_df, self._pred_datatypes = saved
 
         if isinstance(p.term, IRI):
             store = self.named_graphs.get(p.term.value)
@@ -1263,14 +1276,22 @@ class Compiler:
                 "and is not an http(s) URL: attach a GraphStore via "
                 "Engine.register_service(iri, store), or use an http(s) "
                 "endpoint IRI for live dispatch.")
-        saved = (self.graph_df, self._pred_datatypes)
+        with self._store(store):
+            sm = self.compile_pattern(p.inner, None)
+        return self.join_solutions(input, sm) if input is not None else sm
+
+    @contextmanager
+    def _store(self, store):
+        """Compile the block against ``store`` (a GRAPH or SERVICE graph):
+        its triples, catalog and per-predicate relations."""
+        saved = (self.graph_df, self._pred_datatypes, self._vp)
         self.graph_df = store.df
         self._pred_datatypes = store.predicate_datatypes
+        self._vp = store.vp
         try:
-            sm = self.compile_pattern(p.inner, None)
+            yield
         finally:
-            self.graph_df, self._pred_datatypes = saved
-        return self.join_solutions(input, sm) if input is not None else sm
+            self.graph_df, self._pred_datatypes, self._vp = saved
 
     #: bound-join cap: above this many distinct outer bindings the VALUES
     #: block is omitted (unconstrained pull + local join stays correct)
@@ -1788,7 +1809,10 @@ class Compiler:
                              A.PathOneOrMore, A.PathZeroOrOne, A.PathSequence,
                              A.PathNegatedPropertySet)):
             return self._compile_path_triple(tp)
-        df = self.graph_df
+        pred = tp.p
+        if isinstance(pred, A.PathPredicate):
+            pred = pred.iri
+        df = self._triples(pred)
         vars2: dict[str, VarMeta] = {}
         dt_vars: set[str] = set()
         lang_vars: set[str] = set()
@@ -1800,17 +1824,12 @@ class Compiler:
         else:
             df = df.filter(F.col("s") == str(tp.s) if not isinstance(tp.s, IRI) else F.col("s") == tp.s.value)
 
-        pred = tp.p
-        if isinstance(pred, A.PathPredicate):
-            pred = pred.iri
         if isinstance(pred, Variable):
             if pred.name in vars2:  # ?x ?x ?o
                 df = df.filter(F.col("p") == F.col("s"))
             else:
                 cols.append(F.col("p").alias(pred.name))
                 vars2[pred.name] = VarMeta("term")
-        else:
-            df = df.filter(F.col("p") == pred.value)
 
         if isinstance(tp.o, Variable):
             name = tp.o.name
@@ -1844,12 +1863,22 @@ class Compiler:
         return SolutionMapping(df.select(*cols) if cols else df.select().limit(1),
                                vars2, dt_vars, lang_vars)
 
+    def _triples(self, pred) -> DataFrame:
+        """The triples a pattern with predicate ``pred`` can match: the
+        store's own relation for a constant predicate, the whole graph for
+        a variable one."""
+        if isinstance(pred, Variable):
+            return self.graph_df
+        if self._vp is not None:
+            return self._vp(pred.value)
+        return self.graph_df.filter(F.col("p") == pred.value)
+
     # -- property paths (beyond sequences, which the parser lowers) ----------
 
     def _path_pairs(self, path) -> DataFrame:
         g = self.graph_df
         if isinstance(path, A.PathPredicate):
-            return (g.filter(F.col("p") == path.iri.value)
+            return (self._triples(path.iri)
                      .select(F.col("s").alias("src"),
                              F.coalesce(F.col("o_iri"), F.col("o_lex")).alias("dst")))
         if isinstance(path, A.PathInverse):
@@ -2034,8 +2063,9 @@ class Compiler:
                       if v in sm.vars and not v.startswith("__")]
             if shared:
                 how = "left_anti" if expr.negated else "left_semi"
-                right = inner.df.select(*shared)
-                return replace(sm, df=sm.df.join(right, on=shared, how=how))
+                ldf, rdf, keys = _match_keys(sm, inner, shared)
+                df = ldf.join(rdf, on=keys, how=how)
+                return replace(sm, df=df.drop(*set(keys) - set(shared)))
             nonempty = not inner.df.isEmpty()
             keep = (not nonempty) if expr.negated else nonempty
             return sm if keep else replace(sm, df=sm.df.limit(0))
@@ -2059,8 +2089,6 @@ class Compiler:
         joins into the partitioned scan where it becomes PartitionFilters.
         Null-guarded, so unpartitioned tables in the union are unaffected;
         semantically redundant with the timestamp filter, so always sound."""
-        import datetime as _dt
-
         tvar_parts: dict[str, dict] = {}
         for info in sm.ts_chains.values():
             t, parts = info.get("t"), info.get("parts")
@@ -2346,30 +2374,34 @@ class Compiler:
                 right2 = _cast_var_to_native(right2, v, lm.hint or "string")
             elif lm.kind == "term" and rm.kind == "native":
                 left = _cast_var_to_native(left, v, rm.hint or "string")
+        # shared values compare as RDF terms (_match_keys): "x" never
+        # removes <x>
+        ldf, rdf, keys = _match_keys(left, right2, shared)
+        added = set(keys) - set(shared)
         if len(shared) == 1:
             # single shared var: compatibility = equality, and a left-unbound
             # (null) var means empty domain intersection -> row kept. Plain
             # equi anti join (null keys never match) is exactly that, and
             # stays a hash join.
-            df = left.df.join(right2.df.select(*shared), on=shared, how="left_anti")
-            return replace(left, df=df)
+            df = ldf.join(rdf, on=keys, how="left_anti")
+            return replace(left, df=df.drop(*added))
         # Multiple shared vars: SPARQL MINUS removes a left row if some right
         # row is COMPATIBLE (agrees on commonly-bound vars; an unbound side
         # leaves the var unconstrained) with a non-empty domain intersection.
         # A plain equi anti join treats null keys as never-matching, wrongly
         # keeping left rows that have one unbound and one matching-bound var.
-        lal = left.df.alias("__minus_l")
-        ral = right2.df.select(*shared).alias("__minus_r")
+        lal = ldf.alias("__minus_l")
+        ral = rdf.alias("__minus_r")
         compat = None
         anybound = None
-        for v in shared:
-            lc, rc = F.col(f"__minus_l.{v}"), F.col(f"__minus_r.{v}")
+        for k in keys:
+            lc, rc = F.col(f"__minus_l.{k}"), F.col(f"__minus_r.{k}")
             c = lc.isNull() | rc.isNull() | (lc == rc)
             b = lc.isNotNull() & rc.isNotNull()
             compat = c if compat is None else (compat & c)
             anybound = b if anybound is None else (anybound | b)
         df = lal.join(ral, compat & anybound, "left_anti")
-        return replace(left, df=df)
+        return replace(left, df=df.drop(*added))
 
     # -- values -------------------------------------------------------------------
 
@@ -2391,6 +2423,9 @@ class Compiler:
             hint = (literal_typed(lits[0]).hint
                     if len(lit_dts) == 1 and len(lits) == len(cells)
                     else "string")
+            if hint == "timestamp" and any(_utc_naive(t.lexical) is None
+                                           for t in lits):
+                hint = "string"  # an ill-formed cell stays its own term
             if hint != "string":
                 metas[v] = VarMeta("native", hint)
                 fields.append(T.StructField(v, spark_type_for_xsd(
@@ -2424,6 +2459,11 @@ class Compiler:
                         out.append(float(term.lexical))
                     elif m.hint == "bool":
                         out.append(term.lexical == "true")
+                    elif m.hint == "timestamp":
+                        # tz-aware: a naive datetime would be read in the
+                        # Python process's local time zone
+                        out.append(_utc_naive(term.lexical).replace(
+                            tzinfo=_dt.timezone.utc))
                     else:
                         out.append(term.lexical)
                     continue

@@ -298,8 +298,11 @@ def compile_expr(e: A.Expr, sm, exists_cols: dict[int, Column] | None = None) ->
             if isinstance(raw_args[0], A.EVar):
                 m = sm.meta(raw_args[0].name)
                 if m is not None and m.kind == "term":
+                    # a literal always carries its datatype: a null one, or
+                    # no companion at all, is an IRI or blank node, whose
+                    # DATATYPE is a type error (unbound, SPARQL 17.4.2.7)
                     dt = sm.dt_col(raw_args[0].name)
-                    out = F.coalesce(dt, F.lit(XSD_STRING)) if dt is not None else F.lit(XSD_STRING)
+                    out = dt if dt is not None else F.lit(m.xsd).cast("string")
                     lang = sm.lang_col(raw_args[0].name)
                     if lang is not None:  # RDF 1.1: tagged literals are rdf:langString
                         out = F.when(lang.isNotNull() & (lang != ""),

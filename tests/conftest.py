@@ -1,4 +1,7 @@
 import io
+import json
+import os
+import time
 
 import pandas as pd
 import pytest
@@ -53,6 +56,28 @@ TS2_CSV = """timestamp,value
 2022-06-01T08:46:58,204
 2022-06-01T08:46:59,206
 """
+
+
+#: One JSON line per test (node id, phase, outcome, duration and, on
+#: failure, the traceback text) per pytest run, so a flaky failure's
+#: traceback outlives the terminal it was printed to. Gitignored.
+LEDGER = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                      ".test-ledger",
+                      time.strftime("%Y%m%dT%H%M%S") + f"-{os.getpid()}.jsonl")
+
+
+def pytest_runtest_logreport(report):
+    # the call phase of every test, plus a setup or teardown that failed
+    # or skipped it
+    if report.when != "call" and report.passed:
+        return
+    rec = {"nodeid": report.nodeid, "when": report.when,
+           "outcome": report.outcome, "duration_s": round(report.duration, 3)}
+    if report.failed:
+        rec["traceback"] = report.longreprtext
+    os.makedirs(os.path.dirname(LEDGER), exist_ok=True)
+    with open(LEDGER, "a") as fh:
+        fh.write(json.dumps(rec) + "\n")
 
 
 @pytest.fixture(scope="session")

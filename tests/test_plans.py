@@ -91,10 +91,13 @@ def test_optional_with_filter_compiles_to_conditional_left_outer(spark):
                    ("http://example.org/case#myWidget2", None)}
 
 
-def test_predicate_partitioned_store_prunes(spark, engine, tmp_path):
+def test_predicate_partitioned_store_prunes(spark, engine, tmp_path,
+                                            monkeypatch):
     """Write the KG predicate-partitioned, reload, and check a BGP scan
     only reads the matching predicate partitions (PartitionFilters) —
-    the triple-store scale path: per-predicate vertical partitioning."""
+    the triple-store scale path: per-predicate vertical partitioning.
+    The cap is 0 so the predicate is read as a scan, not inlined."""
+    monkeypatch.setattr("otit_swt_spark.graph.VP_INLINE_MAX_ROWS", 0)
     path = str(tmp_path / "kg_by_p")
     engine.graph.write_parquet(path, partition_by_predicate=True)
     g2 = GraphStore.read_parquet(spark, path)
@@ -262,10 +265,12 @@ def test_sparql_timestamp_filter_prunes_date_partitions(spark, tmp_path):
     assert got == [3.0, 4.0, 5.0]  # Jan 2, 3, 4
 
 
-def test_bucketed_store_joins_without_shuffle(spark, tmp_path):
+def test_bucketed_store_joins_without_shuffle(spark, tmp_path, monkeypatch):
     """A subject-bucketed GraphStore runs star-shaped BGP self-joins as
     shuffle-free sort-merge joins (bucket co-location) — the join-side
-    scale lever complementing predicate partitioning's scan pruning."""
+    scale lever complementing predicate partitioning's scan pruning. The
+    cap is 0 so the predicates are bucketed scans, not inlined."""
+    monkeypatch.setattr("otit_swt_spark.graph.VP_INLINE_MAX_ROWS", 0)
     import re
     from otit_swt_spark.tpch_graph import build_graph_df
 
@@ -296,10 +301,12 @@ def test_bucketed_store_joins_without_shuffle(spark, tmp_path):
     assert q.count() == 25
 
 
-def test_bucketed_store_reregisters_existing_layout(spark, tmp_path):
+def test_bucketed_store_reregisters_existing_layout(spark, tmp_path,
+                                                    monkeypatch):
     """A bucketed layout written once re-registers in a later session
     (CREATE TABLE over the existing path) — no rewrite, still
-    shuffle-free."""
+    shuffle-free (cap 0: the predicates are scans, not inlined)."""
+    monkeypatch.setattr("otit_swt_spark.graph.VP_INLINE_MAX_ROWS", 0)
     import re
     from otit_swt_spark.tpch_graph import build_graph_df
 
@@ -478,10 +485,11 @@ def test_bgp_selectivity_reorder(spark):
     assert [tp.p.value for tp in comp._order_patterns(pats3)][:1] != ["urn:unknown"]
 
 
-def test_bgp_reorder_shapes_join_tree(spark):
+def test_bgp_reorder_shapes_join_tree(spark, monkeypatch):
     """End-to-end: a worst-order-written query compiles to a join tree that
     starts from the most selective predicate (its scan prints before the
-    hot predicate's in the left-deep plan)."""
+    hot predicate's in the left-deep plan; cap 0 keeps the predicate
+    filters, which name the predicates, in the plan)."""
     from otit_swt_spark.engine import Engine
     from otit_swt_spark.graph import GraphStore
 
@@ -493,6 +501,7 @@ def test_bgp_reorder_shapes_join_tree(spark):
     for i in range(2):
         lines.append(f"<urn:z{i}> <urn:tiny> <urn:w{i}> .")
     store = GraphStore.from_ntriples(spark, "\n".join(lines))
+    monkeypatch.setattr("otit_swt_spark.graph.VP_INLINE_MAX_ROWS", 0)
     eng = Engine(spark, store)
     df = eng.query("""
         SELECT ?a ?d WHERE {
@@ -517,11 +526,15 @@ HYBRID_BGP = """
 
 
 def static_side_inlined(df) -> bool:
-    """The static side is the compile-time collect's rows: a LocalRelation
-    carrying the BGP's variables, and no scan of the graph DataFrame
-    (whose leaf exposes the o_iri column) anywhere in the plan."""
+    """The static side is the compile-time collect's rows: ONE
+    LocalRelation carrying the BGP's variables ?w and ?ts_id together, and
+    no scan of the graph DataFrame (whose leaf exposes the o_iri column)
+    anywhere in the plan. Above the cap the static joins stay in the plan,
+    over per-predicate relations that each bind only their own pattern's
+    variables."""
     plan = optimized(df)
-    return (re.search(r"LocalRelation \[[^\]]*\bts_id#", plan) is not None
+    return (any(re.search(r"\bw#", attrs) and re.search(r"\bts_id#", attrs)
+                for attrs in re.findall(r"LocalRelation \[([^\]]*)\]", plan))
             and "o_iri#" not in plan)
 
 

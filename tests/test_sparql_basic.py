@@ -203,13 +203,15 @@ def test_mixed_datatype_coerces_when_not_strict(spark):
 
 def test_catalog_types_output_without_probe(engine):
     """The predicate datatype catalog supplies output types at compile
-    time: once the catalog is warm, building a catalog-typed query's plan
-    runs no Spark job (no ``__dt`` probe)."""
+    time: once the store is warm (catalog and per-predicate relations,
+    built by a first build of the plan), rebuilding a catalog-typed
+    query's plan runs no Spark job (no ``__dt`` probe)."""
     q = PFX + """
     SELECT ?ts ?dt WHERE { ?s otit_swt:hasTimeseries ?ts .
                            ?ts otit_swt:hasDatatype ?dt }"""
     sc = engine.spark.sparkContext
-    engine.graph.predicate_datatypes()
+    engine._plan_cache.pop(q, None)
+    engine.query(q)
     engine._plan_cache.pop(q, None)
     group = "test-catalog-typed-plan-build"
     sc.setJobGroup(group, group)
