@@ -16,6 +16,7 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from otit_swt_spark.graph import GraphStore, merge_catalogs
+from otit_swt_spark.session import job_description
 from otit_swt_spark.sparql.compiler import Compiler, SolutionMapping
 from otit_swt_spark.sparql.parser import parse_query
 from otit_swt_spark.terms import XSD_STRING, spark_type_for_xsd
@@ -65,14 +66,22 @@ class Engine:
         #: repeated query reuses the compiled plan and only re-executes it.
         #: Results are NOT cached — the DataFrame is lazy, but a bounded
         #: Flight read is inlined into it. Holds at most PLAN_CACHE_MAX
-        #: plans; invalidated whenever the graph, TS tables, or services
-        #: change.
+        #: plans, all compiled against the triple frames in _plan_frames:
+        #: a query that finds any store's ``df`` replaced (set_graph,
+        #: update, GraphStore.add_triples_df) clears it first, and
+        #: registering a TS table, service or named graph clears it.
         self._plan_cache: OrderedDict[str, DataFrame] = OrderedDict()
+        self._plan_frames: list[DataFrame] = []
 
     def set_graph(self, graph: GraphStore | DataFrame) -> "Engine":
         self.graph = GraphStore(self.spark, graph) if isinstance(graph, DataFrame) else graph
-        self._plan_cache.clear()
         return self
+
+    def _frames(self) -> list[DataFrame]:
+        """The triple frames a plan is compiled against: the default
+        graph's, then every registered service's and named graph's."""
+        return [self.graph.df, *(g.df for g in self.services.values()),
+                *(g.df for g in self.named_graphs.values())]
 
     def add_timeseries_table(self, table: TimeSeriesTable) -> "Engine":
         self.ts_tables.append(table)
@@ -105,6 +114,11 @@ class Engine:
     def execute_hybrid_query(self, sparql: str) -> DataFrame:
         """Parse + compile + type-finalize. Returns a lazy DataFrame; the
         caller collects (the reference collects internally at engine.rs:127)."""
+        frames = self._frames()
+        if len(frames) != len(self._plan_frames) or any(
+                a is not b for a, b in zip(frames, self._plan_frames)):
+            self._plan_cache.clear()
+            self._plan_frames = frames
         cached = self._plan_cache.get(sparql)
         if cached is not None:
             self._plan_cache.move_to_end(sparql)
@@ -245,7 +259,6 @@ class Engine:
         # a delete cannot be merged out of the datatype catalog (unlike
         # add_triples_df's merge): it is recomputed on the next read
         self.graph._pred_dt = None
-        self._plan_cache.clear()
         return self
 
     def query(self, sparql: str) -> DataFrame:
@@ -411,7 +424,7 @@ class Engine:
                 if m.kind == "term":
                     dt = sm.dt_col(term.name)
                     lang = sm.lang_col(term.name)
-                    if dt is None:  # untyped term (e.g. path object): IRI-ish
+                    if dt is None:  # no companions (an IRI-only object): IRI
                         return [val.alias("o_iri"),
                                 F.lit(None).cast("string").alias("o_lex"),
                                 F.lit(None).cast("string").alias("o_dt"),
@@ -486,7 +499,7 @@ class Engine:
         InconsistentDatatype (reference hybrid/src/engine.rs:137-198) under
         strict_types, else coerce. Only catalog-blind variables (variable
         predicates, path objects) fall back to the first-non-null ``__dt``
-        probe job."""
+        probe job (``otit:dt-probe``)."""
         term_vars = [v for v in variables if sm.vars.get(v) and sm.vars[v].kind == "term"
                      and v in sm.dt_vars]
         mixed = [v for v in term_vars if sm.vars[v].mixed]
@@ -501,12 +514,14 @@ class Engine:
         if probe_vars:
             # probe only a prefix — datatype columns are constant per variable
             # in practice, and this avoids executing the full plan twice
-            probe = (
-                sm.df.select([F.col(f"{v}__dt").alias(v) for v in probe_vars])
-                .limit(100)
-                .agg(*[F.first(F.col(v), ignorenulls=True).alias(v) for v in probe_vars])
-                .first()
-            )
+            with job_description(self.spark, "otit:dt-probe"):
+                probe = (
+                    sm.df.select([F.col(f"{v}__dt").alias(v) for v in probe_vars])
+                    .limit(100)
+                    .agg(*[F.first(F.col(v), ignorenulls=True).alias(v)
+                           for v in probe_vars])
+                    .first()
+                )
             dt_of.update(probe.asDict() if probe is not None else {})
         cols = []
         for v in variables:

@@ -58,6 +58,8 @@ from otit_swt_spark.terms import (
 )
 
 RID = "__rid"
+#: joins the parts of a term-identity key and of a literal path node
+_SEP = "\x01"
 
 _XSD_INTEGRAL = frozenset(XSD + n for n in (
     "integer", "long", "int", "short", "byte", "nonNegativeInteger",
@@ -400,7 +402,14 @@ class SolutionMapping:
     literal-capable term bindings carry companions (``dt_vars`` /
     ``lang_vars``): subject and predicate variables, and object variables
     whose predicate the catalog proves IRI/blank-node-only, are one plain
-    value column, so joins between them key on the value alone."""
+    value column.
+
+    Every binary operator (join, OPTIONAL, VALUES, MINUS, [NOT] EXISTS,
+    UNION) meets two mappings by one rule: _align casts a term binding
+    meeting a native one to the native type; _join_keys compares a shared
+    term variable by its term-identity key where either side carries
+    companions or their static datatypes differ, by the plain value
+    otherwise; _union merges the metadata of rows from both sides."""
 
     df: DataFrame
     vars: dict[str, VarMeta]
@@ -476,27 +485,98 @@ def _effective_lang(sm: SolutionMapping, v: str) -> Column:
 
 def _term_key(sm: SolutionMapping, v: str) -> Column:
     """The term-identity key of ``v``: value, datatype and language."""
-    sep = F.lit("\x01")
+    sep = F.lit(_SEP)
     return F.concat(F.col(v).cast("string"), sep,
                     F.coalesce(_effective_dt(sm, v), F.lit("")), sep,
                     F.coalesce(_effective_lang(sm, v), F.lit("")))
 
 
-def _match_keys(left: SolutionMapping, right: SolutionMapping,
-                shared: list[str]) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Key columns for a membership test (MINUS, [NOT] EXISTS) of ``left``
-    rows against ``right`` on ``shared``: the term-identity key for the
-    variables _identity_vars names, the plain value otherwise. Returns
-    ``left.df`` with the added keys, ``right``'s keys alone, and the key
-    names; a null value gives a null key, which matches nothing."""
+def _align(left: SolutionMapping, right: SolutionMapping, shared: list[str]
+           ) -> tuple[SolutionMapping, SolutionMapping]:
+    """The one type-alignment rule of every binary operator (join,
+    OPTIONAL, VALUES, MINUS, [NOT] EXISTS, UNION) over the ``shared``
+    variables: a native binding meeting a term binding casts the term
+    side to the native hint (a computed value meets a graph term on its
+    lexical form), and two native bindings of different hints both cast
+    to their common hint. Two term bindings are left to _join_keys."""
+    for v in shared:
+        lm, rm = left.vars[v], right.vars[v]
+        if lm.kind == "native" and rm.kind == "term":
+            right = _cast_var_to_native(right, v, lm.hint or "string")
+        elif lm.kind == "term" and rm.kind == "native":
+            left = _cast_var_to_native(left, v, rm.hint or "string")
+        elif lm.kind == "native" and lm.hint != rm.hint:
+            h = _common_hint(lm.hint, rm.hint)
+            left = _cast_var_to_native(left, v, h)
+            right = _cast_var_to_native(right, v, h)
+    return left, right
+
+
+def _join_keys(left: SolutionMapping, right: SolutionMapping,
+               shared: list[str]) -> tuple[DataFrame, DataFrame, list[str]]:
+    """The one term-matching rule of every join, OPTIONAL, VALUES join,
+    MINUS and [NOT] EXISTS, over ``shared`` variables already _align-ed:
+    a variable _identity_vars names compares its term-identity key, added
+    to both frames as ``__tk_<v>``; any other compares its plain value
+    column. Returns both frames with the keys added, and the key names;
+    a null value gives a null key, which matches nothing."""
     ident = _identity_vars(left, right, shared)
-    keys = [f"__mk_{v}" if v in ident else v for v in shared]
-    ldf = left.df.select("*", *[_term_key(left, v).alias(k)
-                                for v, k in zip(shared, keys) if v in ident])
-    rdf = right.df.select(*[(_term_key(right, v) if v in ident
-                             else F.col(v)).alias(k)
-                            for v, k in zip(shared, keys)])
-    return ldf, rdf, keys
+    if not ident:
+        return left.df, right.df, list(shared)
+    return (left.df.select("*", *[_term_key(left, v).alias(f"__tk_{v}")
+                                  for v in ident]),
+            right.df.select("*", *[_term_key(right, v).alias(f"__tk_{v}")
+                                   for v in ident]),
+            [f"__tk_{v}" if v in ident else v for v in shared])
+
+
+def _union(a: SolutionMapping, b: SolutionMapping) -> SolutionMapping:
+    """The one union of two solution multisets (UNION, GRAPH ?g over the
+    named graphs, OPTIONAL's matched and unmatched rows): _align the
+    shared variables, union by column name and merge the metadata, ``a``'s
+    first. Rows come from both sides, so a shared term variable whose
+    sides know different datatypes is mixed, and one side not knowing
+    makes it unknown."""
+    shared = [v for v in a.vars if v in b.vars]
+    a, b = _align(a, b, shared)
+    vars2 = {**b.vars, **a.vars}
+    for v in shared:
+        am, bm = a.vars[v], b.vars[v]
+        if am.kind == "term" and bm.kind == "term":
+            if am.mixed or bm.mixed or (am.xsd and bm.xsd and am.xsd != bm.xsd):
+                vars2[v] = VarMeta("term", mixed=True)
+            elif am.xsd != bm.xsd:
+                vars2[v] = VarMeta("term")
+    return SolutionMapping(a.df.unionByName(b.df, allowMissingColumns=True),
+                           vars2, a.dt_vars | b.dt_vars,
+                           a.lang_vars | b.lang_vars,
+                           {**b.ts_chains, **a.ts_chains})
+
+
+def _path_node() -> Column:
+    """A triple's object as a property-path node: an IRI or blank node is
+    its value, a literal its lexical form, datatype and language joined
+    by _SEP, so path steps meet only equal terms (_path_triples decodes
+    it)."""
+    return F.coalesce(F.col("o_iri"), F.concat(
+        F.col("o_lex"), F.lit(_SEP), F.coalesce(F.col("o_dt"), F.lit("")),
+        F.lit(_SEP), F.coalesce(F.col("o_lang"), F.lit(""))))
+
+
+def _path_iris(path) -> set[str] | None:
+    """The predicates a property path can traverse; None when it can
+    traverse any (a negated property set)."""
+    if isinstance(path, A.PathPredicate):
+        return {path.iri.value}
+    if isinstance(path, A.PathNegatedPropertySet):
+        return None
+    out: set[str] = set()
+    for part in getattr(path, "parts", None) or (path.inner,):
+        sub = _path_iris(part)
+        if sub is None:
+            return None
+        out |= sub
+    return out
 
 
 def _spark_type(hint: str) -> str:
@@ -550,9 +630,20 @@ class Compiler:
         predicate) → xsd None → Engine falls back to its datatype probe.
         None when the catalog proves the predicate's objects are IRIs or
         blank nodes only (``dt`` None, not mixed): the variable then binds
-        like a subject variable, one value column without companions."""
-        if self._pred_datatypes is None or not isinstance(pred, IRI):
+        like a subject variable, one value column without companions. A
+        property path's object binds that way when every predicate it can
+        traverse is so proven; any other path object carries companions
+        with no static datatype."""
+        if self._pred_datatypes is None or isinstance(pred, Variable):
             return VarMeta("term")
+        if not isinstance(pred, IRI):
+            iris = _path_iris(pred)
+            cat = self._pred_datatypes()
+            iri_only = iris is not None and all(
+                cat.get(i) is None or (cat[i]["dt"] is None
+                                       and not cat[i]["mixed"])
+                for i in iris)
+            return None if iri_only else VarMeta("term")
         info = self._pred_datatypes().get(pred.value)
         if info is None:  # predicate absent from graph: column will be empty
             return VarMeta("term", xsd=XSD_STRING)
@@ -918,43 +1009,20 @@ class Compiler:
 
     # --------------------------------------------------------------- joining
 
-    def _coerce_join_keys(self, left: SolutionMapping, right: SolutionMapping,
-                          shared: list[str]) -> tuple[SolutionMapping, SolutionMapping]:
-        for v in shared:
-            lm, rm = left.vars[v], right.vars[v]
-            if lm.kind == "native" and rm.kind == "term":
-                right = _cast_var_to_native(right, v, lm.hint or "string")
-            elif lm.kind == "term" and rm.kind == "native":
-                left = _cast_var_to_native(left, v, rm.hint or "string")
-            elif lm.kind == "native" and rm.kind == "native" and lm.hint != rm.hint:
-                h = _common_hint(lm.hint, rm.hint)
-                left = _cast_var_to_native(left, v, h)
-                right = _cast_var_to_native(right, v, h)
-        return left, right
-
     def join_solutions(self, left: SolutionMapping, right: SolutionMapping,
                        how: str = "inner") -> SolutionMapping:
         shared = [v for v in left.vars if v in right.vars]
-        left, right = self._coerce_join_keys(left, right, shared)
-        # TERM-identity join keys (_identity_vars): joining on the
-        # canonical string alone would conflate distinct RDF terms with
-        # one lexical form ("1"^^xsd:integer vs "1"^^xsd:string, "x"@en vs
-        # "x"@fr, <x> vs "x"). Residual (documented) canonicalization
-        # trade: a property-path object carries no companions, so a
-        # literal it binds still conflates with an IRI of the same
-        # lexical form.
-        ident = _identity_vars(left, right, shared)
-
-        ldf = left.df
-        rdf = right.df
-        keys = list(shared)
-        for v in ident:
-            ldf = ldf.withColumn(f"__tk_{v}", _term_key(left, v))
-            rdf = rdf.withColumn(f"__tk_{v}", _term_key(right, v))
+        left, right = _align(left, right, shared)
+        # TERM-identity join keys: joining on the canonical string alone
+        # would conflate distinct RDF terms with one lexical form
+        # ("1"^^xsd:integer vs "1"^^xsd:string, "x"@en vs "x"@fr, <x> vs
+        # "x")
+        ldf, rdf, keys = _join_keys(left, right, shared)
+        ident = [v for v, k in zip(shared, keys) if k != v]
+        if ident:
             # right's value column is a function of the key — drop it so
             # the named join doesn't duplicate it (left's copy survives)
-            rdf = rdf.drop(v)
-            keys[keys.index(v)] = f"__tk_{v}"
+            rdf = rdf.drop(*ident)
         # drop right-side aux duplicates for shared term vars (values agree on
         # matched rows) and right-side aux of vars the left binds without
         # companions (a matched right row is then an IRI: null aux), and
@@ -971,73 +1039,54 @@ class Compiler:
             rdf = rdf.drop(c)
         if shared:
             df = ldf.join(rdf, on=keys, how=how)
-            for v in ident:
-                df = df.drop(f"__tk_{v}")
-        elif how == "inner":
+            if ident:
+                df = df.drop(*[f"__tk_{v}" for v in ident])
+        else:  # a left join without keys is a cross join for our uses
             df = left.df.crossJoin(rdf)
-        else:
-            df = left.df.crossJoin(rdf)  # left join without keys = cross for our uses
-        vars2 = dict(right.vars)
-        vars2.update(left.vars)
-        # right-only var meta wins for right-only vars; recompute aux sets
-        for v, m in right.vars.items():
-            if v not in left.vars:
-                vars2[v] = m
         dt = set(left.dt_vars) | {v for v in right.dt_vars if f"{v}__dt" in df.columns}
         lang = set(left.lang_vars) | {v for v in right.lang_vars if f"{v}__lang" in df.columns}
-        chains = dict(left.ts_chains)
-        chains.update(right.ts_chains)
-        return SolutionMapping(df, vars2, dt, lang, chains)
+        return SolutionMapping(df, {**right.vars, **left.vars}, dt, lang,
+                               {**left.ts_chains, **right.ts_chains})
 
-    def _join_values(self, left: SolutionMapping, vsm: SolutionMapping
-                     ) -> SolutionMapping:
+    def _join_values(self, left: SolutionMapping, vsm: SolutionMapping,
+                     undef: set[str]) -> SolutionMapping:
         """Join outer solutions with an inline VALUES relation under SPARQL
         COMPATIBILITY semantics: an UNDEF cell is compatible with any
         binding (SPARQL 1.1 §10.2), so rows with UNDEF cannot go through
         the plain equi-join (NULL = x filters them out). When no shared
-        column contains UNDEF the plain equi-join is used; otherwise the
+        column holds UNDEF (``undef`` names the columns that do, read
+        from the VALUES rows) the plain equi-join is used; otherwise the
         (tiny, inline) VALUES side is broadcast into a theta join whose
         predicate is `undef OR equal` per shared var, and the result
         binding takes whichever side is bound."""
         shared = [v for v in left.vars if v in vsm.vars]
-        if not shared:
-            return self.join_solutions(left, vsm)
-        # UNDEF probe: does ANY shared cell hold UNDEF? Answered with a
-        # filter + limit(1) so the driver reads AT MOST ONE row however
-        # large a programmatic VALUES frame is (round 12: replaced a
-        # capped full collect — a bound of 1 needs no cap)
-        undef_any = F.lit(False)
-        for v in shared:
-            undef_any = undef_any | F.col(v).isNull()
-        if not vsm.df.where(undef_any).limit(1).collect():
+        if not undef & set(shared):
             return self.join_solutions(left, vsm)
         # UNDEF markers must be captured on the ORIGINAL frame: after
-        # _coerce_join_keys a try_cast failure ("abc" -> double) also yields
-        # NULL, and treating that as a wildcard would make an incompatible
+        # _align a try_cast failure ("abc" -> double) also yields NULL,
+        # and treating that as a wildcard would make an incompatible
         # VALUES cell match every outer row.
         vsm = replace(vsm, df=vsm.df.select(
             "*", *[F.col(v).isNull().alias(f"__u_{v}") for v in shared]))
-        left, vsm = self._coerce_join_keys(left, vsm, shared)
-        ident = _identity_vars(left, vsm, shared)
-        ldf = left.df.select("*", *[_term_key(left, v).alias(f"__lk_{v}")
-                                    for v in ident])
+        left, vsm = _align(left, vsm, shared)
+        ldf, rdf, keys = _join_keys(left, vsm, shared)
+        ident = [v for v, k in zip(shared, keys) if k != v]
         # the VALUES side's shared bindings move under __v* names: the
-        # value, its term key and its companions (only term-identity vars
-        # carry companions after coercion)
+        # value and its companions (only term-identity vars carry
+        # companions after alignment)
         moved = set(shared) | {a for v in shared for a in vsm.aux_cols(v)}
-        rdf = vsm.df.select(
-            *[c for c in vsm.df.columns if c not in moved],
+        rdf = rdf.select(
+            *[c for c in rdf.columns if c not in moved],
             *[F.col(v).alias(f"__v_{v}") for v in shared],
             *[c for v in ident for c in (
-                _term_key(vsm, v).alias(f"__vk_{v}"),
                 _effective_dt(vsm, v).alias(f"__vdt_{v}"),
                 _effective_lang(vsm, v).alias(f"__vlang_{v}"))])
         cond = F.lit(True)
-        for v in shared:
-            eq = (F.col(f"__vk_{v}") == F.col(f"__lk_{v}") if v in ident
-                  else F.col(f"__v_{v}") == F.col(v))
+        for v, k in zip(shared, keys):
+            eq = (F.col(f"__l.{k}") == F.col(f"__r.{k}") if v in ident
+                  else F.col(v) == F.col(f"__v_{v}"))
             cond = cond & (F.col(f"__u_{v}") | F.col(v).isNull() | eq)
-        df = ldf.join(F.broadcast(rdf), cond, "inner")
+        df = ldf.alias("__l").join(F.broadcast(rdf).alias("__r"), cond, "inner")
         vars2 = dict(left.vars)
         dt_vars = left.dt_vars | (vsm.dt_vars - set(shared))
         lang_vars = left.lang_vars | (vsm.lang_vars - set(shared))
@@ -1056,27 +1105,12 @@ class Compiler:
         for v in shared:
             df = df.withColumn(v, F.coalesce(F.col(v), F.col(f"__v_{v}"))) \
                    .drop(*[f"{pre}_{v}" for pre in (
-                       "__v", "__u", "__vk", "__lk", "__vdt", "__vlang")])
+                       "__v", "__u", "__tk", "__vdt", "__vlang")])
         for v, m in vsm.vars.items():
             if v not in vars2:
                 vars2[v] = m
         return SolutionMapping(df, vars2, dt_vars, lang_vars,
                                dict(left.ts_chains))
-
-    def harmonize_for_union(self, l: SolutionMapping, r: SolutionMapping
-                            ) -> tuple[SolutionMapping, SolutionMapping]:
-        for v in [v for v in l.vars if v in r.vars]:
-            lm, rm = l.vars[v], r.vars[v]
-            if lm.kind != rm.kind:
-                if lm.kind == "term":
-                    l = _cast_var_to_native(l, v, rm.hint or "string")
-                else:
-                    r = _cast_var_to_native(r, v, lm.hint or "string")
-            elif lm.kind == "native" and lm.hint != rm.hint:
-                h = _common_hint(lm.hint, rm.hint)
-                l = _cast_var_to_native(l, v, h)
-                r = _cast_var_to_native(r, v, h)
-        return l, r
 
     # --------------------------------------------------------------- compile
 
@@ -1111,30 +1145,15 @@ class Compiler:
         if isinstance(p, A.Minus):
             return self.compile_minus(p, input)
         if isinstance(p, A.Union):
-            lsm = self.compile_pattern(p.left, input)
-            rsm = self.compile_pattern(p.right, input)
-            lsm, rsm = self.harmonize_for_union(lsm, rsm)
-            df = lsm.df.unionByName(rsm.df, allowMissingColumns=True)
-            vars2 = dict(rsm.vars)
-            vars2.update(lsm.vars)
-            # rows come from BOTH branches: reconcile static datatype info for
-            # shared term vars (differing branch datatypes = a mixed column)
-            for v in lsm.vars:
-                lm, rm = lsm.vars[v], rsm.vars.get(v)
-                if rm is not None and lm.kind == "term" and rm.kind == "term":
-                    if lm.mixed or rm.mixed or (
-                            lm.xsd and rm.xsd and lm.xsd != rm.xsd):
-                        vars2[v] = VarMeta("term", mixed=True)
-                    elif lm.xsd != rm.xsd:  # one side unknown -> unknown
-                        vars2[v] = VarMeta("term")
-            return SolutionMapping(df, vars2, lsm.dt_vars | rsm.dt_vars,
-                                   lsm.lang_vars | rsm.lang_vars,
-                                   {**rsm.ts_chains, **lsm.ts_chains})
+            return _union(self.compile_pattern(p.left, input),
+                          self.compile_pattern(p.right, input))
         if isinstance(p, A.Values):
             vsm = self.compile_values(p)
             if input is None:
                 return vsm
-            return self._join_values(input, vsm)
+            undef = {v for i, v in enumerate(p.variables)
+                     if any(row[i] is None for row in p.rows)}
+            return self._join_values(input, vsm, undef)
         if isinstance(p, A.Group):
             return self.compile_group(p, input)
         if isinstance(p, A.OrderBy):
@@ -1237,15 +1256,7 @@ class Compiler:
                         branch,
                         df=branch.df.withColumn(gvar, F.lit(iri)),
                         vars={**branch.vars, gvar: VarMeta("native", "iri")})
-                if sm is None:
-                    sm = branch
-                else:
-                    sm, branch = self.harmonize_for_union(sm, branch)
-                    sm = replace(sm, df=sm.df.unionByName(
-                        branch.df, allowMissingColumns=True),
-                        vars={**branch.vars, **sm.vars},
-                        dt_vars=sm.dt_vars | branch.dt_vars,
-                        lang_vars=sm.lang_vars | branch.lang_vars)
+                sm = branch if sm is None else _union(sm, branch)
         return self.join_solutions(input, sm) if input is not None else sm
 
     def compile_service(self, p: A.Service, input: SolutionMapping | None) -> SolutionMapping:
@@ -1351,7 +1362,8 @@ class Compiler:
         if not kinds:
             return ""
         cap = self.SERVICE_BOUND_JOIN_MAX
-        rows = (input.df.select(*cols).distinct().limit(cap + 1).collect())
+        with job_description(self.spark, "otit:service-values"):
+            rows = input.df.select(*cols).distinct().limit(cap + 1).collect()
         if len(rows) > cap:
             return ""
         tuples = []
@@ -1805,14 +1817,9 @@ class Compiler:
     # -- triple patterns ------------------------------------------------------
 
     def compile_triple(self, tp: A.TriplePattern) -> SolutionMapping:
-        if isinstance(tp.p, (A.PathAlternative, A.PathInverse, A.PathZeroOrMore,
-                             A.PathOneOrMore, A.PathZeroOrOne, A.PathSequence,
-                             A.PathNegatedPropertySet)):
-            return self._compile_path_triple(tp)
-        pred = tp.p
-        if isinstance(pred, A.PathPredicate):
-            pred = pred.iri
-        df = self._triples(pred)
+        pred = tp.p.iri if isinstance(tp.p, A.PathPredicate) else tp.p
+        path = not isinstance(pred, (IRI, Variable))
+        df = self._path_triples(pred) if path else self._triples(pred)
         vars2: dict[str, VarMeta] = {}
         dt_vars: set[str] = set()
         lang_vars: set[str] = set()
@@ -1860,7 +1867,10 @@ class Compiler:
         else:
             df = df.filter(F.col("o_iri") == (tp.o.value if isinstance(tp.o, IRI) else str(tp.o)))
 
-        return SolutionMapping(df.select(*cols) if cols else df.select().limit(1),
+        # a ground triple matches once or not at all; a ground path once
+        # per pair it yields
+        out = df.select(*cols)
+        return SolutionMapping(out if cols or path else out.limit(1),
                                vars2, dt_vars, lang_vars)
 
     def _triples(self, pred) -> DataFrame:
@@ -1875,12 +1885,34 @@ class Compiler:
 
     # -- property paths (beyond sequences, which the parser lowers) ----------
 
+    def _path_triples(self, path) -> DataFrame:
+        """A property path's pairs shaped like the graph's triples (``s``
+        and the object's ``o_iri``/``o_lex``/``o_dt``/``o_lang``), so
+        compile_triple binds and matches a path object like a graph
+        object. A literal a path binds as its subject (through ``^``)
+        gives its lexical form only."""
+        dst = F.col("dst")
+        lit = dst.contains(_SEP)
+
+        def part(i: int) -> Column:  # the i-th _SEP-separated part
+            return F.nullif(F.substring_index(
+                F.substring_index(dst, _SEP, i), _SEP, -1), F.lit(""))
+
+        return self._path_pairs(path).select(
+            F.substring_index(F.col("src"), _SEP, 1).alias("s"),
+            F.when(~lit, dst).alias("o_iri"),
+            F.when(lit, F.substring_index(dst, _SEP, 1)).alias("o_lex"),
+            F.when(lit, part(2)).alias("o_dt"),
+            F.when(lit, part(3)).alias("o_lang"))
+
     def _path_pairs(self, path) -> DataFrame:
+        """``(src, dst)`` node pairs (_path_node) a path connects. A
+        literal is never a subject, so only an inverse step starts from
+        one."""
         g = self.graph_df
         if isinstance(path, A.PathPredicate):
             return (self._triples(path.iri)
-                     .select(F.col("s").alias("src"),
-                             F.coalesce(F.col("o_iri"), F.col("o_lex")).alias("dst")))
+                     .select(F.col("s").alias("src"), _path_node().alias("dst")))
         if isinstance(path, A.PathInverse):
             inner = self._path_pairs(path.inner)
             return inner.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1905,12 +1937,10 @@ class Compiler:
             out = None
             if path.forward:
                 out = (g.filter(~F.col("p").isin([i.value for i in path.forward]))
-                        .select(F.col("s").alias("src"),
-                                F.coalesce(F.col("o_iri"), F.col("o_lex")).alias("dst")))
+                        .select(F.col("s").alias("src"), _path_node().alias("dst")))
             if path.inverse:
                 inv = (g.filter(~F.col("p").isin([i.value for i in path.inverse]))
-                        .select(F.coalesce(F.col("o_iri"), F.col("o_lex")).alias("src"),
-                                F.col("s").alias("dst")))
+                        .select(_path_node().alias("src"), F.col("s").alias("dst")))
                 out = inv if out is None else out.unionByName(inv)
             return out
         if isinstance(path, A.PathZeroOrOne):
@@ -1944,56 +1974,56 @@ class Compiler:
         delta's count(), which doubles as the action materializing it into
         the cache — ONE driver job decides the round (the union checkpoint
         then reads the cached delta), instead of a separate
-        checkpoint-then-isEmpty pair."""
+        checkpoint-then-isEmpty pair. The rounds' jobs are named
+        ``otit:kleene``."""
         import logging
 
-        paths = edges.distinct().localCheckpoint()
-        rounds = 0
-        for _ in range(max_iter):
-            nxt = (paths.withColumnRenamed("dst", "mid")
-                   .join(paths.withColumnRenamed("src", "mid"), "mid")
-                   .select("src", "dst")
-                   .distinct())
-            new = nxt.join(paths, ["src", "dst"], "left_anti").persist()
-            n_new = new.count()  # the materializing action IS the check
-            if n_new == 0:
+        with job_description(self.spark, "otit:kleene"):
+            paths = edges.distinct().localCheckpoint()
+            rounds = 0
+            for _ in range(max_iter):
+                nxt = (paths.withColumnRenamed("dst", "mid")
+                       .join(paths.withColumnRenamed("src", "mid"), "mid")
+                       .select("src", "dst")
+                       .distinct())
+                new = nxt.join(paths, ["src", "dst"], "left_anti").persist()
+                n_new = new.count()  # the materializing action IS the check
+                if n_new == 0:
+                    new.unpersist()
+                    break
+                rounds += 1
+                paths = paths.unionByName(new).localCheckpoint()
                 new.unpersist()
-                break
-            rounds += 1
-            paths = paths.unionByName(new).localCheckpoint()
-            new.unpersist()
-        else:  # a silent truncation would be a wrong answer, not a slow one
-            raise RuntimeError(
-                f"property-path closure did not converge in {max_iter} "
-                f"doubling rounds (graph diameter > 2^{max_iter}); raise "
-                "max_iter")
+            else:  # a silent truncation would be a wrong answer, not a slow one
+                raise RuntimeError(
+                    f"property-path closure did not converge in {max_iter} "
+                    f"doubling rounds (graph diameter > 2^{max_iter}); raise "
+                    "max_iter")
         logging.getLogger(__name__).info(
             "kleene closure converged in %d doubling rounds", rounds)
         return paths
 
-    def _compile_path_triple(self, tp: A.TriplePattern) -> SolutionMapping:
-        pairs = self._path_pairs(tp.p)
-        vars2: dict[str, VarMeta] = {}
-        df = pairs
-        cols = []
-        if isinstance(tp.s, Variable):
-            cols.append(F.col("src").alias(tp.s.name))
-            vars2[tp.s.name] = VarMeta("term")
-        else:
-            df = df.filter(F.col("src") == (tp.s.value if isinstance(tp.s, IRI) else str(tp.s)))
-        if isinstance(tp.o, Variable):
-            if tp.o.name in vars2:
-                df = df.filter(F.col("dst") == F.col("src"))
-            else:
-                cols.append(F.col("dst").alias(tp.o.name))
-                vars2[tp.o.name] = VarMeta("term")
-        elif isinstance(tp.o, Literal):
-            df = df.filter(F.col("dst") == tp.o.lexical)
-        else:
-            df = df.filter(F.col("dst") == tp.o.value)
-        return SolutionMapping(df.select(*cols), vars2)
-
     # -- filter / extend -------------------------------------------------------
+
+    def _exists_inner(self, node: A.EExists, sm: SolutionMapping
+                      ) -> tuple[SolutionMapping, list[str]]:
+        """An EXISTS pattern compiled standalone, behind a scope barrier
+        (an outer bound restricting a chain inside it would change
+        membership, not just fetch volume), and the variables it shares
+        with ``sm``."""
+        self._filter_scopes.append(None)
+        try:
+            inner = self.compile_pattern(node.pattern, None)
+        finally:
+            self._filter_scopes.pop()
+        return inner, [v for v in inner.vars
+                       if v in sm.vars and not v.startswith("__")]
+
+    def _nonempty(self, inner: SolutionMapping) -> bool:
+        """An uncorrelated EXISTS: one job (``otit:exists-empty``) at plan
+        build."""
+        with job_description(self.spark, "otit:exists-empty"):
+            return not inner.df.isEmpty()
 
     def resolve_exists(self, sm: SolutionMapping, expr: A.Expr
                        ) -> tuple[SolutionMapping, dict[int, Column], list[str]]:
@@ -2018,30 +2048,18 @@ class Compiler:
         exists_cols: dict[int, Column] = {}
         flags: list[str] = []
         for node in exists_nodes:
-            # same barrier as the EExists fast path: membership tests must
-            # see the UNRESTRICTED chain
-            self._filter_scopes.append(None)
-            try:
-                inner = self.compile_pattern(node.pattern, None)
-            finally:
-                self._filter_scopes.pop()
-            shared = [v for v in inner.vars if v in sm.vars and not v.startswith("__")]
+            inner, shared = self._exists_inner(node, sm)
             if not shared:
-                nonempty = not inner.df.isEmpty()
-                exists_cols[id(node)] = F.lit(nonempty)
+                exists_cols[id(node)] = F.lit(self._nonempty(inner))
                 continue
+            # a flag per distinct key: left-joined, each row of sm is
+            # flagged when some inner row matches it
             flag = self.fresh("exists")
-            keys = replace(inner,
-                           df=inner.df.select(*[c for v in shared
-                                                for c in [v, *inner.aux_cols(v)]])
-                                     .dropDuplicates(shared)
-                                     .withColumn(flag, F.lit(True)),
-                           vars={**{v: inner.vars[v] for v in shared},
-                                 flag: VarMeta("native", "bool")},
-                           dt_vars={v for v in inner.dt_vars if v in shared},
-                           lang_vars={v for v in inner.lang_vars if v in shared},
-                           ts_chains={})
-            sm = self.join_solutions(sm, keys, how="left")
+            sm, inner = _align(sm, inner, shared)
+            ldf, rdf, keys = _join_keys(sm, inner, shared)
+            hits = rdf.select(*keys).distinct().withColumn(flag, F.lit(True))
+            sm = replace(sm, df=ldf.join(hits, on=keys, how="left")
+                         .drop(*set(keys) - set(shared)))
             exists_cols[id(node)] = F.coalesce(F.col(flag), F.lit(False))
             flags.append(flag)
         return sm, exists_cols, flags
@@ -2052,32 +2070,23 @@ class Compiler:
         # does a row-id membership test; Spark's LeftSemi/LeftAnti avoid both
         # the row id and the dedup+outer-join of the general flag path).
         if isinstance(expr, A.EExists):
-            # barrier: restricting a chain inside [NOT] EXISTS by an outer
-            # bound would change membership, not just fetch volume
-            self._filter_scopes.append(None)
-            try:
-                inner = self.compile_pattern(expr.pattern, None)
-            finally:
-                self._filter_scopes.pop()
-            shared = [v for v in inner.vars
-                      if v in sm.vars and not v.startswith("__")]
+            inner, shared = self._exists_inner(expr, sm)
             if shared:
-                how = "left_anti" if expr.negated else "left_semi"
-                ldf, rdf, keys = _match_keys(sm, inner, shared)
-                df = ldf.join(rdf, on=keys, how=how)
+                sm, inner = _align(sm, inner, shared)
+                ldf, rdf, keys = _join_keys(sm, inner, shared)
+                df = ldf.join(rdf.select(*keys), on=keys,
+                              how="left_anti" if expr.negated else "left_semi")
                 return replace(sm, df=df.drop(*set(keys) - set(shared)))
-            nonempty = not inner.df.isEmpty()
-            keep = (not nonempty) if expr.negated else nonempty
+            keep = self._nonempty(inner) != expr.negated
             return sm if keep else replace(sm, df=sm.df.limit(0))
         sm2, exists_cols, flags = self.resolve_exists(sm, expr)
         cond = compile_expr(expr, sm2, exists_cols)
         df = sm2.df.filter(_as_bool(cond))   # SPARQL EBV, not a bare cast
         for p in self._partition_prune_predicates(sm2, expr):
             df = df.filter(p)
-        for flag in flags:
-            df = df.drop(flag)
-        vars2 = {v: m for v, m in sm2.vars.items() if v not in flags}
-        return replace(sm2, df=df, vars=vars2)
+        if flags:
+            df = df.drop(*flags)
+        return replace(sm2, df=df)
 
     def _partition_prune_predicates(self, sm: SolutionMapping,
                                     expr: A.Expr) -> list[Column]:
@@ -2158,11 +2167,10 @@ class Compiler:
         sm2, exists_cols, flags = self.resolve_exists(sm, expr)
         t = compile_expr(expr, sm2, exists_cols)
         df = sm2.df.withColumn(var, t.col)
-        for flag in flags:
-            df = df.drop(flag)
-        vars2 = {v: m for v, m in sm2.vars.items() if v not in flags}
-        vars2[var] = VarMeta("native", t.hint or "string")
-        return replace(sm2, df=df, vars=vars2)
+        if flags:
+            df = df.drop(*flags)
+        return replace(sm2, df=df, vars={
+            **sm2.vars, var: VarMeta("native", t.hint or "string")})
 
     # -- optional / minus -------------------------------------------------------
 
@@ -2216,16 +2224,10 @@ class Compiler:
             self._filter_scopes.pop()
         if p.expr is not None:
             right = self.apply_filter(right, p.expr)
-        matched = right
-        unmatched_df = left2.df.join(matched.df.select(RID).distinct(), RID, "left_anti")
-        un_sm = replace(left2, df=unmatched_df)
-        m_sm, un_sm = self.harmonize_for_union(matched, un_sm)
-        df = m_sm.df.unionByName(un_sm.df, allowMissingColumns=True).drop(RID)
-        vars2 = dict(m_sm.vars)
-        vars2.update({k: v for k, v in un_sm.vars.items() if k not in vars2})
-        return SolutionMapping(df, vars2, m_sm.dt_vars | un_sm.dt_vars,
-                               m_sm.lang_vars | un_sm.lang_vars,
-                               {**un_sm.ts_chains, **m_sm.ts_chains})
+        unmatched = replace(left2, df=left2.df.join(
+            right.df.select(RID).distinct(), RID, "left_anti"))
+        out = _union(right, unmatched)
+        return replace(out, df=out.df.drop(RID))
 
     def _leftjoin_rebind_fastpath(self, left: SolutionMapping,
                                   p: A.LeftJoin) -> SolutionMapping | None:
@@ -2295,15 +2297,14 @@ class Compiler:
         variables resolve to the left columns (equal on matched rows),
         right-only variables to the right columns."""
         shared = [v for v in left.vars if v in right.vars]
-        left, right = self._coerce_join_keys(left, right, shared)
-        ident = _identity_vars(left, right, shared)
-        ldf = left.df.select("*", *[_term_key(left, v).alias(f"__lk_{v}")
-                                    for v in ident])
-        rdf = right.df.select("*", *[_term_key(right, v).alias(f"__rk_{v}")
-                                     for v in ident])
-        # rename right shared-var columns out of the way; drop aux/extra dups
+        left, right = _align(left, right, shared)
+        ldf, rdf, keys = _join_keys(left, right, shared)
+        # right's shared bindings leave the filter's scope: a term-keyed
+        # one is a function of its key, a plain one becomes its key
+        # ``__tk_<v>``; drop aux/extra dups
+        rdf = rdf.drop(*[v for v, k in zip(shared, keys) if k != v]) \
+                 .withColumnsRenamed({v: f"__tk_{v}" for v in keys if v in shared})
         for v in shared:
-            rdf = rdf.withColumnRenamed(v, f"__rj_{v}")
             for aux in right.aux_cols(v):
                 if aux in left.df.columns:
                     rdf = rdf.drop(aux)
@@ -2318,13 +2319,10 @@ class Compiler:
             left.lang_vars | {v for v in right.lang_vars if v not in shared},
         )
         cond = _as_bool(compile_expr(expr, merged))   # SPARQL EBV
-        for v in shared:
-            eq = (F.col(f"__lk_{v}") == F.col(f"__rk_{v}") if v in ident
-                  else F.col(v) == F.col(f"__rj_{v}"))
-            cond = eq & cond
-        df = ldf.join(rdf, cond, "left")
-        df = df.drop(*[f"__rj_{v}" for v in shared],
-                     *[f"__{k}k_{v}" for v in ident for k in "lr"])
+        for v, k in zip(shared, keys):
+            cond = (F.col(f"__l.{k}") == F.col(f"__r.__tk_{v}")) & cond
+        df = ldf.alias("__l").join(rdf.alias("__r"), cond, "left") \
+                .drop(*[f"__tk_{v}" for v in shared])
         vars2 = dict(right.vars)
         vars2.update(left.vars)
         dt = set(left.dt_vars) | {v for v in right.dt_vars if f"{v}__dt" in df.columns}
@@ -2367,16 +2365,11 @@ class Compiler:
                   if v in left.vars and not v.startswith("__")]
         if not shared:
             return left
-        right2 = right
-        for v in shared:
-            lm, rm = left.vars[v], right2.vars[v]
-            if lm.kind == "native" and rm.kind == "term":
-                right2 = _cast_var_to_native(right2, v, lm.hint or "string")
-            elif lm.kind == "term" and rm.kind == "native":
-                left = _cast_var_to_native(left, v, rm.hint or "string")
-        # shared values compare as RDF terms (_match_keys): "x" never
+        # shared values compare as RDF terms (_join_keys): "x" never
         # removes <x>
-        ldf, rdf, keys = _match_keys(left, right2, shared)
+        left, right = _align(left, right, shared)
+        ldf, rdf, keys = _join_keys(left, right, shared)
+        rdf = rdf.select(*keys)
         added = set(keys) - set(shared)
         if len(shared) == 1:
             # single shared var: compatibility = equality, and a left-unbound

@@ -313,3 +313,28 @@ def test_from_merged_catalog_same_datatype_different_counts(spark):
         SELECT ?o FROM <urn:g1> FROM <urn:g2>
         WHERE { ?s <urn:p> ?o } ORDER BY ?o""")
     assert [r["o"] for r in out.collect()] == [1.5, 2.5, 3.5]
+
+
+def test_graph_variable_union_reconciles_datatypes(spark):
+    """GRAPH ?g unions its branches like UNION: two graphs whose objects
+    have different datatypes give a mixed variable, which raises under
+    strict types and otherwise yields the UNION's rows."""
+    import pytest as _pytest
+    from otit_swt_spark import Engine, GraphStore
+    from otit_swt_spark.engine import InconsistentDatatype
+
+    eng = Engine(spark, GraphStore(spark))
+    eng.register_named_graph("urn:g1", GraphStore.from_sparql_insert(spark, """
+        PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+        INSERT DATA { <urn:a> <urn:v> "5"^^xsd:integer }"""))
+    eng.register_named_graph("urn:g2", GraphStore.from_sparql_insert(
+        spark, 'INSERT DATA { <urn:b> <urn:v> "x" }'))
+    graph_q = "SELECT ?s ?o WHERE { GRAPH ?g { ?s <urn:v> ?o } }"
+    union_q = """SELECT ?s ?o WHERE { { GRAPH <urn:g1> { ?s <urn:v> ?o } }
+                                      UNION { GRAPH <urn:g2> { ?s <urn:v> ?o } } }"""
+    for q in (graph_q, union_q):
+        with _pytest.raises(InconsistentDatatype):
+            eng.query(q)
+    eng.strict_types = False
+    assert sorted(eng.query(graph_q).collect()) == sorted(
+        eng.query(union_q).collect())

@@ -253,10 +253,10 @@ def test_id_overflow_reads_ids_from_the_overflowed_rows(engine, monkeypatch):
 
 
 def test_plan_cache_cleared_on_every_mutation(spark):
-    """Prepared plans are graph- and registry-dependent: every mutation
-    (graph swap, ts table, SERVICE endpoint, named graph, SPARQL Update)
-    must drop them, or a repeated query text reuses a plan built against
-    the old state."""
+    """Prepared plans are graph- and registry-dependent: after every
+    mutation (graph swap, ts table, SERVICE endpoint, named graph, SPARQL
+    Update, triples added to the default or a named graph) a repeated
+    query text gets a new plan, not one built against the old state."""
     from otit_swt_spark.engine import Engine
     from otit_swt_spark.graph import GraphStore
     from otit_swt_spark.timeseries import in_memory_timeseries
@@ -264,6 +264,8 @@ def test_plan_cache_cleared_on_every_mutation(spark):
 
     pdf = pd.DataFrame({"timestamp": pd.to_datetime(["2022-01-01"]),
                         "value": [1.0]})
+    added = GraphStore.from_sparql_insert(
+        spark, 'INSERT DATA { <http://ex/b> <http://ex/p> "y" }').df
     eng = Engine(spark, GraphStore(spark))
     mutations = {
         "set_graph": lambda: eng.set_graph(GraphStore(spark)),
@@ -275,13 +277,18 @@ def test_plan_cache_cleared_on_every_mutation(spark):
             "http://ex/g", GraphStore(spark)),
         "update": lambda: eng.update(
             'INSERT DATA { <http://ex/a> <http://ex/p> "x" }'),
+        "add_triples_df": lambda: eng.graph.add_triples_df(added),
+        "named add_triples_df": lambda: eng.named_graphs[
+            "http://ex/g"].add_triples_df(added),
     }
     q = "SELECT ?s WHERE { ?s <http://ex/p> ?o }"
     for name, mutate in mutations.items():
-        eng.query(q)
-        assert q in eng._plan_cache, name
+        plan = eng.query(q)
+        assert eng.query(q) is plan, name
         mutate()
-        assert eng._plan_cache == {}, name
+        assert eng.query(q) is not plan, name
+    assert sorted(r["s"] for r in eng.query(q).collect()) == [
+        "http://ex/a", "http://ex/b"]
 
 
 def test_plan_cache_keeps_most_recent_plans(spark, monkeypatch):

@@ -263,6 +263,63 @@ def test_exists_and_minus_still_match_equal_terms(lexical_twins_eng):
         ("urn:d",)]
     assert q("?a <urn:mix> ?x FILTER NOT EXISTS { ?b <urn:link> ?x }") == [
         ("urn:e",)]
+    # outside the semi/anti-join fast path too: an inner row per term, not
+    # per lexical form, so "urn:x" and <urn:x> each find their twin
+    both = [("urn:d",), ("urn:e",)]
+    assert q("?a <urn:mix> ?x FILTER(EXISTS { ?b <urn:mix> ?x } || false)") \
+        == both
+    assert q("?a <urn:mix> ?x FILTER(!EXISTS { ?b <urn:mix> ?x } && true)") \
+        == []
+    assert q("?a <urn:mix> ?x BIND(EXISTS { ?b <urn:mix> ?x } AS ?e) "
+             "FILTER(?e)") == both
+
+
+def test_values_join_plan_build_runs_no_job(lexical_twins_eng):
+    """Whether a VALUES column holds UNDEF is read from its rows: once
+    the store is warm, building the plan of a VALUES join runs no Spark
+    job."""
+    eng = lexical_twins_eng
+    q = 'SELECT ?a WHERE { ?a <urn:mix> ?x . VALUES ?x { "urn:x" } }'
+    sc = eng.spark.sparkContext
+    eng.query(q)
+    eng._plan_cache.pop(q, None)
+    group = "test-values-plan-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = eng.query(q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert [tuple(r) for r in df.collect()] == [("urn:e",)]
+
+
+@pytest.fixture(scope="module")
+def path_eng(spark):
+    """Literal objects at the end of property paths."""
+    return Engine(spark, GraphStore.from_sparql_insert(spark, """
+        PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+        INSERT DATA {
+            <urn:a> <urn:p> <urn:b> .
+            <urn:b> <urn:name> "n"^^<urn:dt> .
+            <urn:s> <urn:q> "1" .
+            <urn:t> <urn:q> <urn:u> .
+            <urn:u> <urn:q> "1"^^xsd:integer .
+        }"""))
+
+
+def test_path_object_binds_like_graph_object(path_eng):
+    """A property path's object carries its datatype and language, and a
+    constant literal object matches lexical form and datatype, as in a
+    plain triple pattern."""
+    got = path_eng.query("""
+        SELECT ?s ?o (DATATYPE(?o) AS ?d) (isLiteral(?o) AS ?l)
+        WHERE { ?s (<urn:p>/<urn:name>)+ ?o }""").collect()
+    assert [tuple(r) for r in got] == [("urn:a", "n", "urn:dt", True)]
+    for pattern, want in [("<urn:q>+", ["urn:t", "urn:u"]), ("<urn:q>", ["urn:u"])]:
+        got = path_eng.query(f"""
+            PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+            SELECT ?s WHERE {{ ?s {pattern} "1"^^xsd:integer }}""").collect()
+        assert sorted(r["s"] for r in got) == want, pattern
 
 
 def test_values_datetime_cell_is_a_timestamp(eng):
