@@ -67,9 +67,10 @@ class Engine:
         #: Results are NOT cached — the DataFrame is lazy, but a bounded
         #: Flight read is inlined into it. Holds at most PLAN_CACHE_MAX
         #: plans, all compiled against the triple frames in _plan_frames:
-        #: a query that finds any store's ``df`` replaced (set_graph,
-        #: update, GraphStore.add_triples_df) clears it first, and
-        #: registering a TS table, service or named graph clears it.
+        #: a query that finds any store's ``df`` replaced or a store added
+        #: (set_graph, update, GraphStore.add_triples_df, register_service,
+        #: register_named_graph) clears it first, and adding a TS table
+        #: clears it.
         self._plan_cache: OrderedDict[str, DataFrame] = OrderedDict()
         self._plan_frames: list[DataFrame] = []
 
@@ -95,7 +96,6 @@ class Engine:
         if isinstance(graph, DataFrame):
             graph = GraphStore(self.spark, graph)
         self.services[endpoint_iri] = graph
-        self._plan_cache.clear()
         return self
 
     def register_named_graph(self, graph_iri: str, graph: "GraphStore | DataFrame") -> "Engine":
@@ -106,7 +106,6 @@ class Engine:
         if isinstance(graph, DataFrame):
             graph = GraphStore(self.spark, graph)
         self.named_graphs[graph_iri] = graph
-        self._plan_cache.clear()
         return self
 
     # -- entry point 1 (reference engine.rs:57-134) -------------------------
