@@ -219,8 +219,7 @@ def _where(id_lhs: str, ids, ts: str, ts_lower, ts_upper, *extra) -> str:
     return f" WHERE {' AND '.join(conds)}" if conds else ""
 
 
-def _value_partials(val: str, agg_cast: str, on: bool,
-                    suffix: str = "") -> str:
+def _value_partials(val: str, agg_cast: str, on: bool, suffix: str) -> str:
     """SUM/MIN/MAX partial columns — typed NULLs when ``on`` is false."""
     return ", ".join(
         f"CAST({f'{fn}({val})' if on else 'NULL'} AS {agg_cast}) "
@@ -277,109 +276,54 @@ def render_grouped_sql(
     identifier_column: str,
     timestamp_column: str,
     value_column: str = "value",
+    value_aggs: list[bool],
     granule: tuple = ("all",),
-    ids: list[str] | None = None,
+    ids: list | None = None,
     ts_lower=None,
     ts_upper=None,
     agg_cast: str = "DOUBLE",
-    value_aggs: bool = True,
 ) -> str:
     """Render the reference's GroupedTimeSeriesQuery
     (timeseries_sql_rewrite.rs:470-560 create_grouped_query, decided by
-    preparing/graph_patterns/group_pattern.rs:18-105) as a remote
-    PARTIAL aggregation: the store groups by (id, time granule) and
-    returns COUNT/SUM/MIN/MAX partials plus each group's MIN(timestamp)
-    as a representative instant — Spark recomputes the exact grouping
-    keys from the representative and re-aggregates, so the remote
-    grouping only has to REFINE the query's granularity, never replicate
-    its expression semantics. Against a remote 100 TB TSDB this is THE
-    downsampling lever: a 10-minute AVG over a year fetches ~52k rows
-    per series instead of every point.
+    preparing/graph_patterns/group_pattern.rs:18-105) over one chain or
+    the synchronized inner join of several (inner_join_selects,
+    :356-428), one chain per ``value_aggs`` flag, as a remote PARTIAL
+    aggregation. Chain ``i`` reads the registered relation as ``c{i}``;
+    chains after the first join ``c0`` on the timestamp. The store
+    groups by (id tuple, time granule) and returns ``id_1..id_n``, each
+    group's MIN(timestamp) as a representative instant, the joined
+    COUNT(*) as ``__gp_cnt`` and per-chain ``__gp_n/sum/min/max_<i>``
+    partials. Spark recomputes the exact grouping keys from the
+    representative and re-aggregates, so the remote grouping only has to
+    REFINE the query's granularity, never replicate its expression
+    semantics. COUNT(*) counts JOINED rows, so duplicate timestamps
+    multiply exactly as a Spark-side synchronized join multiplies them.
+    Against a remote 100 TB TSDB this is THE downsampling lever: a
+    10-minute AVG over a year fetches ~52k rows per series instead of
+    every point.
 
-    Unlike render_restricted_sql's implied-by bounds, ``ts_lower`` /
+    ``ids`` pins the chain identities: bare ids for one chain
+    (``c0."id" IN (...)``), ``(id_1..id_n)`` tuples for several (a
+    row-value IN list, PostgreSQL/DuckDB dialect). Unlike
+    render_restricted_sql's implied-by bounds, ``ts_lower`` /
     ``ts_upper`` arrive as ``(value, strict)`` pairs and render EXACTLY:
     a relaxed bound would fold out-of-window boundary points into
     surviving groups' partials, which no Spark-side re-filter could
     undo.
 
-    granule: ``("all",)`` — one row per id; ``("bucket", K)`` —
+    granule: ``("all",)`` — one row per id tuple; ``("bucket", K)`` —
     FLOOR(epoch/K) tumbling buckets (K whole seconds, epoch-aligned like
     the engine's DateTimeAsSeconds bucketing); ``("trunc", unit)`` —
     DATE_TRUNC calendar buckets. All forms are plain ANSI/PostgreSQL
     SQL a Dremio/DuckDB/PG-dialect Flight store executes as-is.
 
-    A count-only query (``value_aggs`` false: COUNT(*)/COUNT(v), incl.
+    A chain whose flag is false (COUNT(*)/COUNT(v) only, incl.
     value-less chains) renders NULL partials instead of SUM/MIN/MAX
     casts — against a VARCHAR value column those would hard-error
     remotely for no benefit."""
     qid, qts = _ident(identifier_column), _ident(timestamp_column)
     qval = _ident(value_column)
-    keys = ", ".join([qid, *_granule_key(granule, qts)])
-    return (
-        f"SELECT {qid}, MIN({qts}) AS {qts}, "
-        f'CAST(COUNT(*) AS BIGINT) AS "__gp_cnt", '
-        f'CAST(COUNT({qval}) AS BIGINT) AS "__gp_n", '
-        f"{_value_partials(qval, agg_cast, value_aggs)} "
-        f"FROM ({base_query}) ts_pushdown"
-        f"{_where(qid, ids, qts, ts_lower, ts_upper)} GROUP BY {keys}")
-
-
-def render_grouped_probe_sql(
-    base_query: str,
-    *,
-    identifier_column: str,
-    timestamp_column: str,
-    granule: tuple,
-    ids: list[str] | None = None,
-    ts_lower=None,
-    ts_upper=None,
-) -> str:
-    """One-row cost probe for the grouped pushdown: how many points does
-    the restricted window hold, and how many (id, granule) groups would
-    the grouped form return? Rendered over the IDENTICAL restriction and
-    grouping keys as :func:`render_grouped_sql` (same bounds strictness,
-    same bucket arithmetic), so the comparison is exact. Plain ANSI SQL —
-    the same dialect envelope as the grouped query itself."""
-    qid, qts = _ident(identifier_column), _ident(timestamp_column)
-    keys = ", ".join([qid, *_granule_key(granule, qts)])
-    return (
-        'SELECT CAST(COALESCE(SUM("__pp_cnt"), 0) AS BIGINT) AS "__pts", '
-        'CAST(COUNT(*) AS BIGINT) AS "__bkts" FROM ('
-        f'SELECT COUNT(*) AS "__pp_cnt" FROM ({base_query}) ts_pushdown'
-        f"{_where(qid, ids, qts, ts_lower, ts_upper)} "
-        f"GROUP BY {keys}) ts_probe")
-
-
-def render_sync_grouped_sql(
-    base_query: str,
-    *,
-    identifier_column: str,
-    timestamp_column: str,
-    value_column: str = "value",
-    n_chains: int,
-    value_aggs: list[bool],
-    granule: tuple = ("all",),
-    id_tuples: list[tuple] | None = None,
-    ts_lower=None,
-    ts_upper=None,
-    agg_cast: str = "DOUBLE",
-) -> str:
-    """Render the SYNCHRONIZED grouped pushdown: the store inner-joins
-    the registered relation against itself on the timestamp (the
-    reference's inner_join_selects, timeseries_sql_rewrite.rs:356-428),
-    pins the chain identities to the (id_1..id_n) tuples the static
-    side binds — a row-value IN list, PostgreSQL/DuckDB dialect — and
-    aggregates per-chain COUNT/SUM/MIN/MAX partials per (tuple,
-    granule) exactly like render_grouped_sql. COUNT(*) counts JOINED
-    rows, so duplicate timestamps multiply precisely as the engine's
-    Spark-side synchronized join multiplies them."""
-    if n_chains < 2:
-        raise ValueError("sync grouped render needs >= 2 chains")
-    if len(value_aggs) != n_chains:
-        raise ValueError("value_aggs must have one flag per chain")
-    qid, qts = _ident(identifier_column), _ident(timestamp_column)
-    qval = _ident(value_column)
-    chains = range(n_chains)
+    chains = range(len(value_aggs))
     id_cols = [f"c{i}.{qid}" for i in chains]
     sel = [f'{c} AS "id_{i + 1}"' for i, c in enumerate(id_cols)]
     sel.append(f"MIN(c0.{qts}) AS {qts}")
@@ -390,8 +334,8 @@ def render_sync_grouped_sql(
                                    f"_{i + 1}"))
     joins = "".join(f" JOIN ({base_query}) c{i} ON c{i}.{qts} = c0.{qts}"
                     for i in chains if i)
-    where = _where("(" + ", ".join(id_cols) + ")", id_tuples, f"c0.{qts}",
-                   ts_lower, ts_upper)
+    id_lhs = id_cols[0] if len(id_cols) == 1 else f"({', '.join(id_cols)})"
+    where = _where(id_lhs, ids, f"c0.{qts}", ts_lower, ts_upper)
     keys = ", ".join([*id_cols, *_granule_key(granule, f"c0.{qts}")])
     return (f"SELECT {', '.join(sel)} FROM ({base_query}) c0{joins}"
             f"{where} GROUP BY {keys}")
@@ -504,96 +448,57 @@ class FlightTimeSeriesTable(TimeSeriesTable):
         return self._normalize(self._read(spark, sql))
 
     def grouped_restricted_normalized(self, spark: SparkSession, *,
+                                      value_aggs: list[bool],
                                       granule: tuple,
-                                      ids: list[str] | None = None,
+                                      ids: list | None = None,
                                       ts_lower=None, ts_upper=None,
-                                      agg_type: str = "double",
-                                      value_aggs: bool = True):
-        """Execute the grouped pushdown on the remote store — one row
-        per (id, granule) crosses the wire instead of one per point.
-        The value column is NULL-typed: _analyze_group_pushdown proved
-        nothing downstream reads it, every consumer aggregates the
-        partial columns instead."""
+                                      agg_type: str = "double"):
+        """Execute the grouped pushdown (render_grouped_sql) on the
+        remote store — one row per (id tuple, granule) crosses the wire
+        instead of one point stream per chain. Date partitions are the
+        store's own business, so the ``__part_*`` columns are NULL."""
         cast = _SQL_AGG_TYPE.get(agg_type)
         if cast is None:
             return None
-        # Cost model: a sub-point-interval bucket
-        # (or a calendar trunc finer than the sampling rate) makes
-        # buckets ~= points, and the grouped form then ships as many —
-        # and WIDER — rows than the raw fetch. One cheap remote COUNT
-        # probe over the identical restriction decides; on opt-out the
-        # caller falls back to the (always-correct) point fetch.
-        # granule ("all",) is one row per id — always worthwhile.
+        sql = render_grouped_sql(
+            self.base_query,
+            identifier_column=self.identifier_column,
+            timestamp_column=self.timestamp_column,
+            value_column=self.value_column,
+            value_aggs=value_aggs, granule=granule, ids=ids,
+            ts_lower=ts_lower, ts_upper=ts_upper, agg_cast=cast)
+        # Cost model: a sub-point-interval bucket (or a calendar trunc
+        # finer than the sampling rate) makes buckets ~= points, and the
+        # grouped form then ships as many — and WIDER — rows than the
+        # point fetch. One remote aggregate over the grouped query itself
+        # (same restriction and keys by construction; the store drops
+        # the unread partials) decides; on opt-out the caller falls back
+        # to the (always-correct) point fetch. granule ("all",) is one
+        # row per id tuple — always worthwhile.
         if granule[0] != "all":
             try:
-                probe = self._probe_one_row(render_grouped_probe_sql(
-                    self.base_query,
-                    identifier_column=self.identifier_column,
-                    timestamp_column=self.timestamp_column,
-                    granule=granule, ids=ids,
-                    ts_lower=ts_lower, ts_upper=ts_upper))
+                probe = self._probe_one_row(
+                    'SELECT CAST(SUM("__gp_cnt") AS BIGINT) AS "__pts", '
+                    'CAST(COUNT(*) AS BIGINT) AS "__bkts" '
+                    f"FROM ({sql}) ts_probe")
             except Exception:
                 probe = None  # unprobeable store: keep the pushdown
             if probe is not None and probe["__pts"] and \
                     (probe["__bkts"]
                      > self.GROUPED_PUSHDOWN_MAX_RATIO * probe["__pts"]):
                 return None
-        sql = render_grouped_sql(
-            self.base_query,
-            identifier_column=self.identifier_column,
-            timestamp_column=self.timestamp_column,
-            value_column=self.value_column,
-            granule=granule, ids=ids,
-            ts_lower=ts_lower, ts_upper=ts_upper, agg_cast=cast,
-            value_aggs=value_aggs)
         df = self._read(spark, sql)
-        return df.select(
-            F.col(self.identifier_column).cast("string").alias("id"),
-            F.col(self.timestamp_column).alias("timestamp"),
-            F.lit(None).cast(agg_type).alias("value"),
-            F.lit(None).cast("int").alias("__part_year"),
-            F.lit(None).cast("int").alias("__part_month"),
-            F.lit(None).cast("int").alias("__part_day"),
-            F.col("__gp_cnt").cast("long").alias("__gp_cnt"),
-            F.col("__gp_n").cast("long").alias("__gp_n"),
-            F.col("__gp_sum").cast(agg_type).alias("__gp_sum"),
-            F.col("__gp_min").cast(agg_type).alias("__gp_min"),
-            F.col("__gp_max").cast(agg_type).alias("__gp_max"))
-
-    def sync_grouped_restricted_normalized(self, spark: SparkSession, *,
-                                           n_chains: int,
-                                           value_aggs: list[bool],
-                                           granule: tuple,
-                                           id_tuples: list[tuple],
-                                           ts_lower=None, ts_upper=None,
-                                           agg_type: str = "double"):
-        """Execute the synchronized grouped pushdown remotely — one row
-        per ((id_1..id_n), granule) crosses the wire instead of N point
-        streams. Returns the (id_1..id_n, representative timestamp,
-        __gp_cnt, per-chain partials) frame the compiler's
-        _grouped_pushdown consumes."""
-        cast = _SQL_AGG_TYPE.get(agg_type)
-        if cast is None:
-            return None
-        sql = render_sync_grouped_sql(
-            self.base_query,
-            identifier_column=self.identifier_column,
-            timestamp_column=self.timestamp_column,
-            value_column=self.value_column,
-            n_chains=n_chains, value_aggs=value_aggs,
-            granule=granule, id_tuples=id_tuples,
-            ts_lower=ts_lower, ts_upper=ts_upper, agg_cast=cast)
-        df = self._read(spark, sql)
-        cols = [F.col(f"id_{i + 1}").cast("string").alias(f"id_{i + 1}")
-                for i in range(n_chains)]
+        chains = [str(i + 1) for i in range(len(value_aggs))]
+        cols = [F.col(f"id_{i}").cast("string").alias(f"id_{i}")
+                for i in chains]
         cols.append(F.col(self.timestamp_column).alias("timestamp"))
+        cols += [F.lit(None).cast("int").alias(f"__part_{part}")
+                 for part in ("year", "month", "day")]
         cols.append(F.col("__gp_cnt").cast("long").alias("__gp_cnt"))
-        for i in range(n_chains):
-            cols.append(F.col(f"__gp_n_{i + 1}").cast("long")
-                        .alias(f"__gp_n_{i + 1}"))
-            for k in ("sum", "min", "max"):
-                cols.append(F.col(f"__gp_{k}_{i + 1}").cast(agg_type)
-                            .alias(f"__gp_{k}_{i + 1}"))
+        for i in chains:
+            cols.append(F.col(f"__gp_n_{i}").cast("long").alias(f"__gp_n_{i}"))
+            cols += [F.col(f"__gp_{k}_{i}").cast(agg_type).alias(f"__gp_{k}_{i}")
+                     for k in ("sum", "min", "max")]
         return df.select(*cols)
 
 

@@ -1597,47 +1597,32 @@ class Compiler:
 
         eids = [tj["eid"] for tj in ts_joins]
         ids = self._static_ids(sm, eids, rows)
-        restriction = {"granule": spec["granule"], "agg_type": hint,
-                       "ts_lower": spec["ts_lower"],
-                       "ts_upper": spec["ts_upper"]}
-        if multi:
-            # one store inner-joins its relation against itself on the
-            # timestamp, pinned to the id tuples the static side binds
-            if ids is None:
-                return None
-            df = self.ts_tables[0].sync_grouped_restricted_normalized(
-                self.spark, n_chains=len(eids), value_aggs=value_aggs,
-                id_tuples=ids, **restriction)
-            if df is None:
-                return None
-        else:
-            # the chain's point fetch reuses the ids if a table declines
+        if not multi:  # the chain's point fetch reuses the ids on decline
             ts_joins[0]["probed_ids"] = ids
-            # a union over every table: capable stores aggregate remotely,
-            # the others give one partial row per point, and the union
-            # re-aggregates uniformly and exactly
-            parts = []
-            for t in self.ts_tables:
-                part = t.grouped_restricted_normalized(
-                    self.spark, ids=ids, value_aggs=value_aggs[0],
-                    **restriction)
-                if part is None:
-                    return None
-                parts.append(part)
-            df = functools.reduce(DataFrame.unionByName, parts)
-
-        def col(name: str, i: int) -> Column:
-            # the one-chain frame leaves its columns unnumbered
-            return F.col(f"{name}_{i + 1}" if multi else name)
+        elif ids is None:  # several chains join in the store, pinned to
+            return None    # the id tuples the static side binds
+        # a union over every table: capable stores aggregate remotely,
+        # the others give one chain's partial row per point, and the
+        # union re-aggregates uniformly and exactly
+        parts = []
+        for t in self.ts_tables:
+            part = t.grouped_restricted_normalized(
+                self.spark, value_aggs=value_aggs, granule=spec["granule"],
+                ids=ids, ts_lower=spec["ts_lower"], ts_upper=spec["ts_upper"],
+                agg_type=hint)
+            if part is None:
+                return None
+            parts.append(part)
+        df = functools.reduce(DataFrame.unionByName, parts)
 
         cols = [F.col("timestamp").alias(spec["t"]),
                 F.col("__gp_cnt").alias(spec["cnt_col"])]
         vars2 = {spec["t"]: VarMeta("native", "timestamp"),
                  spec["cnt_col"]: VarMeta("native", "long")}
         infos: dict[str, dict] = {}
-        for i, tj in enumerate(ts_joins):
+        for i, tj in enumerate(ts_joins, 1):
             ch = chains[tj["dp"]]
-            cols.append(col("id", i).alias(tj["eid"]))
+            cols.append(F.col(f"id_{i}").alias(tj["eid"]))
             vars2[tj["eid"]] = VarMeta("native", "string")
             info = infos[tj["dp"]] = {"t": spec["t"]}
             if ch["v"] is not None:
@@ -1649,11 +1634,10 @@ class Compiler:
             # until compile_group's re-aggregation consumes them
             for key in ("n", "sum", "min", "max"):
                 name = ch["cols"][key]
-                cols.append(col(f"__gp_{key}", i).alias(name))
+                cols.append(F.col(f"__gp_{key}_{i}").alias(name))
                 vars2[name] = VarMeta("native",
                                       "long" if key == "n" else hint)
-        if not multi:  # only the one-chain union has partition columns
-            self._carry_date_parts(cols, info)
+        self._carry_date_parts(cols, info)
         spec["fired"] = True
         return self._join_ts(sm, SolutionMapping(df.select(*cols), vars2),
                              eids, infos)
@@ -1840,8 +1824,8 @@ class Compiler:
 
         if isinstance(tp.o, Variable):
             name = tp.o.name
-            if name in vars2:  # ?x p ?x
-                df = df.filter(F.coalesce(F.col("o_iri"), F.col("o_lex")) == F.col("s"))
+            if name in vars2:  # ?x p ?x: a literal object is never the subject
+                df = df.filter(F.col("o_iri") == F.col("s"))
             else:
                 cols.append(F.coalesce(F.col("o_iri"), F.col("o_lex")).alias(name))
                 meta = self._object_meta(pred)
@@ -1855,15 +1839,15 @@ class Compiler:
                     lang_vars.add(name)
         elif isinstance(tp.o, Literal):
             # RDF term-identity matching: lexical form + datatype + language
-            # all must agree. A plain "foo" (xsd:string, no tag) does NOT
-            # match "foo"@en and vice versa (RDF 1.1 §3.3).
+            # all must agree. A plain "foo" (xsd:string, no tag) matches
+            # neither "foo"@en nor "foo"^^<dt> (RDF 1.1 §3.3).
             df = df.filter(F.col("o_lex") == tp.o.lexical)
             if tp.o.language:
                 df = df.filter(F.lower(F.col("o_lang")) == tp.o.language.lower())
             else:
-                df = df.filter(F.col("o_lang").isNull())
-                if tp.o.datatype and tp.o.datatype != XSD_STRING:
-                    df = df.filter(F.col("o_dt") == tp.o.datatype)
+                df = df.filter(F.col("o_lang").isNull() & (
+                    F.coalesce(F.col("o_dt"), F.lit(XSD_STRING))
+                    == (tp.o.datatype or XSD_STRING)))
         else:
             df = df.filter(F.col("o_iri") == (tp.o.value if isinstance(tp.o, IRI) else str(tp.o)))
 
@@ -1953,10 +1937,12 @@ class Compiler:
         raise NotImplementedError(f"path {type(path).__name__}")
 
     def _graph_nodes(self) -> DataFrame:
+        """The zero-length path pairs: every subject and every object of
+        the graph, literals included (SPARQL 1.1 §18.4), paired with
+        itself."""
         g = self.graph_df
         nodes = (g.select(F.col("s").alias("n"))
-                  .unionByName(g.filter(F.col("o_iri").isNotNull())
-                                .select(F.col("o_iri").alias("n")))
+                  .unionByName(g.select(_path_node().alias("n")))
                   .distinct())
         return nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
 

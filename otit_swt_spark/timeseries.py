@@ -11,12 +11,13 @@ Spark-first: the table is one tall DataFrame ``(id, timestamp, value, ...)``
 timestamp predicates. Every table applies a query's restriction itself:
 the compiler hands each registered table the same external-id list and
 timestamp bounds (``restricted_normalized``) and, under a pushed-down
-GROUP BY, asks for grouped partials (``grouped_restricted_normalized``,
-``sync_grouped_restricted_normalized``). The base class does this with
-Spark filters over its own relation, so for parquet and in-memory tables
-the reference's SQL-translation layer (timeseries_sql_rewrite.rs)
-disappears into the one Spark plan; a remote store (sources/flight.py)
-overrides the methods to render the same restriction into its own SQL.
+GROUP BY, asks for grouped partials over one chain or the synchronized
+join of several (``grouped_restricted_normalized``). The base class does
+this with Spark filters over its own relation (one chain only), so for
+parquet and in-memory tables the reference's SQL-translation layer
+(timeseries_sql_rewrite.rs) disappears into the one Spark plan; a remote
+store (sources/flight.py) overrides both methods to render the same
+restriction, and the N-chain join, into its own SQL.
 """
 
 from __future__ import annotations
@@ -41,12 +42,14 @@ def _utc_lit(dtv: _dt.datetime):
 class TimeSeriesTable:
     """Declares where time-series rows live and which columns carry the
     identifier / timestamp / value, and restricts them per query: the
-    base class with Spark filters, a remote store by overriding the
-    ``*restricted_normalized`` methods."""
+    base class with Spark filters, a remote store by overriding its two
+    methods — ``restricted_normalized`` for points and
+    ``grouped_restricted_normalized`` for the grouped partials of one
+    chain or N synchronized ones."""
 
     #: True when the table can compute grouped partials REMOTELY
-    #: (grouped_restricted_normalized aggregating per (id, granule) in
-    #: the backing store — the reference's GroupedTimeSeriesQuery,
+    #: (grouped_restricted_normalized aggregating per (id tuple, granule)
+    #: in the backing store — the reference's GroupedTimeSeriesQuery,
     #: timeseries_sql_rewrite.rs:470-560). The compiler only analyses a
     #: GROUP BY for pushdown when some registered table can; every table
     #: applies the point restriction regardless.
@@ -135,54 +138,48 @@ class TimeSeriesTable:
         return df
 
     def grouped_restricted_normalized(self, spark: SparkSession, *,
+                                      value_aggs: list[bool],
                                       granule: tuple,
-                                      ids: list[str] | None = None,
+                                      ids: list | None = None,
                                       ts_lower=None, ts_upper=None,
-                                      agg_type: str = "double",
-                                      value_aggs: bool = True):
-        """Grouped partials for a pushed-down GROUP BY (the reference's
-        GroupedTimeSeriesQuery, timeseries_sql_rewrite.rs:470-560):
-        ``(id, timestamp, value, __part_*, __gp_cnt, __gp_n, __gp_sum,
-        __gp_min, __gp_max)`` rows whose COUNT(*) / COUNT / SUM / MIN /
-        MAX the compiler re-aggregates. ``granule`` is ``("all",)``,
-        ``("bucket", K)`` or ``("trunc", unit)``; ``ts_lower`` /
-        ``ts_upper`` are EXACT ``(value, strict)`` bounds. ``value_aggs``
-        false (a count-only query) types the value partials NULL.
+                                      agg_type: str = "double"):
+        """Grouped partials for a pushed-down GROUP BY over one chain per
+        ``value_aggs`` flag (the reference's GroupedTimeSeriesQuery over
+        one basic query or the synchronized join of several,
+        timeseries_sql_rewrite.rs:356-428 + :470-560): ``(id_1..id_n,
+        timestamp, __part_year/month/day, __gp_cnt, __gp_n_<i>,
+        __gp_sum_<i>, __gp_min_<i>, __gp_max_<i>)`` rows whose COUNT(*) /
+        COUNT / SUM / MIN / MAX the compiler re-aggregates. ``ids`` is
+        bare ids for one chain and ``(id_1..id_n)`` tuples for several;
+        ``granule`` is ``("all",)``, ``("bucket", K)`` or ``("trunc",
+        unit)``; ``ts_lower`` / ``ts_upper`` are EXACT ``(value,
+        strict)`` bounds. A false flag (a count-only chain) types that
+        chain's value partials NULL.
 
-        The base class gives one partial row per point of its restricted
-        relation (cnt=1, sum=min=max=value) — a point is the finest
-        granule, and the rows keep their own timestamps, so the relaxed
-        inclusive bounds and the query's re-applied FILTER stay exact.
-        Remote stores override this to aggregate per (id, granule), and
-        return None to decline; the compiler then fetches points."""
+        The base class gives one chain one partial row per point of its
+        restricted relation (cnt=1, sum=min=max=value) — a point is the
+        finest granule, and the rows keep their own timestamps, so the
+        relaxed inclusive bounds and the query's re-applied FILTER stay
+        exact. It has no store to run a synchronized join in and returns
+        None for several chains. Remote stores override this to
+        aggregate per (id tuple, granule), and return None to decline;
+        the compiler then fetches points."""
+        if len(value_aggs) != 1:
+            return None
         df = self.restricted_normalized(
             spark, ids=ids,
             ts_lower=None if ts_lower is None else ts_lower[0],
             ts_upper=None if ts_upper is None else ts_upper[0])
         raw = F.col("value")
-        v = raw.cast(agg_type) if value_aggs else F.lit(None).cast(agg_type)
+        v = raw.cast(agg_type) if value_aggs[0] else F.lit(None).cast(agg_type)
         return df.select(
-            "id", "timestamp", v.alias("value"),
+            F.col("id").alias("id_1"), "timestamp",
             "__part_year", "__part_month", "__part_day",
             F.lit(1).cast("long").alias("__gp_cnt"),
             F.when(raw.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-            .cast("long").alias("__gp_n"),
-            v.alias("__gp_sum"), v.alias("__gp_min"), v.alias("__gp_max"))
-
-    def sync_grouped_restricted_normalized(self, spark: SparkSession, *,
-                                           n_chains: int,
-                                           value_aggs: list[bool],
-                                           granule: tuple,
-                                           id_tuples: list[tuple],
-                                           ts_lower=None, ts_upper=None,
-                                           agg_type: str = "double"):
-        """Remote SYNCHRONIZED grouped fetch for N chains sharing one
-        timestamp variable (reference timeseries_sql_rewrite.rs:356-428
-        inner joins + :470-560 grouping): one row per ((id_1..id_n),
-        granule) carrying joined COUNT(*) and per-chain partials. The
-        base class has no store to run the join in and returns None; the
-        compiler then falls back to per-chain restricted point fetches."""
-        return None
+            .cast("long").alias("__gp_n_1"),
+            v.alias("__gp_sum_1"), v.alias("__gp_min_1"),
+            v.alias("__gp_max_1"))
 
     def value_xsd(self, spark: SparkSession) -> str:
         if self.value_datatype:

@@ -474,8 +474,8 @@ def test_flight_tsq_grouped_pushdown_shrinks_fetch_to_groups(
     # the grouped form renders the STRICT upper bound exactly (a relaxed
     # bound would fold second 59 into the surviving groups' partials)
     assert "\"timestamp\" < TIMESTAMP '2022-06-01 08:46:59'" in remote
-    assert 'GROUP BY "id"' in remote
-    assert "SUM(\"value\")" in remote
+    assert 'GROUP BY c0."id"' in remote
+    assert "SUM(c0.\"value\")" in remote
     # fetch volume: one partial row per group = 2 series
     assert srv.rows_served == 2
 
@@ -765,7 +765,7 @@ def test_flight_pushdown_mixed_with_parquet_table(spark,
     # the GROUP BY pushes to the capable store — one partial row per
     # group (2) crosses the wire, while the parquet side contributes
     # per-point partials through the same re-aggregation
-    assert 'GROUP BY "id"' in srv.queries[-1]
+    assert 'GROUP BY c0."id"' in srv.queries[-1]
     assert srv.rows_served == 2
 
 
@@ -809,7 +809,7 @@ def test_flight_grouped_pushdown_tumbling_bucket(spark,
         b0, b1 = sorted(b for b, _ in by_series[ts_id])
         assert b1 - b0 == 4
     remote = srv.queries[-1]
-    assert 'GROUP BY "id", FLOOR(EXTRACT(EPOCH FROM "timestamp") / 4)' \
+    assert 'GROUP BY c0."id", FLOOR(EXTRACT(EPOCH FROM c0."timestamp") / 4)' \
         in remote
     # 4 partial rows + the 1-row cost probe (r14: the probe decides
     # buckets-vs-points before the grouped fetch fires)
@@ -846,7 +846,8 @@ def test_flight_grouped_pushdown_calendar_trunc(spark,
     assert rows(df) == [("ts1", 2022, 40, 103.5),
                         ("ts2", 2022, 40, 203.5)]
     remote = srv.queries[-1]
-    assert "GROUP BY \"id\", DATE_TRUNC('minute', \"timestamp\")" in remote
+    assert "GROUP BY c0.\"id\", DATE_TRUNC('minute', c0.\"timestamp\")" \
+        in remote
     # 2 partial rows + the 1-row cost probe
     assert srv.rows_served == 3
 
@@ -940,7 +941,9 @@ def test_flight_sync_grouped_pushdown_two_signals(spark,
     assert "(c0.\"id\", c1.\"id\") IN (('ts1', 'ts2'))" in remote
     assert 'GROUP BY c0."id", c1."id", FLOOR(EXTRACT(EPOCH FROM ' \
         'c0."timestamp") / 4)' in remote
-    assert srv.rows_served == 2
+    # 2 partial rows + the 1-row cost probe over the joined grouped query
+    assert srv.rows_served == 3
+    assert any('"__bkts"' in q and "JOIN" in q for q in srv.queries)
 
 
 def test_flight_sync_grouped_pushdown_self_series(spark,
@@ -1016,54 +1019,6 @@ def test_flight_sync_grouped_fallback_mixed_registry(spark,
     assert all("JOIN" not in q for q in srv.queries)
 
 
-def test_render_sync_grouped_sql_text():
-    """Sync-grouped render unit contract: per-chain aliases, the
-    row-tuple IN list, exact strict bounds on c0, per-chain partial
-    columns with NULL value-aggs where unneeded."""
-    import datetime as dt
-
-    from otit_swt_spark.sources.flight import render_sync_grouped_sql
-
-    sql = render_sync_grouped_sql(
-        "SELECT * FROM ts",
-        identifier_column="id", timestamp_column="ts",
-        n_chains=2, value_aggs=[True, False],
-        granule=("bucket", 600),
-        id_tuples=[("a", "b"), ("c", "d")],
-        ts_lower=(dt.datetime(2022, 1, 1), False),
-        ts_upper=(dt.datetime(2022, 1, 2), True),
-        agg_cast="DOUBLE")
-    assert 'JOIN (SELECT * FROM ts) c1 ON c1."ts" = c0."ts"' in sql
-    assert "(c0.\"id\", c1.\"id\") IN (('a', 'b'), ('c', 'd'))" in sql
-    assert 'c0."ts" >= TIMESTAMP' in sql and 'c0."ts" < TIMESTAMP' in sql
-    assert 'CAST(SUM(c0."value") AS DOUBLE) AS "__gp_sum_1"' in sql
-    assert 'CAST(NULL AS DOUBLE) AS "__gp_sum_2"' in sql
-    assert 'GROUP BY c0."id", c1."id", FLOOR(EXTRACT(EPOCH FROM c0."ts") ' \
-        '/ 600)' in sql
-    assert sql == (
-        'SELECT c0."id" AS "id_1", c1."id" AS "id_2", '
-        'MIN(c0."ts") AS "ts", CAST(COUNT(*) AS BIGINT) AS "__gp_cnt", '
-        'CAST(COUNT(c0."value") AS BIGINT) AS "__gp_n_1", '
-        'CAST(SUM(c0."value") AS DOUBLE) AS "__gp_sum_1", '
-        'CAST(MIN(c0."value") AS DOUBLE) AS "__gp_min_1", '
-        'CAST(MAX(c0."value") AS DOUBLE) AS "__gp_max_1", '
-        'CAST(COUNT(c1."value") AS BIGINT) AS "__gp_n_2", '
-        'CAST(NULL AS DOUBLE) AS "__gp_sum_2", '
-        'CAST(NULL AS DOUBLE) AS "__gp_min_2", '
-        'CAST(NULL AS DOUBLE) AS "__gp_max_2" '
-        'FROM (SELECT * FROM ts) c0 '
-        'JOIN (SELECT * FROM ts) c1 ON c1."ts" = c0."ts" '
-        "WHERE (c0.\"id\", c1.\"id\") IN (('a', 'b'), ('c', 'd')) "
-        "AND c0.\"ts\" >= TIMESTAMP '2022-01-01 00:00:00' "
-        "AND c0.\"ts\" < TIMESTAMP '2022-01-02 00:00:00' "
-        'GROUP BY c0."id", c1."id", FLOOR(EXTRACT(EPOCH FROM c0."ts") / 600)')
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        render_sync_grouped_sql(
-            "q", identifier_column="id", timestamp_column="ts",
-            n_chains=1, value_aggs=[True])
-
-
 def test_flight_grouped_pushdown_count_only_valueless_chain(
         spark, flight_pushdown_server):
     """COUNT-only widening: a value-LESS chain (hasDataPoint +
@@ -1089,14 +1044,16 @@ def test_flight_grouped_pushdown_count_only_valueless_chain(
     } GROUP BY ?ts_id""")
     assert rows(df) == [("ts1", 6), ("ts2", 6)]
     remote = srv.queries[-1]
-    assert 'GROUP BY "id"' in remote
+    assert 'GROUP BY c0."id"' in remote
     assert "SUM(" not in remote and 'CAST(NULL AS DOUBLE)' in remote
     assert srv.rows_served == 2
 
 
 def test_render_grouped_sql_text():
-    """Grouped-render unit contract: exact strictness on bounds, the
-    three granule forms, and the fixed partial-column aliases."""
+    """Grouped-render unit contract, one chain and two: per-chain
+    aliases, the bare-id and row-tuple IN lists, exact strict bounds on
+    c0, the granule forms, numbered partial columns with NULL value
+    partials where unneeded."""
     import datetime as dt
 
     from otit_swt_spark.sources.flight import render_grouped_sql
@@ -1104,67 +1061,54 @@ def test_render_grouped_sql_text():
     sql = render_grouped_sql(
         "SELECT * FROM ts",
         identifier_column="id", timestamp_column="timestamp",
-        granule=("bucket", 600),
+        value_aggs=[True], granule=("bucket", 600),
         ids=["b", "a"],
         ts_lower=(dt.datetime(2022, 6, 1, 8, 0, 0), False),
         ts_upper=(dt.datetime(2022, 6, 1, 9, 0, 0), True),
         agg_cast="DOUBLE")
-    assert "\"id\" IN ('a', 'b')" in sql
-    assert "\"timestamp\" >= TIMESTAMP '2022-06-01 08:00:00'" in sql
-    assert "\"timestamp\" < TIMESTAMP '2022-06-01 09:00:00'" in sql
-    assert 'GROUP BY "id", FLOOR(EXTRACT(EPOCH FROM "timestamp") / 600)' \
-        in sql
-    for alias in ("__gp_cnt", "__gp_n", "__gp_sum", "__gp_min", "__gp_max"):
-        assert f'"{alias}"' in sql
-    assert 'MIN("timestamp") AS "timestamp"' in sql
     assert sql == (
-        'SELECT "id", MIN("timestamp") AS "timestamp", '
+        'SELECT c0."id" AS "id_1", MIN(c0."timestamp") AS "timestamp", '
         'CAST(COUNT(*) AS BIGINT) AS "__gp_cnt", '
-        'CAST(COUNT("value") AS BIGINT) AS "__gp_n", '
-        'CAST(SUM("value") AS DOUBLE) AS "__gp_sum", '
-        'CAST(MIN("value") AS DOUBLE) AS "__gp_min", '
-        'CAST(MAX("value") AS DOUBLE) AS "__gp_max" '
-        "FROM (SELECT * FROM ts) ts_pushdown WHERE \"id\" IN ('a', 'b') "
-        "AND \"timestamp\" >= TIMESTAMP '2022-06-01 08:00:00' "
-        "AND \"timestamp\" < TIMESTAMP '2022-06-01 09:00:00' "
-        'GROUP BY "id", FLOOR(EXTRACT(EPOCH FROM "timestamp") / 600)')
+        'CAST(COUNT(c0."value") AS BIGINT) AS "__gp_n_1", '
+        'CAST(SUM(c0."value") AS DOUBLE) AS "__gp_sum_1", '
+        'CAST(MIN(c0."value") AS DOUBLE) AS "__gp_min_1", '
+        'CAST(MAX(c0."value") AS DOUBLE) AS "__gp_max_1" '
+        "FROM (SELECT * FROM ts) c0 WHERE c0.\"id\" IN ('a', 'b') "
+        "AND c0.\"timestamp\" >= TIMESTAMP '2022-06-01 08:00:00' "
+        "AND c0.\"timestamp\" < TIMESTAMP '2022-06-01 09:00:00' "
+        'GROUP BY c0."id", FLOOR(EXTRACT(EPOCH FROM c0."timestamp") / 600)')
 
-    sql2 = render_grouped_sql(
-        "SELECT * FROM ts", identifier_column="id",
-        timestamp_column="ts", granule=("trunc", "minute"))
-    assert "GROUP BY \"id\", DATE_TRUNC('minute', \"ts\")" in sql2
-    assert "WHERE" not in sql2
-
-    sql3 = render_grouped_sql(
-        "SELECT * FROM ts", identifier_column="id",
-        timestamp_column="ts", granule=("all",), agg_cast="BIGINT")
-    assert sql3.rstrip().endswith('GROUP BY "id"')
-    assert "CAST(SUM(\"value\") AS BIGINT)" in sql3
-
-
-def test_render_grouped_probe_sql_text():
-    """Grouped-probe render contract: the point and group counts over
-    the same restriction (exact strictness) and grouping keys the
-    grouped query renders."""
-    import datetime as dt
-
-    from otit_swt_spark.sources.flight import render_grouped_probe_sql
-
-    sql = render_grouped_probe_sql(
+    sql = render_grouped_sql(
         "SELECT * FROM ts",
-        identifier_column="id", timestamp_column="timestamp",
-        granule=("trunc", "minute"),
-        ids=["b", "a"],
-        ts_lower=(dt.datetime(2022, 6, 1, 8, 0, 0), True),
-        ts_upper=(dt.datetime(2022, 6, 1, 9, 0, 0), False))
+        identifier_column="id", timestamp_column="ts",
+        value_aggs=[True, False], granule=("trunc", "minute"),
+        ids=[("c", "d"), ("a", "b")],
+        ts_lower=(dt.datetime(2022, 1, 1), True),
+        ts_upper=(dt.datetime(2022, 1, 2), False),
+        agg_cast="BIGINT")
     assert sql == (
-        'SELECT CAST(COALESCE(SUM("__pp_cnt"), 0) AS BIGINT) AS "__pts", '
-        'CAST(COUNT(*) AS BIGINT) AS "__bkts" FROM ('
-        'SELECT COUNT(*) AS "__pp_cnt" FROM (SELECT * FROM ts) ts_pushdown '
-        "WHERE \"id\" IN ('a', 'b') "
-        "AND \"timestamp\" > TIMESTAMP '2022-06-01 08:00:00' "
-        "AND \"timestamp\" <= TIMESTAMP '2022-06-01 09:00:00' "
-        "GROUP BY \"id\", DATE_TRUNC('minute', \"timestamp\")) ts_probe")
+        'SELECT c0."id" AS "id_1", c1."id" AS "id_2", '
+        'MIN(c0."ts") AS "ts", CAST(COUNT(*) AS BIGINT) AS "__gp_cnt", '
+        'CAST(COUNT(c0."value") AS BIGINT) AS "__gp_n_1", '
+        'CAST(SUM(c0."value") AS BIGINT) AS "__gp_sum_1", '
+        'CAST(MIN(c0."value") AS BIGINT) AS "__gp_min_1", '
+        'CAST(MAX(c0."value") AS BIGINT) AS "__gp_max_1", '
+        'CAST(COUNT(c1."value") AS BIGINT) AS "__gp_n_2", '
+        'CAST(NULL AS BIGINT) AS "__gp_sum_2", '
+        'CAST(NULL AS BIGINT) AS "__gp_min_2", '
+        'CAST(NULL AS BIGINT) AS "__gp_max_2" '
+        'FROM (SELECT * FROM ts) c0 '
+        'JOIN (SELECT * FROM ts) c1 ON c1."ts" = c0."ts" '
+        "WHERE (c0.\"id\", c1.\"id\") IN (('a', 'b'), ('c', 'd')) "
+        "AND c0.\"ts\" > TIMESTAMP '2022-01-01 00:00:00' "
+        "AND c0.\"ts\" <= TIMESTAMP '2022-01-02 00:00:00' "
+        "GROUP BY c0.\"id\", c1.\"id\", DATE_TRUNC('minute', c0.\"ts\")")
+
+    # unrestricted, one row per id
+    sql = render_grouped_sql(
+        "SELECT * FROM ts", identifier_column="id", timestamp_column="ts",
+        value_aggs=[False])
+    assert "WHERE" not in sql and sql.endswith('c0 GROUP BY c0."id"')
 
 
 def _flight_vs_in_memory(spark, srv, query):
@@ -1248,7 +1192,7 @@ def test_flight_grouped_pushdown_strict_offset_bound_exact_utc(
         ?dp otit_swt:hasValue ?v .
         FILTER(?t > "2022-06-01T10:46:55+02:00"^^xsd:dateTime)
     } GROUP BY ?ts_id""")
-    assert 'GROUP BY "id"' in remote
+    assert 'GROUP BY c0."id"' in remote
     assert "\"timestamp\" > TIMESTAMP '2022-06-01 08:46:55'" in remote
     assert got == want == [("ts1", 104.0 + 105 + 106 + 107, 4),
                            ("ts2", 204.0 + 205 + 206 + 207, 4)]
@@ -2702,8 +2646,41 @@ def test_flight_grouped_pushdown_opts_out_when_buckets_near_points(
     # the probe ran, saw bkts == pts, and NO grouped query followed:
     # the last data query is the plain restricted point fetch
     assert any('"__bkts"' in q for q in srv.queries)
-    assert not any("__gp_cnt" in q for q in srv.queries)
     data_queries = [q for q in srv.queries if "__bkts" not in q]
+    assert not any("__gp_cnt" in q for q in data_queries)
     assert "GROUP BY" not in data_queries[-1]
     # wire volume: 16 restricted points + 1 probe row
     assert srv.rows_served == 17
+
+
+def test_flight_sync_grouped_pushdown_opts_out_when_buckets_near_points(
+        spark, flight_pushdown_server):
+    """The cost probe covers a synchronized GROUP BY too: two chains on
+    one series sharing ?t under 1-second buckets make joined rows ==
+    buckets, so the probe over the joined grouped query declines it and
+    each chain takes the restricted point fetch. The answer equals the
+    in-memory engine's."""
+    srv = flight_pushdown_server
+    got, want, _ = _flight_vs_in_memory(spark, srv, """
+    PREFIX otit_swt: <https://github.com/magbak/otit_swt#>
+    PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+    SELECT ?ts_id ?bucket (COUNT(*) AS ?n) (AVG(?v1) AS ?m1)
+           (MAX(?v2) AS ?m2) WHERE {
+        ?ts otit_swt:hasExternalId ?ts_id .
+        ?ts otit_swt:hasDataPoint ?dp1 .
+        ?dp1 otit_swt:hasTimestamp ?t .
+        ?dp1 otit_swt:hasValue ?v1 .
+        ?ts otit_swt:hasDataPoint ?dp2 .
+        ?dp2 otit_swt:hasTimestamp ?t .
+        ?dp2 otit_swt:hasValue ?v2 .
+        BIND(otit_swt:DateTimeAsSeconds(?t) AS ?secs)
+        BIND((xsd:integer(FLOOR(?secs / 1.0)) * 1) AS ?bucket)
+    } GROUP BY ?ts_id ?bucket""")
+    assert len(got) == 16 and all(r[2] == 1 for r in got)
+    assert got == want
+    probes = [q for q in srv.queries if '"__bkts"' in q]
+    assert len(probes) == 1 and "JOIN" in probes[0]
+    data_queries = [q for q in srv.queries if "__bkts" not in q]
+    assert not any("GROUP BY" in q for q in data_queries)
+    # one restricted point fetch per chain
+    assert sum("IN ('ts1', 'ts2')" in q for q in data_queries) == 2

@@ -310,16 +310,34 @@ def path_eng(spark):
 def test_path_object_binds_like_graph_object(path_eng):
     """A property path's object carries its datatype and language, and a
     constant literal object matches lexical form and datatype, as in a
-    plain triple pattern."""
+    plain triple pattern. A zero-length step starts and ends at every
+    node of the graph, a literal object included (SPARQL 1.1 §18.4)."""
     got = path_eng.query("""
         SELECT ?s ?o (DATATYPE(?o) AS ?d) (isLiteral(?o) AS ?l)
         WHERE { ?s (<urn:p>/<urn:name>)+ ?o }""").collect()
     assert [tuple(r) for r in got] == [("urn:a", "n", "urn:dt", True)]
-    for pattern, want in [("<urn:q>+", ["urn:t", "urn:u"]), ("<urn:q>", ["urn:u"])]:
+    for pattern, obj, want in [
+            ("<urn:q>+", '"1"^^xsd:integer', ["urn:t", "urn:u"]),
+            ("<urn:q>", '"1"^^xsd:integer', ["urn:u"]), ("<urn:q>", '"1"', ["urn:s"]),
+            ("<urn:q>*", '"1"^^xsd:integer', ["1", "urn:t", "urn:u"]),
+            ("<urn:p>*", '"1"', ["1"]), ("<urn:p>?", '"1"', ["1"])]:
         got = path_eng.query(f"""
             PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
-            SELECT ?s WHERE {{ ?s {pattern} "1"^^xsd:integer }}""").collect()
+            SELECT ?s WHERE {{ ?s {pattern} {obj} }}""").collect()
         assert sorted(r["s"] for r in got) == want, pattern
+    pairs = {tuple(r) for r in path_eng.query(
+        "SELECT ?x ?y WHERE { ?x <urn:p>* ?y }").collect()}
+    assert {("1", "1"), ("urn:a", "urn:a"), ("urn:a", "urn:b")} <= pairs
+
+
+@pytest.mark.parametrize("pattern", ["<urn:p>", "<urn:p>+"])
+def test_repeated_variable_never_matches_a_literal(spark, pattern):
+    """``?x p ?x`` needs the object to be the subject term itself: the
+    literal "urn:a" is not the IRI <urn:a>."""
+    eng = Engine(spark, GraphStore.from_sparql_insert(spark, """
+        INSERT DATA { <urn:a> <urn:p> "urn:a" . <urn:b> <urn:p> <urn:b> . }"""))
+    got = eng.query(f"SELECT ?x WHERE {{ ?x {pattern} ?x }}").collect()
+    assert [r["x"] for r in got] == ["urn:b"]
 
 
 def test_values_datetime_cell_is_a_timestamp(eng):
