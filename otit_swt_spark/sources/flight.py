@@ -488,7 +488,7 @@ class FlightTimeSeriesTable(TimeSeriesTable):
                      > self.GROUPED_PUSHDOWN_MAX_RATIO * probe["__pts"]):
                 return None
         df = self._read(spark, sql)
-        chains = [str(i + 1) for i in range(len(value_aggs))]
+        chains = range(1, len(value_aggs) + 1)
         cols = [F.col(f"id_{i}").cast("string").alias(f"id_{i}")
                 for i in chains]
         cols.append(F.col(self.timestamp_column).alias("timestamp"))
