@@ -512,16 +512,24 @@ class Engine:
         probe_vars = [v for v in term_vars if v not in dt_of]
         if probe_vars:
             # probe only a prefix — datatype columns are constant per variable
-            # in practice, and this avoids executing the full plan twice
+            # in practice, and this avoids executing the full plan twice; a
+            # catalog-blind prefix binding an IRI or a second datatype keeps
+            # the terms (a catalog-mixed one coerces)
             with job_description(self.spark, "otit:dt-probe"):
                 probe = (
-                    sm.df.select([F.col(f"{v}__dt").alias(v) for v in probe_vars])
+                    sm.df.select(*probe_vars,
+                                 *[f"{v}__dt" for v in probe_vars])
                     .limit(100)
-                    .agg(*[F.first(F.col(v), ignorenulls=True).alias(v)
-                           for v in probe_vars])
+                    .agg(*[c for v in probe_vars for c in (
+                        F.first(f"{v}__dt", ignorenulls=True).alias(v),
+                        F.count_distinct(F.when(
+                            F.col(v).isNotNull(),
+                            F.coalesce(f"{v}__dt", F.lit("")))).alias(
+                                f"{v}__n"))])
                     .first()
                 )
-            dt_of.update(probe.asDict() if probe is not None else {})
+            dt_of.update((v, probe[v]) for v in probe_vars  # one global row
+                         if probe[f"{v}__n"] == 1 or sm.vars[v].mixed)
         cols = []
         for v in variables:
             m = sm.vars.get(v)

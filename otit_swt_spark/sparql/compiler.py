@@ -8,6 +8,11 @@ and id-pruning machinery collapse into plan construction — Catalyst performs
 predicate pushdown, column pruning, partition pruning and join selection on
 the unified plan (SURVEY §4.1).
 
+A BGP's triple patterns are ONE Spark SQL statement over their predicates'
+relations (GraphStore.vp), as S2RDF compiles a BGP over its vertical
+partitions, so the joins are analysed once; the BGP's input, its
+time-series chains and every other operator stay DataFrame operations.
+
 Semantics notes:
 - The right-hand sides of LeftJoin/Minus and Extend/Filter are compiled with
   the left solution *threaded through*, exactly like the reference combiner
@@ -128,6 +133,12 @@ def _utc_naive(lexical: str):
         dtv = dtv.astimezone(_dt.timezone.utc).replace(tzinfo=None)
     return dtv
 
+
+#: a native VALUES column's cell from its lexical form; a timestamp is
+#: tz-aware, as a naive datetime is read in the Python process's zone
+_VALUES_CELL = {
+    "long": int, "double": float, "bool": lambda s: s == "true",
+    "timestamp": lambda s: _utc_naive(s).replace(tzinfo=_dt.timezone.utc)}
 
 _FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}
 
@@ -448,9 +459,8 @@ def _common_hint(a: str | None, b: str | None) -> str:
 
 
 def _cast_var_to_native(sm: SolutionMapping, name: str, hint: str) -> SolutionMapping:
-    df = sm.df.withColumn(name, F.col(name).try_cast(_spark_type(hint)))
-    for aux in sm.aux_cols(name):
-        df = df.drop(aux)
+    df = sm.df.withColumn(name, F.col(name).try_cast(_spark_type(hint))) \
+              .drop(*sm.aux_cols(name))
     vars2 = dict(sm.vars)
     vars2[name] = VarMeta("native", hint)
     return replace(sm, df=df, vars=vars2,
@@ -483,12 +493,29 @@ def _effective_lang(sm: SolutionMapping, v: str) -> Column:
             else F.lit(None).cast("string"))
 
 
+def _sql_str(s: str | None) -> str:
+    """A Spark SQL string literal (NULL for None)."""
+    if s is None:
+        return "CAST(NULL AS STRING)"
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _term_key_sql(sm: SolutionMapping, v: str, rel: str = "") -> str:
+    """The term-identity key of ``v`` as Spark SQL over the columns of
+    relation ``rel`` (none: unqualified): value, datatype (its companion,
+    else its static one) and language, joined by _SEP (``char(1)``)."""
+    def col(name: str) -> str:
+        return f"{rel}`{name}`"
+
+    dt = col(f"{v}__dt") if v in sm.dt_vars else _sql_str(sm.vars[v].xsd)
+    lang = col(f"{v}__lang") if v in sm.lang_vars else _sql_str(None)
+    return (f"concat(CAST({col(v)} AS STRING), char(1), coalesce({dt}, ''), "
+            f"char(1), coalesce({lang}, ''))")
+
+
 def _term_key(sm: SolutionMapping, v: str) -> Column:
-    """The term-identity key of ``v``: value, datatype and language."""
-    sep = F.lit(_SEP)
-    return F.concat(F.col(v).cast("string"), sep,
-                    F.coalesce(_effective_dt(sm, v), F.lit("")), sep,
-                    F.coalesce(_effective_lang(sm, v), F.lit("")))
+    """The term-identity key of ``v`` (_term_key_sql) as a column."""
+    return F.expr(_term_key_sql(sm, v))
 
 
 def _align(left: SolutionMapping, right: SolutionMapping, shared: list[str]
@@ -556,19 +583,44 @@ def _union(a: SolutionMapping, b: SolutionMapping) -> SolutionMapping:
 def _path_node() -> Column:
     """A triple's object as a property-path node: an IRI or blank node is
     its value, a literal its lexical form, datatype and language joined
-    by _SEP, so path steps meet only equal terms (_path_triples decodes
+    by _SEP, so path steps meet only equal terms (_decoded_sql decodes
     it)."""
     return F.coalesce(F.col("o_iri"), F.concat(
         F.col("o_lex"), F.lit(_SEP), F.coalesce(F.col("o_dt"), F.lit("")),
         F.lit(_SEP), F.coalesce(F.col("o_lang"), F.lit(""))))
 
 
+def _decoded_sql(node: str, end: str) -> str:
+    """A path node column (_path_node) decoded into the graph's object
+    shape: Spark SQL columns ``<end>_iri``, ``_lex``, ``_dt`` and ``_lang``."""
+    lit = f"instr({node}, char(1)) > 0"
+
+    def part(i: int) -> str:
+        return f"split_part({node}, char(1), {i})"
+
+    return (f"if({lit}, NULL, {node}) AS {end}_iri, "
+            f"if({lit}, {part(1)}, NULL) AS {end}_lex, "
+            f"if({lit}, nullif({part(2)}, ''), NULL) AS {end}_dt, "
+            f"if({lit}, nullif({part(3)}, ''), NULL) AS {end}_lang")
+
+
+def _node_key(term) -> str:
+    """A constant term as a property-path node (_path_node)."""
+    if isinstance(term, Literal):
+        return _SEP.join((term.lexical, term.datatype or XSD_STRING,
+                          term.language or ""))
+    return term.value if isinstance(term, IRI) else str(term)
+
+
 def _path_iris(path) -> set[str] | None:
-    """The predicates a property path can traverse; None when it can
-    traverse any (a negated property set)."""
+    """The predicates whose objects a property path can bind; None when
+    it can bind any node: a negated property set traverses any predicate,
+    and a zero-length step (``*``, ``?``) pairs every node, a literal or a
+    constant outside the graph included, with itself."""
     if isinstance(path, A.PathPredicate):
         return {path.iri.value}
-    if isinstance(path, A.PathNegatedPropertySet):
+    if isinstance(path, (A.PathNegatedPropertySet, A.PathZeroOrMore,
+                         A.PathZeroOrOne)):
         return None
     out: set[str] = set()
     for part in getattr(path, "parts", None) or (path.inner,):
@@ -619,7 +671,7 @@ class Compiler:
         #: graph IRI -> GraphStore for GRAPH patterns (named graphs)
         self.named_graphs = named_graphs or {}
         #: optional callable returning GraphStore.predicate_datatypes() — the
-        #: per-predicate datatype catalog that lets compile_triple type object
+        #: per-predicate datatype catalog that lets _pattern_sql type object
         #: variables statically (no per-query dtype probe job in Engine)
         self._pred_datatypes = pred_datatypes
 
@@ -660,23 +712,16 @@ class Compiler:
 
     @staticmethod
     def _harmonize_ts_union(dfs: list[DataFrame]) -> tuple[DataFrame, str]:
-        hints = []
-        for df in dfs:
-            hints.append(
-                {"long": "long", "bigint": "long", "int": "long", "smallint": "long",
-                 "tinyint": "long", "double": "double", "float": "double",
-                 "boolean": "bool", "string": "string"}.get(
-                    df.schema["value"].dataType.simpleString(), "double")
-            )
-        hint = hints[0] if len(set(hints)) == 1 else "double"
-        if len(set(hints)) != 1:
-            dfs = [d.withColumn("value", F.col("value").cast("double")) for d in dfs]
-        elif hint == "long":
-            dfs = [d.withColumn("value", F.col("value").cast("long")) for d in dfs]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out, hint
+        hints = {{"long": "long", "bigint": "long", "int": "long", "smallint": "long",
+                  "tinyint": "long", "double": "double", "float": "double",
+                  "boolean": "bool", "string": "string"}.get(
+                      df.schema["value"].dataType.simpleString(), "double")
+                 for df in dfs}
+        hint = hints.pop() if len(hints) == 1 else None  # None: mixed
+        if hint in (None, "long"):
+            dfs = [d.withColumn("value", F.col("value").cast(hint or "double"))
+                   for d in dfs]
+        return functools.reduce(DataFrame.unionByName, dfs), hint or "double"
 
     #: pushdown id-list cap (same bound-join discipline as
     #: SERVICE_BOUND_JOIN_MAX): above this many distinct external ids the
@@ -1019,10 +1064,10 @@ class Compiler:
         # "x")
         ldf, rdf, keys = _join_keys(left, right, shared)
         ident = [v for v, k in zip(shared, keys) if k != v]
-        if ident:
-            # right's value column is a function of the key — drop it so
-            # the named join doesn't duplicate it (left's copy survives)
-            rdf = rdf.drop(*ident)
+        # right's value column of a term-keyed variable is a function of
+        # the key — drop it so the named join doesn't duplicate it (left's
+        # copy survives)
+        rdf = rdf.drop(*ident)
         # drop right-side aux duplicates for shared term vars (values agree on
         # matched rows) and right-side aux of vars the left binds without
         # companions (a matched right row is then an IRI: null aux), and
@@ -1033,10 +1078,8 @@ class Compiler:
             for aux in right.aux_cols(v):
                 if plain or aux in ldf.columns:
                     rdf = rdf.drop(aux)
-        dup_extra = [c for c in rdf.columns
-                     if c in ldf.columns and c not in keys]
-        for c in dup_extra:
-            rdf = rdf.drop(c)
+        rdf = rdf.drop(*[c for c in rdf.columns
+                         if c in ldf.columns and c not in keys])
         if shared:
             df = ldf.join(rdf, on=keys, how=how)
             if ident:
@@ -1170,11 +1213,7 @@ class Compiler:
                 self._filter_scopes.pop()
             sm = self.apply_project(sm, p.variables)
             return self.join_solutions(input, sm) if input is not None else sm
-        if isinstance(p, A.Distinct):
-            sm = self.compile_pattern(p.inner, input)
-            return replace(sm, df=sm.df.dropDuplicates(
-                self._term_identity_cols(sm)))
-        if isinstance(p, A.Reduced):
+        if isinstance(p, (A.Distinct, A.Reduced)):
             sm = self.compile_pattern(p.inner, input)
             return replace(sm, df=sm.df.dropDuplicates(
                 self._term_identity_cols(sm)))
@@ -1198,14 +1237,8 @@ class Compiler:
         canonical value plus any __dt/__lang companions — deduping on the
         value alone collapsed "1"^^xsd:integer with "1"^^xsd:string and
         "x"@en with "x"@fr (distinct terms, same lexical)."""
-        cols = []
-        for v in sm.vars:
-            cols.append(v)
-            if v in sm.dt_vars:
-                cols.append(f"{v}__dt")
-            if v in sm.lang_vars:
-                cols.append(f"{v}__lang")
-        return [c for c in cols if c in sm.df.columns]
+        return [c for v in sm.vars for c in (v, *sm.aux_cols(v))
+                if c in sm.df.columns]
 
     def compile_graph(self, p: A.Graph, input: SolutionMapping | None) -> SolutionMapping:
         """GRAPH <iri> {...}: evaluate against that registered named graph.
@@ -1320,8 +1353,6 @@ class Compiler:
         results, only how much travels. Blank nodes are scoped per store
         and therefore unserializable — any bnode binding disables the
         optimization for that variable."""
-        from otit_swt_spark.terms import XSD_STRING
-
         if input is None or not p.raw:
             return ""
         shared = [v for v in sorted(A.pattern_variables(p.inner))
@@ -1405,7 +1436,7 @@ class Compiler:
         from pyspark.sql.types import StringType, StructField, StructType
 
         from otit_swt_spark.graph import _default_sparql_post
-        from otit_swt_spark.terms import RDF_LANGSTRING, XSD_STRING
+        from otit_swt_spark.terms import RDF_LANGSTRING
 
         poster = self.http_post or _default_sparql_post
         pfx = "".join(f"PREFIX {name}: <{iri}>\n"
@@ -1446,18 +1477,11 @@ class Compiler:
     def compile_bgp(self, bgp: A.BGP, input: SolutionMapping | None) -> SolutionMapping:
         patterns = list(bgp.patterns)
         ts_joins, patterns = self._lower_ts_chains(patterns, input)
-        patterns = self._order_patterns(patterns)
-
-        sm: SolutionMapping | None = None
-        for tp in patterns:
-            tsm = self.compile_triple(tp)
-            sm = tsm if sm is None else self.join_solutions(sm, tsm)
-
+        sm = (self._bgp_sql(self._order_patterns(patterns)) if patterns
+              else None)
         if input is not None:
             sm = input if sm is None else self.join_solutions(input, sm)
         if sm is None:
-            if not ts_joins:
-                return SolutionMapping(self.spark.range(1).select(), {})
             sm = SolutionMapping(self.spark.range(1).select(), {})
 
         chains = [tj for tj in ts_joins if "rebind" not in tj]
@@ -1677,11 +1701,7 @@ class Compiler:
             return base
 
         def vars_of(tp: A.TriplePattern) -> set[str]:
-            out = set()
-            for term in (tp.s, tp.p, tp.o):
-                if isinstance(term, Variable):
-                    out.add(term.name)
-            return out
+            return {t.name for t in (tp.s, tp.p, tp.o) if isinstance(t, Variable)}
 
         ests = {}
         for i, tp in enumerate(patterns):
@@ -1800,62 +1820,109 @@ class Compiler:
 
     # -- triple patterns ------------------------------------------------------
 
-    def compile_triple(self, tp: A.TriplePattern) -> SolutionMapping:
+    def _bgp_sql(self, patterns: list[A.TriplePattern]) -> SolutionMapping:
+        """The triple patterns as ONE Spark SQL statement: a subquery per
+        pattern (_pattern_sql), joined left-deep in the given order. A
+        variable binds the columns, companions and metadata of the first
+        pattern naming it; a later one meets it on its term-identity key
+        (_term_key_sql) where _identity_vars asks for it, on its plain
+        value otherwise. PySpark registers the DataFrame arguments as
+        temporary views for the analysis only."""
+        tables: dict[str, DataFrame] = {}
+        acc = SolutionMapping(None, {}, set(), set())
+        owner: dict[str, str] = {}  # variable -> the subquery binding it
+        joins = []
+        for i, tp in enumerate(patterns):
+            rel = f"p{i}"
+            sub, pm = self._pattern_sql(tp, f"t{i}", tables)
+            shared = [v for v in pm.vars if v in acc.vars]
+            ident = _identity_vars(acc, pm, shared)
+            on = " AND ".join(
+                f"{_term_key_sql(acc, v, owner[v] + '.')} = "
+                f"{_term_key_sql(pm, v, rel + '.')}" if v in ident
+                else f"{owner[v]}.`{v}` = {rel}.`{v}`" for v in shared)
+            joins.append(f"FROM ({sub}) {rel}" if not i
+                         else f"JOIN ({sub}) {rel} ON {on}" if on
+                         else f"CROSS JOIN ({sub}) {rel}")
+            new = [v for v in pm.vars if v not in acc.vars]
+            owner.update(dict.fromkeys(new, rel))
+            acc.vars.update((v, pm.vars[v]) for v in new)
+            acc.dt_vars |= pm.dt_vars & set(new)
+            acc.lang_vars |= pm.lang_vars & set(new)
+        cols = [f"{owner[v]}.`{c}`" for v in acc.vars
+                for c in (v, *acc.aux_cols(v))]
+        df = self.spark.sql(
+            f"SELECT {', '.join(cols) or 1} " + " ".join(joins), **tables)
+        acc.df = df if cols else df.select()
+        return acc
+
+    def _pattern_sql(self, tp: A.TriplePattern, table: str,
+                     tables: dict[str, DataFrame]
+                     ) -> tuple[str, SolutionMapping]:
+        """One triple pattern as a SELECT over its relation (_triples, or
+        a path's decoded pairs), added to ``tables`` as ``table``, and its
+        bindings (a SolutionMapping without a frame). An object or a
+        path's subject carries __dt/__lang companions unless _object_meta
+        proves it IRI-only; a literal constant matches lexical form and
+        language or datatype; a ground triple matches once, a ground path
+        once per pair."""
         pred = tp.p.iri if isinstance(tp.p, A.PathPredicate) else tp.p
         path = not isinstance(pred, (IRI, Variable))
-        df = self._path_triples(pred) if path else self._triples(pred)
-        vars2: dict[str, VarMeta] = {}
-        dt_vars: set[str] = set()
-        lang_vars: set[str] = set()
-        cols: list[Column] = []
+        meta = self._object_meta(pred)
+        sm = SolutionMapping(None, {}, set(), set())
+        sel: list[str] = []
+        where: list[str] = []
+        bound: dict[str, str] = {}  # variable -> the column binding it here
 
-        if isinstance(tp.s, Variable):
-            cols.append(F.col("s").alias(tp.s.name))
-            vars2[tp.s.name] = VarMeta("term")
+        def lit(s: str) -> str:  # braces are the statement's placeholders
+            return _sql_str(s).replace("{", "{{").replace("}", "}}")
+
+        def end(term, iri: str, lex=None, dt=None, lang=None) -> None:
+            if isinstance(term, Variable):
+                v = term.name
+                if v in bound:  # ?x ?x ?o, ?x p ?x, ?s ?p ?p, ?x path ?x
+                    where.append("src = dst" if path
+                                 else f"{iri} = {bound[v]}")
+                    return
+                bound[v] = iri
+                sel.append(f"coalesce({iri}, {lex}) AS `{v}`" if lex
+                           else f"{iri} AS `{v}`")
+                sm.vars[v] = VarMeta("term")
+                if lex and meta is not None:
+                    sel.extend((f"{dt} AS `{v}__dt`", f"{lang} AS `{v}__lang`"))
+                    sm.vars[v] = meta
+                    sm.dt_vars.add(v)
+                    sm.lang_vars.add(v)
+            elif not isinstance(term, Literal):
+                where.append(f"{iri} = {lit(_node_key(term))}")
+            elif lex is None:  # a graph subject is never a literal
+                where.append("false")
+            else:
+                where.append(f"{lex} = {lit(term.lexical)}")
+                where.append(
+                    f"lower({lang}) = {lit(term.language.lower())}"
+                    if term.language else
+                    f"{lang} IS NULL AND coalesce({dt}, {lit(XSD_STRING)})"
+                    f" = {lit(term.datatype or XSD_STRING)}")
+
+        source = f"{{{table}}}"
+        if path:  # either end can be a literal (through ^ or a zero-length step)
+            tables[table] = self._path_pairs(pred, [
+                _node_key(t) for t in (tp.s, tp.o)
+                if not isinstance(t, Variable)])
+            source = (f"(SELECT *, {_decoded_sql('src', 's')}, "
+                      f"{_decoded_sql('dst', 'o')} FROM {source})")
+            end(tp.s, "s_iri", "s_lex", "s_dt", "s_lang")
         else:
-            df = df.filter(F.col("s") == str(tp.s) if not isinstance(tp.s, IRI) else F.col("s") == tp.s.value)
-
-        if isinstance(pred, Variable):
-            if pred.name in vars2:  # ?x ?x ?o
-                df = df.filter(F.col("p") == F.col("s"))
-            else:
-                cols.append(F.col("p").alias(pred.name))
-                vars2[pred.name] = VarMeta("term")
-
-        if isinstance(tp.o, Variable):
-            name = tp.o.name
-            if name in vars2:  # ?x p ?x: a literal object is never the subject
-                df = df.filter(F.col("o_iri") == F.col("s"))
-            else:
-                cols.append(F.coalesce(F.col("o_iri"), F.col("o_lex")).alias(name))
-                meta = self._object_meta(pred)
-                if meta is None:
-                    vars2[name] = VarMeta("term")
-                else:
-                    cols.append(F.col("o_dt").alias(f"{name}__dt"))
-                    cols.append(F.col("o_lang").alias(f"{name}__lang"))
-                    vars2[name] = meta
-                    dt_vars.add(name)
-                    lang_vars.add(name)
-        elif isinstance(tp.o, Literal):
-            # RDF term-identity matching: lexical form + datatype + language
-            # all must agree. A plain "foo" (xsd:string, no tag) matches
-            # neither "foo"@en nor "foo"^^<dt> (RDF 1.1 §3.3).
-            df = df.filter(F.col("o_lex") == tp.o.lexical)
-            if tp.o.language:
-                df = df.filter(F.lower(F.col("o_lang")) == tp.o.language.lower())
-            else:
-                df = df.filter(F.col("o_lang").isNull() & (
-                    F.coalesce(F.col("o_dt"), F.lit(XSD_STRING))
-                    == (tp.o.datatype or XSD_STRING)))
-        else:
-            df = df.filter(F.col("o_iri") == (tp.o.value if isinstance(tp.o, IRI) else str(tp.o)))
-
-        # a ground triple matches once or not at all; a ground path once
-        # per pair it yields
-        out = df.select(*cols)
-        return SolutionMapping(out if cols or path else out.limit(1),
-                               vars2, dt_vars, lang_vars)
+            tables[table] = self._triples(pred)
+            end(tp.s, "s")
+            if isinstance(pred, Variable):
+                end(pred, "p")
+        end(tp.o, "o_iri", "o_lex", "o_dt", "o_lang")
+        sql = (f"SELECT {', '.join(sel) or 1} FROM {source}"
+               + (" WHERE " + " AND ".join(where) if where else "")
+               + ("" if sel or path else " LIMIT 1"))
+        return sql, sm
 
     def _triples(self, pred) -> DataFrame:
         """The triples a pattern with predicate ``pred`` can match: the
@@ -1869,48 +1936,30 @@ class Compiler:
 
     # -- property paths (beyond sequences, which the parser lowers) ----------
 
-    def _path_triples(self, path) -> DataFrame:
-        """A property path's pairs shaped like the graph's triples (``s``
-        and the object's ``o_iri``/``o_lex``/``o_dt``/``o_lang``), so
-        compile_triple binds and matches a path object like a graph
-        object. A literal a path binds as its subject (through ``^``)
-        gives its lexical form only."""
-        dst = F.col("dst")
-        lit = dst.contains(_SEP)
-
-        def part(i: int) -> Column:  # the i-th _SEP-separated part
-            return F.nullif(F.substring_index(
-                F.substring_index(dst, _SEP, i), _SEP, -1), F.lit(""))
-
-        return self._path_pairs(path).select(
-            F.substring_index(F.col("src"), _SEP, 1).alias("s"),
-            F.when(~lit, dst).alias("o_iri"),
-            F.when(lit, F.substring_index(dst, _SEP, 1)).alias("o_lex"),
-            F.when(lit, part(2)).alias("o_dt"),
-            F.when(lit, part(3)).alias("o_lang"))
-
-    def _path_pairs(self, path) -> DataFrame:
+    def _path_pairs(self, path, consts: list[str]) -> DataFrame:
         """``(src, dst)`` node pairs (_path_node) a path connects. A
-        literal is never a subject, so only an inverse step starts from
-        one."""
+        literal is never a subject, so only an inverse or zero-length
+        step starts from one. ``consts`` are the pattern's constant nodes,
+        which every zero-length step pairs with themselves (_graph_nodes)."""
         g = self.graph_df
         if isinstance(path, A.PathPredicate):
             return (self._triples(path.iri)
                      .select(F.col("s").alias("src"), _path_node().alias("dst")))
         if isinstance(path, A.PathInverse):
-            inner = self._path_pairs(path.inner)
+            inner = self._path_pairs(path.inner, consts)
             return inner.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         if isinstance(path, A.PathSequence):
-            out = self._path_pairs(path.parts[0])
+            out = self._path_pairs(path.parts[0], consts)
             for part in path.parts[1:]:
-                nxt = self._path_pairs(part).withColumnRenamed("src", "mid_src")
+                nxt = (self._path_pairs(part, consts)
+                       .withColumnRenamed("src", "mid_src"))
                 out = (out.join(nxt, out["dst"] == nxt["mid_src"])
                           .select(out["src"], nxt["dst"]))
             return out
         if isinstance(path, A.PathAlternative):
-            out = self._path_pairs(path.parts[0])
+            out = self._path_pairs(path.parts[0], consts)
             for part in path.parts[1:]:
-                out = out.unionByName(self._path_pairs(part))
+                out = out.unionByName(self._path_pairs(part, consts))
             return out
         if isinstance(path, A.PathNegatedPropertySet):
             # forward arm: any predicate NOT in the forward set; inverse arm:
@@ -1928,22 +1977,27 @@ class Compiler:
                 out = inv if out is None else out.unionByName(inv)
             return out
         if isinstance(path, A.PathZeroOrOne):
-            return self._path_pairs(path.inner).unionByName(self._graph_nodes()).distinct()
+            return (self._path_pairs(path.inner, consts)
+                    .unionByName(self._graph_nodes(consts)).distinct())
         if isinstance(path, A.PathOneOrMore):
-            return self._kleene(self._path_pairs(path.inner))
+            return self._kleene(self._path_pairs(path.inner, consts))
         if isinstance(path, A.PathZeroOrMore):
-            step = self._kleene(self._path_pairs(path.inner))
-            return step.unionByName(self._graph_nodes()).distinct()
+            step = self._kleene(self._path_pairs(path.inner, consts))
+            return step.unionByName(self._graph_nodes(consts)).distinct()
         raise NotImplementedError(f"path {type(path).__name__}")
 
-    def _graph_nodes(self) -> DataFrame:
+    def _graph_nodes(self, consts: list[str]) -> DataFrame:
         """The zero-length path pairs: every subject and every object of
-        the graph, literals included (SPARQL 1.1 §18.4), paired with
+        the graph, literals included, and every constant node of the
+        pattern, in the graph or not (SPARQL 1.1 §18.4), paired with
         itself."""
         g = self.graph_df
         nodes = (g.select(F.col("s").alias("n"))
-                  .unionByName(g.select(_path_node().alias("n")))
-                  .distinct())
+                  .unionByName(g.select(_path_node().alias("n"))))
+        if consts:
+            nodes = nodes.unionByName(self.spark.createDataFrame(
+                [(c,) for c in consts], "n string"))
+        nodes = nodes.distinct()
         return nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
 
     def _kleene(self, edges: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -2070,9 +2124,7 @@ class Compiler:
         df = sm2.df.filter(_as_bool(cond))   # SPARQL EBV, not a bare cast
         for p in self._partition_prune_predicates(sm2, expr):
             df = df.filter(p)
-        if flags:
-            df = df.drop(*flags)
-        return replace(sm2, df=df)
+        return replace(sm2, df=df.drop(*flags))
 
     def _partition_prune_predicates(self, sm: SolutionMapping,
                                     expr: A.Expr) -> list[Column]:
@@ -2152,9 +2204,7 @@ class Compiler:
                            dt_vars=dt_vars, lang_vars=lang_vars)
         sm2, exists_cols, flags = self.resolve_exists(sm, expr)
         t = compile_expr(expr, sm2, exists_cols)
-        df = sm2.df.withColumn(var, t.col)
-        if flags:
-            df = df.drop(*flags)
+        df = sm2.df.withColumn(var, t.col).drop(*flags)
         return replace(sm2, df=df, vars={
             **sm2.vars, var: VarMeta("native", t.hint or "string")})
 
@@ -2197,8 +2247,7 @@ class Compiler:
         # the matched branch (which threads left2 through the right side)
         # and the anti branch — _with_deterministic_rid derives it from the
         # row values themselves, so no materialization is needed.
-        left2_df = _with_deterministic_rid(left.df)
-        left2 = replace(left, df=left2_df)
+        left2 = replace(left, df=_with_deterministic_rid(left.df))
         # same embedded-condition bounds as the fast path: the general
         # form applies expr as a filter over the matched branch, so an
         # expr-implied restriction on the right-side chain fetch only
@@ -2260,9 +2309,7 @@ class Compiler:
         sm = replace(left, df=df, vars=vars2)
         if not conds and p.expr is None:
             return sm
-        cond = conds[0] if conds else None
-        for c in conds[1:]:
-            cond = cond & c
+        cond = functools.reduce(Column.__and__, conds) if conds else None
         if p.expr is not None:
             e = _as_bool(compile_expr(p.expr, sm))   # SPARQL EBV
             cond = e if cond is None else cond & e
@@ -2290,14 +2337,8 @@ class Compiler:
         # ``__tk_<v>``; drop aux/extra dups
         rdf = rdf.drop(*[v for v, k in zip(shared, keys) if k != v]) \
                  .withColumnsRenamed({v: f"__tk_{v}" for v in keys if v in shared})
-        for v in shared:
-            for aux in right.aux_cols(v):
-                if aux in left.df.columns:
-                    rdf = rdf.drop(aux)
-        dup_extra = [c for c in rdf.columns
-                     if c in left.df.columns and c not in shared]
-        for c in dup_extra:
-            rdf = rdf.drop(c)
+        rdf = rdf.drop(*[c for c in rdf.columns
+                         if c in left.df.columns and c not in shared])
         merged = SolutionMapping(
             left.df,  # unused by compile_expr (duck-typed metadata access)
             {**right.vars, **left.vars},
@@ -2309,12 +2350,10 @@ class Compiler:
             cond = (F.col(f"__l.{k}") == F.col(f"__r.__tk_{v}")) & cond
         df = ldf.alias("__l").join(rdf.alias("__r"), cond, "left") \
                 .drop(*[f"__tk_{v}" for v in shared])
-        vars2 = dict(right.vars)
-        vars2.update(left.vars)
         dt = set(left.dt_vars) | {v for v in right.dt_vars if f"{v}__dt" in df.columns}
         lang = set(left.lang_vars) | {v for v in right.lang_vars
                                       if f"{v}__lang" in df.columns}
-        return SolutionMapping(df, vars2, dt, lang,
+        return SolutionMapping(df, {**right.vars, **left.vars}, dt, lang,
                                {**right.ts_chains, **left.ts_chains})
 
     def compile_minus(self, p: A.Minus, input: SolutionMapping | None) -> SolutionMapping:
@@ -2369,17 +2408,13 @@ class Compiler:
         # leaves the var unconstrained) with a non-empty domain intersection.
         # A plain equi anti join treats null keys as never-matching, wrongly
         # keeping left rows that have one unbound and one matching-bound var.
-        lal = ldf.alias("__minus_l")
-        ral = rdf.alias("__minus_r")
-        compat = None
-        anybound = None
-        for k in keys:
-            lc, rc = F.col(f"__minus_l.{k}"), F.col(f"__minus_r.{k}")
-            c = lc.isNull() | rc.isNull() | (lc == rc)
-            b = lc.isNotNull() & rc.isNotNull()
-            compat = c if compat is None else (compat & c)
-            anybound = b if anybound is None else (anybound | b)
-        df = lal.join(ral, compat & anybound, "left_anti")
+        cols = [(F.col(f"__minus_l.{k}"), F.col(f"__minus_r.{k}")) for k in keys]
+        compat = functools.reduce(Column.__and__, [
+            lc.isNull() | rc.isNull() | (lc == rc) for lc, rc in cols])
+        anybound = functools.reduce(Column.__or__, [
+            lc.isNotNull() & rc.isNotNull() for lc, rc in cols])
+        df = ldf.alias("__minus_l").join(rdf.alias("__minus_r"),
+                                         compat & anybound, "left_anti")
         return replace(left, df=df.drop(*added))
 
     # -- values -------------------------------------------------------------------
@@ -2430,21 +2465,8 @@ class Compiler:
             for v, term in zip(p.variables, row):
                 m = metas[v]
                 if m.kind == "native":
-                    if term is None:
-                        out.append(None)
-                    elif m.hint == "long":
-                        out.append(int(term.lexical))
-                    elif m.hint == "double":
-                        out.append(float(term.lexical))
-                    elif m.hint == "bool":
-                        out.append(term.lexical == "true")
-                    elif m.hint == "timestamp":
-                        # tz-aware: a naive datetime would be read in the
-                        # Python process's local time zone
-                        out.append(_utc_naive(term.lexical).replace(
-                            tzinfo=_dt.timezone.utc))
-                    else:
-                        out.append(term.lexical)
+                    out.append(None if term is None else
+                               _VALUES_CELL.get(m.hint, str)(term.lexical))
                     continue
                 if term is None:
                     value, dt, lang = None, None, None
@@ -2476,10 +2498,7 @@ class Compiler:
             if spec is not None:
                 self._group_pushdown_stack.pop()
         fired = spec is not None and spec["fired"]
-        group_cols = []
-        for v in p.by:
-            group_cols.append(v)
-            group_cols.extend(sm.aux_cols(v))
+        group_cols = [c for v in p.by for c in (v, *sm.aux_cols(v))]
         aggs = []
         vars2: dict[str, VarMeta] = {v: sm.vars[v] for v in p.by if v in sm.vars}
         dt_vars = {v for v in sm.dt_vars if v in p.by}
@@ -2533,33 +2552,24 @@ class Compiler:
                 return F.try_divide(F.sum_distinct(c), F.count_distinct(c)), \
                     VarMeta("native", "double"), no_extra
             return F.avg(c), VarMeta("native", "double"), no_extra
-        if name in ("MIN", "MAX"):
-            fn = F.min if name == "MIN" else F.max
+        if name in ("MIN", "MAX", "SAMPLE"):
+            agg = {"MIN": F.min, "MAX": F.max}.get(name)
             if t.hint is not None:
-                return fn(t.col), VarMeta("native", t.hint), no_extra
-            # term column: order numerically when values parse as numbers
-            # (SPARQL natural ordering), fall back to string collation;
-            # carry the datatype column so output typing survives
-            key = F.struct(t.col.try_cast("double").alias("num"), t.col.alias("lex"))
-            col = fn(key).getField("lex")
-            extras = []
-            src_meta = (sm.vars.get(a.expr.name) if isinstance(a.expr, A.EVar)
-                        else None) or VarMeta("term")
-            if isinstance(a.expr, A.EVar) and a.expr.name in sm.dt_vars:
-                extras.append((f"{a.var}__dt",
-                               F.first(F.col(f"{a.expr.name}__dt"), ignorenulls=True)))
-            return col, VarMeta("term", xsd=src_meta.xsd, mixed=src_meta.mixed), extras
-        if name == "SAMPLE":
-            kind = "native" if t.hint is not None else "term"
-            extras = []
-            src_meta = (sm.vars.get(a.expr.name) if isinstance(a.expr, A.EVar)
-                        else None) or VarMeta("term")
-            if kind == "term" and isinstance(a.expr, A.EVar) and a.expr.name in sm.dt_vars:
-                extras.append((f"{a.var}__dt",
-                               F.first(F.col(f"{a.expr.name}__dt"), ignorenulls=True)))
-            return F.first(t.col, ignorenulls=True), \
-                VarMeta(kind, t.hint, xsd=src_meta.xsd if kind == "term" else None,
-                        mixed=src_meta.mixed if kind == "term" else False), extras
+                col = agg(t.col) if agg else F.first(t.col, ignorenulls=True)
+                return col, VarMeta("native", t.hint), no_extra
+            # a term result keeps its source's static datatype and carries
+            # its datatype column, so output typing survives; MIN/MAX order
+            # numerically when values parse as numbers (SPARQL natural
+            # ordering), else by string collation
+            src = a.expr.name if isinstance(a.expr, A.EVar) else None
+            m = sm.vars.get(src) or VarMeta("term")
+            extras = ([(f"{a.var}__dt", F.first(F.col(f"{src}__dt"),
+                                                 ignorenulls=True))]
+                      if src in sm.dt_vars else [])
+            col = (agg(F.struct(t.col.try_cast("double").alias("num"),
+                                t.col.alias("lex"))).getField("lex")
+                   if agg else F.first(t.col, ignorenulls=True))
+            return col, VarMeta("term", xsd=m.xsd, mixed=m.mixed), extras
         if name == "GROUP_CONCAT":
             c = t.col if t.hint in ("string", "iri") else t.col.cast("string")
             lst = F.collect_set(c) if a.distinct else F.collect_list(c)
@@ -2595,28 +2605,15 @@ class Compiler:
                 helpers.append(h)
                 c = F.col(h)
             sort_cols.append(c.asc() if asc else c.desc())
-        df = df.orderBy(*sort_cols)
-        for h in helpers:
-            df = df.drop(h)
-        return replace(sm, df=df)
+        return replace(sm, df=df.orderBy(*sort_cols).drop(*helpers))
 
     def apply_project(self, sm: SolutionMapping, variables: list[str]) -> SolutionMapping:
-        cols = []
-        vars2 = {}
-        dt_vars, lang_vars = set(), set()
-        df = sm.df
-        for v in variables:
-            if v not in sm.vars:
-                df = df.withColumn(v, F.lit(None).cast("string"))
-                vars2[v] = VarMeta("term")
-                cols.append(v)
-                continue
-            cols.append(v)
-            vars2[v] = sm.vars[v]
-            for aux in sm.aux_cols(v):
-                cols.append(aux)
-            if v in sm.dt_vars:
-                dt_vars.add(v)
-            if v in sm.lang_vars:
-                lang_vars.add(v)
-        return SolutionMapping(df.select(*cols), vars2, dt_vars, lang_vars, dict(sm.ts_chains))
+        # a variable the pattern does not bind is an unbound term column
+        unbound = {v: F.lit(None).cast("string")
+                   for v in variables if v not in sm.vars}
+        df = sm.df.withColumns(unbound) if unbound else sm.df
+        cols = [c for v in variables for c in (v, *sm.aux_cols(v))]
+        return SolutionMapping(
+            df.select(*cols), {v: sm.vars.get(v, VarMeta("term")) for v in variables},
+            sm.dt_vars & set(variables), sm.lang_vars & set(variables),
+            dict(sm.ts_chains))

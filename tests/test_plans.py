@@ -692,3 +692,63 @@ def test_windpower_static_side_joins_aspect_chain_on_plain_iris(
     assert {"site_label__dt", "wtur_label__dt"} <= set(sm.df.columns)
     assert [r["wtur_label"] for r in sm.df.collect()] == ["A1"]
     assert {r["wtur_label"] for r in df.collect()} == {"A1"}
+
+
+def test_bgp_builds_as_one_sql_statement(spark, monkeypatch):
+    """The wind-power aspect chain's twelve patterns are one ``spark.sql``
+    statement, built in a handful of py4j round trips (over a thousand
+    when each pattern was its own DataFrame and each join re-analysed the
+    plan), and the term-identity key appears in none of its joins."""
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.sql import SparkSession
+
+    from otit_swt_spark.sparql import algebra as A
+    from otit_swt_spark.sparql.compiler import Compiler
+    from otit_swt_spark.sparql.parser import parse_query
+    from otit_swt_spark.windpower import ASPECT_CHAIN, PREFIXES, build_engine
+
+    graph = build_engine(spark, points=12, n_turbines=2).graph
+    bgp = parse_query(PREFIXES + "SELECT * WHERE {" + ASPECT_CHAIN + "}").pattern
+    while not isinstance(bgp, A.BGP):
+        bgp = bgp.inner
+
+    def compile_bgp():
+        return Compiler(spark, graph.df, pred_datatypes=graph.predicate_datatypes,
+                        vp=graph.vp).compile_bgp(bgp, None)
+
+    compile_bgp()  # builds the predicate relations (otit:vp jobs)
+    calls = {"py4j": 0, "sql": 0}
+    send, sql = ClientServerConnection.send_command, SparkSession.sql
+
+    def counted_send(self, command):
+        calls["py4j"] += 1
+        return send(self, command)
+
+    def counted_sql(self, *args, **kwargs):
+        calls["sql"] += 1
+        return sql(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted_send)
+    monkeypatch.setattr(SparkSession, "sql", counted_sql)
+    sm = compile_bgp()
+    monkeypatch.undo()
+    assert calls["sql"] == 1
+    assert calls["py4j"] <= 40, calls
+    assert len(sm.df.collect()) == 2
+    # its IRI-only aspect nodes join on the plain value, no term key
+    assert "concat(" not in sm.df._jdf.queryExecution().analyzed().toString()
+
+
+def test_bgp_plan_outlives_its_temporary_views(spark):
+    """PySpark drops the statement's temporary views once it is analysed:
+    no view is left in the catalog, and a plan served from the plan cache
+    still runs."""
+    g = GraphStore.from_sparql_insert(spark, """
+        INSERT DATA { <urn:a> <urn:p> <urn:b> . <urn:b> <urn:q> "x" . }""")
+    eng = Engine(spark, g)
+    text = "SELECT ?a ?c WHERE { ?a <urn:p> ?b . ?b <urn:q> ?c }"
+    df = eng.query(text)
+    assert not [t for t in spark.catalog.listTables()
+                if t.name.startswith("_pyspark_")]
+    assert eng.query(text) is df
+    assert [tuple(r) for r in df.collect()] == [("urn:a", "x")]

@@ -396,3 +396,71 @@ def test_iri_only_object_answers_match_companion_binding(iri_eng, text):
     key = lambda r: tuple(str(v) for v in r)  # noqa: E731
     assert sorted(plain.collect(), key=key) == sorted(companion.collect(),
                                                       key=key)
+
+
+@pytest.mark.parametrize("pattern,want", [
+    ("(<urn:p>|^<urn:p>)", [("urn:b", False), ("urn:b", False)]),
+    ("<urn:p>*", [("urn:a", False), ("urn:a", True), ("urn:b", False)]),
+])
+def test_repeated_variable_over_a_path_compares_terms(spark, pattern, want):
+    """``?x path ?x`` compares the path's two nodes as terms: the inverse
+    arm from the literal "urn:a" ends at the IRI <urn:a>, a different
+    term, and the zero-length step pairs the literal with itself."""
+    eng = Engine(spark, GraphStore.from_sparql_insert(spark, """
+        INSERT DATA { <urn:a> <urn:p> "urn:a" . <urn:b> <urn:p> <urn:b> . }"""))
+    got = eng.query(
+        f"SELECT ?x (isLiteral(?x) AS ?l) WHERE {{ ?x {pattern} ?x }}")
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+
+def test_repeated_variable_compares_the_column_it_repeats(spark):
+    """``?s ?p ?p`` needs the object to be the predicate, not the
+    subject, and a literal subject matches no triple."""
+    eng = Engine(spark, GraphStore.from_sparql_insert(spark, """
+        INSERT DATA { <urn:a> <urn:p> <urn:p> . <urn:b> <urn:p> <urn:b> . }"""))
+    got = eng.query("SELECT ?s ?p WHERE { ?s ?p ?p }").collect()
+    assert [tuple(r) for r in got] == [("urn:a", "urn:p")]
+    assert eng.query('SELECT ?o WHERE { "urn:a" <urn:p> ?o }').collect() == []
+
+
+@pytest.mark.parametrize("where,want", [
+    ("<urn:zzz> <urn:p>* ?x", ("urn:zzz", None, "")),
+    ("<urn:zzz> <urn:p>? ?x", ("urn:zzz", None, "")),
+    ("?x <urn:p>* <urn:zzz>", ("urn:zzz", None, "")),
+    ("?x <urn:p>? <urn:zzz>", ("urn:zzz", None, "")),
+    ('?x <urn:p>* "zz"', ("zz", XSD_STRING, "")),
+    ('"zz"@en <urn:p>? ?x',
+     ("zz", "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString", "en")),
+])
+def test_zero_length_path_binds_a_constant_outside_the_graph(
+        path_eng, where, want):
+    """A zero-length step from or to a constant binds the constant itself,
+    in the graph or not (SPARQL 1.1 §18.4), a literal with its datatype
+    and language; <urn:p> is IRI-only, and its ``*``/``?`` still binds
+    the literal with companions."""
+    got = path_eng.query(f"""
+        SELECT ?x (DATATYPE(?x) AS ?d) (LANG(?x) AS ?g)
+        WHERE {{ {where} }}""").collect()
+    assert [tuple(r) for r in got] == [want]
+
+
+@pytest.mark.parametrize("path", [
+    "^<urn:name>", "^<urn:name>+", "(^<urn:name>|^<urn:p>)"])
+def test_path_subject_binds_like_graph_object(path_eng, path):
+    """A literal a path binds as its subject, through ``^``, carries its
+    datatype like a path object (the parser lowers a bare ``^<p>`` to a
+    plain triple pattern)."""
+    got = path_eng.query(f"""
+        SELECT ?s (DATATYPE(?s) AS ?d) (isLiteral(?s) AS ?l)
+        WHERE {{ ?s {path} <urn:b> }}""").collect()
+    assert [tuple(r) for r in got] == [("n", "urn:dt", True)]
+
+
+def test_catalog_blind_output_keeps_iris_beside_literals(path_eng):
+    """A path object the catalog cannot type is typed by the datatype its
+    rows carry; rows binding IRIs beside an integer keep every term as
+    its lexical form rather than casting the IRIs to null."""
+    got = path_eng.query("SELECT ?o WHERE { <urn:t> <urn:q>* ?o }")
+    assert sorted(r["o"] for r in got.collect()) == ["1", "urn:t", "urn:u"]
+    typed = path_eng.query("SELECT ?o WHERE { <urn:u> <urn:q>+ ?o }")
+    assert [r["o"] for r in typed.collect()] == [1]
