@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from otit_swt_spark.session import job_description
 from otit_swt_spark.terms import (
+    RDF_LANGSTRING,
     XSD_STRING,
     BlankNode,
     IRI,
@@ -66,12 +67,14 @@ def catalog_of(df: DataFrame) -> dict[str, dict]:
     whose objects mix literal datatypes, or mix IRIs with non-string
     literals — the cases where one output column cannot be typed soundly
     (the reference raises InconsistentDatatype for these,
-    hybrid/src/engine.rs:137-198). A literal without a datatype counts as
-    xsd:string (RDF 1.1 simple literal). ``n`` is the predicate's triple
-    count, free in the same aggregate; it drives selectivity-ordered BGP
-    joins (compiler). One map-side-combinable aggregate."""
-    lit_dt = F.when(F.col("o_lex").isNotNull(),
-                    F.coalesce(F.col("o_dt"), F.lit(XSD_STRING)))
+    hybrid/src/engine.rs:137-198). A literal without a datatype, and a
+    tagged one (rdf:langString), counts as xsd:string: one string column.
+    ``n`` is the predicate's triple count, free in the same aggregate; it
+    drives selectivity-ordered BGP joins (compiler). One
+    map-side-combinable aggregate."""
+    lit_dt = F.when(F.col("o_lex").isNotNull(), F.when(
+        F.col("o_dt").isNull() | (F.col("o_dt") == RDF_LANGSTRING),
+        F.lit(XSD_STRING)).otherwise(F.col("o_dt")))
     rows = (
         df.groupBy("p")
         .agg(
@@ -98,10 +101,14 @@ def merge_catalogs(catalogs: list[dict]) -> dict:
     string/IRI-only mix stays a plain string column; any other
     disagreement is a mixed predicate (the judgement catalog_of makes
     within one frame, so the merge equals a recompute over the union).
-    Counts add; catalogs persisted without counts merge as count 0."""
+    An rdf:langString type, as catalogs persisted before catalog_of folded
+    it hold, merges as xsd:string. Counts add; catalogs persisted without
+    counts merge as count 0."""
     merged: dict[str, dict] = {}
     for cat in catalogs:
         for p, info in cat.items():
+            if info.get("dt") == RDF_LANGSTRING:
+                info = {**info, "dt": XSD_STRING}
             cur = merged.get(p)
             if cur is None:
                 merged[p] = dict(info)
@@ -441,8 +448,9 @@ def _sparql_json_binding_to_row(b: dict) -> tuple:
     p_val = b["p"]["value"]
     o = b["o"]
     if o.get("type") == "literal" or o.get("type") == "typed-literal":
-        dt = o.get("datatype") or XSD_STRING
-        return (s_val, p_val, None, o["value"], dt, o.get("xml:lang"))
+        lang = o.get("xml:lang")
+        dt = RDF_LANGSTRING if lang else o.get("datatype") or XSD_STRING
+        return (s_val, p_val, None, o["value"], dt, lang)
     if o.get("type") == "bnode":
         return (s_val, p_val, f"_:{o['value']}", None, None, None)
     return (s_val, p_val, o["value"], None, None, None)
@@ -521,7 +529,7 @@ def parse_turtle_lite(text: str) -> Iterable[tuple[Term, Term, Term]]:
                 pfx, local = tok.group("dt_pn").split(":", 1)
                 terms.append(Literal(lex, resolve(pfx, local).value))
             elif tok.group("lang"):
-                terms.append(Literal(lex, XSD_STRING, tok.group("lang")))
+                terms.append(Literal(lex, RDF_LANGSTRING, tok.group("lang")))
             else:
                 terms.append(Literal(lex))
         elif kind == "bnode":
@@ -593,5 +601,7 @@ def parse_ntriples(text: str) -> Iterable[tuple[Term, Term, Term]]:
             o = BlankNode(m.group("ob")[2:])
         else:
             lex = _unescape(m.group(6))
-            o = Literal(lex, m.group("dt") or XSD_STRING, m.group("lang"))
+            lang = m.group("lang")
+            dt = RDF_LANGSTRING if lang else m.group("dt") or XSD_STRING
+            o = Literal(lex, dt, lang)
         yield (s, p, o)

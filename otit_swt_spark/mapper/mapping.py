@@ -43,7 +43,8 @@ from otit_swt_spark.mapper.ast import (
     Template,
     Variable,
 )
-from otit_swt_spark.mapper.parser import RDF_LANGSTRING, parse_document
+from otit_swt_spark.mapper.parser import parse_document
+from otit_swt_spark.terms import RDF_LANGSTRING
 
 KEY_COL = "Key"
 

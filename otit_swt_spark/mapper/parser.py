@@ -31,6 +31,7 @@ from otit_swt_spark.mapper.ast import (
     Template,
     Variable,
 )
+from otit_swt_spark.terms import RDF_LANGSTRING
 
 _TOKEN_RE = re.compile(
     r"""
@@ -268,9 +269,6 @@ class _Parser:
         if kind in ("pname", "iriref"):
             return IRI(self.iri())
         raise ValueError(f"expected term, got {val!r}")
-
-
-RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 
 
 def _unescape(s: str) -> str:

@@ -12,6 +12,9 @@ A BGP's triple patterns are ONE Spark SQL statement over their predicates'
 relations (GraphStore.vp), as S2RDF compiles a BGP over its vertical
 partitions, so the joins are analysed once; the BGP's input, its
 time-series chains and every other operator stay DataFrame operations.
+A property path is SQL text inside that statement (_path_sql); only a
+``+``/``*`` closure is a DataFrame, computed by _kleene and passed to the
+statement as one more table argument.
 
 Semantics notes:
 - The right-hand sides of LeftJoin/Minus and Extend/Filter are compiled with
@@ -63,8 +66,6 @@ from otit_swt_spark.terms import (
 )
 
 RID = "__rid"
-#: joins the parts of a term-identity key and of a literal path node
-_SEP = "\x01"
 
 _XSD_INTEGRAL = frozenset(XSD + n for n in (
     "integer", "long", "int", "short", "byte", "nonNegativeInteger",
@@ -503,7 +504,7 @@ def _sql_str(s: str | None) -> str:
 def _term_key_sql(sm: SolutionMapping, v: str, rel: str = "") -> str:
     """The term-identity key of ``v`` as Spark SQL over the columns of
     relation ``rel`` (none: unqualified): value, datatype (its companion,
-    else its static one) and language, joined by _SEP (``char(1)``)."""
+    else its static one) and language, joined by ``char(1)``."""
     def col(name: str) -> str:
         return f"{rel}`{name}`"
 
@@ -580,18 +581,16 @@ def _union(a: SolutionMapping, b: SolutionMapping) -> SolutionMapping:
                            {**b.ts_chains, **a.ts_chains})
 
 
-def _path_node() -> Column:
-    """A triple's object as a property-path node: an IRI or blank node is
-    its value, a literal its lexical form, datatype and language joined
-    by _SEP, so path steps meet only equal terms (_decoded_sql decodes
-    it)."""
-    return F.coalesce(F.col("o_iri"), F.concat(
-        F.col("o_lex"), F.lit(_SEP), F.coalesce(F.col("o_dt"), F.lit("")),
-        F.lit(_SEP), F.coalesce(F.col("o_lang"), F.lit(""))))
+#: a triple's object as a property-path node, in Spark SQL over the
+#: graph's columns: an IRI or blank node is its value, a literal its lexical
+#: form, datatype and language joined by char(1), so path steps meet only
+#: equal terms (_decoded_sql decodes it)
+_NODE_SQL = ("coalesce(o_iri, concat(o_lex, char(1), coalesce(o_dt, ''), "
+             "char(1), coalesce(o_lang, '')))")
 
 
 def _decoded_sql(node: str, end: str) -> str:
-    """A path node column (_path_node) decoded into the graph's object
+    """A path node column (_NODE_SQL) decoded into the graph's object
     shape: Spark SQL columns ``<end>_iri``, ``_lex``, ``_dt`` and ``_lang``."""
     lit = f"instr({node}, char(1)) > 0"
 
@@ -604,12 +603,17 @@ def _decoded_sql(node: str, end: str) -> str:
             f"if({lit}, nullif({part(3)}, ''), NULL) AS {end}_lang")
 
 
-def _node_key(term) -> str:
-    """A constant term as a property-path node (_path_node)."""
+def _sql_lit(s: str | None) -> str:
+    """_sql_str inside a statement whose braces are table placeholders."""
+    return _sql_str(s).replace("{", "{{").replace("}", "}}")
+
+
+def _object_row(term) -> tuple:
+    """A constant term in the graph's object columns ``(o_iri, o_lex,
+    o_dt, o_lang)``."""
     if isinstance(term, Literal):
-        return _SEP.join((term.lexical, term.datatype or XSD_STRING,
-                          term.language or ""))
-    return term.value if isinstance(term, IRI) else str(term)
+        return None, term.lexical, term.datatype or XSD_STRING, term.language
+    return term.value if isinstance(term, IRI) else str(term), None, None, None
 
 
 def _path_iris(path) -> set[str] | None:
@@ -1859,13 +1863,13 @@ class Compiler:
     def _pattern_sql(self, tp: A.TriplePattern, table: str,
                      tables: dict[str, DataFrame]
                      ) -> tuple[str, SolutionMapping]:
-        """One triple pattern as a SELECT over its relation (_triples, or
-        a path's decoded pairs), added to ``tables`` as ``table``, and its
-        bindings (a SolutionMapping without a frame). An object or a
-        path's subject carries __dt/__lang companions unless _object_meta
-        proves it IRI-only; a literal constant matches lexical form and
-        language or datatype; a ground triple matches once, a ground path
-        once per pair."""
+        """One triple pattern as a SELECT over its relation (_triples,
+        added to ``tables`` as ``table``) or over a path's decoded pairs
+        (_path_sql), and its bindings (a SolutionMapping without a frame).
+        An object or a path's subject carries __dt/__lang companions unless
+        _object_meta proves it IRI-only; a literal constant matches lexical
+        form and language or datatype; a ground triple matches once, a
+        ground path once per pair."""
         pred = tp.p.iri if isinstance(tp.p, A.PathPredicate) else tp.p
         path = not isinstance(pred, (IRI, Variable))
         meta = self._object_meta(pred)
@@ -1873,9 +1877,6 @@ class Compiler:
         sel: list[str] = []
         where: list[str] = []
         bound: dict[str, str] = {}  # variable -> the column binding it here
-
-        def lit(s: str) -> str:  # braces are the statement's placeholders
-            return _sql_str(s).replace("{", "{{").replace("}", "}}")
 
         def end(term, iri: str, lex=None, dt=None, lang=None) -> None:
             if isinstance(term, Variable):
@@ -1894,24 +1895,25 @@ class Compiler:
                     sm.dt_vars.add(v)
                     sm.lang_vars.add(v)
             elif not isinstance(term, Literal):
-                where.append(f"{iri} = {lit(_node_key(term))}")
+                where.append(f"{iri} = {_sql_lit(_object_row(term)[0])}")
             elif lex is None:  # a graph subject is never a literal
                 where.append("false")
             else:
-                where.append(f"{lex} = {lit(term.lexical)}")
+                where.append(f"{lex} = {_sql_lit(term.lexical)}")
                 where.append(
-                    f"lower({lang}) = {lit(term.language.lower())}"
+                    f"lower({lang}) = {_sql_lit(term.language.lower())}"
                     if term.language else
-                    f"{lang} IS NULL AND coalesce({dt}, {lit(XSD_STRING)})"
-                    f" = {lit(term.datatype or XSD_STRING)}")
+                    f"{lang} IS NULL AND coalesce({dt}, "
+                    f"{_sql_lit(XSD_STRING)}) = "
+                    f"{_sql_lit(term.datatype or XSD_STRING)}")
 
         source = f"{{{table}}}"
         if path:  # either end can be a literal (through ^ or a zero-length step)
-            tables[table] = self._path_pairs(pred, [
-                _node_key(t) for t in (tp.s, tp.o)
-                if not isinstance(t, Variable)])
+            consts = [_object_row(t) for t in (tp.s, tp.o)
+                      if not isinstance(t, Variable)]
             source = (f"(SELECT *, {_decoded_sql('src', 's')}, "
-                      f"{_decoded_sql('dst', 'o')} FROM {source})")
+                      f"{_decoded_sql('dst', 'o')} FROM "
+                      f"({self._path_sql(pred, tables, table, consts)}))")
             end(tp.s, "s_iri", "s_lex", "s_dt", "s_lang")
         else:
             tables[table] = self._triples(pred)
@@ -1936,104 +1938,96 @@ class Compiler:
 
     # -- property paths (beyond sequences, which the parser lowers) ----------
 
-    def _path_pairs(self, path, consts: list[str]) -> DataFrame:
-        """``(src, dst)`` node pairs (_path_node) a path connects. A
-        literal is never a subject, so only an inverse or zero-length
-        step starts from one. ``consts`` are the pattern's constant nodes,
-        which every zero-length step pairs with themselves (_graph_nodes)."""
-        g = self.graph_df
+    def _path_sql(self, path, tables: dict[str, DataFrame], table: str,
+                  consts: list[tuple]) -> str:
+        """A property path as Spark SQL selecting the ``(src, dst)`` node
+        pairs (_NODE_SQL) it connects; each DataFrame it reads is added to
+        ``tables`` under a name starting with ``table``. A literal is never
+        a subject, so only an inverse or zero-length step starts from one.
+        ``consts`` are the pattern's constant nodes as object rows
+        (_object_row), which every zero-length step pairs with themselves.
+        A closure is the one DataFrame built here: _kleene over the
+        statement of its inner path."""
+        def ref(df: DataFrame) -> str:
+            name = next((k for k, v in tables.items() if v is df), None)
+            if name is None:
+                name = f"{table}_{len(tables)}"
+                tables[name] = df
+            return f"{{{name}}}"
+
+        def sub(p) -> str:
+            return self._path_sql(p, tables, table, consts)
+
+        def zero() -> str:  # every graph subject and object, and the constants
+            g = ref(self.graph_df)
+            rows = ", ".join("(" + ", ".join(map(_sql_lit, r)) + ")"
+                             for r in consts)
+            values = (f" UNION ALL SELECT {_NODE_SQL} FROM VALUES {rows} "
+                      "AS c(o_iri, o_lex, o_dt, o_lang)" if consts else "")
+            return (f"SELECT n AS src, n AS dst FROM (SELECT s AS n FROM {g} "
+                    f"UNION ALL SELECT {_NODE_SQL} FROM {g}{values})")
+
         if isinstance(path, A.PathPredicate):
-            return (self._triples(path.iri)
-                     .select(F.col("s").alias("src"), _path_node().alias("dst")))
+            return (f"SELECT s AS src, {_NODE_SQL} AS dst "
+                    f"FROM {ref(self._triples(path.iri))}")
         if isinstance(path, A.PathInverse):
-            inner = self._path_pairs(path.inner, consts)
-            return inner.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            return f"SELECT dst AS src, src AS dst FROM ({sub(path.inner)})"
         if isinstance(path, A.PathSequence):
-            out = self._path_pairs(path.parts[0], consts)
-            for part in path.parts[1:]:
-                nxt = (self._path_pairs(part, consts)
-                       .withColumnRenamed("src", "mid_src"))
-                out = (out.join(nxt, out["dst"] == nxt["mid_src"])
-                          .select(out["src"], nxt["dst"]))
-            return out
+            n = len(path.parts)
+            return (f"SELECT x0.src, x{n - 1}.dst FROM ({sub(path.parts[0])}) x0"
+                    + "".join(f" JOIN ({sub(part)}) x{i} ON x{i - 1}.dst = x{i}.src"
+                              for i, part in enumerate(path.parts[1:], 1)))
         if isinstance(path, A.PathAlternative):
-            out = self._path_pairs(path.parts[0], consts)
-            for part in path.parts[1:]:
-                out = out.unionByName(self._path_pairs(part, consts))
-            return out
+            return " UNION ALL ".join(f"SELECT * FROM ({sub(part)})"
+                                      for part in path.parts)
         if isinstance(path, A.PathNegatedPropertySet):
-            # forward arm: any predicate NOT in the forward set; inverse arm:
-            # reversed edges via any predicate NOT in the inverse set. A
-            # direction with no listed members contributes no arm (SPARQL
-            # 1.1 §9.1). Anti-predicate filter is a scan-level NOT IN —
-            # pushed to the source, no join.
-            out = None
-            if path.forward:
-                out = (g.filter(~F.col("p").isin([i.value for i in path.forward]))
-                        .select(F.col("s").alias("src"), _path_node().alias("dst")))
-            if path.inverse:
-                inv = (g.filter(~F.col("p").isin([i.value for i in path.inverse]))
-                        .select(_path_node().alias("src"), F.col("s").alias("dst")))
-                out = inv if out is None else out.unionByName(inv)
-            return out
+            # any predicate NOT in the forward set, and reversed edges via
+            # any predicate NOT in the inverse set; a direction with no
+            # listed members contributes no arm (SPARQL 1.1 §9.1)
+            g = ref(self.graph_df)
+            arms = [f"SELECT {a} AS src, {b} AS dst FROM {g} WHERE p NOT IN "
+                    f"({', '.join(_sql_lit(i.value) for i in iris)})"
+                    for iris, a, b in ((path.forward, "s", _NODE_SQL),
+                                       (path.inverse, _NODE_SQL, "s")) if iris]
+            return " UNION ALL ".join(arms)
         if isinstance(path, A.PathZeroOrOne):
-            return (self._path_pairs(path.inner, consts)
-                    .unionByName(self._graph_nodes(consts)).distinct())
-        if isinstance(path, A.PathOneOrMore):
-            return self._kleene(self._path_pairs(path.inner, consts))
-        if isinstance(path, A.PathZeroOrMore):
-            step = self._kleene(self._path_pairs(path.inner, consts))
-            return step.unionByName(self._graph_nodes(consts)).distinct()
+            return f"SELECT * FROM ({sub(path.inner)}) UNION {zero()}"
+        if isinstance(path, (A.PathOneOrMore, A.PathZeroOrMore)):
+            inner: dict[str, DataFrame] = {}
+            edges = self.spark.sql(
+                self._path_sql(path.inner, inner, "k", consts), **inner)
+            closure = f"SELECT src, dst FROM {ref(self._kleene(edges))}"
+            return (closure if isinstance(path, A.PathOneOrMore)
+                    else f"{closure} UNION {zero()}")
         raise NotImplementedError(f"path {type(path).__name__}")
 
-    def _graph_nodes(self, consts: list[str]) -> DataFrame:
-        """The zero-length path pairs: every subject and every object of
-        the graph, literals included, and every constant node of the
-        pattern, in the graph or not (SPARQL 1.1 §18.4), paired with
-        itself."""
-        g = self.graph_df
-        nodes = (g.select(F.col("s").alias("n"))
-                  .unionByName(g.select(_path_node().alias("n"))))
-        if consts:
-            nodes = nodes.unionByName(self.spark.createDataFrame(
-                [(c,) for c in consts], "n string"))
-        nodes = nodes.distinct()
-        return nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
-
     def _kleene(self, edges: DataFrame, max_iter: int = 20) -> DataFrame:
-        """Transitive closure by pairwise path doubling: P ← P ∪ (P ⋈ P).
-        P always holds paths of ALL lengths 1..L, so composing P with itself
-        reaches every length up to 2L — convergence in ⌈log₂ diameter⌉
-        rounds instead of diameter (a 1M-hop chain closes in 20 rounds).
-        Each round is one equi-join + distinct + anti-join, all shuffling on
-        node keys.
+        """Transitive closure by pairwise path doubling: P ← distinct(P ∪
+        P ⋈ P). P always holds paths of ALL lengths 1..L, so composing P
+        with itself reaches every length up to 2L — convergence in
+        ⌈log₂ diameter⌉ rounds instead of diameter (a 1M-hop chain closes
+        in 20 rounds). The distinct shuffles each round onto the session's
+        shuffle partitions, so P's partition count stays fixed.
 
         localCheckpoint truncates the lineage each round — without it the
         final plan nests one full join tree per iteration and driver-side
-        planning blows up on deep graphs. Convergence is read from the
-        delta's count(), which doubles as the action materializing it into
-        the cache — ONE driver job decides the round (the union checkpoint
-        then reads the cached delta), instead of a separate
-        checkpoint-then-isEmpty pair. The rounds' jobs are named
-        ``otit:kleene``."""
+        planning blows up on deep graphs. P only grows, so a round that
+        leaves its count unchanged leaves the set unchanged: that count,
+        read from the checkpoint, is the convergence test. The rounds'
+        jobs are named ``otit:kleene``."""
         import logging
 
         with job_description(self.spark, "otit:kleene"):
             paths = edges.distinct().localCheckpoint()
-            rounds = 0
-            for _ in range(max_iter):
-                nxt = (paths.withColumnRenamed("dst", "mid")
-                       .join(paths.withColumnRenamed("src", "mid"), "mid")
-                       .select("src", "dst")
-                       .distinct())
-                new = nxt.join(paths, ["src", "dst"], "left_anti").persist()
-                n_new = new.count()  # the materializing action IS the check
-                if n_new == 0:
-                    new.unpersist()
+            n = paths.count()
+            for rounds in range(max_iter):
+                step = (paths.withColumnRenamed("dst", "mid")
+                        .join(paths.withColumnRenamed("src", "mid"), "mid")
+                        .select("src", "dst"))
+                paths = paths.unionByName(step).distinct().localCheckpoint()
+                prev, n = n, paths.count()
+                if n == prev:
                     break
-                rounds += 1
-                paths = paths.unionByName(new).localCheckpoint()
-                new.unpersist()
             else:  # a silent truncation would be a wrong answer, not a slow one
                 raise RuntimeError(
                     f"property-path closure did not converge in {max_iter} "
@@ -2433,7 +2427,9 @@ class Compiler:
         for i, v in enumerate(p.variables):
             cells = [row[i] for row in p.rows if row[i] is not None]
             lits = [t for t in cells if isinstance(t, Literal)]
-            lit_dts = {t.datatype or XSD_STRING for t in lits}
+            # a tagged literal is a string column, as in the catalog
+            lit_dts = {XSD_STRING if t.language else t.datatype or XSD_STRING
+                       for t in lits}
             hint = (literal_typed(lits[0]).hint
                     if len(lit_dts) == 1 and len(lits) == len(cells)
                     else "string")

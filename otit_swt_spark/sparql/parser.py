@@ -23,6 +23,7 @@ from otit_swt_spark.terms import (
     IRI,
     Literal,
     NEST_AGGREGATION,
+    RDF_LANGSTRING,
     RDF_TYPE,
     Variable,
     XSD,
@@ -154,7 +155,7 @@ class Parser:
                 return Literal(lex, dt.value)
             lt = self.accept("langtag")
             if lt is not None:
-                return Literal(lex, XSD_STRING, lt.value[1:])
+                return Literal(lex, RDF_LANGSTRING, lt.value[1:])
             return Literal(lex)
         if t.kind == "num":
             return _num_literal(t.value)

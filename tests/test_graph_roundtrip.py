@@ -64,7 +64,7 @@ def test_turtle_lite_suffixed_literals(spark):
     regression for the tokenizer misidentifying suffixed strings (the last
     matched regex group is the suffix, not the string)."""
     from otit_swt_spark.graph import parse_turtle_lite
-    from otit_swt_spark.terms import XSD, XSD_STRING
+    from otit_swt_spark.terms import RDF_LANGSTRING, XSD
 
     text = """
     PREFIX ex: <http://example.org/>
@@ -78,7 +78,7 @@ def test_turtle_lite_suffixed_literals(spark):
     objs = {t[1].value.rsplit("/", 1)[-1]: t[2] for t in triples}
     assert objs["p"].datatype == XSD + "integer" and objs["p"].lexical == "5"
     assert objs["q"].datatype == XSD + "dateTime"
-    assert objs["r"].language == "de" and objs["r"].datatype == XSD_STRING
+    assert objs["r"].language == "de" and objs["r"].datatype == RDF_LANGSTRING
 
 
 def test_materialized_persists_datatype_catalog(spark, engine, tmp_path):

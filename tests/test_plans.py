@@ -742,13 +742,79 @@ def test_bgp_builds_as_one_sql_statement(spark, monkeypatch):
 def test_bgp_plan_outlives_its_temporary_views(spark):
     """PySpark drops the statement's temporary views once it is analysed:
     no view is left in the catalog, and a plan served from the plan cache
-    still runs."""
+    still runs, one holding a closure's table argument too."""
     g = GraphStore.from_sparql_insert(spark, """
         INSERT DATA { <urn:a> <urn:p> <urn:b> . <urn:b> <urn:q> "x" . }""")
     eng = Engine(spark, g)
-    text = "SELECT ?a ?c WHERE { ?a <urn:p> ?b . ?b <urn:q> ?c }"
-    df = eng.query(text)
-    assert not [t for t in spark.catalog.listTables()
-                if t.name.startswith("_pyspark_")]
-    assert eng.query(text) is df
-    assert [tuple(r) for r in df.collect()] == [("urn:a", "x")]
+    for path in ("<urn:p>", "<urn:p>+"):
+        text = f"SELECT ?a ?c WHERE {{ ?a {path} ?b . ?b <urn:q> ?c }}"
+        df = eng.query(text)
+        assert not [t for t in spark.catalog.listTables()
+                    if t.name.startswith("_pyspark_")]
+        assert eng.query(text) is df
+        assert [tuple(r) for r in df.collect()] == [("urn:a", "x")]
+
+
+@pytest.mark.parametrize("path", [
+    "(<urn:p>/<urn:p>|^<urn:p>)", "!(<urn:q>)", "<urn:p>?"])
+def test_path_bgp_builds_as_one_sql_statement(spark, monkeypatch, path):
+    """A property path without a closure is SQL text inside its BGP's one
+    ``spark.sql`` statement, built in a handful of py4j round trips (200
+    to 524 when each step was its own DataFrame)."""
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.sql import SparkSession
+
+    from otit_swt_spark.sparql import algebra as A
+    from otit_swt_spark.sparql.compiler import Compiler
+    from otit_swt_spark.sparql.parser import parse_query
+
+    g = GraphStore.from_sparql_insert(spark, """INSERT DATA {
+        <urn:a> <urn:p> <urn:b> . <urn:b> <urn:p> <urn:c> .
+        <urn:b> <urn:q> "x" . <urn:c> <urn:r> <urn:a> . }""")
+    bgp = parse_query(
+        f"SELECT * WHERE {{ ?x {path} ?y . ?y <urn:r> ?z }}").pattern
+    while not isinstance(bgp, A.BGP):
+        bgp = bgp.inner
+
+    def compile_bgp():
+        return Compiler(spark, g.df, pred_datatypes=g.predicate_datatypes,
+                        vp=g.vp).compile_bgp(bgp, None)
+
+    want = sorted(tuple(r) for r in compile_bgp().df.collect())
+    calls = {"py4j": 0, "sql": 0}
+    send, sql = ClientServerConnection.send_command, SparkSession.sql
+
+    def counted_send(self, command):
+        calls["py4j"] += 1
+        return send(self, command)
+
+    def counted_sql(self, *args, **kwargs):
+        calls["sql"] += 1
+        return sql(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted_send)
+    monkeypatch.setattr(SparkSession, "sql", counted_sql)
+    sm = compile_bgp()
+    monkeypatch.undo()
+    assert calls["sql"] == 1
+    assert calls["py4j"] <= 40, calls
+    assert want and sorted(tuple(r) for r in sm.df.collect()) == want
+
+
+def test_kleene_keeps_the_shuffle_partition_count(spark):
+    """Each closure round is one distinct over the session's shuffle
+    partitions, so the closure of a 30-node chain has at most 200
+    partitions under the default setting (a round that unioned its new
+    pairs onto the last round's added 200 each time, 1001 in all)."""
+    from otit_swt_spark.sparql.compiler import Compiler
+
+    edges = spark.createDataFrame(
+        [(f"urn:n{i}", f"urn:n{i + 1}") for i in range(29)], "src string, dst string")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        closure = Compiler(spark, None)._kleene(edges)
+        assert closure.rdd.getNumPartitions() <= 200
+        assert closure.count() == 30 * 29 // 2
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

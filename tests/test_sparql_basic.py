@@ -595,7 +595,7 @@ def test_from_endpoint_paged_pull(spark):
     assert ("http://ex/s1", "http://ex/p", None, "1",
             "http://www.w3.org/2001/XMLSchema#integer", None) in got
     assert ("http://ex/s2", "http://ex/p", None, "hi2",
-            "http://www.w3.org/2001/XMLSchema#string", "en") in got
+            "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString", "en") in got
     assert g.df.count() == 5
 
 

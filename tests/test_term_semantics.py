@@ -320,7 +320,11 @@ def test_path_object_binds_like_graph_object(path_eng):
             ("<urn:q>+", '"1"^^xsd:integer', ["urn:t", "urn:u"]),
             ("<urn:q>", '"1"^^xsd:integer', ["urn:u"]), ("<urn:q>", '"1"', ["urn:s"]),
             ("<urn:q>*", '"1"^^xsd:integer', ["1", "urn:t", "urn:u"]),
-            ("<urn:p>*", '"1"', ["1"]), ("<urn:p>?", '"1"', ["1"])]:
+            ("<urn:p>*", '"1"', ["1"]), ("<urn:p>?", '"1"', ["1"]),
+            ("(<urn:q>+|^<urn:p>)", '"1"^^xsd:integer', ["urn:t", "urn:u"]),
+            ("(<urn:q>+|^<urn:p>)", "<urn:a>", ["urn:b"]),
+            ("!(<urn:q>)?", '"n"^^<urn:dt>', ["n", "urn:b"]),
+            ("!(<urn:q>)?", '"1"', ["1"])]:
         got = path_eng.query(f"""
             PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
             SELECT ?s WHERE {{ ?s {pattern} {obj} }}""").collect()
@@ -464,3 +468,24 @@ def test_catalog_blind_output_keeps_iris_beside_literals(path_eng):
     assert sorted(r["o"] for r in got.collect()) == ["1", "urn:t", "urn:u"]
     typed = path_eng.query("SELECT ?o WHERE { <urn:u> <urn:q>+ ?o }")
     assert [r["o"] for r in typed.collect()] == [1]
+
+
+def test_tagged_literal_meets_a_mapper_typed_graph(spark):
+    """The stOTTR mapper stores "x"@en as rdf:langString, as every other
+    writer does: a VALUES cell and a zero-length path constant in that
+    language meet the graph's literal, and the catalog keeps the tagged
+    object a string column."""
+    from otit_swt_spark.mapper.mapping import ExpandOptions, Mapping
+
+    m = Mapping.from_str("""
+        @prefix ex:<urn:>.
+        ex:T [?s, ?o] :: { ottr:Triple(?s, <urn:p>, ?o) } .""", spark=spark)
+    m.expand("urn:T", spark.createDataFrame(
+        [("k", "urn:s", "x")], "Key string, s string, o string"),
+        ExpandOptions(language_tags={"o": "en"}))
+    eng = Engine(spark, GraphStore(spark, m.triples_df()))
+    assert eng.graph.predicate_datatypes()["urn:p"]["dt"] == XSD_STRING
+    got = eng.query('SELECT ?s WHERE { ?s <urn:p> ?o . VALUES ?o { "x"@en } }')
+    assert [r["s"] for r in got.collect()] == ["urn:s"]
+    got = eng.query('SELECT ?s WHERE { ?s <urn:p>? "x"@en }')
+    assert sorted(r["s"] for r in got.collect()) == ["urn:s", "x"]
