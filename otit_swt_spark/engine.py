@@ -279,8 +279,7 @@ class Engine:
         self.graph.df.createOrReplaceTempView(triples_view)
         ts = None
         for t in self.ts_tables:
-            # the hidden __part_* pruning companions are compiler-internal
-            n = t.normalized(self.spark).select("id", "timestamp", "value")
+            n = t.normalized(self.spark)
             ts = n if ts is None else ts.unionByName(n)
         if ts is not None:
             ts.createOrReplaceTempView(ts_view)

@@ -455,8 +455,7 @@ class FlightTimeSeriesTable(TimeSeriesTable):
                                       agg_type: str = "double"):
         """Execute the grouped pushdown (render_grouped_sql) on the
         remote store — one row per (id tuple, granule) crosses the wire
-        instead of one point stream per chain. Date partitions are the
-        store's own business, so the ``__part_*`` columns are NULL."""
+        instead of one point stream per chain."""
         cast = _SQL_AGG_TYPE.get(agg_type)
         if cast is None:
             return None
@@ -492,8 +491,6 @@ class FlightTimeSeriesTable(TimeSeriesTable):
         cols = [F.col(f"id_{i}").cast("string").alias(f"id_{i}")
                 for i in chains]
         cols.append(F.col(self.timestamp_column).alias("timestamp"))
-        cols += [F.lit(None).cast("int").alias(f"__part_{part}")
-                 for part in ("year", "month", "day")]
         cols.append(F.col("__gp_cnt").cast("long").alias("__gp_cnt"))
         for i in chains:
             cols.append(F.col(f"__gp_n_{i}").cast("long").alias(f"__gp_n_{i}"))

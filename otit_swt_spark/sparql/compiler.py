@@ -149,8 +149,7 @@ def _datetime_bound(c: A.Expr) -> tuple | None:
     variable with an xsd:dateTime or xsd:date literal, rewritten as
     ``?var op literal``; None for anything else or an unparseable
     literal. The single reader of FILTER timestamp bounds: each caller
-    applies its own policy (relaxed remote hints, exact grouped bounds,
-    date-partition pruning)."""
+    applies its own policy (relaxed remote hints, exact grouped bounds)."""
     if not isinstance(c, A.ECmp):
         return None
     op, var, lit = c.op, c.left, c.right
@@ -716,16 +715,21 @@ class Compiler:
 
     @staticmethod
     def _harmonize_ts_union(dfs: list[DataFrame]) -> tuple[DataFrame, str]:
+        """The tables' value columns unioned under one hint: a mix of
+        numbers and booleans as double, a mix with a string column as
+        string, so no value is lost."""
         hints = {{"long": "long", "bigint": "long", "int": "long", "smallint": "long",
                   "tinyint": "long", "double": "double", "float": "double",
                   "boolean": "bool", "string": "string"}.get(
                       df.schema["value"].dataType.simpleString(), "double")
                  for df in dfs}
-        hint = hints.pop() if len(hints) == 1 else None  # None: mixed
-        if hint in (None, "long"):
-            dfs = [d.withColumn("value", F.col("value").cast(hint or "double"))
+        mixed = len(hints) > 1
+        hint = ("string" if "string" in hints else "double") if mixed \
+            else hints.pop()
+        if mixed or hint == "long":
+            dfs = [d.withColumn("value", F.col("value").cast(hint))
                    for d in dfs]
-        return functools.reduce(DataFrame.unionByName, dfs), hint or "double"
+        return functools.reduce(DataFrame.unionByName, dfs), hint
 
     #: pushdown id-list cap (same bound-join discipline as
     #: SERVICE_BOUND_JOIN_MAX): above this many distinct external ids the
@@ -1665,7 +1669,6 @@ class Compiler:
                 cols.append(F.col(f"__gp_{key}_{i}").alias(name))
                 vars2[name] = VarMeta("native",
                                       "long" if key == "n" else hint)
-        self._carry_date_parts(cols, info)
         spec["fired"] = True
         return self._join_ts(sm, SolutionMapping(df.select(*cols), vars2),
                              eids, infos)
@@ -1791,31 +1794,15 @@ class Compiler:
                     chain_info.setdefault(key, term.name)
                 else:
                     ts_df = ts_df.filter(_ts_literal_eq(F.col(src), hint, term))
-        if "t" in chain_info:
-            self._carry_date_parts(cols, chain_info)
         return self._join_ts(sm, SolutionMapping(ts_df.select(*cols), vars2),
                              [eid], {tj["dp"]: chain_info})
-
-    def _carry_date_parts(self, cols: list[Column], info: dict) -> None:
-        """Date-partitioned tables: carry the hidden partition columns so
-        apply_filter can derive partition predicates from timestamp
-        filters (reference partitioning_support.rs parity — partition
-        pruning is THE scan lever on a date-laid-out 100 TB store)."""
-        if not any(t.has_date_partitions() for t in self.ts_tables):
-            return
-        parts: dict[str, str] = {}
-        for part in ("year", "month", "day"):
-            name = self.fresh(f"part_{part}")
-            cols.append(F.col(f"__part_{part}").alias(name))
-            parts[part] = name
-        info["parts"] = parts
 
     def _join_ts(self, sm: SolutionMapping, tsm: SolutionMapping,
                  eids: list[str], infos: dict[str, dict]) -> SolutionMapping:
         """Join fetched time-series rows onto the static side on the
         synthetic external-id vars, project those away, and record each
-        chain's columns in ts_chains (read by later rebinds, OPTIONAL fast
-        paths and partition pruning)."""
+        chain's columns in ts_chains (read by later rebinds and OPTIONAL
+        fast paths)."""
         out = self.join_solutions(sm, tsm)
         out = replace(out, df=out.df.drop(*eids),
                       vars={k: m for k, m in out.vars.items() if k not in eids})
@@ -2116,56 +2103,7 @@ class Compiler:
         sm2, exists_cols, flags = self.resolve_exists(sm, expr)
         cond = compile_expr(expr, sm2, exists_cols)
         df = sm2.df.filter(_as_bool(cond))   # SPARQL EBV, not a bare cast
-        for p in self._partition_prune_predicates(sm2, expr):
-            df = df.filter(p)
         return replace(sm2, df=df.drop(*flags))
-
-    def _partition_prune_predicates(self, sm: SolutionMapping,
-                                    expr: A.Expr) -> list[Column]:
-        """Derive date-partition predicates from timestamp comparisons in
-        the filter's top-level conjunction — the Spark form of the
-        reference's partitioning rewrite (timeseries_sql_rewrite/
-        partitioning_support.rs): a predicate on the hidden
-        ``__part_year/month/day`` columns is pushed by Catalyst through the
-        joins into the partitioned scan where it becomes PartitionFilters.
-        Null-guarded, so unpartitioned tables in the union are unaffected;
-        semantically redundant with the timestamp filter, so always sound."""
-        tvar_parts: dict[str, dict] = {}
-        for info in sm.ts_chains.values():
-            t, parts = info.get("t"), info.get("parts")
-            if t and parts and all(c in sm.df.columns for c in parts.values()):
-                tvar_parts[t] = parts
-        if not tvar_parts:
-            return []
-
-        def bound(parts, d: _dt.date, lower: bool) -> Column:
-            y = F.col(parts["year"])
-            m = F.col(parts["month"])
-            dd = F.col(parts["day"])
-            if lower:
-                day_ok = dd.isNull() | (dd >= d.day)
-                mon_ok = m.isNull() | (m > d.month) | ((m == d.month) & day_ok)
-                return y.isNull() | (y > d.year) | ((y == d.year) & mon_ok)
-            day_ok = dd.isNull() | (dd <= d.day)
-            mon_ok = m.isNull() | (m < d.month) | ((m == d.month) & day_ok)
-            return y.isNull() | (y < d.year) | ((y == d.year) & mon_ok)
-
-        preds: list[Column] = []
-        for c in _conjuncts(expr):
-            b = _datetime_bound(c)
-            if b is None or b[0] not in tvar_parts:
-                continue
-            # Partition columns are derived from UTC timestamps: the
-            # bound's date is taken after UTC normalization, or an offset
-            # literal could prune a day that still holds matching rows
-            # (e.g. +02:00 times crossing midnight).
-            var, op, dtv, _ = b
-            parts, d = tvar_parts[var], dtv.date()
-            if op in (">", ">=", "="):
-                preds.append(bound(parts, d, lower=True))
-            if op in ("<", "<=", "="):
-                preds.append(bound(parts, d, lower=False))
-        return preds
 
     def apply_extend(self, sm: SolutionMapping, var: str, expr: A.Expr) -> SolutionMapping:
         # STRLANG builds a language-tagged literal: the value lands in the

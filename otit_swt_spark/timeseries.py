@@ -7,10 +7,11 @@ year/month/day partition columns) and the in-memory variant at
 hybrid/src/timeseries_database/simple_in_memory_timeseries.rs:17-19.
 
 Spark-first: the table is one tall DataFrame ``(id, timestamp, value, ...)``
-— ideally date-partitioned parquet so Catalyst prunes partitions from
-timestamp predicates. Every table applies a query's restriction itself:
-the compiler hands each registered table the same external-id list and
-timestamp bounds (``restricted_normalized``) and, under a pushed-down
+— ideally date-partitioned parquet, whose declared year/month/day columns
+the table prunes from the timestamp bounds it is given. Every table
+applies a query's restriction itself: the compiler hands each registered
+table the same external-id list and timestamp bounds
+(``restricted_normalized``) and, under a pushed-down
 GROUP BY, asks for grouped partials over one chain or the synchronized
 join of several (``grouped_restricted_normalized``). The base class does
 this with Spark filters over its own relation (one chain only), so for
@@ -85,32 +86,47 @@ class TimeSeriesTable:
             return self._df
         return spark.read.parquet(self.path)
 
-    def has_date_partitions(self) -> bool:
-        return bool(self.year_column or self.month_column or self.day_column)
-
     def normalized(self, spark: SparkSession) -> DataFrame:
-        """Project to the canonical (id, timestamp, value) shape, plus the
-        declared date-partition columns as hidden ``__part_year/month/day``
-        companions (null literals when undeclared, so unions align). The
-        compiler derives partition predicates from timestamp filters over
-        these — the Spark analog of the reference's partition rewrite
-        (hybrid/src/timeseries_database/timeseries_sql_rewrite/
-        partitioning_support.rs)."""
+        """The relation projected to the canonical (id, timestamp, value)
+        shape."""
         return self._normalize(self.load(spark))
 
     def _normalize(self, df: DataFrame) -> DataFrame:
-        cols = [
+        return df.select(
             F.col(self.identifier_column).cast("string").alias("id"),
             F.col(self.timestamp_column).alias("timestamp"),
-            F.col(self.value_column).alias("value"),
-        ]
-        for part, col in (("year", self.year_column),
-                          ("month", self.month_column),
-                          ("day", self.day_column)):
-            cols.append(
-                (F.col(col).cast("int") if col
-                 else F.lit(None).cast("int")).alias(f"__part_{part}"))
-        return df.select(*cols)
+            F.col(self.value_column).alias("value"))
+
+    def _prune_date_partitions(self, df: DataFrame, dtv: _dt.datetime,
+                               lower: bool) -> DataFrame:
+        """``df`` restricted to the date partitions that can hold a
+        timestamp ``>= dtv`` (``lower``) or ``<= dtv``: a lexicographic
+        bound over the declared prefix of (year, month, day), compared
+        with ``dtv``'s UTC date — the layout's columns are derived from
+        UTC timestamps. A row with a null partition value passes, and a
+        table that declares no year column is not filtered. The Spark
+        form of the reference's partition rewrite
+        (hybrid/src/timeseries_database/timeseries_sql_rewrite/
+        partitioning_support.rs): Catalyst turns it into PartitionFilters
+        on a partitioned scan."""
+        if dtv.tzinfo is not None:
+            dtv = dtv.astimezone(_dt.timezone.utc)
+        d = dtv.date()
+        prefix = []
+        for col, v in ((self.year_column, d.year),
+                       (self.month_column, d.month),
+                       (self.day_column, d.day)):
+            if col is None:
+                break
+            prefix.append((F.col(col).cast("int"), v))
+        ok = None
+        for c, v in reversed(prefix):
+            if ok is None:
+                ok = c >= v if lower else c <= v
+            else:
+                ok = (c > v if lower else c < v) | ((c == v) & ok)
+            ok = c.isNull() | ok
+        return df if ok is None else df.where(ok)
 
     def restricted_normalized(self, spark: SparkSession, *,
                               ids: list[str] | None = None,
@@ -127,8 +143,13 @@ class TimeSeriesTable:
         The id set comes from a join, so Catalyst cannot derive it: the
         explicit IN-list prunes the chain before its exchange and reaches
         PushedFilters on a parquet-backed scan, and the timestamp bounds
-        push down the ordinary way."""
-        df = self.normalized(spark)
+        push down the ordinary way. Each bound also prunes the declared
+        date partitions (_prune_date_partitions)."""
+        df = self.load(spark)
+        for dtv, lower in ((ts_lower, True), (ts_upper, False)):
+            if dtv is not None:
+                df = self._prune_date_partitions(df, dtv, lower)
+        df = self._normalize(df)
         if ids is not None:
             df = df.where(F.col("id").isin(ids))
         if ts_lower is not None:
@@ -147,7 +168,7 @@ class TimeSeriesTable:
         ``value_aggs`` flag (the reference's GroupedTimeSeriesQuery over
         one basic query or the synchronized join of several,
         timeseries_sql_rewrite.rs:356-428 + :470-560): ``(id_1..id_n,
-        timestamp, __part_year/month/day, __gp_cnt, __gp_n_<i>,
+        timestamp, __gp_cnt, __gp_n_<i>,
         __gp_sum_<i>, __gp_min_<i>, __gp_max_<i>)`` rows whose COUNT(*) /
         COUNT / SUM / MIN / MAX the compiler re-aggregates. ``ids`` is
         bare ids for one chain and ``(id_1..id_n)`` tuples for several;
@@ -174,7 +195,6 @@ class TimeSeriesTable:
         v = raw.cast(agg_type) if value_aggs[0] else F.lit(None).cast(agg_type)
         return df.select(
             F.col("id").alias("id_1"), "timestamp",
-            "__part_year", "__part_month", "__part_day",
             F.lit(1).cast("long").alias("__gp_cnt"),
             F.when(raw.isNotNull(), F.lit(1)).otherwise(F.lit(0))
             .cast("long").alias("__gp_n_1"),

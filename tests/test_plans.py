@@ -228,23 +228,49 @@ def test_hybrid_restriction_reaches_parquet_scan(spark, tmp_path):
                         ("ts2", 3.0), ("ts2", 4.0)]
 
 
-def test_sparql_timestamp_filter_prunes_date_partitions(spark, tmp_path):
-    """A SPARQL FILTER on the data-point timestamp over a year/month/day-
-    partitioned TS table derives hidden partition predicates
-    (compiler._partition_prune_predicates — partitioning_support.rs parity)
-    that Catalyst turns into PartitionFilters on the scan."""
+def _write_eight_days(spark, path: str) -> str:
+    """Series ts1 over Dec 30 2023 – Jan 6 2024, one point a day valued
+    0.0–7.0, as parquet partitioned by year/month/day."""
     import pandas as pd
-    from otit_swt_spark.timeseries import TimeSeriesTable
-    from tests.conftest import TESTDATA_SPARQL
 
     ts = pd.date_range("2023-12-30", periods=8, freq="D")
     pdf = pd.DataFrame({
         "id": ["ts1"] * 8, "timestamp": ts, "value": [float(i) for i in range(8)],
         "year": ts.year, "month": ts.month, "day": ts.day,
     })
-    path = str(tmp_path / "ts_part")
     (spark.createDataFrame(pdf).write.partitionBy("year", "month", "day")
      .parquet(path))
+    return path
+
+
+@pytest.mark.parametrize("where, want", [
+    ("""?ts otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v .
+        FILTER(?t >= "2024-01-02T00:00:00"^^xsd:dateTime &&
+               ?t < "2024-01-05T00:00:00"^^xsd:dateTime)""",
+     [3.0, 4.0, 5.0]),  # Jan 2, 3, 4
+    ("""?ts otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasTimestamp "2024-01-03T00:00:00"^^xsd:dateTime .
+        ?dp otit_swt:hasValue ?v .""",
+     [4.0]),  # Jan 3
+    ("""OPTIONAL { ?ts otit_swt:hasDataPoint ?dp .
+                   ?dp otit_swt:hasTimestamp ?t .
+                   ?dp otit_swt:hasValue ?v
+                   FILTER(?t >= "2024-01-04T00:00:00"^^xsd:dateTime) }""",
+     [5.0, 6.0, 7.0]),  # Jan 4, 5, 6
+], ids=["filter", "literal", "optional"])
+def test_sparql_timestamp_filter_prunes_date_partitions(spark, tmp_path,
+                                                        where, want):
+    """A timestamp bound on the data point — a FILTER, a literal
+    hasTimestamp or an OPTIONAL's condition — over a year/month/day-
+    partitioned TS table becomes predicates on its partition columns
+    (TimeSeriesTable._prune_date_partitions — partitioning_support.rs
+    parity) that Catalyst turns into PartitionFilters on the scan."""
+    from otit_swt_spark.timeseries import TimeSeriesTable
+    from tests.conftest import TESTDATA_SPARQL
+
+    path = _write_eight_days(spark, str(tmp_path / "ts_part"))
     table = TimeSeriesTable(path=path, year_column="year",
                             month_column="month", day_column="day")
     eng = Engine(spark, GraphStore.from_sparql_insert(spark, TESTDATA_SPARQL))
@@ -252,17 +278,60 @@ def test_sparql_timestamp_filter_prunes_date_partitions(spark, tmp_path):
     df = eng.query(PREFIXES + """
     SELECT ?t ?v WHERE {
         ?ts otit_swt:hasExternalId "ts1" .
-        ?ts otit_swt:hasDataPoint ?dp .
-        ?dp otit_swt:hasTimestamp ?t .
-        ?dp otit_swt:hasValue ?v .
-        FILTER(?t >= "2024-01-02T00:00:00"^^xsd:dateTime &&
-               ?t < "2024-01-05T00:00:00"^^xsd:dateTime)
+        """ + where + """
     }""")
     plan = physical(df)
     seg = plan[plan.index("PartitionFilters"):][:600]
     assert "year" in seg  # derived bounds reached the partitioned scan
     got = sorted(r["v"] for r in df.collect())
-    assert got == [3.0, 4.0, 5.0]  # Jan 2, 3, 4
+    assert got == want
+
+
+def _partition_filters(spark, df) -> str:
+    """The PartitionFilters list of the plan's one partitioned scan."""
+    # the default metadata length (100) truncates the scan's filter list
+    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
+    try:
+        plan = physical(df)
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    seg = plan[plan.index("PartitionFilters: ["):]
+    return seg[:seg.index("], PushedFilters")]
+
+
+@pytest.mark.parametrize("declared", [("year",), ("year", "month")])
+def test_partial_date_partition_declaration_prunes_its_prefix(
+        spark, tmp_path, declared):
+    """A table that declares only a prefix of (year, month, day) prunes on
+    that prefix alone and answers like the full declaration."""
+    from otit_swt_spark.timeseries import TimeSeriesTable
+    from tests.conftest import TESTDATA_SPARQL
+
+    path = _write_eight_days(spark, str(tmp_path / "ts_part_prefix"))
+    q = PREFIXES + """
+    SELECT ?v WHERE {
+        ?ts otit_swt:hasExternalId "ts1" .
+        ?ts otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v .
+        FILTER(?t >= "2024-01-02T00:00:00"^^xsd:dateTime &&
+               ?t < "2024-01-05T00:00:00"^^xsd:dateTime)
+    }"""
+    graph = GraphStore.from_sparql_insert(spark, TESTDATA_SPARQL)
+
+    def query(parts):
+        eng = Engine(spark, graph).add_timeseries_table(TimeSeriesTable(
+            path=path, **{f"{p}_column": p for p in parts}))
+        return eng.query(q)
+
+    df = query(declared)
+    pf = _partition_filters(spark, df)
+    for part in ("year", "month", "day"):
+        assert (part in pf) == (part in declared), (part, pf)
+    full = query(("year", "month", "day"))
+    assert "day" in _partition_filters(spark, full)
+    assert sorted(r["v"] for r in df.collect()) \
+        == sorted(r["v"] for r in full.collect()) == [3.0, 4.0, 5.0]
 
 
 def test_bucketed_store_joins_without_shuffle(spark, tmp_path, monkeypatch):

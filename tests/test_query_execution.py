@@ -554,3 +554,30 @@ def test_timestamp_restriction_ignores_driver_time_zone(spark, engine,
     for zone in ("Asia/Tokyo", "America/New_York"):
         local_tz(zone)
         assert run() == want, zone
+
+
+def test_tables_with_mixed_value_types_union_as_strings(spark, engine):
+    """One table of doubles and one of strings answer one chain query
+    together: the union keeps every value as a string rather than
+    failing to cast ``"on"`` to a double."""
+    import pandas as pd
+
+    from otit_swt_spark.engine import Engine
+    from otit_swt_spark.terms import XSD_STRING
+    from otit_swt_spark.timeseries import in_memory_timeseries
+
+    stamp = pd.to_datetime(["2022-06-01 08:46:52"])
+    eng = Engine(spark, engine.graph)
+    eng.add_timeseries_table(in_memory_timeseries(
+        spark, {"ts1": pd.DataFrame({"timestamp": stamp, "value": [1.5]})}))
+    eng.add_timeseries_table(in_memory_timeseries(
+        spark, {"ts2": pd.DataFrame({"timestamp": stamp, "value": ["on"]})},
+        value_datatype=XSD_STRING))
+    got = rows(eng.query(PREFIXES + """
+    SELECT ?id ?v WHERE {
+        ?s otit_swt:hasExternalId ?id .
+        ?s otit_swt:hasDataPoint ?dp .
+        ?dp otit_swt:hasTimestamp ?t .
+        ?dp otit_swt:hasValue ?v .
+    }"""))
+    assert got == [("ts1", "1.5"), ("ts2", "on")]
