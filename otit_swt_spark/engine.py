@@ -277,11 +277,9 @@ class Engine:
         normalized time-series tables as temp views so users can mix
         ``spark.sql`` with engine queries on the same session."""
         self.graph.df.createOrReplaceTempView(triples_view)
-        ts = None
-        for t in self.ts_tables:
-            n = t.normalized(self.spark)
-            ts = n if ts is None else ts.unionByName(n)
-        if ts is not None:
+        if self.ts_tables:
+            ts, _ = Compiler._harmonize_ts_union(
+                [t.normalized(self.spark) for t in self.ts_tables])
             ts.createOrReplaceTempView(ts_view)
         return self
 

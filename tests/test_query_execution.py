@@ -558,8 +558,9 @@ def test_timestamp_restriction_ignores_driver_time_zone(spark, engine,
 
 def test_tables_with_mixed_value_types_union_as_strings(spark, engine):
     """One table of doubles and one of strings answer one chain query
-    together: the union keeps every value as a string rather than
-    failing to cast ``"on"`` to a double."""
+    together, and read together through the registered view: the union
+    keeps every value as a string rather than failing to cast ``"on"``
+    to a double."""
     import pandas as pd
 
     from otit_swt_spark.engine import Engine
@@ -581,3 +582,5 @@ def test_tables_with_mixed_value_types_union_as_strings(spark, engine):
         ?dp otit_swt:hasValue ?v .
     }"""))
     assert got == [("ts1", "1.5"), ("ts2", "on")]
+    eng.register_views("mixed_value_triples", "mixed_value_ts")
+    assert rows(spark.sql("SELECT id, value FROM mixed_value_ts")) == got
