@@ -109,6 +109,8 @@ class TimeSeriesTable:
         (hybrid/src/timeseries_database/timeseries_sql_rewrite/
         partitioning_support.rs): Catalyst turns it into PartitionFilters
         on a partitioned scan."""
+        if self.year_column is None:
+            return df
         if dtv.tzinfo is not None:
             dtv = dtv.astimezone(_dt.timezone.utc)
         d = dtv.date()
@@ -119,14 +121,10 @@ class TimeSeriesTable:
             if col is None:
                 break
             prefix.append((F.col(col).cast("int"), v))
-        ok = None
+        ok = F.lit(True)
         for c, v in reversed(prefix):
-            if ok is None:
-                ok = c >= v if lower else c <= v
-            else:
-                ok = (c > v if lower else c < v) | ((c == v) & ok)
-            ok = c.isNull() | ok
-        return df if ok is None else df.where(ok)
+            ok = c.isNull() | (c > v if lower else c < v) | ((c == v) & ok)
+        return df.where(ok)
 
     def restricted_normalized(self, spark: SparkSession, *,
                               ids: list[str] | None = None,
