@@ -199,9 +199,9 @@ class Engine:
         reference (read-only engine; graphs are built via the mapper).
         Deletes apply before inserts from one WHERE evaluation (SPARQL 1.1
         Update §3.1.3); the store keeps set semantics."""
-        from otit_swt_spark.graph import TRIPLES_SCHEMA, _term_to_row
+        from otit_swt_spark.graph import TRIPLES_SCHEMA
         from otit_swt_spark.sparql import algebra as A
-        from otit_swt_spark.terms import Variable
+        from otit_swt_spark.terms import Variable, triple_row
 
         q = parse_query(sparql)
         if not isinstance(q, A.UpdateQuery):
@@ -217,7 +217,7 @@ class Engine:
                         raise ValueError(
                             "INSERT/DELETE DATA requires ground triples; "
                             f"found variable ?{term.name}")
-                rows.append(_term_to_row(tp.s, pred, tp.o))
+                rows.append(triple_row(tp.s, pred, tp.o))
             return self.spark.createDataFrame(rows, TRIPLES_SCHEMA)
 
         if q.data_only:

@@ -22,12 +22,19 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from otit_swt_spark.session import job_description
 from otit_swt_spark.terms import (
+    NT_ESCAPES,
     RDF_LANGSTRING,
+    RDF_TYPE,
+    XSD_BOOLEAN,
     XSD_STRING,
     BlankNode,
     IRI,
     Literal,
     Term,
+    numeric_datatype,
+    sparql_json_term,
+    triple_row,
+    unescape,
 )
 
 TRIPLES_SCHEMA = T.StructType(
@@ -45,16 +52,6 @@ TRIPLES_SCHEMA = T.StructType(
 #: on the driver (GraphStore.vp): below it a BGP join reads a LocalRelation
 #: instead of scanning the whole graph for one predicate.
 VP_INLINE_MAX_ROWS = 10_000
-
-
-def _term_to_row(s: Term, p: Term, o: Term) -> tuple:
-    s_str = str(s) if isinstance(s, BlankNode) else s.value if isinstance(s, IRI) else str(s)
-    p_str = p.value if isinstance(p, IRI) else str(p)
-    if isinstance(o, Literal):
-        return (s_str, p_str, None, o.lexical, o.datatype or XSD_STRING, o.language)
-    if isinstance(o, BlankNode):
-        return (s_str, p_str, str(o), None, None, None)
-    return (s_str, p_str, o.value if isinstance(o, IRI) else str(o), None, None, None)
 
 
 def catalog_of(df: DataFrame) -> dict[str, dict]:
@@ -207,7 +204,7 @@ class GraphStore:
     def from_triples(
         cls, spark: SparkSession, triples: Iterable[tuple[Term, Term, Term]]
     ) -> "GraphStore":
-        rows = [_term_to_row(s, p, o) for (s, p, o) in triples]
+        rows = [triple_row(s, p, o) for (s, p, o) in triples]
         return cls(spark, spark.createDataFrame(rows, TRIPLES_SCHEMA))
 
     @classmethod
@@ -269,7 +266,8 @@ class GraphStore:
                      f"LIMIT {page_size} OFFSET {offset}")
                 doc = poster(url, q)
                 bindings = doc.get("results", {}).get("bindings", [])
-                rows.extend(_sparql_json_binding_to_row(b) for b in bindings)
+                rows.extend(triple_row(*(sparql_json_term(b[k]) for k in "spo"))
+                            for b in bindings)
                 if len(bindings) < page_size:
                     break
                 offset += page_size
@@ -290,7 +288,7 @@ class GraphStore:
                     q = (f"SELECT ?s ?p ?o WHERE {{ ?s ?p ?o }} "
                          f"LIMIT {page_size} OFFSET {page * page_size}")
                     d = poster(url, q)
-                    rows = [_sparql_json_binding_to_row(b)
+                    rows = [triple_row(*(sparql_json_term(b[k]) for k in "spo"))
                             for b in d.get("results", {}).get("bindings", [])]
                     yield pd.DataFrame(rows, columns=cols)
 
@@ -387,19 +385,17 @@ class GraphStore:
         return store
 
     def to_ntriples_df(self) -> DataFrame:
-        """Serialize to one N-Triples line per row (reference:
-        mapper/src/mapping/ntriples_write.rs:52). Pure built-in functions —
-        stays in whole-stage codegen."""
+        """Serialize to one N-Triples line per row, column ``value``
+        (reference: mapper/src/mapping/ntriples_write.rs:52), escaping a
+        literal like ``Literal.ntriples`` (``terms.NT_ESCAPES``). Pure
+        built-in functions — stays in whole-stage codegen."""
         df = self.df
         s_term = F.when(F.col("s").startswith("_:"), F.col("s")).otherwise(
             F.concat(F.lit("<"), F.col("s"), F.lit(">"))
         )
-        esc = F.regexp_replace(
-            F.regexp_replace(F.col("o_lex"), r"\\", r"\\\\"), '"', '\\\\"'
-        )
-        esc = F.replace(esc, F.lit("\n"), F.lit("\\n"))
-        esc = F.replace(esc, F.lit("\r"), F.lit("\\r"))
-        esc = F.replace(esc, F.lit("\t"), F.lit("\\t"))
+        esc = F.col("o_lex")
+        for ch, echar in NT_ESCAPES:
+            esc = F.replace(esc, F.lit(ch), F.lit(echar))
         lit_term = (
             F.when(
                 F.col("o_lang").isNotNull(),
@@ -441,27 +437,23 @@ def _default_sparql_post(url: str, query: str) -> dict:
         return json.loads(resp.read().decode("utf-8"))
 
 
-def _sparql_json_binding_to_row(b: dict) -> tuple:
-    """One SPARQL-JSON solution {s,p,o} -> a TRIPLES_SCHEMA row."""
-    s = b["s"]
-    s_val = f"_:{s['value']}" if s.get("type") == "bnode" else s["value"]
-    p_val = b["p"]["value"]
-    o = b["o"]
-    if o.get("type") == "literal" or o.get("type") == "typed-literal":
-        lang = o.get("xml:lang")
-        dt = RDF_LANGSTRING if lang else o.get("datatype") or XSD_STRING
-        return (s_val, p_val, None, o["value"], dt, lang)
-    if o.get("type") == "bnode":
-        return (s_val, p_val, f"_:{o['value']}", None, None, None)
-    return (s_val, p_val, o["value"], None, None, None)
-
-
 # -- text parsers (driver-side; graphs arrive as small text documents) -----
 
 _IRIREF = r"<([^>]*)>"
 _PNAME = r"([A-Za-z_][\w.-]*)?:([A-Za-z_][\w.-]*)"
 _BNODE = r"_:([A-Za-z_][\w.-]*)"
 _STRING = r'"((?:[^"\\]|\\.)*)"'
+
+#: an IRI, a string, or a comment: ``#`` to the end of the line outside the
+#: other two
+_COMMENT_RE = re.compile(rf"{_IRIREF}|{_STRING}|#[^\r\n]*")
+
+
+def _strip_comments(text: str) -> str:
+    """``text`` with every comment turned into whitespace."""
+    return _COMMENT_RE.sub(
+        lambda m: " " if m.group(0).startswith("#") else m.group(0), text)
+
 
 _TOKEN_RE = re.compile(
     rf"""(?x)
@@ -480,23 +472,12 @@ _PREFIX_RE = re.compile(r"(?i)PREFIX\s+([A-Za-z_][\w-]*)?\s*:\s*<([^>]*)>")
 _INSERT_RE = re.compile(r"(?i)INSERT\s+DATA\s*\{")
 
 
-_ESC_RE = re.compile(r"\\(.)")
-_ESC_MAP = {"n": "\n", "r": "\r", "t": "\t", '"': '"', "\\": "\\"}
-
-
-def _unescape(s: str) -> str:
-    # single pass left-to-right: '\\n' is an escaped backslash followed by
-    # 'n', not a newline — sequential str.replace gets that wrong
-    return _ESC_RE.sub(lambda m: _ESC_MAP.get(m.group(1), m.group(1)), s)
-
-
 def parse_turtle_lite(text: str) -> Iterable[tuple[Term, Term, Term]]:
     """Parse PREFIX decls + triples in Turtle-ish syntax, with optional
     ``INSERT DATA { ... }`` wrapper. Supports `;` and `,` continuation,
     `a` for rdf:type, prefixed names, typed/tagged literals, numbers,
-    booleans."""
-    from otit_swt_spark.terms import RDF_TYPE, XSD_BOOLEAN, XSD_DOUBLE, XSD_INTEGER
-
+    booleans, ``#`` comments."""
+    text = _strip_comments(text)
     prefixes = dict(_PREFIX_RE.findall(text))
     prefixes = {(k or ""): v for k, v in prefixes.items()}
     body = _PREFIX_RE.sub(" ", text)
@@ -522,7 +503,7 @@ def parse_turtle_lite(text: str) -> Iterable[tuple[Term, Term, Term]]:
         if kind == "iri":
             terms.append(IRI(tok.group(2)))
         elif kind == "string":
-            lex = _unescape(tok.group(4))
+            lex = unescape(tok.group(4))
             if tok.group("dt_iri"):
                 terms.append(Literal(lex, tok.group("dt_iri")))
             elif tok.group("dt_pn"):
@@ -540,9 +521,7 @@ def parse_turtle_lite(text: str) -> Iterable[tuple[Term, Term, Term]]:
             pfx = tok.group(0).split(":", 1)
             terms.append(resolve(pfx[0], pfx[1]))
         elif kind == "num":
-            lex = tok.group(0)
-            dt = XSD_DOUBLE if ("." in lex or "e" in lex or "E" in lex) else XSD_INTEGER
-            terms.append(Literal(lex, dt))
+            terms.append(Literal(tok.group(0), numeric_datatype(tok.group(0))))
         elif kind == "bool":
             terms.append(Literal(tok.group(0), XSD_BOOLEAN))
         elif kind == "punct":
@@ -586,9 +565,11 @@ _NT_LINE = re.compile(
 
 
 def parse_ntriples(text: str) -> Iterable[tuple[Term, Term, Term]]:
-    for line in text.splitlines():
+    # lines end at CR or LF only: str.splitlines would also split a
+    # literal holding a form feed or a line separator
+    for line in re.split(r"[\r\n]", _strip_comments(text)):
         line = line.strip()
-        if not line or line.startswith("#"):
+        if not line:
             continue
         m = _NT_LINE.match(line)
         if not m:
@@ -600,7 +581,7 @@ def parse_ntriples(text: str) -> Iterable[tuple[Term, Term, Term]]:
         elif m.group("ob"):
             o = BlankNode(m.group("ob")[2:])
         else:
-            lex = _unescape(m.group(6))
+            lex = unescape(m.group(6))
             lang = m.group("lang")
             dt = RDF_LANGSTRING if lang else m.group("dt") or XSD_STRING
             o = Literal(lex, dt, lang)

@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql import types as T
 
+from otit_swt_spark.graph import GraphStore
 from otit_swt_spark.mapper.ast import (
     OTTR_NULLABLE_TRIPLE,
     OTTR_TRIPLE,
@@ -485,21 +486,11 @@ class Mapping:
 
     # -- sinks --------------------------------------------------------------
     def ntriples_lines(self) -> DataFrame:
-        """Scalable N-Triples sink: one formatted line per triple
-        (reference mapper/src/mapping/ntriples_write.rs). Write with
-        ``.write.text(dir)``."""
-        df = self.triples_df()
-        esc = _nt_escape(F.col("o_lex"))
-        obj = F.when(F.col("o_iri").isNotNull(),
-                     _fmt_resource(F.col("o_iri"))) \
-               .when(F.col("o_lang").isNotNull(),
-                     F.concat(F.lit('"'), esc, F.lit('"@'), F.col("o_lang"))) \
-               .when(F.col("o_dt") == XSD + "string",
-                     F.concat(F.lit('"'), esc, F.lit('"'))) \
-               .otherwise(F.concat(F.lit('"'), esc, F.lit('"^^<'), F.col("o_dt"), F.lit(">")))
-        return df.select(
-            F.concat(_fmt_resource(F.col("s")), F.lit(" <"), F.col("p"),
-                     F.lit("> "), obj, F.lit(" .")).alias("line"))
+        """Scalable N-Triples sink: one formatted line per triple, column
+        ``line`` (``GraphStore.to_ntriples_df`` over ``triples_df``). Write
+        with ``.write.text(dir)``."""
+        return GraphStore(self.spark, self.triples_df()).to_ntriples_df() \
+            .toDF("line")
 
     def write_ntriples(self, path: str):
         """Driver-side convenience writer to a single local file (small
@@ -526,15 +517,3 @@ class Mapping:
                             (o["lexical_form"], o["datatype_iri"], o["language_tag"])))
         return out
 
-
-def _nt_escape(col: Column) -> Column:
-    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
-    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
-    return F.replace(out, F.lit("\r"), F.lit("\\r"))
-
-
-def _fmt_resource(col: Column) -> Column:
-    """Blank nodes print bare; IRIs print angle-bracketed."""
-    return F.when(col.startswith("_:"), col).otherwise(
-        F.concat(F.lit("<"), col, F.lit(">")))

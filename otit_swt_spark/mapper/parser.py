@@ -31,7 +31,7 @@ from otit_swt_spark.mapper.ast import (
     Template,
     Variable,
 )
-from otit_swt_spark.terms import RDF_LANGSTRING
+from otit_swt_spark.terms import RDF_LANGSTRING, numeric_datatype, unescape
 
 _TOKEN_RE = re.compile(
     r"""
@@ -235,7 +235,7 @@ class _Parser:
             return BlankNode(val[2:])
         if kind == "string":
             self.next()
-            lex = _unescape(val[1:-1])
+            lex = unescape(val[1:-1])
             nk, nv = self.peek()
             if nk == "langtag":
                 self.next()
@@ -246,13 +246,7 @@ class _Parser:
             return Literal(lex)
         if kind == "number":
             self.next()
-            if "e" in val or "E" in val:
-                # xsd:decimal's lexical space forbids exponents — the
-                # Turtle/stOTTR grammar types exponent literals DOUBLE
-                return Literal(val, datatype=XSD + "double")
-            if "." in val:
-                return Literal(val, datatype=XSD + "decimal")
-            return Literal(val, datatype=XSD + "integer")
+            return Literal(val, datatype=numeric_datatype(val))
         if val in ("true", "false"):
             self.next()
             return Literal(val, datatype=XSD + "boolean")
@@ -269,11 +263,6 @@ class _Parser:
         if kind in ("pname", "iriref"):
             return IRI(self.iri())
         raise ValueError(f"expected term, got {val!r}")
-
-
-def _unescape(s: str) -> str:
-    return (s.replace("\\\\", "\x00").replace('\\"', '"').replace("\\n", "\n")
-            .replace("\\r", "\r").replace("\\t", "\t").replace("\x00", "\\"))
 
 
 def parse_document(text: str) -> tuple[list[Template], dict[str, str]]:

@@ -61,7 +61,12 @@ from otit_swt_spark.terms import (
     XSD_DATE,
     XSD_DATETIME,
     XSD_STRING,
+    BlankNode,
+    object_row,
+    solution_row,
+    solution_term,
     spark_type_for_xsd,
+    sparql_json_term,
     xsd_for_spark_type,
 )
 
@@ -605,14 +610,6 @@ def _decoded_sql(node: str, end: str) -> str:
 def _sql_lit(s: str | None) -> str:
     """_sql_str inside a statement whose braces are table placeholders."""
     return _sql_str(s).replace("{", "{{").replace("}", "}}")
-
-
-def _object_row(term) -> tuple:
-    """A constant term in the graph's object columns ``(o_iri, o_lex,
-    o_dt, o_lang)``."""
-    if isinstance(term, Literal):
-        return None, term.lexical, term.datatype or XSD_STRING, term.language
-    return term.value if isinstance(term, IRI) else str(term), None, None, None
 
 
 def _path_iris(path) -> set[str] | None:
@@ -1368,11 +1365,7 @@ class Compiler:
         if not shared:
             return ""
 
-        def esc(s: str) -> str:
-            return (s.replace("\\", "\\\\").replace('"', '\\"')
-                    .replace("\n", "\\n").replace("\r", "\\r"))
-
-        cols, kinds = [], []
+        cols, names = [], []
         for v in shared:
             meta = input.vars[v]
             if meta.kind == "term":
@@ -1381,7 +1374,7 @@ class Compiler:
                             else F.lit(None).cast("string"))
                 cols.append(F.col(f"{v}__lang") if v in input.lang_vars
                             else F.lit(None).cast("string"))
-                kinds.append((v, "term"))
+                names.append(v)
             elif meta.xsd:  # native column with a statically-known datatype
                 # type-aware lexical forms: a bare cast("string") of a
                 # timestamp yields "2024-01-01 00:00:00" (space separator),
@@ -1397,8 +1390,8 @@ class Compiler:
                     cols.append(F.col(v).cast("string"))
                 cols.append(F.lit(meta.xsd))
                 cols.append(F.lit(None).cast("string"))
-                kinds.append((v, "native"))
-        if not kinds:
+                names.append(v)
+        if not names:
             return ""
         cap = self.SERVICE_BOUND_JOIN_MAX
         with job_description(self.spark, "otit:service-values"):
@@ -1408,22 +1401,16 @@ class Compiler:
         tuples = []
         for r in rows:
             terms = []
-            for i, (v, kind) in enumerate(kinds):
-                val, dt, lang = r[3 * i], r[3 * i + 1], r[3 * i + 2]
-                if val is None:
+            for i in range(len(names)):
+                if r[3 * i] is None:
                     terms.append("UNDEF")
-                elif kind == "term" and val.startswith("_:"):
+                    continue
+                term = solution_term(*r[3 * i:3 * i + 3])
+                if isinstance(term, BlankNode):
                     return ""  # bnodes cannot cross a service boundary
-                elif dt is None and lang is None and kind == "term":
-                    terms.append(f"<{val}>")
-                elif lang:
-                    terms.append(f'"{esc(val)}"@{lang}')
-                elif dt is None or dt == XSD_STRING:
-                    terms.append(f'"{esc(val)}"')
-                else:
-                    terms.append(f'"{esc(val)}"^^<{dt}>')
+                terms.append(term.ntriples())
             tuples.append("(" + " ".join(terms) + ")")
-        head = " ".join(f"?{v}" for v, _ in kinds)
+        head = " ".join(f"?{v}" for v in names)
         return f"VALUES ({head}) {{ {' '.join(tuples)} }}\n"
 
     def _remote_service_solutions(self, p: A.Service,
@@ -1444,7 +1431,6 @@ class Compiler:
         from pyspark.sql.types import StringType, StructField, StructType
 
         from otit_swt_spark.graph import _default_sparql_post
-        from otit_swt_spark.terms import RDF_LANGSTRING
 
         poster = self.http_post or _default_sparql_post
         pfx = "".join(f"PREFIX {name}: <{iri}>\n"
@@ -1454,23 +1440,9 @@ class Compiler:
                      f"{pfx}SELECT * WHERE {{ {values}{p.raw} }}")
         vars_ = list(doc.get("head", {}).get("vars")
                      or sorted(A.pattern_variables(p.inner)))
-        rows = []
-        for b in doc.get("results", {}).get("bindings", []):
-            row: list = []
-            for v in vars_:
-                t = b.get(v)
-                if t is None:
-                    row += [None, None, None]
-                elif t.get("type") == "bnode":
-                    row += [f"_:{t['value']}", None, None]
-                elif t.get("type") in ("literal", "typed-literal"):
-                    lang = t.get("xml:lang")
-                    dt = (RDF_LANGSTRING if lang
-                          else t.get("datatype") or XSD_STRING)
-                    row += [t["value"], dt, lang.lower() if lang else None]
-                else:  # uri
-                    row += [t["value"], None, None]
-            rows.append(tuple(row))
+        rows = [tuple(cell for v in vars_ for cell in solution_row(
+                    sparql_json_term(b[v]) if v in b else None))
+                for b in doc.get("results", {}).get("bindings", [])]
         fields = []
         for v in vars_:
             fields += [StructField(v, StringType()),
@@ -1882,7 +1854,7 @@ class Compiler:
                     sm.dt_vars.add(v)
                     sm.lang_vars.add(v)
             elif not isinstance(term, Literal):
-                where.append(f"{iri} = {_sql_lit(_object_row(term)[0])}")
+                where.append(f"{iri} = {_sql_lit(object_row(term)[0])}")
             elif lex is None:  # a graph subject is never a literal
                 where.append("false")
             else:
@@ -1896,7 +1868,7 @@ class Compiler:
 
         source = f"{{{table}}}"
         if path:  # either end can be a literal (through ^ or a zero-length step)
-            consts = [_object_row(t) for t in (tp.s, tp.o)
+            consts = [object_row(t) for t in (tp.s, tp.o)
                       if not isinstance(t, Variable)]
             source = (f"(SELECT *, {_decoded_sql('src', 's')}, "
                       f"{_decoded_sql('dst', 'o')} FROM "
@@ -1932,7 +1904,7 @@ class Compiler:
         ``tables`` under a name starting with ``table``. A literal is never
         a subject, so only an inverse or zero-length step starts from one.
         ``consts`` are the pattern's constant nodes as object rows
-        (_object_row), which every zero-length step pairs with themselves.
+        (object_row), which every zero-length step pairs with themselves.
         A closure is the one DataFrame built here: _kleene over the
         statement of its inner path."""
         def ref(df: DataFrame) -> str:
@@ -2402,16 +2374,8 @@ class Compiler:
                     out.append(None if term is None else
                                _VALUES_CELL.get(m.hint, str)(term.lexical))
                     continue
-                if term is None:
-                    value, dt, lang = None, None, None
-                elif isinstance(term, Literal):
-                    value, dt, lang = (term.lexical,
-                                       term.datatype or XSD_STRING,
-                                       term.language)
-                else:
-                    value = term.value if isinstance(term, IRI) else str(term)
-                    dt, lang = None, None
-                out += [value, dt, lang] if v in companions else [value]
+                cells = solution_row(term)
+                out += cells if v in companions else cells[:1]
             rows.append(tuple(out))
         df = self.spark.createDataFrame(rows, T.StructType(fields))
         return SolutionMapping(df, metas, set(companions), set(companions))

@@ -28,10 +28,9 @@ from otit_swt_spark.terms import (
     Variable,
     XSD,
     XSD_BOOLEAN,
-    XSD_DECIMAL,
-    XSD_DOUBLE,
-    XSD_INTEGER,
     XSD_STRING,
+    numeric_datatype,
+    unescape,
 )
 
 KEYWORDS = {
@@ -149,7 +148,7 @@ class Parser:
     def parse_literal(self) -> Literal:
         t = self.next()
         if t.kind == "string":
-            lex = _unescape_string(t.value)
+            lex = unescape(t.value[1:-1])
             if self.accept("op", "^^"):
                 dt = self.parse_iri()
                 return Literal(lex, dt.value)
@@ -158,13 +157,13 @@ class Parser:
                 return Literal(lex, RDF_LANGSTRING, lt.value[1:])
             return Literal(lex)
         if t.kind == "num":
-            return _num_literal(t.value)
+            return Literal(t.value, numeric_datatype(t.value))
         if t.kind == "op" and t.value in ("-", "+"):
             # NumericLiteralNegative/Positive (SPARQL grammar [131]/[132]):
             # the tokenizer emits sign and digits separately
             n = self.expect("num")
-            return _num_literal(t.value + n.value
-                                if t.value == "-" else n.value)
+            lex = t.value + n.value if t.value == "-" else n.value
+            return Literal(lex, numeric_datatype(lex))
         if t.kind in ("TRUE", "FALSE"):
             return Literal(t.value.lower(), XSD_BOOLEAN)
         raise SyntaxError(f"expected literal, got {t.value!r}")
@@ -846,7 +845,7 @@ class Parser:
             self.expect("SEPARATOR")
             self.expect("op", "=")
             sep_tok = self.expect("string")
-            separator = _unescape_string(sep_tok.value)
+            separator = unescape(sep_tok.value[1:-1])
         self.expect("op", ")")
         return A.EAggregate(name, expr, distinct, separator)
 
@@ -863,27 +862,6 @@ def _contains_aggregate(e: A.Expr) -> bool:
     if isinstance(e, A.EFunc):
         return any(_contains_aggregate(a) for a in e.args)
     return False
-
-
-_STR_ESC_RE = re.compile(r"\\(.)")
-_STR_ESC_MAP = {"n": "\n", "r": "\r", "t": "\t", "b": "\b", "f": "\f",
-                '"': '"', "'": "'", "\\": "\\"}
-
-
-def _unescape_string(raw: str) -> str:
-    # single pass left-to-right (same as graph.py's _unescape): '\\n' is an
-    # escaped backslash followed by 'n', not a newline — sequential
-    # str.replace decodes it wrongly
-    body = raw[1:-1]
-    return _STR_ESC_RE.sub(lambda m: _STR_ESC_MAP.get(m.group(1), m.group(1)), body)
-
-
-def _num_literal(lex: str) -> Literal:
-    if re.search(r"[eE]", lex):
-        return Literal(lex, XSD_DOUBLE)
-    if "." in lex:
-        return Literal(lex, XSD_DECIMAL)
-    return Literal(lex, XSD_INTEGER)
 
 
 def parse_query(text: str) -> A.SelectQuery:

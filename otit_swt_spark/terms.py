@@ -1,4 +1,4 @@
-"""RDF term model + XSD <-> Spark type mapping.
+"""RDF term model, the one term codec, and XSD <-> Spark type mapping.
 
 Reference parity:
 - XSD -> column dtype map: hybrid/src/sparql_result_to_polars.rs:70-115
@@ -10,10 +10,28 @@ Terms are plain Python objects used at *plan* time (parser/algebra/compile);
 at *execution* time every term lives in DataFrame columns — an IRI or blank
 node is its string form, a literal is its lexical form plus a datatype IRI
 column (see compiler.SolutionMapping for the column encoding).
+
+Every conversion between a term and its text or row forms is here, once
+(Turtle 1.1 / SPARQL 1.1 grammar):
+
+- ``unescape``: a quoted string's ECHAR escapes, for the Turtle, N-Triples,
+  SPARQL and stOTTR parsers;
+- ``numeric_datatype``: the datatype of a bare number (INTEGER, DECIMAL,
+  DOUBLE), for the same four parsers;
+- ``object_row`` / ``triple_row``: a term in the graph's object columns
+  ``(o_iri, o_lex, o_dt, o_lang)`` and a triple in the graph's row;
+  ``solution_row`` / ``solution_term``: a term in a solution's
+  ``(value, __dt, __lang)`` columns and back;
+- ``sparql_json_term``: one term of a SPARQL 1.1 JSON results document;
+- ``Term.ntriples()`` and ``NT_ESCAPES``: N-Triples text, the latter also
+  for the column writer ``GraphStore.to_ntriples_df``.
+
+Language tags are kept as delivered; term identity compares them exactly.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import types as T
@@ -88,12 +106,9 @@ class Literal:
         return self.lexical
 
     def ntriples(self) -> str:
-        esc = (
-            self.lexical.replace("\\", "\\\\")
-            .replace('"', '\\"')
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-        )
+        esc = self.lexical
+        for ch, echar in NT_ESCAPES:
+            esc = esc.replace(ch, echar)
         if self.language:
             return f'"{esc}"@{self.language}'
         if self.datatype and self.datatype != XSD_STRING:
@@ -110,6 +125,80 @@ class Variable:
 
 
 Term = IRI | BlankNode | Literal | Variable
+
+
+# -- the term codec ------------------------------------------------------------
+
+#: the characters N-Triples text escapes, with their ECHAR: backslash first,
+#: so a later escape's backslash is not escaped again
+NT_ESCAPES = (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"),
+              ("\t", "\\t"))
+
+_ECHAR_RE = re.compile(r"""\\([tbnrf"'\\])""")
+_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f", '"': '"',
+          "'": "'", "\\": "\\"}
+
+
+def unescape(body: str) -> str:
+    """A quoted string's body with its ECHAR escapes decoded, in one
+    left-to-right pass: ``\\\\n`` is an escaped backslash followed by ``n``,
+    not a newline. A backslash before any other character stays as
+    written."""
+    return _ECHAR_RE.sub(lambda m: _ECHAR[m.group(1)], body)
+
+
+def numeric_datatype(lexical: str) -> str:
+    """The datatype of a bare number: an exponent makes it xsd:double, a
+    decimal point xsd:decimal, anything else xsd:integer."""
+    if "e" in lexical or "E" in lexical:
+        return XSD_DOUBLE
+    return XSD_DECIMAL if "." in lexical else XSD_INTEGER
+
+
+def object_row(term) -> tuple:
+    """A term in the graph's object columns ``(o_iri, o_lex, o_dt,
+    o_lang)``: an IRI or blank node is its text in ``o_iri`` (``_:label``
+    for a blank node), a literal fills the other three. None (unbound) is
+    four nulls."""
+    if term is None:
+        return None, None, None, None
+    if isinstance(term, Literal):
+        return None, term.lexical, term.datatype or XSD_STRING, term.language
+    return str(term), None, None, None
+
+
+def triple_row(s, p, o) -> tuple:
+    """A triple in the graph's row ``(s, p, o_iri, o_lex, o_dt, o_lang)``."""
+    return (str(s), str(p), *object_row(o))
+
+
+def solution_row(term) -> tuple:
+    """A term in a solution's columns ``(value, __dt, __lang)``: its
+    object_row with ``o_iri`` and ``o_lex`` in one column."""
+    iri, lex, dt, lang = object_row(term)
+    return iri if lex is None else lex, dt, lang
+
+
+def solution_term(value: str, dt: str | None, lang: str | None) -> Term:
+    """The term a solution_row holds: a value with neither datatype nor
+    language tag is an IRI, or a blank node when it reads ``_:label``."""
+    if dt is None and lang is None:
+        return BlankNode(value[2:]) if value.startswith("_:") else IRI(value)
+    return Literal(value, dt or RDF_LANGSTRING, lang)
+
+
+def sparql_json_term(t: dict) -> Term:
+    """One term of a SPARQL 1.1 JSON results document: a ``bnode``, a
+    ``literal`` (or the older ``typed-literal``) with its ``datatype`` or
+    ``xml:lang``, else an IRI."""
+    kind, value = t.get("type"), t["value"]
+    if kind == "bnode":
+        return BlankNode(value)
+    if kind in ("literal", "typed-literal"):
+        lang = t.get("xml:lang")
+        return Literal(value, RDF_LANGSTRING if lang
+                       else t.get("datatype") or XSD_STRING, lang)
+    return IRI(value)
 
 
 # XSD datatype IRI -> Spark SQL type (reference:

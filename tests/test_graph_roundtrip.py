@@ -1,8 +1,11 @@
-"""Graph store round-trip and SQL interop tests."""
+"""Graph store round-trip and SQL interop tests, and the one term codec
+(``otit_swt_spark.terms``) seen through every loader, parser and writer."""
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
-from otit_swt_spark.graph import GraphStore, parse_ntriples
+from otit_swt_spark.graph import GraphStore, parse_ntriples, parse_turtle_lite
+from otit_swt_spark.terms import XSD
 
 from conftest import rows
 
@@ -28,7 +31,7 @@ def test_register_views_sql_interop(spark, engine):
 
 _LEX = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd", "Zs"),
-                           whitelist_characters='"\\\n'),
+                           whitelist_characters='"\'\\\n\r\t\b\f\x00'),
     max_size=40,
 )
 
@@ -37,14 +40,105 @@ _LEX = st.text(
 @given(_LEX)
 def test_ntriples_literal_escaping_property(spark, lex):
     """Literal lexical forms survive serialize -> parse for arbitrary
-    content including quotes, backslashes, and newlines."""
-    from otit_swt_spark.terms import IRI, Literal, XSD_STRING
+    content including quotes, backslashes, newlines, tabs and NULs, and
+    the column writer writes the text ``Literal.ntriples`` does."""
+    from otit_swt_spark.terms import IRI, Literal
 
-    g = GraphStore.from_triples(
-        spark, [(IRI("urn:s"), IRI("urn:p"), Literal(lex, IRI(XSD_STRING)))])
+    lit = Literal(lex)
+    g = GraphStore.from_triples(spark, [(IRI("urn:s"), IRI("urn:p"), lit)])
     nt = g.to_ntriples_df().first()["value"]
+    assert nt == f"<urn:s> <urn:p> {lit.ntriples()} ."
     [(s, p, o)] = list(parse_ntriples(nt))
-    assert o.lexical == lex
+    assert o == lit
+
+
+#: (quoted or bare text, lexical form, datatype) of one literal
+_LITERALS = [
+    (r'"x\by"', "x\by", XSD + "string"),
+    (r'"it\'s"', "it's", XSD + "string"),
+    (r'"a\\nb"', "a\\nb", XSD + "string"),
+    ('"a\x00b"', "a\x00b", XSD + "string"),
+    ('"tab\\tx"', "tab\tx", XSD + "string"),
+    ("1.5", "1.5", XSD + "decimal"),
+    ("1e3", "1e3", XSD + "double"),
+    ("2", "2", XSD + "integer"),
+]
+
+
+@pytest.mark.parametrize("text,lex,dt", _LITERALS, ids=[
+    "backspace", "apostrophe", "backslash", "nul", "tab", "decimal",
+    "double", "integer"])
+def test_every_parser_decodes_one_literal(text, lex, dt):
+    """The Turtle loader, the N-Triples loader (strings only: N-Triples has
+    no bare numbers), the SPARQL parser and the stOTTR parser decode the
+    same literal: ECHAR escapes in one pass, a bare decimal xsd:decimal."""
+    from otit_swt_spark.mapper.parser import parse_document
+    from otit_swt_spark.sparql.parser import Parser
+
+    want = (lex, dt, None)
+    [(_, _, o)] = parse_turtle_lite(f"<urn:s> <urn:p> {text} .")
+    got = {"turtle": (o.lexical, o.datatype, o.language)}
+    if text.startswith('"'):
+        [(_, _, o)] = parse_ntriples(f"<urn:s> <urn:p> {text} .")
+        got["ntriples"] = (o.lexical, o.datatype, o.language)
+    o = Parser(text).parse_literal()
+    got["sparql"] = (o.lexical, o.datatype, o.language)
+    [t], _ = parse_document(
+        f"<urn:T> [ ?x ] :: {{ ottr:Triple(?x, <urn:p>, {text}) }} .")
+    o = t.instances[0].arguments[2].term
+    got["stottr"] = (o.lexical, o.datatype, o.language)
+    assert got == dict.fromkeys(got, want)
+
+
+@pytest.mark.parametrize("loader,text", [
+    (parse_turtle_lite, """
+        PREFIX ex: <http://example.org/>
+        # a comment with ex:x and 3
+        ex:s ex:p ex:o . # a "quoted" } brace
+        ex:s ex:q "# not a comment", <urn:x#frag> ."""),
+    (parse_ntriples, """
+        # a comment line
+        <http://example.org/s> <http://example.org/p> <http://example.org/o> . # note
+        <http://example.org/s> <http://example.org/q> "# not a comment" .
+        <http://example.org/s> <http://example.org/q> <urn:x#frag> ."""),
+])
+def test_loaders_read_comments_as_whitespace(loader, text):
+    """``#`` to the end of the line is whitespace outside IRIs and strings."""
+    ex = "http://example.org/"
+    got = [(s.value, p.value, str(o)) for s, p, o in loader(text)]
+    assert got == [(ex + "s", ex + "p", ex + "o"),
+                   (ex + "s", ex + "q", "# not a comment"),
+                   (ex + "s", ex + "q", "urn:x#frag")]
+
+
+def test_mapper_ntriples_lines_match_the_graph_writer(spark):
+    """Mapping.ntriples_lines is GraphStore.to_ntriples_df over the
+    mapping's triples, row for row: the same escapes (a tab included),
+    typed, tagged and IRI objects."""
+    from otit_swt_spark.mapper import Mapping
+
+    doc = """
+    @prefix ex:<http://example.net/ns#>.
+    ex:T [?v, xsd:anyURI ?u] :: {
+        ottr:Triple(ex:o, ex:hasVal, ?v),
+        ottr:Triple(ex:o, ex:linksTo, ?u),
+        ottr:Triple(ex:o, ex:label, "tab\there"@en-GB),
+        ottr:Triple(ex:o, ex:num, 1.5)
+    } .
+    """
+    df = spark.createDataFrame(
+        [("K1", 'a\tb "q"\\', "http://example.net/ns#x")],
+        "Key string, v string, u string")
+    m = Mapping.from_str(doc, spark=spark)
+    m.expand("http://example.net/ns#T", df)
+    lines = [r["line"] for r in m.ntriples_lines().collect()]
+    want = [r["value"] for r in
+            GraphStore(spark, m.triples_df()).to_ntriples_df().collect()]
+    assert lines == want
+    assert '<http://example.net/ns#o> <http://example.net/ns#hasVal> ' \
+           '"a\\tb \\"q\\"\\\\" .' in lines
+    assert '<http://example.net/ns#o> <http://example.net/ns#label> ' \
+           '"tab\\there"@en-GB .' in lines
 
 
 def test_graphstore_materialized(spark, engine, tmp_path):
@@ -72,13 +166,15 @@ def test_turtle_lite_suffixed_literals(spark):
     ex:a ex:p "5"^^xsd:integer .
     ex:a ex:q "2022-06-01T08:00:00"^^<http://www.w3.org/2001/XMLSchema#dateTime> .
     ex:a ex:r "hallo"@de .
+    ex:a ex:s 2.5 .
     """
     triples = list(parse_turtle_lite(text))
-    assert len(triples) == 3
+    assert len(triples) == 4
     objs = {t[1].value.rsplit("/", 1)[-1]: t[2] for t in triples}
     assert objs["p"].datatype == XSD + "integer" and objs["p"].lexical == "5"
     assert objs["q"].datatype == XSD + "dateTime"
     assert objs["r"].language == "de" and objs["r"].datatype == RDF_LANGSTRING
+    assert objs["s"].datatype == XSD + "decimal" and objs["s"].lexical == "2.5"
 
 
 def test_materialized_persists_datatype_catalog(spark, engine, tmp_path):

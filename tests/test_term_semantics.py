@@ -64,7 +64,8 @@ def test_datatype_of_native_value(eng):
     dt = eng.query("""
         SELECT (DATATYPE(?v) AS ?dt) WHERE { <urn:g> <urn:val> ?v }
         """).first()["dt"]
-    assert dt == "http://www.w3.org/2001/XMLSchema#double"
+    # a bare 2.5 is xsd:decimal (Turtle 1.1 DECIMAL), held as a double
+    assert dt == "http://www.w3.org/2001/XMLSchema#decimal"
 
 
 def test_negative_literal_in_pattern_and_values(spark):
@@ -77,6 +78,43 @@ def test_negative_literal_in_pattern_and_values(spark):
     rows = e.query(
         "SELECT ?s WHERE { ?s <urn:v> ?x . VALUES ?x { -5 } }").collect()
     assert [r["s"] for r in rows] == ["urn:n"]
+
+
+@pytest.mark.parametrize("where,want", [
+    ("?s <urn:p> 1.5", ["urn:a"]),
+    (r'?s <urn:p> "x\by"', ["urn:c"]),
+    ("?s <urn:p> ?o FILTER(?o = 1.5)", ["urn:a"]),
+])
+def test_constant_literal_matches_the_loaded_term(spark, where, want):
+    """A bare decimal and an escaped string in a query decode to the term
+    the Turtle loader stored (one codec, terms.py)."""
+    g = GraphStore.from_sparql_insert(spark, r"""
+        INSERT DATA { <urn:a> <urn:p> 1.5 . <urn:c> <urn:p> "x\by" . }""")
+    got = Engine(spark, g).query(f"SELECT ?s WHERE {{ {where} }}").collect()
+    assert [r["s"] for r in got] == want
+
+
+def test_service_binding_keeps_its_language_tag(spark):
+    """A SERVICE answer's ``xml:lang`` is kept as delivered, so "x"@en-GB
+    from the endpoint joins the local "x"@en-GB; the bound join sends the
+    local term with its tag."""
+    g = GraphStore.from_sparql_insert(spark, """
+        INSERT DATA { <urn:a> <urn:lbl> "x"@en-GB . <urn:b> <urn:lbl> "x" . }""")
+    sent = []
+
+    def http_post(url, query):
+        sent.append(query)
+        return {"head": {"vars": ["r", "l"]}, "results": {"bindings": [
+            {"r": {"type": "uri", "value": "urn:r"},
+             "l": {"type": "literal", "value": "x", "xml:lang": "en-GB"}}]}}
+
+    got = Engine(spark, g, http_post=http_post).query("""
+        SELECT ?s ?r WHERE {
+            ?s <urn:lbl> ?l
+            SERVICE <http://remote.example/sparql> { ?r <urn:name> ?l }
+        }""").collect()
+    assert [(r["s"], r["r"]) for r in got] == [("urn:a", "urn:r")]
+    assert '("x"@en-GB)' in sent[0] and '("x")' in sent[0]
 
 
 def test_order_by_constraint_key_and_eof_guard(eng):
